@@ -9,8 +9,9 @@ Usage:
         [--compact-logs]
 
 Prints one JSON line: {"ok": bool, "checks": [...]}; exit code 1 when any
-check fails — wire it into the maintenance schedule (full sweep after
-every layout migration, a rotating --sample-buckets subset daily).
+check fails or, with --compact-logs, any table's compaction raised — wire
+it into the maintenance schedule (full sweep after every layout
+migration, a rotating --sample-buckets subset daily).
 """
 
 from __future__ import annotations
@@ -72,7 +73,10 @@ def main(argv=None) -> int:
                     errors[t] = f"{type(e).__name__}: {e}"
             report["compacted_logs"] = compacted
             if errors:
+                # a failed compaction fails the run: the exit code is
+                # what the maintenance schedule alerts on
                 report["compact_errors"] = errors
+                report["ok"] = False
         else:
             # loud, not a silent no-op: an Iceberg catalog schedules its
             # own rewrite_data_files maintenance (store.compact(table)

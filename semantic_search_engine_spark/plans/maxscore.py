@@ -212,8 +212,8 @@ def make_maxscore_group_fn(qterms: list[str], k: int, k1: float, b: float,
                            min_score: float = 0.0):
     """Per-doc-bucket `applyInPandas` body running the MaxScore kernel.
 
-    Mirrors `make_wand_batch_group_fn` for a single query: each group is
-    one doc-range bucket's blocks for the query terms (with the global
+    The MaxScore counterpart of the WAND per-bucket kernel for a single
+    query: each group is one doc-range bucket's blocks for the query terms (with the global
     ``df`` riding each row via the broadcast term_stats join), idf is
     computed here with the oracle's exact float expression, and the ≤ k
     local hits flow to the TakeOrderedAndProject merge.

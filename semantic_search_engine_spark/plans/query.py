@@ -382,11 +382,14 @@ class QueryEngine:
         """Block-max WAND top-k (E10), optionally filtered (E11) — the fast
         query path.
 
-        One job: pruned postings scan → per-doc-bucket WAND
-        (``applyInPandas`` groups on ``partition_id``, each a doc-id-sorted
-        slice of every query term's postings) → merge of ≤ P·k local hits
-        with ``orderBy(score DESC, doc_id ASC).limit(k)``. Exact — the
-        union of per-bucket top-k sets contains the global top-k.
+        Pruned postings scan → per-doc-bucket WAND (each bucket a
+        doc-id-sorted slice of every query term's postings) → merge of
+        ≤ P·k local hits with ``orderBy(score DESC, doc_id ASC).limit(k)``.
+        Exact — the union of per-bucket top-k sets contains the global
+        top-k. A bare query runs three Spark jobs: the term_stats
+        broadcast, the postings shuffle-map, then ONE WAND task (one
+        Python call over every bucket) feeding TakeOrderedAndProject
+        (pinned in ``tests/test_plan_shapes.py``).
 
         With structured filters, the doc_meta survivor set cogroups with
         the blocks per doc bucket (both keyed by ``partition_id``) and WAND
@@ -401,7 +404,7 @@ class QueryEngine:
         # between the two — code-review r2 finding). The batch core
         # short-circuits the per-query window for a single query
         # (VERDICT r2 #2: the batch-of-1 scaffold added an exchange the
-        # N=1 case never needed), so this is one job ending in
+        # N=1 case never needed), so the last job ends in
         # TakeOrderedAndProject.
         return (self._batch_wand_ranked([query], k=k, lang=lang,
                                         warc_ts_min=warc_ts_min,
@@ -417,8 +420,8 @@ class QueryEngine:
         """MaxScore top-k (X108) — same results as :meth:`wand_top_k_df`,
         different DAAT pruning strategy (plans/maxscore.py).
 
-        One job, same plan shape as the WAND serve path: pruned postings
-        scan (+ broadcast term_stats join so the global ``df`` rides each
+        Same scan and merge as the WAND serve path: pruned postings scan
+        (+ broadcast term_stats join so the global ``df`` rides each
         block row) → per-doc-bucket MaxScore (``applyInPandas`` on
         ``partition_id``) → TakeOrderedAndProject merge of ≤ P·k local
         hits. Kept as a first-class alternative because the two
@@ -517,7 +520,7 @@ class QueryEngine:
                             min_match: int = 1,
                             site: str | None = None,
                             neg_site: str | None = None) -> DataFrame:
-        """Multi-query block-max WAND: N queries, ONE Spark job.
+        """Multi-query block-max WAND: N queries, one set of Spark jobs.
 
         Returns (query_id, doc_id, score) — query_id is the position in
         ``queries``. The per-query results are rank-identical to
@@ -527,15 +530,19 @@ class QueryEngine:
         batch. This is the shape a batch retrieval pipeline uses — score
         a query LOG against the index, not one query at a time.
 
-        Plan — ONE job, no driver-side term lookup: the postings scan is
-        pruned by constant-folded ``term_bucket`` literals + ``term IN``
-        (both Catalyst-foldable from the query strings alone), each block
-        row picks up its term's global ``df`` via a broadcast join of the
+        Plan — no driver-side term lookup: the postings scan is pruned by
+        constant-folded ``term_bucket`` literals + ``term IN`` (both
+        Catalyst-foldable from the query strings alone), each block row
+        picks up its term's global ``df`` via a broadcast join of the
         identically-pruned term_stats scan, idf is computed inside the
-        per-bucket ``applyInPandas`` with the oracle's exact Python float
-        expression, and a per-query window top-k merges ≤ P·k·N local
-        rows. The only other job is the per-engine-instance corpus_stats
-        scalar read (cached).
+        WAND stage with the oracle's exact Python float expression, and a
+        per-query window top-k merges ≤ P·k·N local rows. That is four
+        Spark jobs whatever N is: the term_stats broadcast, the postings
+        shuffle-map, the WAND stage, and the per-query window. The WAND
+        stage makes one Python call per task and runs
+        ``min(defaultParallelism, distinct term sets)`` tasks (pinned in
+        ``tests/test_plan_shapes.py``). The per-engine-instance
+        corpus_stats scalar read is cached after the first call.
 
         Optional structured filters (``lang``/``warc_ts_*``) are shared by
         the whole batch and cogroup the doc_meta survivor set per bucket,
@@ -578,11 +585,17 @@ class QueryEngine:
         entirely — its ≤ P·k local hits merge through
         ``orderBy().limit(k)`` (TakeOrderedAndProject: per-partition heap,
         driver merge, no exchange). N>1 keeps the windowed merge.
+
+        Unfiltered, the WAND stage is a fixed-count
+        ``repartitionById(n, "partition_id").mapInArrow(...)``: each task
+        receives whole buckets and makes one Python call over all of
+        them. With structured filters it is a per-bucket cogroup with
+        the doc_meta survivors; both run the same per-bucket kernel.
         """
         from .wand import (
             BATCH_WAND_OUT_SCHEMA,
+            make_wand_batch_arrow_fn,
             make_wand_batch_cogroup_fn,
-            make_wand_batch_group_fn,
         )
 
         cfg = self.cfg
@@ -624,30 +637,34 @@ class QueryEngine:
         filtered = (lang is not None or warc_ts_min is not None
                     or warc_ts_max is not None or site is not None
                     or neg_site is not None)
+        kernel_args = (query_terms, k, float(cfg.k1), float(cfg.b), avgdl,
+                       n_docs)
+        kernel_kw = dict(min_score=float(min_score), after=after,
+                         term_boosts=term_boosts, min_match=int(min_match))
         if filtered:
             allowed = self._apply_meta_filters(
                 self.store.read(f"doc_meta{self._sfx()}"), lang,
                 warc_ts_min, warc_ts_max, site=site,
                 neg_site=neg_site).select("partition_id", "doc_id")
-            fn = make_wand_batch_cogroup_fn(query_terms, k,
-                                            float(cfg.k1), float(cfg.b),
-                                            avgdl, n_docs,
-                                            min_score=float(min_score),
-                                            after=after,
-                                            term_boosts=term_boosts,
-                                            min_match=int(min_match))
+            fn = make_wand_batch_cogroup_fn(*kernel_args, **kernel_kw)
             local = (blocks.groupBy("partition_id")
                      .cogroup(allowed.groupBy("partition_id"))
                      .applyInPandas(fn, schema=BATCH_WAND_OUT_SCHEMA))
         else:
-            fn = make_wand_batch_group_fn(query_terms, k, float(cfg.k1),
-                                          float(cfg.b), avgdl, n_docs,
-                                          min_score=float(min_score),
-                                          after=after,
-                                          term_boosts=term_boosts,
-                                          min_match=int(min_match))
-            local = blocks.groupBy("partition_id").applyInPandas(
-                fn, schema=BATCH_WAND_OUT_SCHEMA)
+            # One Python call per task, and a FIXED task count: AQE
+            # sizes shuffle partitions by bytes, and this stage moves a
+            # few KB of compressed blocks but is CPU-heavy in Python, so
+            # a byte-sized exchange collapses onto one task. A
+            # fixed-count repartition is never coalesced. One term set
+            # keeps one task: every extra Python task pays ~100-200 ms
+            # of worker set-up, more than one query's kernel work.
+            # Buckets go to task partition_id % n, so tasks get equal
+            # bucket counts (hashing puts 5/10/7/10 of 32 on 4 tasks).
+            n_tasks = min(self.spark.sparkContext.defaultParallelism,
+                          len(query_terms))
+            fn = make_wand_batch_arrow_fn(*kernel_args, **kernel_kw)
+            local = (blocks.repartitionById(n_tasks, "partition_id")
+                     .mapInArrow(fn, BATCH_WAND_OUT_SCHEMA))
         if len(rep_of) == 1:
             # ONE unique term set (the single-query serve path, plus any
             # duplicate batch): global top-k over this query's ≤ P·k local

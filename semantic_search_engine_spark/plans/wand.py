@@ -11,13 +11,14 @@ the current k-th score are skipped without computing BM25.
 
 Distribution model (Spark-first): the postings table is range-bucketed by
 doc id (``partition_id``), so every bucket holds a doc-id-sorted slice of
-each term's posting list. WAND runs *independently per bucket* inside one
-``applyInPandas`` group — the union of per-bucket top-K sets is a superset
-of the global top-K (each global winner lives in exactly one bucket and must
-be in that bucket's local top-K), so a final
-``orderBy(score DESC, doc_id ASC).limit(K)`` merge over ≤ P·K candidate rows
-is exact. At web scale each group sees only ~|term postings|/P compressed
-bytes and the merge moves P·K ≈ thousands of rows — no full-corpus shuffle.
+each term's posting list. WAND runs *independently per bucket* (a Python
+task holds whole buckets and splits them in-process) — the union of
+per-bucket top-K sets is a superset of the global top-K (each global
+winner lives in exactly one bucket and must be in that bucket's local
+top-K), so a final ``orderBy(score DESC, doc_id ASC).limit(K)`` merge
+over ≤ P·K candidate rows is exact. At web scale each bucket holds only
+~|term postings|/P compressed bytes and the merge moves P·K ≈ thousands
+of rows — no full-corpus shuffle.
 
 Determinism (rank-identity with the single-node oracle): a document's score
 is accumulated over query terms in sorted-term order — the identical float
@@ -332,13 +333,13 @@ def wand_top_k(
     return hits, stats
 
 
-def group_blocks_by_term(pdf) -> dict[str, list[dict]]:
-    """pandas block rows (sorted by (term, partition_id, block_id)) →
-    term → block dicts for :class:`BlockCursor`."""
+def _blocks_by_term(terms, lasts, bmaxes, dvbs, tvbs, lvbs
+                    ) -> dict[str, list[dict]]:
+    """Block columns (sorted by term, then doc order) → term → block
+    dicts for :class:`BlockCursor`."""
     out: dict[str, list[dict]] = {}
-    for term, last, bmax, dvb, tvb, lvb in zip(
-            pdf["term"], pdf["last_doc_id"], pdf["block_max_tf_norm"],
-            pdf["doc_ids_vb"], pdf["tfs_vb"], pdf["dls_vb"]):
+    for term, last, bmax, dvb, tvb, lvb in zip(terms, lasts, bmaxes, dvbs,
+                                               tvbs, lvbs):
         out.setdefault(term, []).append({
             "last_doc_id": int(last),
             "block_max_tf_norm": float(bmax),
@@ -349,94 +350,126 @@ def group_blocks_by_term(pdf) -> dict[str, list[dict]]:
     return out
 
 
+_BLOCK_COLS = ("term", "last_doc_id", "block_max_tf_norm", "doc_ids_vb",
+               "tfs_vb", "dls_vb")
+
+
+def group_blocks_by_term(pdf) -> dict[str, list[dict]]:
+    """pandas block rows (sorted by (term, partition_id, block_id)) →
+    term → block dicts for :class:`BlockCursor`."""
+    return _blocks_by_term(*(pdf[c] for c in _BLOCK_COLS))
+
+
+def _idf_by_term(terms, dfs, n_docs: int) -> dict[str, float]:
+    """Global ``df`` rides every block row; idf is computed here in Python
+    for bit-identity with the single-node oracle (a JVM log can differ by
+    1 ulp) — one log per UNIQUE term, not per block row."""
+    idf: dict[str, float] = {}
+    for t, d in zip(terms, dfs):
+        if t not in idf:
+            idf[t] = bm25_idf(n_docs, int(d))
+    return idf
+
+
 BATCH_WAND_OUT_SCHEMA = ("query_id int, partition_id int, doc_id long, "
                          "score double")
 
 
-def make_wand_batch_group_fn(query_terms: dict[int, list[str]],
+def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
+                         k1: float, b: float, avgdl: float,
+                         min_score: float = 0.0,
+                         after: "tuple[float, int] | None" = None,
+                         term_boosts: "dict[str, float] | None" = None,
+                         min_match: int = 1):
+    """The per-bucket body every multi-query WAND runner shares: one doc
+    bucket's blocks grouped by term (+ optional sorted allowed-doc array)
+    → ``(query_id, doc_id, score)`` for each query's local top-k.
+
+    Each query runs the standard exact block-max WAND over its own term
+    subset, so per-query results are identical to the single-query path
+    (rank-identity pinned by test). Per-term boost multipliers (PRF
+    expansion down-weighting, user ``term^boost`` weighting) give
+    weight = boost * idf, the float-op order the oracle replays; boosts
+    only scale each cursor's upper bounds, so pruning stays exact.
+    """
+
+    def bucket_hits(by_term, idf, allowed=None):
+        for qid, terms in query_terms.items():
+            if term_boosts:
+                weights = {t: term_boosts.get(t, 1.0) * idf[t]
+                           for t in terms if t in by_term}
+            else:
+                weights = {t: idf[t] for t in terms if t in by_term}
+            if not weights:
+                continue
+            hits, _ = wand_top_k({t: by_term[t] for t in weights}, weights,
+                                 k, k1, b, avgdl, allowed=allowed,
+                                 min_score=min_score, after=after,
+                                 min_match=min_match)
+            for d, s in hits:
+                yield qid, d, s
+
+    return bucket_hits
+
+
+def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
                              k: int, k1: float, b: float, avgdl: float,
                              n_docs: int, min_score: float = 0.0,
                              after: "tuple[float, int] | None" = None,
                              term_boosts: "dict[str, float] | None" = None,
                              min_match: int = 1):
-    """``applyInPandas`` body for MULTI-QUERY WAND: one doc bucket's blocks
-    (the union of every query's term postings) → per-query local top-k.
+    """``mapInArrow`` body for MULTI-QUERY WAND: ONE Python call per task.
+
+    The task's rows are every block of the buckets routed to it (the
+    union of every query's term postings, each row carrying its term's
+    global ``df`` from the broadcast term_stats join). They are sorted
+    once by ``(partition_id, term, block_id)`` and split into buckets
+    in-process; each bucket then runs :func:`_batch_bucket_kernel`. The
+    Arrow round trip and the output construction are paid once per task,
+    not once per bucket; the caller sizes the task count so a batch
+    spreads over the cores.
 
     Amortizes the per-job scheduling floor across N queries: the postings
-    scan, the shuffle to bucket groups, and the group task launch are paid
-    ONCE for the whole batch instead of once per query (BENCH r1: an
-    absent-term query still cost ~0.45 s of pure job overhead). Inside a
-    bucket the blocks are grouped by term once; each query then runs the
-    standard exact block-max WAND over its own term subset, so per-query
-    results are identical to the single-query path (rank-identity pinned
-    by test).
+    scan, the shuffle and the task launches are paid ONCE for the whole
+    batch, with no driver-side term-lookup collect before it. The closure
+    ships |Σ query terms| strings — still broadcast-sized.
 
-    Term weights are NOT precomputed on the driver: each block row carries
-    the term's global ``df`` (broadcast-joined from term_stats inside the
-    same job), and idf is computed here with the oracle's exact Python
-    float expression — so a query costs ONE Spark job, with no
-    driver-side term-lookup collect before it.
-
-    The closure ships |Σ query terms| strings — still broadcast-sized.
+    Yields one record batch (empty when the task got no rows).
     """
+    bucket_hits = _batch_bucket_kernel(query_terms, k, k1, b, avgdl,
+                                       min_score, after, term_boosts,
+                                       min_match)
 
-    def run_bucket(pdf):
-        return _run_bucket_batch(pdf, None, query_terms, k, k1, b, avgdl,
-                                 n_docs, min_score, after, term_boosts,
-                                 min_match)
+    def run_task(batches):
+        import pyarrow as pa
 
-    return run_bucket
+        qids: list[int] = []
+        pids: list[int] = []
+        docs: list[int] = []
+        scores: list[float] = []
+        batches = [rb for rb in batches if rb.num_rows]
+        if batches:
+            t = pa.Table.from_batches(batches).sort_by(
+                [("partition_id", "ascending"), ("term", "ascending"),
+                 ("block_id", "ascending")])
+            bucket = t.column("partition_id").to_pylist()
+            cols = [t.column(c).to_pylist() for c in _BLOCK_COLS]
+            idf = _idf_by_term(cols[0], t.column("df").to_pylist(), n_docs)
+            cuts = [i for i in range(1, len(bucket))
+                    if bucket[i] != bucket[i - 1]]
+            for lo, hi in zip([0] + cuts, cuts + [len(bucket)]):
+                by_term = _blocks_by_term(*(c[lo:hi] for c in cols))
+                for qid, d, s in bucket_hits(by_term, idf):
+                    qids.append(qid)
+                    pids.append(bucket[lo])
+                    docs.append(d)
+                    scores.append(s)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(qids, pa.int32()), pa.array(pids, pa.int32()),
+             pa.array(docs, pa.int64()), pa.array(scores, pa.float64())],
+            names=["query_id", "partition_id", "doc_id", "score"])
 
-
-def _run_bucket_batch(pdf, allowed, query_terms, k, k1, b, avgdl, n_docs,
-                      min_score=0.0, after=None, term_boosts=None,
-                      min_match=1):
-    """Shared body for the batch group/cogroup forms: one bucket's blocks
-    (+ optional sorted allowed-doc array) → per-query local top-k."""
-    import pandas as pd
-
-    qids: list[int] = []
-    pids: list[int] = []
-    docs: list[int] = []
-    scores: list[float] = []
-    if len(pdf):
-        pdf = pdf.sort_values(["term", "partition_id", "block_id"],
-                              kind="mergesort")
-        by_term = group_blocks_by_term(pdf)
-        # global df rides every block row; idf in Python for bit-identity
-        # with the single-node oracle (JVM log can differ by 1 ulp).
-        # One log per UNIQUE term, not per block row
-        uniq = pdf[["term", "df"]].drop_duplicates("term")
-        idf = {t: bm25_idf(n_docs, int(d))
-               for t, d in zip(uniq["term"], uniq["df"])}
-        pid = int(pdf["partition_id"].iloc[0])
-        for qid, terms in query_terms.items():
-            # per-term boost multipliers (PRF expansion down-weighting,
-            # user `term^boost` weighting): weight = boost * idf, the
-            # float-op order the oracle replays. Boosts only scale each
-            # cursor's upper bounds, so WAND pruning stays exact.
-            if term_boosts:
-                weights = {t: term_boosts.get(t, 1.0) * idf[t]
-                           for t in terms if t in idf}
-            else:
-                weights = {t: idf[t] for t in terms if t in idf}
-            sub = {t: by_term[t] for t in weights}
-            if not sub:
-                continue
-            hits, _ = wand_top_k(sub, weights, k, k1, b, avgdl,
-                                 allowed=allowed, min_score=min_score,
-                                 after=after, min_match=min_match)
-            for d, s in hits:
-                qids.append(qid)
-                pids.append(pid)
-                docs.append(d)
-                scores.append(s)
-    return pd.DataFrame({
-        "query_id": pd.Series(qids, dtype="int32"),
-        "partition_id": pd.Series(pids, dtype="int32"),
-        "doc_id": pd.Series(docs, dtype="int64"),
-        "score": pd.Series(scores, dtype="float64"),
-    })
+    return run_task
 
 
 def make_wand_batch_cogroup_fn(query_terms: dict[int, list[str]],
@@ -445,21 +478,34 @@ def make_wand_batch_cogroup_fn(query_terms: dict[int, list[str]],
                                after: "tuple[float, int] | None" = None,
                                term_boosts: "dict[str, float] | None" = None,
                                min_match: int = 1):
-    """Cogrouped batch form: left = one bucket's blocks, right = the same
-    bucket's structured-filter survivor doc ids (one filter, shared by the
-    whole batch — the offline-retrieval shape: same corpus slice, many
-    queries)."""
+    """Cogrouped ``applyInPandas`` batch form for structured filters:
+    left = one bucket's blocks, right = the same bucket's filter survivor
+    doc ids (one filter, shared by the whole batch — the
+    offline-retrieval shape: same corpus slice, many queries). Runs the
+    same per-bucket kernel as :func:`make_wand_batch_arrow_fn`."""
+    bucket_hits = _batch_bucket_kernel(query_terms, k, k1, b, avgdl,
+                                       min_score, after, term_boosts,
+                                       min_match)
 
     def run_bucket(blocks_pdf, allowed_pdf):
-        if len(allowed_pdf) == 0:
-            return _run_bucket_batch(blocks_pdf.iloc[:0], None,
-                                     query_terms, k, k1, b, avgdl, n_docs,
-                                     min_score, after, term_boosts,
-                                     min_match)
-        allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-        return _run_bucket_batch(blocks_pdf, allowed, query_terms,
-                                 k, k1, b, avgdl, n_docs, min_score, after,
-                                 term_boosts, min_match)
+        import pandas as pd
+
+        rows: list[tuple] = []
+        if len(blocks_pdf) and len(allowed_pdf):
+            allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
+            pdf = blocks_pdf.sort_values(["term", "partition_id", "block_id"],
+                                         kind="mergesort")
+            pid = int(pdf["partition_id"].iloc[0])
+            rows = [(qid, pid, d, s) for qid, d, s in bucket_hits(
+                group_blocks_by_term(pdf),
+                _idf_by_term(pdf["term"], pdf["df"], n_docs), allowed)]
+        qids, pids, docs, scores = zip(*rows) if rows else ((),) * 4
+        return pd.DataFrame({
+            "query_id": pd.Series(qids, dtype="int32"),
+            "partition_id": pd.Series(pids, dtype="int32"),
+            "doc_id": pd.Series(docs, dtype="int64"),
+            "score": pd.Series(scores, dtype="float64"),
+        })
 
     return run_bucket
 

@@ -130,7 +130,7 @@ def test_audit_cli(spark, tiny_corpus_dir, tmp_path_factory, capsys):
 
 
 def test_audit_cli_compact_logs(spark, tiny_corpus_dir,
-                                tmp_path_factory, capsys):
+                                tmp_path_factory, capsys, monkeypatch):
     import json
     store = _build(spark, tiny_corpus_dir, tmp_path_factory,
                    "audit_cli_compact")
@@ -151,3 +151,18 @@ def test_audit_cli_compact_logs(spark, tiny_corpus_dir,
     assert sorted((r["k"], r["v"]) for r in
                   store.read("custom_log").collect()) == [(1, "a"),
                                                           (2, "b")]
+
+    # a compaction that raises fails the run: ok is False, exit code 1
+    store.append("custom_log", spark.createDataFrame([(3, "c")],
+                                                     "k long, v string"))
+
+    def _boom(self, table):
+        raise RuntimeError("forced compaction failure")
+
+    monkeypatch.setattr(HadoopTableStore, "compact", _boom)
+    rc = audit_main(["--warehouse", store.root, "--compact-logs"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 1 and not out["ok"]
+    assert "custom_log" in out["compact_errors"]
+    assert "custom_log" not in out["compacted_logs"]
+    assert all(c["ok"] for c in out["checks"])  # the audit itself passed

@@ -3,6 +3,8 @@ design points stated in their docstrings, checked against the plans
 Catalyst actually produces (the `.explain` discipline, automated)."""
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from semantic_search_engine_spark.operators.contamination import (
@@ -65,3 +67,84 @@ def test_cluster_diversity_single_exchange(spark):
     plan = _plan(cluster_diverse_top_k(df, k=5, by="host"))
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+# ---------------------------------------------------------------------------
+# WAND serve path: job and task counts, read from statusTracker
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def wand_engine(spark, tiny_corpus_dir, tmp_path_factory):
+    from semantic_search_engine_spark.config import EngineConfig
+    from semantic_search_engine_spark.plans.build_index import IndexBuilder
+    from semantic_search_engine_spark.plans.query import QueryEngine
+    from semantic_search_engine_spark.sources.store import HadoopTableStore
+
+    cfg = EngineConfig(n_doc_buckets=8, n_term_buckets=8,
+                       shuffle_partitions=8, block_size=32)
+    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("shape_wh")))
+    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
+    IndexBuilder(spark, store, cfg).build(docs)
+    return QueryEngine(spark, store, cfg)
+
+
+def _jobs(spark, fn) -> list[list[int]]:
+    """Run ``fn`` once to warm the engine's per-instance caches, then
+    again under a fresh job group. Returns, per job in submission order,
+    the task counts of its stages in stage-id order (the job's own final
+    stage last)."""
+    fn()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    gid = f"plan-shape-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "plan shape")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    out = []
+    for j in sorted(tracker.getJobIdsForGroup(gid)):
+        stages = sorted(tracker.getJobInfo(j).stageIds)
+        out.append([tracker.getStageInfo(s).numTasks for s in stages])
+    return out
+
+
+def _wand_tasks(jobs: list[list[int]]) -> int:
+    """Task count of the WAND stage: the final stage of the first job
+    that reads a shuffle (the postings exchange is the only one below
+    WAND, so that job's earlier stage is the skipped shuffle-map)."""
+    return next(j[-1] for j in jobs if len(j) > 1)
+
+
+def test_top_k_three_jobs_one_wand_task(spark, wand_engine):
+    """A single query runs 3 jobs — the term_stats broadcast, the
+    postings shuffle-map, then WAND + TakeOrderedAndProject — and the
+    WAND stage stays ONE task: every extra Python task costs worker
+    set-up that a single query's kernel work does not repay."""
+    jobs = _jobs(spark, lambda: wand_engine.top_k(
+        "wireless bluetooth headphones", k=10))
+    assert len(jobs) == 3, jobs
+    assert _wand_tasks(jobs) == 1, jobs
+
+
+@pytest.mark.parametrize("queries,n_jobs", [
+    (["wireless bluetooth headphones", "gaming laptop"], 4),
+    (["wireless bluetooth headphones", "gaming laptop", "smartphone",
+      "4k monitor", "mechanical keyboard", "zipfhead0 zipfhead1"], 4),
+    # repeated term sets share one WAND pass (2 distinct, not 3); the
+    # fan-out of the shared results back to every query_id adds one
+    # broadcast job
+    (["gaming laptop", "laptop gaming", "smartphone"], 5),
+], ids=["two", "six", "duplicate"])
+def test_batch_top_k_four_jobs_wand_spread_over_cores(spark, wand_engine,
+                                                       queries, n_jobs):
+    """A batch runs 4 jobs — the single-query three plus the per-query
+    window — and its WAND stage runs min(defaultParallelism, distinct
+    term sets) tasks: a fixed-count repartition, so AQE cannot coalesce
+    the few-KB, CPU-heavy stage back onto one task."""
+    jobs = _jobs(spark, lambda: wand_engine.batch_top_k(queries, k=10))
+    distinct = len({tuple(sorted(set(q.split()))) for q in queries})
+    assert len(jobs) == n_jobs, jobs
+    assert _wand_tasks(jobs) == min(
+        spark.sparkContext.defaultParallelism, distinct), jobs

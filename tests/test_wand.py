@@ -416,3 +416,98 @@ def test_batch_top_k_scales_to_hundred_queries(spark, wand_built):
     for q in [queries[0], queries[13], queries[57], queries[99]]:
         assert batch[q] == qe.top_k(q, k=5, mode="wand"), q
     assert any(batch[q] for q in queries)  # non-degenerate
+
+
+# ---------------------------------------------------------------------------
+# Batch runner: one Python call per task over many buckets
+# ---------------------------------------------------------------------------
+
+BATCH_QUERIES = ["zipfhead0 zipfhead1", "wireless bluetooth headphones",
+                 "raretermxq zipfhead0", "raretermxq", "zipfhead2 zipfhead3",
+                 "gaming laptop", "zipfhead1 zipfhead4 smartphone",
+                 "absentterm9z mechanical keyboard", "zipfhead0"]
+
+
+@pytest.fixture(scope="module")
+def wand32(spark, tiny_corpus_dir, tiny_rows, tmp_path_factory):
+    """A 32-bucket index: more buckets than tasks, so every WAND task
+    splits several buckets in-process, and rare terms sit in few of
+    them."""
+    from semantic_search_engine_spark.config import EngineConfig
+    from semantic_search_engine_spark.oracle import OracleIndex
+    from semantic_search_engine_spark.plans.build_index import IndexBuilder
+    from semantic_search_engine_spark.plans.query import QueryEngine
+    from semantic_search_engine_spark.sources.store import HadoopTableStore
+
+    cfg = EngineConfig(n_doc_buckets=32, n_term_buckets=8,
+                       shuffle_partitions=8, block_size=8)
+    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wand32")))
+    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
+    IndexBuilder(spark, store, cfg).build(docs)
+    return QueryEngine(spark, store, cfg), OracleIndex.build(tiny_rows, cfg)
+
+
+def _ranked_by_query(df, n: int) -> list[list[tuple[int, float]]]:
+    by_q: list[list] = [[] for _ in range(n)]
+    for r in df.collect():
+        by_q[int(r["query_id"])].append((int(r["doc_id"]),
+                                         float(r["score"])))
+    return [sorted(h, key=lambda x: (-x[1], x[0])) for h in by_q]
+
+
+def _oracle_ranked(oracle, cfg, q, k, min_score=0.0, after=None,
+                   term_boosts=None, min_match=1):
+    from semantic_search_engine_spark.oracle import boosted_top_k
+    from semantic_search_engine_spark.textproc import tokenize
+
+    if min_match > 1:
+        full = oracle.top_k(q, k=k, min_match=min_match)
+    else:  # the whole ranking: OracleIndex.search clamps k to max_k
+        terms = tokenize(q, cfg.max_token_len, cfg.min_token_len,
+                         cfg.analyzer)
+        full = boosted_top_k(oracle, terms, term_boosts or {},
+                             k=oracle.n_docs)
+    full = [(d, s) for d, s in full if s >= min_score]
+    if after is not None:
+        full = [(d, s) for d, s in full
+                if s < after[0] or (s == after[0] and d > after[1])]
+    return full[:k]
+
+
+@pytest.mark.parametrize("variant", ["plain", "min_score", "after",
+                                     "term_boosts", "min_match"])
+def test_batch_runner_bit_identical_to_single_and_oracle(spark, wand32,
+                                                         variant):
+    """The per-task Arrow runner (each task sorts its rows once and
+    splits ~32/tasks buckets in-process) returns, for every query of a
+    batch larger than the task count, exactly the single-query result
+    and the oracle's ranking — ids and float scores — under each kernel
+    option the batch core forwards."""
+    from pyspark.sql import functions as F
+
+    qe, oracle = wand32
+    cfg, k = qe.cfg, 10
+    assert len(BATCH_QUERIES) >= spark.sparkContext.defaultParallelism
+    # a query term absent from most buckets: a task meets buckets in
+    # which some queries have no cursor at all
+    rare_buckets = (qe.store.read("postings")
+                    .filter(F.col("term") == "raretermxq")
+                    .select("partition_id").distinct().count())
+    assert 0 < rare_buckets < cfg.n_doc_buckets
+
+    top0 = oracle.top_k(BATCH_QUERIES[0], k=k)
+    kw = {"plain": {},
+          "min_score": {"min_score": top0[4][1]},
+          "after": {"after": (top0[2][1], top0[2][0])},
+          "term_boosts": {"term_boosts": {"bluetooth": 2.0,
+                                          "zipfhead0": 0.5,
+                                          "zipfhead3": 1.5}},
+          "min_match": {"min_match": 2}}[variant]
+    batch = _ranked_by_query(qe._batch_wand_ranked(BATCH_QUERIES, k=k, **kw),
+                             len(BATCH_QUERIES))
+    assert any(batch) and not all(batch[i] for i in range(len(batch)))
+    for i, q in enumerate(BATCH_QUERIES):
+        single = _ranked_by_query(qe._batch_wand_ranked([q], k=k, **kw), 1)
+        assert batch[i] == single[0], (variant, q)
+        assert batch[i] == _oracle_ranked(oracle, cfg, q, k, **kw), \
+            (variant, q)
