@@ -290,8 +290,7 @@ def q_bm25_filtered_engine_wand(spark, sf_dir):
     argument: the survivor set only shrinks candidates, so block-max
     pruning stays lossless."""
     store, qe = _engine_warehouse(spark, sf_dir)
-    top = qe.wand_filtered_top_k_df(" ".join(BM25_QUERY_TERMS), k=10,
-                                    lang="de")
+    top = qe.wand_top_k_df(" ".join(BM25_QUERY_TERMS), k=10, lang="de")
     return _engine_ids_back(store, top, [])
 
 

@@ -69,82 +69,44 @@ _UB_FLOAT_MARGIN = 1.0 + 1e-9
 _SCORING_CFG = ("k1", "b", "max_token_len", "min_token_len", "analyzer")
 
 
-def make_fed_group_fn(qterms: list[str], weights: dict[str, float],
-                      k: int, k1: float, b: float, avgdl_g: float,
-                      ub_scale_by_idx: dict[int, float],
-                      min_score: float = 0.0):
+def make_fed_fn(qterms: list[str], weights: dict[str, float],
+                k: int, k1: float, b: float, avgdl_g: float,
+                ub_scale_by_idx: dict[int, float],
+                min_score: float = 0.0):
     """``applyInPandas`` body: one (fed_idx, doc-bucket) group's blocks →
     local top-k under GLOBAL stats. All blocks in a group come from one
     sub-index, so plain term keys suffice (no qualified cursors) and the
-    group's single ``ub_scale`` re-sounds every cursor's bounds."""
+    group's single ``ub_scale`` re-sounds every cursor's bounds.
+
+    Cogrouped, the right side is the group's structured-filter survivor
+    doc ids (each sub-index's doc_meta, same tag + bucket key); empty
+    survivors ⇒ empty result for the group, exactly like the
+    single-index filtered fast path. Unfiltered (``groupBy``), call it
+    with ``allowed_pdf=None``."""
+    import numpy as np
     import pandas as pd
 
-    def run_group(pdf):
+    def run_group(blocks_pdf, allowed_pdf):
         docs: list[int] = []
         scores: list[float] = []
         fi = pid = 0
-        if len(pdf):
-            fi = int(pdf["fed_idx"].iloc[0])
-            pid = int(pdf["partition_id"].iloc[0])
-            pdf = pdf.sort_values(["term", "partition_id", "block_id"],
-                                  kind="mergesort")
-            by_term = group_blocks_by_term(pdf)
+        if len(blocks_pdf) and (allowed_pdf is None or len(allowed_pdf)):
+            allowed = (None if allowed_pdf is None else
+                       np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64)))
+            fi = int(blocks_pdf["fed_idx"].iloc[0])
+            pid = int(blocks_pdf["partition_id"].iloc[0])
+            blocks_pdf = blocks_pdf.sort_values(
+                ["term", "partition_id", "block_id"], kind="mergesort")
+            by_term = group_blocks_by_term(blocks_pdf)
             sub = {t: by_term[t] for t in qterms if t in by_term}
             if sub:
                 hits, _ = wand_top_k(
-                    sub, weights, k, k1, b, avgdl_g,
+                    sub, weights, k, k1, b, avgdl_g, allowed=allowed,
                     min_score=min_score,
                     ub_scale=ub_scale_by_idx.get(fi, _UB_FLOAT_MARGIN))
                 for d, s in hits:
                     docs.append(d)
                     scores.append(s)
-        n = len(docs)
-        return pd.DataFrame({
-            "fed_idx": pd.Series([fi] * n, dtype="int32"),
-            "partition_id": pd.Series([pid] * n, dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
-
-    return run_group
-
-
-def make_fed_cogroup_fn(qterms: list[str], weights: dict[str, float],
-                        k: int, k1: float, b: float, avgdl_g: float,
-                        ub_scale_by_idx: dict[int, float],
-                        min_score: float = 0.0):
-    """Cogrouped form: right side is the group's structured-filter
-    survivor doc ids (each sub-index's doc_meta, same tag + bucket key);
-    empty survivors ⇒ empty result for the group, exactly like the
-    single-index filtered fast path."""
-    import numpy as np
-    import pandas as pd
-
-    def run_group(blocks_pdf, allowed_pdf):
-        if len(allowed_pdf) == 0 or len(blocks_pdf) == 0:
-            return pd.DataFrame({
-                "fed_idx": pd.Series([], dtype="int32"),
-                "partition_id": pd.Series([], dtype="int32"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            })
-        allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-        fi = int(blocks_pdf["fed_idx"].iloc[0])
-        pid = int(blocks_pdf["partition_id"].iloc[0])
-        blocks_pdf = blocks_pdf.sort_values(
-            ["term", "partition_id", "block_id"], kind="mergesort")
-        by_term = group_blocks_by_term(blocks_pdf)
-        sub = {t: by_term[t] for t in qterms if t in by_term}
-        docs: list[int] = []
-        scores: list[float] = []
-        if sub:
-            hits, _ = wand_top_k(
-                sub, weights, k, k1, b, avgdl_g, allowed=allowed,
-                min_score=min_score,
-                ub_scale=ub_scale_by_idx.get(fi, _UB_FLOAT_MARGIN))
-            for d, s in hits:
-                docs.append(d)
-                scores.append(s)
         n = len(docs)
         return pd.DataFrame({
             "fed_idx": pd.Series([fi] * n, dtype="int32"),
@@ -265,6 +227,9 @@ class FederatedQueryEngine:
         for p in parts[1:]:
             blocks = blocks.unionByName(p)
 
+        fn = make_fed_fn(qterms, weights, k, float(cfg.k1), float(cfg.b),
+                         gs["avg_doc_len"], self._ub_scales(),
+                         min_score=float(min_score))
         filtered = (lang is not None or warc_ts_min is not None
                     or warc_ts_max is not None)
         if filtered:
@@ -278,20 +243,13 @@ class FederatedQueryEngine:
             allowed = metas[0]
             for m in metas[1:]:
                 allowed = allowed.unionByName(m)
-            fn = make_fed_cogroup_fn(qterms, weights, k, float(cfg.k1),
-                                     float(cfg.b), gs["avg_doc_len"],
-                                     self._ub_scales(),
-                                     min_score=float(min_score))
             local = (blocks.groupBy("fed_idx", "partition_id")
                      .cogroup(allowed.groupBy("fed_idx", "partition_id"))
                      .applyInPandas(fn, schema=FED_OUT_SCHEMA))
         else:
-            fn = make_fed_group_fn(qterms, weights, k, float(cfg.k1),
-                                   float(cfg.b), gs["avg_doc_len"],
-                                   self._ub_scales(),
-                                   min_score=float(min_score))
             local = (blocks.groupBy("fed_idx", "partition_id")
-                     .applyInPandas(fn, schema=FED_OUT_SCHEMA))
+                     .applyInPandas(lambda pdf: fn(pdf, None),
+                                    schema=FED_OUT_SCHEMA))
         # union of per-(index,bucket) top-k ⊇ global top-k; final merge is
         # TakeOrderedAndProject over ≤ Σ_i P_i·k rows
         return (local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))

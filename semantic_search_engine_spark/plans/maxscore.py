@@ -42,7 +42,14 @@ import math
 
 import numpy as np
 
-from .wand import EXHAUSTED, BlockCursor, bm25_idf, group_blocks_by_term
+from .wand import (
+    EXHAUSTED,
+    BlockCursor,
+    bm25_idf,
+    find_doc,
+    group_blocks_by_term,
+    open_cursors,
+)
 
 #: absolute slack on prune comparisons — absorbs the ulp-level difference
 #: between the probe-order running sum and the oracle-order final sum, so
@@ -71,15 +78,8 @@ def maxscore_top_k(
     """
     seed_theta = (math.nextafter(min_score, float("-inf"))
                   if min_score > 0.0 else float("-inf"))
-    cursors: list[BlockCursor] = []
-    if k > 0:
-        for rank, term in enumerate(sorted(term_blocks)):
-            blocks = term_blocks[term]
-            if blocks and term in weights and avgdl > 0:
-                c = BlockCursor(blocks, weights[term], k1, b, avgdl,
-                                term_rank=rank)
-                if c.cur_doc != EXHAUSTED:
-                    cursors.append(c)
+    cursors = (open_cursors(term_blocks, weights, k1, b, avgdl)
+               if k > 0 else [])
     all_cursors = list(cursors)
     # FIXED order: ascending list upper bound (ties broken by term_rank so
     # the split is deterministic); prefix[i] = sum of bounds 0..i inclusive
@@ -125,10 +125,7 @@ def maxscore_top_k(
                 candidate = c.cur_doc
         if candidate == EXHAUSTED:
             break
-        excluded = allowed is not None and not (
-            (i := int(np.searchsorted(allowed, candidate))) < len(allowed)
-            and int(allowed[i]) == candidate)
-        if excluded:
+        if allowed is not None and find_doc(allowed, candidate) < 0:
             filtered_out += 1
             hit_end = False
             for c in live:

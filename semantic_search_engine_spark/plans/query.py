@@ -504,15 +504,6 @@ class QueryEngine:
             return self.maxscore_top_k_df(query, k=k, min_score=min_score)
         return self.wand_top_k_df(query, k=k, min_score=min_score)
 
-    def wand_filtered_top_k_df(self, query: str, k: int | None = None,
-                               lang: str | None = None, warc_ts_min=None,
-                               warc_ts_max=None) -> DataFrame:
-        """Alias of :meth:`wand_top_k_df` with filters (kept for clarity at
-        call sites)."""
-        return self.wand_top_k_df(query, k=k, lang=lang,
-                                  warc_ts_min=warc_ts_min,
-                                  warc_ts_max=warc_ts_max)
-
     def batch_wand_top_k_df(self, queries: list[str],
                             k: int | None = None,
                             lang: str | None = None, warc_ts_min=None,
@@ -594,8 +585,9 @@ class QueryEngine:
         """
         from .wand import (
             BATCH_WAND_OUT_SCHEMA,
+            WAND_COGROUP_OUT_SCHEMA,
             make_wand_batch_arrow_fn,
-            make_wand_batch_cogroup_fn,
+            make_wand_cogroup_fn,
         )
 
         cfg = self.cfg
@@ -646,10 +638,10 @@ class QueryEngine:
                 self.store.read(f"doc_meta{self._sfx()}"), lang,
                 warc_ts_min, warc_ts_max, site=site,
                 neg_site=neg_site).select("partition_id", "doc_id")
-            fn = make_wand_batch_cogroup_fn(*kernel_args, **kernel_kw)
+            fn = make_wand_cogroup_fn(*kernel_args, **kernel_kw)
             local = (blocks.groupBy("partition_id")
                      .cogroup(allowed.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=BATCH_WAND_OUT_SCHEMA))
+                     .applyInPandas(fn, schema=WAND_COGROUP_OUT_SCHEMA))
         else:
             # One Python call per task, and a FIXED task count: AQE
             # sizes shuffle partitions by bytes, and this stage moves a
@@ -1474,9 +1466,10 @@ class QueryEngine:
         group. Returns (``by``, doc_id, score) in (score DESC, doc_id
         ASC) order.
 
-        ``mode="wand"`` (default): ONE job — the pruned posting scan
+        ``mode="wand"`` (default): five jobs (pinned in
+        ``tests/test_plan_shapes.py``) — the pruned posting scan
         cogroups with doc_meta's (doc_id, key) slice per doc bucket and
-        a collapsed WAND kernel (``wand_collapse_top_k``) emits each
+        the WAND kernel's ``collapse`` hook (``wand_top_k``) emits each
         bucket's top-k KEYS with block-max pruning against a key-level
         theta. Cross-bucket merge is a per-key window over ≤ P·k rows —
         exact by the superset lemma in the kernel docstring.
@@ -1486,7 +1479,7 @@ class QueryEngine:
         from pyspark.sql.window import Window
 
         from ..functions.udfs import doc_bucket_expr
-        from .wand import COLLAPSE_OUT_SCHEMA, make_wand_collapse_cogroup_fn
+        from .wand import WAND_COGROUP_OUT_SCHEMA, make_wand_cogroup_fn
 
         cfg = self.cfg
         k = cfg.default_k if k is None else min(k, cfg.max_k)
@@ -1511,11 +1504,12 @@ class QueryEngine:
             meta = self.store.read(f"doc_meta{self._sfx()}").select(
                 "partition_id", "doc_id",
                 F.col(by).cast("string").alias("ckey"))
-            fn = make_wand_collapse_cogroup_fn(qterms, k, float(cfg.k1),
-                                               float(cfg.b), avgdl, n_docs)
+            fn = make_wand_cogroup_fn({0: qterms}, k, float(cfg.k1),
+                                      float(cfg.b), avgdl, n_docs,
+                                      collapse=True)
             local = (blocks.groupBy("partition_id")
                      .cogroup(meta.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=COLLAPSE_OUT_SCHEMA))
+                     .applyInPandas(fn, schema=WAND_COGROUP_OUT_SCHEMA))
         elif mode == "exhaustive":
             scored = self.scores_df(query).withColumn(
                 "partition_id", doc_bucket_expr("doc_id",
@@ -1614,12 +1608,14 @@ class QueryEngine:
         (the prior reorders matches; it never surfaces no-match docs).
         Returns (doc_id, score) in (score DESC, doc_id ASC) order.
 
-        ``mode="wand"`` (default, exact): ONE job — the pruned posting
-        scan cogroups per doc bucket with doc_meta's (doc_id, prior)
-        slice and ``wand_boosted_top_k`` prunes against blended upper
-        bounds (bucket-max prior in the pivot test, the candidate's own
-        prior at the block check). ``mode="exhaustive"``: score every
-        candidate, join priors, sort — the correctness baseline.
+        ``mode="wand"`` (default, exact): four jobs (pinned in
+        ``tests/test_plan_shapes.py``) — the pruned posting scan
+        cogroups per doc bucket with doc_meta's (doc_id, prior) slice
+        and the WAND kernel's ``prior`` hook (``wand_top_k``) prunes
+        against blended upper bounds (bucket-max prior in the pivot
+        test, the candidate's own prior at the block check).
+        ``mode="exhaustive"``: score every candidate, join priors, sort
+        — the correctness baseline.
         ``mode="rescore"``: the Elasticsearch-rescore shape — plain BM25
         WAND top-``window`` (default 4k), blend priors over just those
         rows, re-sort, cut to k. Approximate (a doc outside the BM25
@@ -1638,7 +1634,7 @@ class QueryEngine:
             return empty
         meta_static = self._static_meta(static, static_df)
         if mode == "wand":
-            from .wand import BOOST_OUT_SCHEMA, make_wand_boosted_cogroup_fn
+            from .wand import WAND_COGROUP_OUT_SCHEMA, make_wand_cogroup_fn
 
             stats = self.corpus_stats()
             avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
@@ -1652,12 +1648,12 @@ class QueryEngine:
                                              qterms).select("term", "df")
             blocks = blocks.join(F.broadcast(df_side), "term")
             meta = meta_static
-            fn = make_wand_boosted_cogroup_fn(qterms, k, float(cfg.k1),
-                                              float(cfg.b), avgdl,
-                                              n_docs, float(w_static))
+            fn = make_wand_cogroup_fn({0: qterms}, k, float(cfg.k1),
+                                      float(cfg.b), avgdl, n_docs,
+                                      w_static=float(w_static))
             local = (blocks.groupBy("partition_id")
                      .cogroup(meta.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=BOOST_OUT_SCHEMA))
+                     .applyInPandas(fn, schema=WAND_COGROUP_OUT_SCHEMA))
             return (local.select("doc_id", "score")
                     .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         if mode == "exhaustive":
@@ -1702,11 +1698,13 @@ class QueryEngine:
         score(d) = Σ_f w_f · BM25_f(d, query), each field scored against
         its OWN index (its own df / avgdl / doc lengths).
 
-        ONE WAND job over the union of every field's pruned postings
-        scan: terms are qualified as ``field\\x00term`` so the standard
-        per-bucket kernel treats each (field, term) pair as an
-        independent cursor whose weight is w_f·idf_f and whose block-max
-        bounds are the field's own — pruning stays exact (see
+        Six jobs (pinned in ``tests/test_plan_shapes.py``) for two
+        fields: one corpus_stats read and one term_stats broadcast per
+        field, then the union of every field's pruned postings scan
+        feeds ONE WAND stage: terms are qualified as ``field\\x00term``
+        so the standard per-bucket kernel treats each (field, term) pair
+        as an independent cursor whose weight is w_f·idf_f and whose
+        block-max bounds are the field's own — pruning stays exact (see
         ``make_weighted_field_fn``). Fields' doc buckets align because
         every field index buckets by the same doc-id hash.
         """

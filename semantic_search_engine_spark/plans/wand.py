@@ -153,6 +153,74 @@ class BlockCursor:
         return self.weight * (tf / (tf + k_dl))
 
 
+def open_cursors(term_blocks: dict[str, list[dict]],
+                 weights: dict[str, float], k1: float, b: float,
+                 avgdl: float,
+                 avgdl_by_term: "dict[str, float] | None" = None,
+                 ub_scale: float = 1.0) -> list[BlockCursor]:
+    """One :class:`BlockCursor` per weighted term with postings, ranked
+    in sorted-term order (the oracle's float summation order); terms
+    whose slice is empty or whose avgdl is not positive get none."""
+    cursors = []
+    for rank, term in enumerate(sorted(term_blocks)):
+        blocks = term_blocks[term]
+        t_avgdl = (avgdl_by_term.get(term, avgdl)
+                   if avgdl_by_term else avgdl)
+        if blocks and term in weights and t_avgdl > 0:
+            c = BlockCursor(blocks, weights[term], k1, b, t_avgdl,
+                            term_rank=rank, ub_scale=ub_scale)
+            if c.cur_doc != EXHAUSTED:
+                cursors.append(c)
+    return cursors
+
+
+def find_doc(doc_ids: "np.ndarray", doc: int) -> int:
+    """Position of ``doc`` in the sorted ``doc_ids`` array, or -1."""
+    i = int(np.searchsorted(doc_ids, doc))
+    return i if i < len(doc_ids) and int(doc_ids[i]) == doc else -1
+
+
+class _CollapsedTopK:
+    """Top-k collapse keys, each ranked by its best ``(score, -doc_id)``.
+
+    A key's best only ever improves (monotone), so the heap uses lazy
+    invalidation: an entry is live iff it equals its key's latest pushed
+    best. A key outside the top-k needs no remembered best: theta only
+    rises, so a doc that loses to its key's earlier best loses to theta.
+    """
+
+    __slots__ = ("k", "latest", "heap")
+
+    def __init__(self, k: int):
+        self.k = k
+        self.latest: dict = {}  # key in the top-k -> entry last pushed
+        self.heap: list = []    # (score, -doc, key); stale entries allowed
+
+    def _clean(self) -> None:
+        heap, latest = self.heap, self.latest
+        while heap and latest.get(heap[0][2]) != heap[0][:2]:
+            heapq.heappop(heap)
+
+    def theta(self, floor: float) -> float:
+        """The k-th best key's score, or ``floor`` until k keys exist."""
+        if len(self.latest) < self.k:
+            return floor
+        self._clean()
+        return self.heap[0][0]
+
+    def offer(self, key, entry: tuple[float, int]) -> None:
+        if key in self.latest:            # in the top-k: keep the better
+            if entry <= self.latest[key]:
+                return
+        elif len(self.latest) >= self.k:  # full: evict the k-th key?
+            self._clean()
+            if entry <= self.heap[0][:2]:
+                return
+            del self.latest[heapq.heappop(self.heap)[2]]
+        self.latest[key] = entry          # stale heap entries stay behind
+        heapq.heappush(self.heap, (*entry, key))
+
+
 def wand_top_k(
     term_blocks: dict[str, list[dict]],
     weights: dict[str, float],
@@ -166,7 +234,10 @@ def wand_top_k(
     after: "tuple[float, int] | None" = None,
     min_match: int = 1,
     ub_scale: float = 1.0,
-) -> tuple[list[tuple[int, float]], dict]:
+    *,
+    prior: "tuple[np.ndarray, np.ndarray, float] | None" = None,
+    collapse: "tuple[np.ndarray, list] | None" = None,
+) -> tuple[list[tuple], dict]:
     """Exact block-max WAND top-k over one doc-id-sorted posting slice.
 
     ``term_blocks``: term → blocks sorted by doc id. ``weights``: term → idf.
@@ -224,24 +295,58 @@ def wand_top_k(
     ``max(1, avgdl_global/avgdl_local)`` (plus a 1e-9 float margin)
     re-sounds the bound, so pruning stays lossless — merely ≤1e-9 looser.
 
-    Returns ``(hits, stats)``: hits as ``(doc_id, score)`` in
-    ``(score DESC, doc_id ASC)`` order; stats reports pruning counters.
+    ``prior=(doc_ids, static, w_static)``: rank by the blended score
+    ``bm25(d, q) + w_static · static(d)`` — the web-search serve shape
+    (query relevance + a query-independent document prior: URL/link
+    authority, freshness, spam score). ``doc_ids``/``static`` are the
+    bucket's doc_id-sorted priors; docs missing from them take prior 0.
+    ``w_static`` and every prior must be ≥ 0 (checked by the caller) so
+    the bounds below stay upper bounds. Exactness: the pivot sum starts
+    at ``w_static · max(static)`` (the bucket maximum) — an upper bound
+    on any remaining candidate's blend, so the strict ``>`` test prunes
+    losslessly with the usual tie-break argument. At the pivot the bound
+    tightens to the CANDIDATE's own prior (one searchsorted lookup, done
+    before any contrib decode): ``block_ub + w_static · static(d) <=
+    theta`` skips the evaluation, and the prior starts the score, before
+    the contributions in sorted-term order. Only docs matching ≥ 1 query
+    term are candidates — the prior reorders matches, it does not
+    surface no-match docs.
+
+    ``collapse=(doc_ids, keys)``: field collapsing (Elasticsearch
+    ``collapse`` — one result per host/site/author): the best-scoring
+    doc per key, top ``k`` KEYS; hits become ``(key, doc_id, score)``.
+    ``doc_ids``/``keys`` are the bucket's doc_id-sorted metadata slice
+    (a key may be None — NULL keys form one group, SQL window
+    semantics); docs missing from it fall into the None group.
+    Exactness: theta is the k-th best KEY score. Candidates arrive in
+    increasing doc_id order, so every current per-key best has a smaller
+    doc_id than any future candidate; a future doc bounded at or below
+    theta either loses outright or ties and loses the
+    (score DESC, doc_id ASC) tie-break — the strict ``>`` pivot test and
+    ``<=`` block-skip stay lossless, exactly the single-doc argument.
+    Cross-bucket merge exactness (the superset lemma): if a key's global
+    winner ranks outside its bucket's collapsed top-k, the k keys above
+    it in that bucket each have a global best at least their bucket
+    score, so all k outrank it globally — it wasn't a global winner.
+    Hence the union of per-bucket collapsed top-k contains the global
+    collapsed top-k, and a per-key window + global top-k merge is exact.
+
+    Returns ``(hits, stats)``: hits as ``(doc_id, score)`` (with
+    ``collapse``: ``(key, doc_id, score)``) in ``(score DESC, doc_id
+    ASC)`` order; stats reports pruning counters.
     """
     # strictly below min_score, so `acc > seed_theta` ⟺ `acc >= min_score`
     seed_theta = (math.nextafter(min_score, float("-inf"))
                   if min_score > 0.0 else float("-inf"))
-    cursors = []
-    if k > 0:  # k<=0: empty result, not an empty-heap indexing error
-        for rank, term in enumerate(sorted(term_blocks)):
-            blocks = term_blocks[term]
-            t_avgdl = (avgdl_by_term.get(term, avgdl)
-                       if avgdl_by_term else avgdl)
-            if blocks and term in weights and t_avgdl > 0:
-                c = BlockCursor(blocks, weights[term], k1, b, t_avgdl,
-                                term_rank=rank, ub_scale=ub_scale)
-                if c.cur_doc != EXHAUSTED:
-                    cursors.append(c)
+    # k<=0: empty result, not an empty-heap indexing error
+    cursors = (open_cursors(term_blocks, weights, k1, b, avgdl,
+                            avgdl_by_term, ub_scale) if k > 0 else [])
     all_cursors = list(cursors)
+    prior_cap = 0.0  # bucket-max prior: seeds every pivot sum
+    if prior is not None:
+        prior_ids, prior_static, w_static = prior
+        prior_cap = w_static * float(prior_static.max(initial=0.0))
+    keys = _CollapsedTopK(k) if collapse is not None else None
 
     heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
     evaluated = 0
@@ -257,13 +362,16 @@ def wand_top_k(
         # must enumerate them in sorted-term order (oracle float order) —
         # stability alone would carry over an arbitrary earlier order
         cursors.sort(key=lambda c: (c.cur_doc, c.term_rank))
-        theta = heap[0][0] if len(heap) >= k else seed_theta
+        if keys is not None:
+            theta = keys.theta(seed_theta)
+        else:
+            theta = heap[0][0] if len(heap) >= k else seed_theta
         # pivot: smallest prefix whose summed term UBs can *beat* theta.
         # Strict `>` is exact including tie-breaks: candidates arrive in
         # increasing doc_id order, so every heap member has a smaller doc_id
         # than any future candidate — a future doc scoring exactly theta
         # loses the (score DESC, doc_id ASC) tie-break and is prunable.
-        acc = 0.0
+        acc = prior_cap
         pivot_idx = -1
         for i, c in enumerate(cursors):
             acc += c.max_block_ub
@@ -279,11 +387,13 @@ def wand_top_k(
             # later cursors may tie). Bound the doc with current-block maxima
             # over *every* cursor standing on pivot_doc.
             at_pivot = [c for c in cursors if c.cur_doc == pivot_doc]
-            block_ub = sum(c.block_ub() for c in at_pivot)
-            excluded = allowed is not None and not (
-                (i := int(np.searchsorted(allowed, pivot_doc))) < len(allowed)
-                and int(allowed[i]) == pivot_doc)
-            if excluded:
+            base = 0.0  # the candidate's own weighted prior
+            if prior is not None:
+                i = find_doc(prior_ids, pivot_doc)
+                base = w_static * (float(prior_static[i]) if i >= 0
+                                   else 0.0)
+            block_ub = sum(c.block_ub() for c in at_pivot) + base
+            if allowed is not None and find_doc(allowed, pivot_doc) < 0:
                 filtered_out += 1
             elif min_match > 1 and len(at_pivot) < min_match:
                 under_min_match += 1  # too few distinct terms: disqualified
@@ -295,7 +405,7 @@ def wand_top_k(
                 skipped_evals += 1
             else:
                 # at_pivot is (cur_doc, term_rank)-sorted ⇒ oracle order
-                score = 0.0
+                score = base
                 for c in at_pivot:
                     score += c.contrib()
                 evaluated += 1
@@ -306,6 +416,9 @@ def wand_top_k(
                         score < after[0]
                         or (score == after[0] and pivot_doc > after[1])):
                     before_cursor += 1  # at or before the page cursor
+                elif keys is not None:
+                    i = find_doc(collapse[0], pivot_doc)
+                    keys.offer(collapse[1][i] if i >= 0 else None, entry)
                 elif len(heap) < k:
                     heapq.heappush(heap, entry)
                 elif entry > heap[0]:
@@ -320,7 +433,11 @@ def wand_top_k(
                 c.seek(pivot_doc)
         cursors = [c for c in cursors if c.cur_doc != EXHAUSTED]
 
-    hits = sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))
+    if keys is not None:
+        hits = sorted(((key, -d, s) for key, (s, d) in keys.latest.items()),
+                      key=lambda x: (-x[2], x[1]))
+    else:
+        hits = sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))
     stats = {
         "evaluated_docs": evaluated,
         "skipped_evals": skipped_evals,      # block-max UB prunes only
@@ -382,8 +499,10 @@ def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
                          term_boosts: "dict[str, float] | None" = None,
                          min_match: int = 1):
     """The per-bucket body every multi-query WAND runner shares: one doc
-    bucket's blocks grouped by term (+ optional sorted allowed-doc array)
-    → ``(query_id, doc_id, score)`` for each query's local top-k.
+    bucket's blocks grouped by term (+ at most one doc_meta hook of
+    :func:`wand_top_k`) → ``(query_id, partition_id, doc_id, score,
+    key)`` rows for each query's local top-k (``key``: the collapse key,
+    None without ``collapse``).
 
     Each query runs the standard exact block-max WAND over its own term
     subset, so per-query results are identical to the single-query path
@@ -393,7 +512,7 @@ def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
     only scale each cursor's upper bounds, so pruning stays exact.
     """
 
-    def bucket_hits(by_term, idf, allowed=None):
+    def bucket_hits(pid, by_term, idf, **hook):
         for qid, terms in query_terms.items():
             if term_boosts:
                 weights = {t: term_boosts.get(t, 1.0) * idf[t]
@@ -403,11 +522,10 @@ def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
             if not weights:
                 continue
             hits, _ = wand_top_k({t: by_term[t] for t in weights}, weights,
-                                 k, k1, b, avgdl, allowed=allowed,
-                                 min_score=min_score, after=after,
-                                 min_match=min_match)
-            for d, s in hits:
-                yield qid, d, s
+                                 k, k1, b, avgdl, min_score=min_score,
+                                 after=after, min_match=min_match, **hook)
+            for *key, d, s in hits:  # a collapse hit leads with its key
+                yield qid, pid, d, s, key[0] if key else None
 
     return bucket_hits
 
@@ -443,10 +561,7 @@ def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
     def run_task(batches):
         import pyarrow as pa
 
-        qids: list[int] = []
-        pids: list[int] = []
-        docs: list[int] = []
-        scores: list[float] = []
+        rows: list[tuple] = []
         batches = [rb for rb in batches if rb.num_rows]
         if batches:
             t = pa.Table.from_batches(batches).sort_by(
@@ -459,11 +574,8 @@ def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
                     if bucket[i] != bucket[i - 1]]
             for lo, hi in zip([0] + cuts, cuts + [len(bucket)]):
                 by_term = _blocks_by_term(*(c[lo:hi] for c in cols))
-                for qid, d, s in bucket_hits(by_term, idf):
-                    qids.append(qid)
-                    pids.append(bucket[lo])
-                    docs.append(d)
-                    scores.append(s)
+                rows.extend(bucket_hits(bucket[lo], by_term, idf))
+        qids, pids, docs, scores, _ = zip(*rows) if rows else ((),) * 5
         yield pa.RecordBatch.from_arrays(
             [pa.array(qids, pa.int32()), pa.array(pids, pa.int32()),
              pa.array(docs, pa.int64()), pa.array(scores, pa.float64())],
@@ -472,39 +584,56 @@ def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
     return run_task
 
 
-def make_wand_batch_cogroup_fn(query_terms: dict[int, list[str]],
-                               k: int, k1: float, b: float, avgdl: float,
-                               n_docs: int, min_score: float = 0.0,
-                               after: "tuple[float, int] | None" = None,
-                               term_boosts: "dict[str, float] | None" = None,
-                               min_match: int = 1):
-    """Cogrouped ``applyInPandas`` batch form for structured filters:
-    left = one bucket's blocks, right = the same bucket's filter survivor
-    doc ids (one filter, shared by the whole batch — the
-    offline-retrieval shape: same corpus slice, many queries). Runs the
-    same per-bucket kernel as :func:`make_wand_batch_arrow_fn`."""
+WAND_COGROUP_OUT_SCHEMA = BATCH_WAND_OUT_SCHEMA + ", ckey string"
+
+
+def make_wand_cogroup_fn(query_terms: dict[int, list[str]],
+                         k: int, k1: float, b: float, avgdl: float,
+                         n_docs: int, min_score: float = 0.0,
+                         after: "tuple[float, int] | None" = None,
+                         term_boosts: "dict[str, float] | None" = None,
+                         min_match: int = 1,
+                         w_static: "float | None" = None,
+                         collapse: bool = False):
+    """Cogrouped ``applyInPandas`` body for the WAND paths that read
+    doc_meta: left = one bucket's blocks, right = the bucket's doc_meta
+    slice, sorted by doc_id once and passed to :func:`wand_top_k` as one
+    hook — ``allowed`` (right = the filter survivors' ``doc_id``, shared
+    by the whole batch; empty ⇒ no hits), ``prior`` when ``w_static`` is
+    set (right adds ``static``; empty ⇒ every prior 0) or ``collapse``
+    (right adds ``ckey``; empty ⇒ no rows). Runs the same per-bucket
+    kernel as :func:`make_wand_batch_arrow_fn`."""
     bucket_hits = _batch_bucket_kernel(query_terms, k, k1, b, avgdl,
                                        min_score, after, term_boosts,
                                        min_match)
 
-    def run_bucket(blocks_pdf, allowed_pdf):
+    def run_bucket(blocks_pdf, meta_pdf):
         import pandas as pd
 
         rows: list[tuple] = []
-        if len(blocks_pdf) and len(allowed_pdf):
-            allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
+        if len(blocks_pdf) and (len(meta_pdf) or w_static is not None):
+            meta_pdf = meta_pdf.sort_values("doc_id", kind="mergesort")
+            ids = meta_pdf["doc_id"].to_numpy(dtype=np.int64)
+            if w_static is not None:
+                hook = {"prior": (ids, meta_pdf["static"].fillna(0.0)
+                                  .to_numpy(dtype=np.float64), w_static)}
+            elif collapse:
+                hook = {"collapse": (ids, [None if pd.isna(v) else str(v)
+                                           for v in meta_pdf["ckey"]])}
+            else:
+                hook = {"allowed": ids}
             pdf = blocks_pdf.sort_values(["term", "partition_id", "block_id"],
                                          kind="mergesort")
-            pid = int(pdf["partition_id"].iloc[0])
-            rows = [(qid, pid, d, s) for qid, d, s in bucket_hits(
-                group_blocks_by_term(pdf),
-                _idf_by_term(pdf["term"], pdf["df"], n_docs), allowed)]
-        qids, pids, docs, scores = zip(*rows) if rows else ((),) * 4
+            rows = list(bucket_hits(
+                int(pdf["partition_id"].iloc[0]), group_blocks_by_term(pdf),
+                _idf_by_term(pdf["term"], pdf["df"], n_docs), **hook))
+        qids, pids, docs, scores, keys = zip(*rows) if rows else ((),) * 5
         return pd.DataFrame({
             "query_id": pd.Series(qids, dtype="int32"),
             "partition_id": pd.Series(pids, dtype="int32"),
             "doc_id": pd.Series(docs, dtype="int64"),
             "score": pd.Series(scores, dtype="float64"),
+            "ckey": pd.Series(keys, dtype="object"),
         })
 
     return run_bucket
@@ -561,344 +690,6 @@ def make_weighted_field_fn(field_weights: dict[str, float],
                 pids.append(pid)
                 docs.append(d)
                 scores.append(s)
-        return pd.DataFrame({
-            "partition_id": pd.Series(pids, dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
-
-    return run_bucket
-
-
-COLLAPSE_OUT_SCHEMA = ("partition_id int, doc_id long, score double, "
-                       "ckey string")
-
-
-def wand_collapse_top_k(
-    term_blocks: dict[str, list[dict]],
-    weights: dict[str, float],
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    meta_doc_ids: "np.ndarray",
-    meta_keys: list,
-) -> tuple[list[tuple[object, int, float]], dict]:
-    """Exact block-max WAND *collapsed* top-k over one doc bucket: the
-    best-scoring doc per collapse key, top ``k`` KEYS (Elasticsearch
-    field collapsing — one result per host/site/author).
-
-    ``meta_doc_ids``/``meta_keys``: the bucket's doc_id-sorted metadata
-    slice (key may be None — NULL keys form one group, SQL window
-    semantics). Docs missing from the slice fall into the None group.
-
-    Exactness of pruning: theta is the k-th best KEY score. Candidates
-    arrive in increasing doc_id order, so every current per-key best has
-    a smaller doc_id than any future candidate; a future doc bounded at
-    or below theta either loses outright or ties and loses the
-    (score DESC, doc_id ASC) tie-break — the strict ``>`` pivot test and
-    ``<=`` block-skip stay lossless, exactly the single-doc argument.
-    Per-key bests only ever improve (monotone), so the key heap uses
-    lazy invalidation: an entry is live iff it equals the key's latest
-    pushed best.
-
-    Cross-bucket merge exactness (the superset lemma): if a key's global
-    winner ranks outside its bucket's collapsed top-k, the k keys above
-    it in that bucket each have a global best at least their bucket
-    score, so all k outrank it globally — it wasn't a global winner.
-    Hence the union of per-bucket collapsed top-k contains the global
-    collapsed top-k, and a per-key window + global top-k merge is exact.
-    """
-    cursors = []
-    if k > 0:
-        for rank, term in enumerate(sorted(term_blocks)):
-            blocks = term_blocks[term]
-            if blocks and term in weights and avgdl > 0:
-                c = BlockCursor(blocks, weights[term], k1, b, avgdl,
-                                term_rank=rank)
-                if c.cur_doc != EXHAUSTED:
-                    cursors.append(c)
-    all_cursors = list(cursors)
-
-    cur: dict = {}       # key -> (score, -doc): best seen
-    intop: set = set()   # keys currently in the top-k heap
-    latest: dict = {}    # key -> entry last pushed (liveness check)
-    heap: list = []      # (score, -doc, key); stale entries allowed
-    nvalid = 0
-    evaluated = 0
-    skipped_evals = 0
-
-    def _clean():
-        while heap and ((heap[0][2] not in intop)
-                        or (heap[0][0], heap[0][1]) != latest[heap[0][2]]):
-            heapq.heappop(heap)
-
-    while cursors:
-        cursors.sort(key=lambda c: (c.cur_doc, c.term_rank))
-        if nvalid >= k:
-            _clean()
-            theta = heap[0][0]
-        else:
-            theta = float("-inf")
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(cursors):
-            acc += c.max_block_ub
-            if acc > theta:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break
-        pivot_doc = cursors[pivot_idx].cur_doc
-
-        if cursors[0].cur_doc == pivot_doc:
-            at_pivot = [c for c in cursors if c.cur_doc == pivot_doc]
-            block_ub = sum(c.block_ub() for c in at_pivot)
-            if block_ub <= theta:
-                skipped_evals += 1
-            else:
-                score = 0.0
-                for c in at_pivot:
-                    score += c.contrib()
-                evaluated += 1
-                i = int(np.searchsorted(meta_doc_ids, pivot_doc))
-                key = (meta_keys[i]
-                       if i < len(meta_doc_ids)
-                       and int(meta_doc_ids[i]) == pivot_doc else None)
-                entry = (score, -pivot_doc)
-                old = cur.get(key)
-                if old is None or entry > old:
-                    cur[key] = entry
-                    if key in intop:          # improvement: lazy re-push
-                        latest[key] = entry
-                        heapq.heappush(heap, (score, -pivot_doc, key))
-                    elif nvalid < k:          # heap not full: admit key
-                        intop.add(key)
-                        latest[key] = entry
-                        heapq.heappush(heap, (score, -pivot_doc, key))
-                        nvalid += 1
-                    else:                     # full: evict the k-th key?
-                        _clean()
-                        if entry > (heap[0][0], heap[0][1]):
-                            _es, _ed, ek = heapq.heappop(heap)
-                            intop.discard(ek)
-                            del latest[ek]
-                            intop.add(key)
-                            latest[key] = entry
-                            heapq.heappush(heap, (score, -pivot_doc, key))
-            for c in at_pivot:
-                c.next_doc()
-        else:
-            for c in cursors:
-                if c.cur_doc >= pivot_doc:
-                    break
-                c.seek(pivot_doc)
-        cursors = [c for c in cursors if c.cur_doc != EXHAUSTED]
-
-    hits = sorted(((key, -nd, s) for key, (s, nd) in latest.items()),
-                  key=lambda x: (-x[2], x[1]))
-    stats = {
-        "evaluated_docs": evaluated,
-        "skipped_evals": skipped_evals,
-        "decoded_blocks": sum(c.decoded_blocks for c in all_cursors),
-        "total_blocks": sum(len(v) for v in term_blocks.values()),
-    }
-    return hits, stats
-
-
-def make_wand_collapse_cogroup_fn(qterms: list[str], k: int, k1: float,
-                                  b: float, avgdl: float, n_docs: int):
-    """Cogrouped ``applyInPandas`` body for field collapsing: left = one
-    bucket's posting blocks (with ``df`` riding each row), right = the
-    bucket's (doc_id, ckey) metadata slice. Emits the bucket's collapsed
-    top-k (one row per key)."""
-
-    def run_bucket(blocks_pdf, meta_pdf):
-        import pandas as pd
-
-        pids: list[int] = []
-        docs: list[int] = []
-        scores: list[float] = []
-        keys: list = []
-        if len(blocks_pdf) and len(meta_pdf):
-            blocks_pdf = blocks_pdf.sort_values(
-                ["term", "partition_id", "block_id"], kind="mergesort")
-            by_term = group_blocks_by_term(blocks_pdf)
-            uniq = blocks_pdf[["term", "df"]].drop_duplicates("term")
-            idf = {t: bm25_idf(n_docs, int(d))
-                   for t, d in zip(uniq["term"], uniq["df"])}
-            weights = {t: idf[t] for t in qterms if t in idf}
-            sub = {t: by_term[t] for t in weights if t in by_term}
-            if sub:
-                pid = int(blocks_pdf["partition_id"].iloc[0])
-                meta_pdf = meta_pdf.sort_values("doc_id", kind="mergesort")
-                mids = meta_pdf["doc_id"].to_numpy(dtype=np.int64)
-                mkeys = [None if pd.isna(v) else str(v)
-                         for v in meta_pdf["ckey"]]
-                hits, _ = wand_collapse_top_k(sub, weights, k, k1, b,
-                                              avgdl, mids, mkeys)
-                for key, d, s in hits:
-                    pids.append(pid)
-                    docs.append(d)
-                    scores.append(s)
-                    keys.append(key)
-        return pd.DataFrame({
-            "partition_id": pd.Series(pids, dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-            "ckey": pd.Series(keys, dtype="object"),
-        })
-
-    return run_bucket
-
-
-# --------------------------------------------------------------------------
-# static-rank blended retrieval (web-search document priors)
-
-BOOST_OUT_SCHEMA = "partition_id int, doc_id long, score double"
-
-
-def wand_boosted_top_k(
-    term_blocks: dict[str, list[dict]],
-    weights: dict[str, float],
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    meta_doc_ids: "np.ndarray",
-    meta_static: "np.ndarray",
-    w_static: float,
-) -> tuple[list[tuple[int, float]], dict]:
-    """Exact block-max WAND top-k under the blended score
-    ``bm25(d, q) + w_static · static(d)`` over one doc bucket — the
-    web-search serve shape (query relevance + query-independent document
-    prior: URL/link authority, freshness, spam score).
-
-    ``meta_doc_ids``/``meta_static``: the bucket's doc_id-sorted static
-    priors; docs missing from the slice take prior 0. ``w_static`` and
-    every prior must be ≥ 0 (checked by the caller) so the bounds below
-    stay upper bounds.
-
-    Exactness: the pivot test adds ``w_static · max_static`` (the
-    bucket-local maximum) to the summed term UBs — an upper bound on any
-    remaining candidate's blend, so the strict ``>`` test prunes
-    losslessly with the usual (score DESC, doc_id ASC) tie-break
-    argument. At the pivot the bound tightens to the CANDIDATE's own
-    prior (one searchsorted lookup, done before any contrib decode):
-    ``block_ub + w_static · static(d) <= theta`` skips the evaluation.
-    Semantics follow every disjunctive engine: only docs matching ≥ 1
-    query term are candidates — the prior reorders matches, it does not
-    surface no-match docs.
-    """
-    max_static = float(meta_static.max()) if len(meta_static) else 0.0
-    boost_cap = w_static * max_static
-    cursors = []
-    if k > 0:
-        for rank, term in enumerate(sorted(term_blocks)):
-            blocks = term_blocks[term]
-            if blocks and term in weights and avgdl > 0:
-                c = BlockCursor(blocks, weights[term], k1, b, avgdl,
-                                term_rank=rank)
-                if c.cur_doc != EXHAUSTED:
-                    cursors.append(c)
-    all_cursors = list(cursors)
-
-    heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
-    evaluated = 0
-    skipped_evals = 0
-
-    def _static(doc: int) -> float:
-        i = int(np.searchsorted(meta_doc_ids, doc))
-        if i < len(meta_doc_ids) and int(meta_doc_ids[i]) == doc:
-            return float(meta_static[i])
-        return 0.0
-
-    while cursors:
-        cursors.sort(key=lambda c: (c.cur_doc, c.term_rank))
-        theta = heap[0][0] if len(heap) >= k else float("-inf")
-        acc = boost_cap
-        pivot_idx = -1
-        for i, c in enumerate(cursors):
-            acc += c.max_block_ub
-            if acc > theta:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break
-        pivot_doc = cursors[pivot_idx].cur_doc
-
-        if cursors[0].cur_doc == pivot_doc:
-            at_pivot = [c for c in cursors if c.cur_doc == pivot_doc]
-            prior = w_static * _static(pivot_doc)
-            block_ub = sum(c.block_ub() for c in at_pivot) + prior
-            if block_ub <= theta:
-                skipped_evals += 1
-            else:
-                score = prior
-                for c in at_pivot:   # sorted-term order: oracle float order
-                    score += c.contrib()
-                evaluated += 1
-                entry = (score, -pivot_doc)
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-            for c in at_pivot:
-                c.next_doc()
-        else:
-            for c in cursors:
-                if c.cur_doc >= pivot_doc:
-                    break
-                c.seek(pivot_doc)
-        cursors = [c for c in cursors if c.cur_doc != EXHAUSTED]
-
-    hits = sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))
-    stats = {
-        "evaluated_docs": evaluated,
-        "skipped_evals": skipped_evals,
-        "decoded_blocks": sum(c.decoded_blocks for c in all_cursors),
-        "total_blocks": sum(len(v) for v in term_blocks.values()),
-    }
-    return hits, stats
-
-
-def make_wand_boosted_cogroup_fn(qterms: list[str], k: int, k1: float,
-                                 b: float, avgdl: float, n_docs: int,
-                                 w_static: float):
-    """Cogrouped ``applyInPandas`` body for blended retrieval: left = one
-    bucket's posting blocks (``df`` riding each row), right = the
-    bucket's (doc_id, static) prior slice. Emits the bucket's blended
-    top-k; the cross-bucket merge (global top-k over ≤ P·k rows) is
-    exact by the usual per-bucket superset lemma."""
-
-    def run_bucket(blocks_pdf, meta_pdf):
-        import pandas as pd
-
-        pids: list[int] = []
-        docs: list[int] = []
-        scores: list[float] = []
-        if len(blocks_pdf):
-            blocks_pdf = blocks_pdf.sort_values(
-                ["term", "partition_id", "block_id"], kind="mergesort")
-            by_term = group_blocks_by_term(blocks_pdf)
-            uniq = blocks_pdf[["term", "df"]].drop_duplicates("term")
-            idf = {t: bm25_idf(n_docs, int(d))
-                   for t, d in zip(uniq["term"], uniq["df"])}
-            weights = {t: idf[t] for t in qterms if t in idf}
-            sub = {t: by_term[t] for t in weights if t in by_term}
-            if sub:
-                pid = int(blocks_pdf["partition_id"].iloc[0])
-                meta_pdf = meta_pdf.sort_values("doc_id", kind="mergesort")
-                mids = meta_pdf["doc_id"].to_numpy(dtype=np.int64)
-                mstat = (meta_pdf["static"]
-                         .fillna(0.0).to_numpy(dtype=np.float64))
-                hits, _ = wand_boosted_top_k(sub, weights, k, k1, b,
-                                             avgdl, mids, mstat,
-                                             w_static)
-                for d, s in hits:
-                    pids.append(pid)
-                    docs.append(d)
-                    scores.append(s)
         return pd.DataFrame({
             "partition_id": pd.Series(pids, dtype="int32"),
             "doc_id": pd.Series(docs, dtype="int64"),

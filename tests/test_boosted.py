@@ -14,10 +14,7 @@ import pytest
 
 from semantic_search_engine_spark.config import EngineConfig
 from semantic_search_engine_spark.functions.varbyte import encode_blocks
-from semantic_search_engine_spark.plans.wand import (
-    wand_boosted_top_k,
-    wand_top_k,
-)
+from semantic_search_engine_spark.plans.wand import wand_top_k
 
 K1, B = 1.2, 0.75
 
@@ -71,8 +68,8 @@ def test_kernel_boosted_equals_exhaustive(seed, w_static):
     static = rng.random(800)
     meta_ids = np.arange(800, dtype=np.int64)
     for k in (1, 5, 20):
-        got, _ = wand_boosted_top_k(blocks, weights, k, K1, B, avgdl,
-                                    meta_ids, static, w_static)
+        got, _ = wand_top_k(blocks, weights, k, K1, B, avgdl,
+                            prior=(meta_ids, static, w_static))
         want = _exhaustive_boosted(postings, weights, dl, avgdl, static,
                                    w_static, k)
         assert got == want, (seed, w_static, k)
@@ -83,9 +80,8 @@ def test_kernel_boosted_zero_weight_is_plain_wand():
     blocks, weights, _p, _dl, avgdl = _random_index(
         rng, n_docs=600, n_terms=4, density=0.2, block_size=32)
     static = rng.random(600)
-    got, _ = wand_boosted_top_k(blocks, weights, 10, K1, B, avgdl,
-                                np.arange(600, dtype=np.int64), static,
-                                0.0)
+    got, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl,
+                        prior=(np.arange(600, dtype=np.int64), static, 0.0))
     plain, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl)
     assert got == plain
 
@@ -94,9 +90,9 @@ def test_kernel_boosted_missing_meta_means_zero_prior():
     rng = np.random.default_rng(11)
     blocks, weights, _p, _dl, avgdl = _random_index(
         rng, n_docs=300, n_terms=3, density=0.3, block_size=16)
-    got, _ = wand_boosted_top_k(blocks, weights, 10, K1, B, avgdl,
-                                np.array([], dtype=np.int64),
-                                np.array([], dtype=np.float64), 3.0)
+    got, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl,
+                        prior=(np.array([], dtype=np.int64),
+                               np.array([], dtype=np.float64), 3.0))
     plain, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl)
     assert got == plain  # empty slice: every prior 0, blend == bm25
 
@@ -106,9 +102,9 @@ def test_kernel_boosted_pruning_fires():
     blocks, weights, _p, _dl, avgdl = _random_index(
         rng, n_docs=5000, n_terms=5, density=0.3, block_size=32)
     static = rng.random(5000) * 0.01  # small priors: UBs stay tight
-    _got, stats = wand_boosted_top_k(blocks, weights, 3, K1, B, avgdl,
-                                     np.arange(5000, dtype=np.int64),
-                                     static, 0.5)
+    _got, stats = wand_top_k(blocks, weights, 3, K1, B, avgdl,
+                             prior=(np.arange(5000, dtype=np.int64),
+                                    static, 0.5))
     assert stats["skipped_evals"] > 0, stats
 
 

@@ -14,10 +14,7 @@ import pytest
 from semantic_search_engine_spark.config import EngineConfig
 from semantic_search_engine_spark.functions.varbyte import encode_blocks
 from semantic_search_engine_spark.oracle import OracleIndex, collapse_top_k
-from semantic_search_engine_spark.plans.wand import (
-    wand_collapse_top_k,
-    wand_top_k,
-)
+from semantic_search_engine_spark.plans.wand import wand_top_k
 
 K1, B = 1.2, 0.75
 
@@ -72,15 +69,15 @@ def test_kernel_collapse_equals_exhaustive(seed, n_keys):
     keys = [f"k{int(x)}" for x in rng.integers(0, n_keys, size=800)]
     meta_ids = np.arange(800, dtype=np.int64)
     for k in (1, 5, 20):
-        got, stats = wand_collapse_top_k(blocks, weights, k, K1, B, avgdl,
-                                         meta_ids, keys)
+        got, stats = wand_top_k(blocks, weights, k, K1, B, avgdl,
+                                collapse=(meta_ids, keys))
         want = _exhaustive_collapse(postings, weights, dl, avgdl, keys, k)
         assert got == want, (seed, n_keys, k)
     # pruning must actually fire when keys are few (theta rises fast)
     if n_keys == 3:
-        _got, stats = wand_collapse_top_k(blocks, weights, 3, K1, B,
-                                          avgdl, meta_ids, keys)
-        assert stats["skipped_evals"] >= 0  # counter present
+        _got, stats = wand_top_k(blocks, weights, 3, K1, B, avgdl,
+                                 collapse=(meta_ids, keys))
+        assert stats["skipped_evals"] > 0, stats
 
 
 def test_kernel_collapse_unique_keys_degenerates_to_plain_topk():
@@ -89,8 +86,8 @@ def test_kernel_collapse_unique_keys_degenerates_to_plain_topk():
         rng, n_docs=500, n_terms=4, density=0.2, block_size=32)
     keys = [f"u{d}" for d in range(500)]  # every doc its own key
     meta_ids = np.arange(500, dtype=np.int64)
-    got, _ = wand_collapse_top_k(blocks, weights, 10, K1, B, avgdl,
-                                 meta_ids, keys)
+    got, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl,
+                        collapse=(meta_ids, keys))
     plain, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl)
     assert [(d, s) for _key, d, s in got] == plain
 
@@ -100,8 +97,8 @@ def test_kernel_collapse_missing_meta_goes_to_null_group():
     blocks, weights, postings, dl, avgdl = _random_index(
         rng, n_docs=100, n_terms=3, density=0.3, block_size=16)
     # empty metadata: every doc collapses into the single None group
-    got, _ = wand_collapse_top_k(blocks, weights, 10, K1, B, avgdl,
-                                 np.array([], dtype=np.int64), [])
+    got, _ = wand_top_k(blocks, weights, 10, K1, B, avgdl,
+                        collapse=(np.array([], dtype=np.int64), []))
     plain, _ = wand_top_k(blocks, weights, 1, K1, B, avgdl)
     assert len(got) == 1
     assert got[0][0] is None and (got[0][1], got[0][2]) == plain[0]

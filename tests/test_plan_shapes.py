@@ -84,7 +84,9 @@ def wand_engine(spark, tiny_corpus_dir, tmp_path_factory):
                        shuffle_partitions=8, block_size=32)
     store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("shape_wh")))
     docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
-    IndexBuilder(spark, store, cfg).build(docs)
+    builder = IndexBuilder(spark, store, cfg)
+    builder.build(docs)
+    builder.build(docs, field="title")  # for weighted_top_k
     return QueryEngine(spark, store, cfg)
 
 
@@ -148,3 +150,27 @@ def test_batch_top_k_four_jobs_wand_spread_over_cores(spark, wand_engine,
     assert len(jobs) == n_jobs, jobs
     assert _wand_tasks(jobs) == min(
         spark.sparkContext.defaultParallelism, distinct), jobs
+
+
+@pytest.mark.parametrize("call,n_jobs", [
+    # doc_meta shuffle-map, term_stats broadcast, postings shuffle-map,
+    # the per-bucket cogroup WAND stage (map side of the per-key
+    # window), then the window + TakeOrderedAndProject
+    (lambda e: e.collapse_top_k("wireless bluetooth headphones",
+                                by="lang", k=5, mode="wand"), 5),
+    # doc_meta shuffle-map, term_stats broadcast, postings shuffle-map,
+    # then the per-bucket cogroup + TakeOrderedAndProject
+    (lambda e: e.boosted_top_k("wireless bluetooth headphones",
+                               w_static=0.5, k=10, mode="wand"), 4),
+    # one corpus_stats read and one term_stats broadcast per field, the
+    # unioned postings shuffle-map, then WAND + TakeOrderedAndProject
+    (lambda e: e.weighted_top_k("wireless bluetooth headphones",
+                                field_weights={"text": 1.0, "title": 2.5},
+                                k=10), 6),
+], ids=["collapse", "boosted", "weighted"])
+def test_single_query_wand_variants_job_counts(spark, wand_engine, call,
+                                               n_jobs):
+    """The collapse, static-prior and weighted WAND paths each run a
+    fixed number of jobs, pinned so a kernel change cannot add one."""
+    jobs = _jobs(spark, lambda: call(wand_engine))
+    assert len(jobs) == n_jobs, jobs

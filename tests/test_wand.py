@@ -241,7 +241,7 @@ def test_spark_filtered_wand_matches_oracle(spark, wand_built, tiny_rows):
         ("zipfhead0", dict(lang="en",
                            warc_ts_max=dt.datetime(2025, 1, 1, 2, 0))),
     ]:
-        got = qe.wand_filtered_top_k_df(q, k=10, **kwargs).collect()
+        got = qe.wand_top_k_df(q, k=10, **kwargs).collect()
         exp = oracle.search(q, k=10, **kwargs)["results"]
         assert [r["doc_id"] for r in got] == [h["doc_id"] for h in exp], \
             (q, kwargs)
@@ -330,7 +330,7 @@ def test_batch_filtered_matches_single_filtered(spark, wand_built):
     for qi, q in enumerate(queries):
         got = sorted(by_q.get(qi, []), key=lambda h: (-h[1], h[0]))
         want = [(int(r["doc_id"]), float(r["score"]))
-                for r in qe.wand_filtered_top_k_df(q, k=10, lang="en")
+                for r in qe.wand_top_k_df(q, k=10, lang="en")
                 .collect()]
         assert got == want, q
 
