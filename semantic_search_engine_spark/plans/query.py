@@ -206,19 +206,30 @@ class QueryEngine:
             return EngineConfig(**{k: v for k, v in d.items() if k in known})
         return DEFAULT_CONFIG
 
-    def _sfx(self) -> str:
-        return "" if self.field == "text" else f"_{self.field}"
+    def _sfx(self, field: str | None = None) -> str:
+        field = self.field if field is None else field
+        return "" if field == "text" else f"_{field}"
 
     # ------------------------------------------------------------------
-    def corpus_stats(self) -> dict:
-        """Two scalars, cached per engine instance (one tiny job total)."""
-        cached = getattr(self, "_corpus_stats_cache", None)
-        if cached is not None:
-            return cached
-        row = self.store.read(f"corpus_stats{self._sfx()}").collect()[0]
+    def corpus_stats(self, field: str | None = None) -> dict:
+        """``n_docs`` and ``avg_doc_len`` of ``field``'s index (default:
+        this engine's field), cached per engine instance and keyed on the
+        corpus_stats ``data_uuid`` like :meth:`_df_lookup`: a build,
+        merge or delete commits a new one and the next call re-reads.
+        One manifest read per call; one tiny job per commit."""
+        table = f"corpus_stats{self._sfx(field)}"
+        uuid = (self.store.table_meta(table) or {}).get("data_uuid")
+        cache = getattr(self, "_corpus_stats_cache", None)
+        if cache is None:
+            cache = {}
+            object.__setattr__(self, "_corpus_stats_cache", cache)
+        hit = cache.get(table)
+        if hit is not None and hit[0] == uuid:
+            return hit[1]
+        row = self.store.read(table).collect()[0]
         out = {"n_docs": int(row["n_docs"]),
                "avg_doc_len": float(row["avg_doc_len"] or 0.0)}
-        object.__setattr__(self, "_corpus_stats_cache", out)
+        cache[table] = (uuid, out)
         return out
 
     def _pruned_term_scan(self, table: str, terms: list[str]) -> DataFrame:
@@ -244,8 +255,8 @@ class QueryEngine:
         Spark collect per short query — now only terms not yet seen by
         THIS engine cost a pruned scan; absent terms cache df=0 so they
         never re-query). Keyed on the term_stats ``data_uuid``, so an
-        index merge invalidates it automatically — unlike
-        ``corpus_stats()``, which still needs a fresh QueryEngine."""
+        index merge invalidates it automatically, as it does
+        :meth:`corpus_stats`."""
         uuid = (self.store.table_meta(f"term_stats{self._sfx()}")
                 or {}).get("data_uuid")
         cached = getattr(self, "_term_df_cache", None)
@@ -384,12 +395,13 @@ class QueryEngine:
 
         Pruned postings scan → per-doc-bucket WAND (each bucket a
         doc-id-sorted slice of every query term's postings) → merge of
-        ≤ P·k local hits with ``orderBy(score DESC, doc_id ASC).limit(k)``.
-        Exact — the union of per-bucket top-k sets contains the global
-        top-k. A bare query runs three Spark jobs: the term_stats
-        broadcast, the postings shuffle-map, then ONE WAND task (one
-        Python call over every bucket) feeding TakeOrderedAndProject
-        (pinned in ``tests/test_plan_shapes.py``).
+        ≤ P·k local hits in (score DESC, doc_id ASC) order. Exact — the
+        union of per-bucket top-k sets contains the global top-k. A bare
+        query is ranked on the driver (:meth:`_driver_wand`): ONE Spark
+        job, the pruned postings collect, runs inside THIS call and no
+        Python task runs at all; the returned frame is a
+        ``LocalTableScan`` whose collect runs no job (pinned in
+        ``tests/test_plan_shapes.py``).
 
         With structured filters, the doc_meta survivor set cogroups with
         the blocks per doc bucket (both keyed by ``partition_id``) and WAND
@@ -401,19 +413,16 @@ class QueryEngine:
         """
         # Single query = the batch engine with one entry: identical
         # per-bucket WAND, one shared code path (no scaffolding drift
-        # between the two — code-review r2 finding). The batch core
-        # short-circuits the per-query window for a single query
-        # (VERDICT r2 #2: the batch-of-1 scaffold added an exchange the
-        # N=1 case never needed), so the last job ends in
-        # TakeOrderedAndProject.
+        # between the two — code-review r2 finding). A single query
+        # comes back already ranked; an orderBy here would plan a range
+        # exchange over the driver path's LocalTableScan.
         return (self._batch_wand_ranked([query], k=k, lang=lang,
                                         warc_ts_min=warc_ts_min,
                                         warc_ts_max=warc_ts_max,
                                         min_score=min_score,
                                         min_match=min_match,
                                         site=site, neg_site=neg_site)
-                .select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+                .select("doc_id", "score"))
 
     def maxscore_top_k_df(self, query: str, k: int | None = None,
                           min_score: float = 0.0) -> DataFrame:
@@ -527,13 +536,16 @@ class QueryEngine:
         picks up its term's global ``df`` via a broadcast join of the
         identically-pruned term_stats scan, idf is computed inside the
         WAND stage with the oracle's exact Python float expression, and a
-        per-query window top-k merges ≤ P·k·N local rows. That is four
-        Spark jobs whatever N is: the term_stats broadcast, the postings
-        shuffle-map, the WAND stage, and the per-query window. The WAND
-        stage makes one Python call per task and runs
-        ``min(defaultParallelism, distinct term sets)`` tasks (pinned in
-        ``tests/test_plan_shapes.py``). The per-engine-instance
-        corpus_stats scalar read is cached after the first call.
+        per-query window top-k merges ≤ P·k·N local rows. With ≥ 2
+        distinct term sets that is four Spark jobs whatever N is: the
+        term_stats broadcast, the postings shuffle-map, the WAND stage,
+        and the per-query window (one more, a broadcast, fans duplicate
+        term sets back out). The WAND stage makes one Python call per
+        task and runs ``min(defaultParallelism, distinct term sets)``
+        tasks (pinned in ``tests/test_plan_shapes.py``). A batch with
+        one distinct term set is ranked on the driver like
+        :meth:`wand_top_k_df` (one job, inside this call). The
+        per-engine corpus_stats read is cached per snapshot.
 
         Optional structured filters (``lang``/``warc_ts_*``) are shared by
         the whole batch and cogroup the doc_meta survivor set per bucket,
@@ -545,6 +557,65 @@ class QueryEngine:
                                         min_match=min_match,
                                         site=site, neg_site=neg_site)
                 .select("query_id", "doc_id", "score"))
+
+    def _driver_wand_scan(self, terms: list[str]) -> DataFrame:
+        """The pruned postings scan :meth:`_driver_wand` collects: the
+        block columns plus ``n_postings`` (for each term's ``df``)."""
+        return self._pruned_term_scan(f"postings{self._sfx()}",
+                                      terms).select(
+            "term", "partition_id", "block_id", "last_doc_id",
+            "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb",
+            "n_postings")
+
+    def _driver_wand(self, terms: list[str], k: int, query_id: int = 0,
+                     min_score: float = 0.0,
+                     after: tuple[float, int] | None = None,
+                     term_boosts: dict[str, float] | None = None,
+                     min_match: int = 1) -> "pa.Table":
+        """One unfiltered term set's top-k, ranked in this (the driver's)
+        Python process: a ``pyarrow.Table`` of (query_id, partition_id,
+        doc_id, score) holding ≤ k rows in (score DESC, doc_id ASC)
+        order.
+
+        ONE Spark job, JVM tasks only: the pruned postings scan collected
+        through ``toArrow()``. Each term's ``df`` is Σ ``n_postings``
+        over its blocks — term_stats' own definition — and the scan holds
+        every block of every query term, so term_stats is not read. The
+        batch runner (:func:`..wand.make_wand_batch_arrow_fn`) then runs
+        in-process over the collected blocks: the same kernel and float
+        order as the distributed path, so results are bit-identical.
+
+        Why no Python worker: every Python task here pays ~250 ms before
+        the user function runs (``setup_spark_files`` calls
+        ``importlib.invalidate_caches()`` per task, and on Python 3.11
+        each cached zipimporter then re-reads ``pyspark.zip``'s
+        directory), while one query's kernel work is ~15 ms.
+        """
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .wand import make_wand_batch_arrow_fn
+
+        cfg = self.cfg
+        stats = self.corpus_stats()
+        avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
+        batches: list = []
+        if terms and k > 0 and avgdl > 0:
+            blocks = self._driver_wand_scan(terms).toArrow()
+            sums = blocks.group_by("term").aggregate([("n_postings", "sum")])
+            df_of = dict(zip(sums.column("term").to_pylist(),
+                             sums.column("n_postings_sum").to_pylist()))
+            dfs = pa.array([df_of[t] for t in
+                            blocks.column("term").to_pylist()], pa.int64())
+            batches = blocks.append_column("df", dfs).to_batches()
+        fn = make_wand_batch_arrow_fn(
+            {query_id: list(terms)}, k, float(cfg.k1), float(cfg.b), avgdl,
+            n_docs, min_score=float(min_score), after=after,
+            term_boosts=term_boosts, min_match=int(min_match))
+        local = pa.Table.from_batches(list(fn(iter(batches))))
+        order = pc.sort_indices(local, [("score", "descending"),
+                                        ("doc_id", "ascending")])
+        return local.take(order[:k])
 
     def _batch_wand_ranked(self, queries: list[str],
                            k: int | None = None,
@@ -572,12 +643,18 @@ class QueryEngine:
         that actually contain hits (VERDICT r2 #2 — at 10^12 docs the
         decorate-100-rows join must not scan the whole metadata table).
 
-        A single unique term set skips the per-query ``row_number`` window
-        entirely — its ≤ P·k local hits merge through
-        ``orderBy().limit(k)`` (TakeOrderedAndProject: per-partition heap,
-        driver merge, no exchange). N>1 keeps the windowed merge.
+        A single query (one term set, unfiltered) is ranked on the
+        driver (:meth:`_driver_wand`): ONE job inside this call, and the
+        result is a ``LocalTableScan`` whose collect runs none. A single
+        filtered query merges its ≤ P·k local hits through
+        ``orderBy().limit(k)`` (TakeOrderedAndProject: no window, no
+        extra exchange). Either way a single query comes back in
+        (score DESC, doc_id ASC) order. N>1 distinct term sets merge
+        through a per-query ``row_number`` window: four jobs — the
+        term_stats broadcast, the postings shuffle-map, the WAND stage
+        and the window (pinned in ``tests/test_plan_shapes.py``).
 
-        Unfiltered, the WAND stage is a fixed-count
+        With N>1 unfiltered term sets the WAND stage is a fixed-count
         ``repartitionById(n, "partition_id").mapInArrow(...)``: each task
         receives whole buckets and makes one Python call over all of
         them. With structured filters it is a per-bucket cogroup with
@@ -593,16 +670,14 @@ class QueryEngine:
         cfg = self.cfg
         k = cfg.default_k if k is None \
             else min(k, cfg.max_k + cfg.max_offset)
-        empty = self.spark.createDataFrame(
-            [], "query_id int, partition_id int, doc_id long, score double")
         per_q = [sorted(set(tokenize(q, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
                  for q in queries]
         all_terms = sorted(set().union(*per_q)) if per_q else []
-        if not all_terms or k <= 0:
-            return empty
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
+        if not all_terms or k <= 0 or avgdl <= 0:
+            return self.spark.createDataFrame([], BATCH_WAND_OUT_SCHEMA)
         # one WAND pass per UNIQUE term set: duplicate query strings (and
         # distinct strings that tokenize identically) share a
         # representative and fan back out after the merge
@@ -614,8 +689,18 @@ class QueryEngine:
             rep = rep_of.setdefault(tuple(ts), qi)
             fanout.append((rep, qi))
         query_terms = {rep: list(key) for key, rep in rep_of.items()}
-        if not query_terms or avgdl <= 0:
-            return empty
+        filtered = (lang is not None or warc_ts_min is not None
+                    or warc_ts_max is not None or site is not None
+                    or neg_site is not None)
+        kernel_kw = dict(min_score=float(min_score), after=after,
+                         term_boosts=term_boosts, min_match=int(min_match))
+        if not filtered and len(query_terms) == 1:
+            # createDataFrame(list) would plan a Python-RDD scan: again a
+            # Python task. An Arrow table becomes a LocalTableScan.
+            (rep, terms), = query_terms.items()
+            ranked = self.spark.createDataFrame(
+                self._driver_wand(terms, k, query_id=rep, **kernel_kw))
+            return self._fan_out(ranked, fanout, rep_of)
 
         blocks = self._pruned_term_scan(f"postings{self._sfx()}",
                                         all_terms).select(
@@ -626,13 +711,8 @@ class QueryEngine:
         df_side = self._pruned_term_scan(f"term_stats{self._sfx()}",
                                          all_terms).select("term", "df")
         blocks = blocks.join(F.broadcast(df_side), "term")
-        filtered = (lang is not None or warc_ts_min is not None
-                    or warc_ts_max is not None or site is not None
-                    or neg_site is not None)
         kernel_args = (query_terms, k, float(cfg.k1), float(cfg.b), avgdl,
                        n_docs)
-        kernel_kw = dict(min_score=float(min_score), after=after,
-                         term_boosts=term_boosts, min_match=int(min_match))
         if filtered:
             allowed = self._apply_meta_filters(
                 self.store.read(f"doc_meta{self._sfx()}"), lang,
@@ -647,19 +727,19 @@ class QueryEngine:
             # sizes shuffle partitions by bytes, and this stage moves a
             # few KB of compressed blocks but is CPU-heavy in Python, so
             # a byte-sized exchange collapses onto one task. A
-            # fixed-count repartition is never coalesced. One term set
-            # keeps one task: every extra Python task pays ~100-200 ms
-            # of worker set-up, more than one query's kernel work.
-            # Buckets go to task partition_id % n, so tasks get equal
-            # bucket counts (hashing puts 5/10/7/10 of 32 on 4 tasks).
+            # fixed-count repartition is never coalesced. ≥ 2 term sets
+            # here (one is ranked on the driver), and each task pays
+            # ~250 ms of Python worker set-up, so there are never more
+            # tasks than term sets. Buckets go to task partition_id % n,
+            # so tasks get equal bucket counts (hashing puts 5/10/7/10
+            # of 32 on 4 tasks).
             n_tasks = min(self.spark.sparkContext.defaultParallelism,
                           len(query_terms))
             fn = make_wand_batch_arrow_fn(*kernel_args, **kernel_kw)
             local = (blocks.repartitionById(n_tasks, "partition_id")
                      .mapInArrow(fn, BATCH_WAND_OUT_SCHEMA))
         if len(rep_of) == 1:
-            # ONE unique term set (the single-query serve path, plus any
-            # duplicate batch): global top-k over this query's ≤ P·k local
+            # one filtered term set: global top-k over its ≤ P·k local
             # hits — no row_number window, no extra exchange
             ranked = (local.orderBy(F.desc("score"), F.asc("doc_id"))
                       .limit(k)
@@ -673,16 +753,19 @@ class QueryEngine:
                       .filter(F.col("_rn") <= k)
                       .select("query_id", "partition_id", "doc_id",
                               "score"))
-        if len(fanout) > len(rep_of):
-            # duplicates existed: replicate each representative's top-k
-            # to every query_id that shares its term set (tiny broadcast)
-            fmap = self.spark.createDataFrame(
-                fanout, "rep int, query_id int")
-            ranked = (ranked.withColumnRenamed("query_id", "rep")
-                      .join(F.broadcast(fmap), "rep")
-                      .select("query_id", "partition_id", "doc_id",
-                              "score"))
-        return ranked
+        return self._fan_out(ranked, fanout, rep_of)
+
+    def _fan_out(self, ranked: DataFrame, fanout: list[tuple[int, int]],
+                 rep_of: dict[tuple, int]) -> DataFrame:
+        """Duplicate term sets ran once: replicate each representative's
+        top-k to every query_id that shares its term set (a tiny
+        broadcast join; a no-op without duplicates)."""
+        if len(fanout) == len(rep_of):
+            return ranked
+        fmap = self.spark.createDataFrame(fanout, "rep int, query_id int")
+        return (ranked.withColumnRenamed("query_id", "rep")
+                .join(F.broadcast(fmap), "rep")
+                .select("query_id", "partition_id", "doc_id", "score"))
 
     # ------------------------------------------------- phrase / proximity
     _PHRASE_EMPTY = ("partition_id int, doc_id long, score double, "
@@ -1224,7 +1307,7 @@ class QueryEngine:
         # resolve phrase obligations: re-tokenize ONLY the pending docs
         # (each already contains every term of its clause's phrases —
         # conjunction-selective), pruned to their buckets by the
-        # broadcast join on (partition_id, doc_id) like _hydrate_hits
+        # broadcast join on (partition_id, doc_id)
         from pyspark.sql.functions import pandas_udf
 
         from ..textproc import phrase_match_count, token_positions
@@ -1666,7 +1749,7 @@ class QueryEngine:
         if mode == "rescore":
             window = 4 * k if window is None else max(window, k)
             top = self._batch_wand_ranked([query], k=window)
-            meta = meta_static
+            meta = self._in_hit_buckets(meta_static, top)
             return (F.broadcast(top)
                     .join(meta, ["partition_id", "doc_id"])
                     .select("doc_id",
@@ -1698,13 +1781,14 @@ class QueryEngine:
         score(d) = Σ_f w_f · BM25_f(d, query), each field scored against
         its OWN index (its own df / avgdl / doc lengths).
 
-        Six jobs (pinned in ``tests/test_plan_shapes.py``) for two
-        fields: one corpus_stats read and one term_stats broadcast per
-        field, then the union of every field's pruned postings scan
-        feeds ONE WAND stage: terms are qualified as ``field\\x00term``
-        so the standard per-bucket kernel treats each (field, term) pair
-        as an independent cursor whose weight is w_f·idf_f and whose
-        block-max bounds are the field's own — pruning stays exact (see
+        Four jobs for two fields once each field's corpus_stats is cached
+        (:meth:`corpus_stats`; pinned in ``tests/test_plan_shapes.py``):
+        one term_stats broadcast per field, then the union of every
+        field's pruned postings scan feeds ONE WAND stage: terms are
+        qualified as ``field\\x00term`` so the standard per-bucket kernel
+        treats each (field, term) pair as an independent cursor whose
+        weight is w_f·idf_f and whose block-max bounds are the field's
+        own — pruning stays exact (see
         ``make_weighted_field_fn``). Fields' doc buckets align because
         every field index buckets by the same doc-id hash.
         """
@@ -1718,9 +1802,7 @@ class QueryEngine:
         if not qterms or not field_weights or k <= 0:
             return empty
 
-        def sfx(f: str) -> str:
-            return "" if f == "text" else f"_{f}"
-
+        sfx = self._sfx
         field_avgdl: dict[str, float] = {}
         field_n_docs: dict[str, int] = {}
         for f in field_weights:
@@ -1729,9 +1811,9 @@ class QueryEngine:
                 raise ValueError(
                     f"no index built for field {f!r} (missing {table}); "
                     f"run IndexBuilder.build(field={f!r}) first")
-            row = self.store.read(table).collect()[0]
-            field_n_docs[f] = int(row["n_docs"])
-            field_avgdl[f] = float(row["avg_doc_len"] or 0.0)
+            stats = self.corpus_stats(f)
+            field_n_docs[f] = stats["n_docs"]
+            field_avgdl[f] = stats["avg_doc_len"]
         if all(a <= 0 for a in field_avgdl.values()):
             return empty
 
@@ -1876,8 +1958,7 @@ class QueryEngine:
         boosts = {t: float(boost) for t in exp}
         return (self._batch_wand_ranked([expanded], k=k,
                                         term_boosts=boosts)
-                .select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+                .select("doc_id", "score"))
 
     def prf_top_k(self, query: str, k: int = 10, **kw
                   ) -> list[tuple[int, float]]:
@@ -1904,8 +1985,7 @@ class QueryEngine:
                 "doc_id", "score")
         return (self._batch_wand_ranked([query], k=k,
                                         term_boosts=boosts)
-                .select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+                .select("doc_id", "score"))
 
     def term_boosted_top_k(self, query: str, k: int = 10,
                            boosts: dict[str, float] | None = None
@@ -2078,13 +2158,14 @@ class QueryEngine:
         training/serving feature skew is impossible by construction.
 
         Scale shape: features are hydrated for the window ONLY — the
-        broadcast hits drive dynamic partition pruning on the doc_meta
-        scan exactly like result hydration, so cost is O(window)
-        regardless of corpus size.
+        doc_meta scan is pruned to the hit buckets by literal
+        ``partition_id`` filters (:meth:`_in_hit_buckets`), so cost is
+        O(window) regardless of corpus size.
         """
         hits = self._batch_wand_ranked([query], k=int(window)).select(
             "partition_id", "doc_id", F.col("score").alias("bm25"))
-        meta = self.store.read(f"doc_meta{self._sfx()}")
+        meta = self._in_hit_buckets(
+            self.store.read(f"doc_meta{self._sfx()}"), hits)
         static_cols = [self.static_prior_col(s).alias(s) for s in statics]
         meta = meta.select("partition_id", "doc_id", "doc_len",
                            *static_cols)
@@ -2325,12 +2406,12 @@ class QueryEngine:
         ranking, ``ml-model/app.py:59-90``) rescores the (query, text)
         pairs jointly, and the window re-sorts by the model score.
 
-        ONE job, bounded by construction: the ≤ first_k WAND hits keep
-        their ``partition_id``, so broadcasting them against
-        ``doc_features`` prunes the text read to the hit buckets — via
-        dynamic partition pruning under the at-scale
+        Bounded by construction: the ≤ first_k WAND hits keep their
+        ``partition_id``, so the ``doc_features`` text read is cut to
+        the hit buckets — by literal ``partition_id`` filters
+        (:meth:`_in_hit_buckets`) that statically prune the at-scale
         ``partition_doc_features=True`` layout (plan-asserted,
-        ``tests/test_rerank.py``), via the join itself on the compact
+        ``tests/test_rerank.py``), by the join itself on the compact
         default layout — and the scoring UDF runs on ≤ first_k rows:
         O(first_k) model calls regardless of corpus size. Returns (doc_id, score, rerank_score) ordered by
         (rerank_score DESC, doc_id ASC) limited to ``k``; ``score`` is
@@ -2344,9 +2425,9 @@ class QueryEngine:
         top = self._batch_wand_ranked([query], k=first_k).select(
             "partition_id", "doc_id", "score")
         field_col = self.field  # doc_features text column IS the field name
-        feats = (self.store.read(f"doc_features{self._sfx()}")
-                 .select("partition_id", "doc_id",
-                         F.col(field_col).alias("_text")))
+        feats = self._in_hit_buckets(
+            self.store.read(f"doc_features{self._sfx()}"), top).select(
+            "partition_id", "doc_id", F.col(field_col).alias("_text"))
         sp = make_cross_scorer_udf(scorer=scorer, loader=loader,
                                    batch_size=batch_size)
         return (F.broadcast(top).join(feats, ["partition_id", "doc_id"])
@@ -2815,12 +2896,9 @@ class QueryEngine:
                 .alias("score"), "bm25",
                 F.lit(None).cast("double").alias("cosine"))
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-        buckets = [r["partition_id"] for r in
-                   hits.select("partition_id").distinct().collect()]
-        e = (self.store.read(f"doc_embeddings{self._sfx()}")
-             .filter(F.col("partition_id").isin(buckets))
-             .select("doc_id", F.col("emb").cast("array<double>")
-                     .alias("v")))
+        e = self._in_hit_buckets(
+            self.store.read(f"doc_embeddings{self._sfx()}"), hits).select(
+            "doc_id", F.col("emb").cast("array<double>").alias("v"))
         joined = (hits.join(e, "doc_id", "left")
                   .withColumn("cosine", self._cosine_expr(probe)))
         combined = (F.lit(float(query_weight)) * F.col("bm25")
@@ -2901,22 +2979,55 @@ class QueryEngine:
                 .mapInPandas(decode_doc_ids, schema="doc_id long")
                 .distinct())
 
-    def _hydrate_hits(self, top: DataFrame) -> DataFrame:
-        """Decorate WAND hits (partition_id, doc_id, score) with doc_meta
-        columns, in (score DESC, doc_id ASC) order.
+    @staticmethod
+    def _in_hit_buckets(table: DataFrame, hits: DataFrame) -> DataFrame:
+        """``table`` (laid out by doc-range bucket) cut to the buckets
+        that hold ``hits`` with a literal ``partition_id IN (…)``: static
+        partition pruning. ``hits`` is collected for its bucket ids — no
+        job for a driver-ranked hit frame, a ``LocalTableScan`` on which
+        dynamic partition pruning never fires."""
+        buckets = sorted({r[0] for r in
+                          hits.select("partition_id").collect()})
+        return table.filter(F.col("partition_id").isin(buckets))
 
-        The join runs on (partition_id, doc_id): doc_meta is laid out
-        partitioned by doc-range bucket, so broadcasting the ≤ k+offset
-        hits drives DYNAMIC PARTITION PRUNING on the metadata scan —
-        decorating ~100 rows reads only the hit buckets, not the whole
-        table (VERDICT r2 #2; at 10^12 docs the unpruned form is a full
-        metadata scan per query)."""
-        meta = self.store.read(f"doc_meta{self._sfx()}").select(
-            "partition_id", "doc_id", "url", "warc_ts", "lang", "doc_len")
-        return (F.broadcast(top).join(meta, ["partition_id", "doc_id"])
-                .select("doc_id", "url", "warc_ts", "lang", "doc_len",
-                        "score")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+    def _hits_meta_df(self, hits: list[tuple]) -> DataFrame:
+        """The doc_meta rows of ``hits`` ((partition_id, doc_id, …)
+        tuples), read with literal ``partition_id IN (…)`` and
+        ``doc_id IN (…)`` filters: doc_meta is laid out partitioned by
+        doc-range bucket, so the scan is statically pruned to the hit
+        buckets and its row groups skipped by doc id."""
+        return (self.store.read(f"doc_meta{self._sfx()}")
+                .filter(F.col("partition_id").isin(
+                    sorted({h[0] for h in hits}))
+                    & F.col("doc_id").isin(sorted({h[1] for h in hits})))
+                .select("partition_id", "doc_id", "url", "warc_ts", "lang",
+                        "doc_len"))
+
+    def _hydrate_hits(self, top: DataFrame) -> list:
+        """Decorate hits (partition_id, doc_id, score) with doc_meta
+        columns: Rows of (doc_id, url, warc_ts, lang, doc_len, score) in
+        (score DESC, doc_id ASC) order; a hit without a doc_meta row is
+        dropped, as an inner join would.
+
+        The ≤ k+offset hits are collected first (no job for the driver
+        path's local frame), the doc_meta read carries them as literals
+        (:meth:`_hits_meta_df`) and the join runs here: decorating ~100
+        rows reads only the hit buckets, not the whole table (VERDICT r2
+        #2; at 10^12 docs the unpruned form is a full metadata scan per
+        query). Dynamic partition pruning cannot do this for a local
+        hit frame — it never fires on a ``LocalTableScan`` build side."""
+        from pyspark.sql import Row
+
+        hits = [(r["partition_id"], r["doc_id"], r["score"]) for r in
+                top.select("partition_id", "doc_id", "score").collect()]
+        if not hits:
+            return []
+        meta = {(r["partition_id"], r["doc_id"]): r
+                for r in self._hits_meta_df(hits).collect()}
+        row = Row("doc_id", "url", "warc_ts", "lang", "doc_len", "score")
+        return [row(d, m["url"], m["warc_ts"], m["lang"], m["doc_len"], s)
+                for p, d, s in sorted(hits, key=lambda h: (-h[2], h[1]))
+                if (m := meta.get((p, d))) is not None]
 
     def _scored_filtered(self, query: str, min_score: float, lang,
                          warc_ts_min, warc_ts_max, site=None,
@@ -3024,7 +3135,7 @@ class QueryEngine:
         "semantic" ranks by embedding cosine and "hybrid" by BM25⊕cosine
         RRF — the reference's vector serve shape in the same envelope
         (filters pre-applied, IVF-accelerated when an index exists, hits
-        hydrated through the same DPP-pruned doc_meta join; totalCount
+        hydrated through the same bucket-pruned doc_meta read; totalCount
         follows count_mode="none" semantics — an exact pre-limit count
         over a vector ranking would be a corpus-wide threshold scan).
 
@@ -3062,11 +3173,11 @@ class QueryEngine:
                 base = base.filter(F.col("score") >= F.lit(min_score))
             # hits carry no partition_id (the vector tables key on
             # doc_id) — recompute the doc-range bucket so hydration gets
-            # its DPP prune exactly like the WAND path
+            # its bucket prune exactly like the WAND path
             top = base.select(
                 doc_bucket_expr("doc_id", cfg.n_doc_buckets)
                 .alias("partition_id"), "doc_id", "score")
-            rows = self._hydrate_hits(top).collect()[offset:]
+            rows = self._hydrate_hits(top)[offset:]
             return self._envelope(rows, len(rows), k, query, t0,
                                   highlight, offset=offset)
 
@@ -3082,7 +3193,7 @@ class QueryEngine:
                 warc_ts_min=warc_ts_min, warc_ts_max=warc_ts_max,
                 min_score=min_score, site=site, neg_site=neg_site
             ).select("partition_id", "doc_id", "score")
-            rows = self._hydrate_hits(top).collect()[offset:]
+            rows = self._hydrate_hits(top)[offset:]
             if count_mode == "approx":
                 total = max(self.approx_count(
                     query, min_score=min_score, lang=lang,
@@ -3140,7 +3251,7 @@ class QueryEngine:
             warc_ts_max=warc_ts_max, min_score=min_score,
             after=(float(cursor[0]), int(cursor[1])) if cursor else None
         ).select("partition_id", "doc_id", "score")
-        rows = self._hydrate_hits(top).collect()
+        rows = self._hydrate_hits(top)
         return self._envelope(
             rows, len(rows), k, query, t0, highlight,
             next_cursor=((float(rows[-1]["score"]),
@@ -3239,16 +3350,24 @@ class QueryEngine:
         ``mode="exhaustive"`` scores every candidate (correctness baseline —
         the two must be rank-identical). ``theta_bootstrap`` seeds the WAND
         threshold from champion lists (:meth:`champion_theta`) — exact,
-        strictly stronger pruning, at the cost of one extra tiny job."""
-        k = min(k, self.cfg.max_k)  # page-size cap, both modes alike
+        strictly stronger pruning, at the cost of one extra tiny job.
+
+        ``mode="wand"`` runs ONE Spark job (the pruned postings collect of
+        :meth:`_driver_wand`) and no Python task, and builds no
+        DataFrame of its result (pinned in ``tests/test_plan_shapes.py``).
+        """
+        cfg = self.cfg
+        k = min(k, cfg.max_k)  # page-size cap, both modes alike
         if mode == "wand":
             seed = (self.champion_theta(query, k)
                     if theta_bootstrap else 0.0)
-            rows = self.wand_top_k_df(query, k=k,
-                                      min_score=seed).collect()
-        else:
-            # genuinely exhaustive: score every candidate, then top-k
-            rows = (self.scores_df(query)
-                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .collect())
+            terms = sorted(set(tokenize(query, cfg.max_token_len,
+                                        cfg.min_token_len, cfg.analyzer)))
+            top = self._driver_wand(terms, k, min_score=seed)
+            return list(zip(top.column("doc_id").to_pylist(),
+                            top.column("score").to_pylist()))
+        # genuinely exhaustive: score every candidate, then top-k
+        rows = (self.scores_df(query)
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                .collect())
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]

@@ -119,15 +119,20 @@ def _wand_tasks(jobs: list[list[int]]) -> int:
     return next(j[-1] for j in jobs if len(j) > 1)
 
 
-def test_top_k_three_jobs_one_wand_task(spark, wand_engine):
-    """A single query runs 3 jobs — the term_stats broadcast, the
-    postings shuffle-map, then WAND + TakeOrderedAndProject — and the
-    WAND stage stays ONE task: every extra Python task costs worker
-    set-up that a single query's kernel work does not repay."""
-    jobs = _jobs(spark, lambda: wand_engine.top_k(
-        "wireless bluetooth headphones", k=10))
-    assert len(jobs) == 3, jobs
-    assert _wand_tasks(jobs) == 1, jobs
+def test_top_k_one_job_no_python_task(spark, wand_engine):
+    """A single unfiltered query runs exactly ONE job — the pruned
+    postings collect, one stage, no shuffle — and ranks on the driver:
+    the collected plan holds no Python node, so no Python worker task
+    runs (each one costs worker set-up that a single query's kernel
+    work does not repay)."""
+    q = "wireless bluetooth headphones"
+    jobs = _jobs(spark, lambda: wand_engine.top_k(q, k=10))
+    assert len(jobs) == 1 and len(jobs[0]) == 1, jobs
+    terms = sorted(set(q.split()))
+    plan = _plan(wand_engine._driver_wand_scan(terms))
+    assert "FileScan parquet" in plan, plan
+    for node in ("Python", "Arrow", "Pandas", "Exchange"):
+        assert node not in plan, (node, plan)
 
 
 @pytest.mark.parametrize("queries,n_jobs", [
@@ -162,11 +167,12 @@ def test_batch_top_k_four_jobs_wand_spread_over_cores(spark, wand_engine,
     # then the per-bucket cogroup + TakeOrderedAndProject
     (lambda e: e.boosted_top_k("wireless bluetooth headphones",
                                w_static=0.5, k=10, mode="wand"), 4),
-    # one corpus_stats read and one term_stats broadcast per field, the
-    # unioned postings shuffle-map, then WAND + TakeOrderedAndProject
+    # one term_stats broadcast per field (each field's corpus_stats is
+    # cached per snapshot), the unioned postings shuffle-map, then WAND +
+    # TakeOrderedAndProject
     (lambda e: e.weighted_top_k("wireless bluetooth headphones",
                                 field_weights={"text": 1.0, "title": 2.5},
-                                k=10), 6),
+                                k=10), 4),
 ], ids=["collapse", "boosted", "weighted"])
 def test_single_query_wand_variants_job_counts(spark, wand_engine, call,
                                                n_jobs):

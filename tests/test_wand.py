@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import heapq
 import math
+import re
+import uuid
 
 import numpy as np
 import pytest
@@ -335,18 +337,11 @@ def test_batch_filtered_matches_single_filtered(spark, wand_built):
         assert got == want, q
 
 
-def test_query_scan_pruning_reaches_physical_plan(spark, wand_built):
-    """The pruning the scale design depends on must be visible in the
-    physical plan: the postings scan carries (a) a PartitionFilters entry
-    on term_bucket (partition pruning from constant-folded bucket
-    literals) and (b) a PushedFilters term IN (...) (parquet row-group
-    skipping). Regression guard for SCALE.md §4."""
-    from semantic_search_engine_spark.plans.query import QueryEngine
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    store, cfg = wand_built
-    qe = QueryEngine(spark, store, cfg)
-    df = qe.batch_wand_top_k_df(["wireless bluetooth"], k=5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+
+def _assert_term_scan_pruned(plan: str) -> None:
     # partition pruning on the postings layout column
     assert "PartitionFilters" in plan
     seg = plan[plan.index("PartitionFilters"):]
@@ -357,46 +352,94 @@ def test_query_scan_pruning_reaches_physical_plan(spark, wand_built):
     assert "term" in pushed[:300], pushed[:300]
 
 
-def test_single_query_plan_has_no_window_exchange(spark, wand_built):
-    """The N=1 serve path must NOT pay the batch engine's per-query
-    row_number window (VERDICT r2: the batch-of-1 scaffold added an
-    exchange + stage single queries never needed) — the merge of local
-    hits is a TakeOrderedAndProject."""
+def test_query_scan_pruning_reaches_physical_plan(spark, wand_built):
+    """The pruning the scale design depends on must be visible in the
+    physical plan: the postings scan carries (a) a PartitionFilters entry
+    on term_bucket (partition pruning from constant-folded bucket
+    literals) and (b) a PushedFilters term IN (...) (parquet row-group
+    skipping) — both in a 2-query batch plan and in the scan the
+    single-query driver path collects. Regression guard for SCALE.md
+    §4."""
     from semantic_search_engine_spark.plans.query import QueryEngine
 
     store, cfg = wand_built
     qe = QueryEngine(spark, store, cfg)
-    plan = (qe._batch_wand_ranked(["wireless bluetooth"], k=10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" not in plan, plan
-    assert "TakeOrderedAndProject" in plan
+    _assert_term_scan_pruned(_plan(qe.batch_wand_top_k_df(
+        ["wireless bluetooth", "gaming laptop"], k=5)))
+    _assert_term_scan_pruned(_plan(qe._driver_wand_scan(
+        ["bluetooth", "wireless"])))
+
+
+def test_single_query_plan_has_no_window_exchange(spark, wand_built):
+    """The N=1 serve path must NOT pay the batch engine's per-query
+    row_number window (VERDICT r2: the batch-of-1 scaffold added an
+    exchange + stage single queries never needed) — nor any exchange or
+    Python stage: it is ranked on the driver and comes back as a bare
+    LocalTableScan, whose collect runs no job."""
+    from semantic_search_engine_spark.plans.query import QueryEngine
+
+    store, cfg = wand_built
+    qe = QueryEngine(spark, store, cfg)
+    single = qe._batch_wand_ranked(["wireless bluetooth"], k=10)
+    plan = _plan(single)
+    assert plan.startswith("LocalTableScan"), plan
+    assert len(plan.strip().splitlines()) == 1, plan
+    for node in ("Window", "Exchange", "Python"):
+        assert node not in plan, (node, plan)
+    sc = spark.sparkContext
+    gid = f"n1-collect-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "n=1 collect")
+    try:
+        assert single.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
     # N>1 distinct term sets still use the per-query window
-    plan2 = (qe._batch_wand_ranked(["wireless bluetooth", "gaming"], k=10)
-             ._jdf.queryExecution().executedPlan().toString())
+    plan2 = _plan(qe._batch_wand_ranked(["wireless bluetooth", "gaming"],
+                                        k=10))
     assert "Window" in plan2
+
+
+def _literal_in(plan: str, section: str, col: str) -> list[int]:
+    """The integer literals of ``col IN (…)`` inside a scan's
+    ``section`` (e.g. ``PartitionFilters: [...]``) of a plan string
+    (Catalyst prints a one-value IN as ``col = v``)."""
+    seg = plan[plan.index(f"{section}: ["):]
+    seg = seg[:seg.index("]")]
+    m = re.search(rf"{col}#\d+L? (?:IN \(([^)]*)\)|= (-?\d+))", seg)
+    assert m, seg
+    return sorted(int(x) for x in (m.group(1) or m.group(2)).split(","))
 
 
 def test_hydration_scan_is_partition_pruned(spark, wand_built):
     """Result hydration must not scan the whole doc_meta table: the
-    broadcast of the ≤ k hits drives dynamic partition pruning on the
-    partitioned (partition_id) metadata layout — the physical plan's
-    doc_meta scan carries a dynamicpruning PartitionFilter (VERDICT r2
-    #4 done-criterion)."""
+    ≤ k hits are collected and the doc_meta read carries a literal
+    ``partition_id IN (…)`` of exactly the hit buckets (static partition
+    pruning on the partitioned metadata layout; dynamic pruning never
+    fires on the driver path's LocalTableScan hit frame) — for a local
+    top and for a filtered top (VERDICT r2 #4 done-criterion)."""
     from semantic_search_engine_spark.plans.query import QueryEngine
 
     store, cfg = wand_built
     qe = QueryEngine(spark, store, cfg)
-    top = (qe._batch_wand_ranked(["wireless bluetooth"], k=10)
-           .select("partition_id", "doc_id", "score"))
-    hyd = qe._hydrate_hits(top)
-    rows = hyd.collect()
-    assert rows  # hydration produced decorated hits
-    assert rows[0]["url"]
-    plan = hyd._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan
-    # the dynamic filter sits on the metadata scan's partition column
-    i = plan.lower().index("dynamicpruningexpression")
-    assert "partition_id" in plan[i:i + 200]
+    for lang in (None, "en"):
+        top = (qe._batch_wand_ranked(["wireless bluetooth"], k=10,
+                                     lang=lang)
+               .select("partition_id", "doc_id", "score"))
+        hits = [tuple(r) for r in top.collect()]
+        assert hits, lang
+        rows = qe._hydrate_hits(top)
+        # every hit decorated, in (score DESC, doc_id ASC) order
+        assert [(r["doc_id"], r["score"]) for r in rows] == sorted(
+            [(d, s) for _, d, s in hits], key=lambda h: (-h[1], h[0]))
+        assert rows[0]["url"]
+        plan = _plan(qe._hits_meta_df(hits))
+        assert "doc_meta" in plan, plan
+        assert _literal_in(plan, "PartitionFilters", "partition_id") == \
+            sorted({p for p, _, _ in hits}), (lang, plan)
+        pushed = plan[plan.index("PushedFilters"):]
+        assert "doc_id" in pushed[:300], pushed[:300]
 
 
 def test_batch_top_k_scales_to_hundred_queries(spark, wand_built):
@@ -474,8 +517,22 @@ def _oracle_ranked(oracle, cfg, q, k, min_score=0.0, after=None,
     return full[:k]
 
 
-@pytest.mark.parametrize("variant", ["plain", "min_score", "after",
-                                     "term_boosts", "min_match"])
+VARIANTS = ["plain", "min_score", "after", "term_boosts", "min_match"]
+
+
+def _variant_kw(oracle, variant: str, k: int) -> dict:
+    """The kernel options each bit-identity test runs under."""
+    top0 = oracle.top_k(BATCH_QUERIES[0], k=k)
+    return {"plain": {},
+            "min_score": {"min_score": top0[4][1]},
+            "after": {"after": (top0[2][1], top0[2][0])},
+            "term_boosts": {"term_boosts": {"bluetooth": 2.0,
+                                            "zipfhead0": 0.5,
+                                            "zipfhead3": 1.5}},
+            "min_match": {"min_match": 2}}[variant]
+
+
+@pytest.mark.parametrize("variant", VARIANTS)
 def test_batch_runner_bit_identical_to_single_and_oracle(spark, wand32,
                                                          variant):
     """The per-task Arrow runner (each task sorts its rows once and
@@ -495,14 +552,7 @@ def test_batch_runner_bit_identical_to_single_and_oracle(spark, wand32,
                     .select("partition_id").distinct().count())
     assert 0 < rare_buckets < cfg.n_doc_buckets
 
-    top0 = oracle.top_k(BATCH_QUERIES[0], k=k)
-    kw = {"plain": {},
-          "min_score": {"min_score": top0[4][1]},
-          "after": {"after": (top0[2][1], top0[2][0])},
-          "term_boosts": {"term_boosts": {"bluetooth": 2.0,
-                                          "zipfhead0": 0.5,
-                                          "zipfhead3": 1.5}},
-          "min_match": {"min_match": 2}}[variant]
+    kw = _variant_kw(oracle, variant, k)
     batch = _ranked_by_query(qe._batch_wand_ranked(BATCH_QUERIES, k=k, **kw),
                              len(BATCH_QUERIES))
     assert any(batch) and not all(batch[i] for i in range(len(batch)))
@@ -511,3 +561,32 @@ def test_batch_runner_bit_identical_to_single_and_oracle(spark, wand32,
         assert batch[i] == single[0], (variant, q)
         assert batch[i] == _oracle_ranked(oracle, cfg, q, k, **kw), \
             (variant, q)
+
+
+@pytest.mark.parametrize("variant", VARIANTS)
+def test_driver_path_bit_identical_to_batch_and_oracle(spark, wand32,
+                                                       variant):
+    """A single unfiltered query is ranked on the driver (its result is
+    a LocalTableScan). On the 32-bucket index it equals — ids and float
+    scores — both the oracle and its own row of a 2-query batch, whose
+    WAND stage runs in Python tasks, under each kernel option."""
+    qe, oracle = wand32
+    cfg, k = qe.cfg, 10
+    kw = _variant_kw(oracle, variant, k)
+    singles = {}
+    for q in BATCH_QUERIES:
+        df = qe._batch_wand_ranked([q], k=k, **kw)
+        assert _plan(df).startswith("LocalTableScan"), q
+        singles[q] = _ranked_by_query(df, 1)[0]
+        assert singles[q] == _oracle_ranked(oracle, cfg, q, k, **kw), \
+            (variant, q)
+    if variant == "plain":
+        for q in BATCH_QUERIES:
+            assert qe.top_k(q, k=k) == singles[q], q
+    assert any(singles.values())
+    pairs = list(zip(BATCH_QUERIES[0::2],
+                     BATCH_QUERIES[1::2] + BATCH_QUERIES[:1]))
+    for a, b in pairs:
+        assert set(a.split()) != set(b.split())  # two distinct term sets
+        pair = _ranked_by_query(qe._batch_wand_ranked([a, b], k=k, **kw), 2)
+        assert pair == [singles[a], singles[b]], (variant, a, b)
