@@ -18,8 +18,9 @@ posting blocks (`BlockCursor` fence-hops undecoded blocks during seeks,
 so MaxScore keeps the block-max benefit on its random-access path).
 
 Distribution model: identical to WAND (wand.py module docstring) — the
-kernel runs independently per doc-range bucket inside `applyInPandas`,
-and the union of per-bucket top-k sets contains the global top-k.
+kernel runs independently per doc-range bucket (on the driver, over the
+query's collected blocks: `QueryEngine.maxscore_top_k_df`), and the
+union of per-bucket top-k sets contains the global top-k.
 
 Reference parity: reproduces the same scored-top-k semantics as the
 reference's ORDER BY similarity DESC LIMIT k
@@ -42,14 +43,7 @@ import math
 
 import numpy as np
 
-from .wand import (
-    EXHAUSTED,
-    BlockCursor,
-    bm25_idf,
-    find_doc,
-    group_blocks_by_term,
-    open_cursors,
-)
+from .wand import EXHAUSTED, BlockCursor, find_doc, open_cursors
 
 #: absolute slack on prune comparisons — absorbs the ulp-level difference
 #: between the probe-order running sum and the oracle-order final sum, so
@@ -200,37 +194,3 @@ def maxscore_top_k(
     }
     return hits, stats
 
-
-MAXSCORE_OUT_SCHEMA = "partition_id int, doc_id long, score double"
-
-
-def make_maxscore_group_fn(qterms: list[str], k: int, k1: float, b: float,
-                           avgdl: float, n_docs: int,
-                           min_score: float = 0.0):
-    """Per-doc-bucket `applyInPandas` body running the MaxScore kernel.
-
-    The MaxScore counterpart of the WAND per-bucket kernel for a single
-    query: each group is one doc-range bucket's blocks for the query terms (with the global
-    ``df`` riding each row via the broadcast term_stats join), idf is
-    computed here with the oracle's exact float expression, and the ≤ k
-    local hits flow to the TakeOrderedAndProject merge.
-    """
-    import pandas as pd
-
-    terms = sorted(set(qterms))
-
-    def run_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(["term", "partition_id", "block_id"])
-        blocks = group_blocks_by_term(pdf)
-        dfs = {t: int(v) for t, v in zip(pdf["term"], pdf["df"])}
-        weights = {t: bm25_idf(n_docs, dfs[t]) for t in terms if t in dfs}
-        hits, _ = maxscore_top_k(blocks, weights, k, k1, b, avgdl,
-                                 min_score=min_score)
-        pid = int(pdf["partition_id"].iloc[0]) if len(pdf) else -1
-        return pd.DataFrame({
-            "partition_id": pd.Series([pid] * len(hits), dtype="int32"),
-            "doc_id": pd.Series([d for d, _ in hits], dtype="int64"),
-            "score": pd.Series([s for _, s in hits], dtype="float64"),
-        })
-
-    return run_bucket

@@ -10,8 +10,9 @@ doc_meta join → filters → TakeOrderedAndProject top-k.
 
 Two physical paths:
   * block-max WAND (plans/wand.py) — the fast path for top-k, bare or with
-    structured filters (the filter survivor set cogroups with the posting
-    blocks per doc bucket and WAND skips non-survivors before scoring).
+    structured filters (WAND skips non-survivors before scoring). A
+    single query ranks on the driver over its collected posting blocks
+    (:meth:`QueryEngine._rank_on_driver`); a batch ranks in Python tasks.
   * exhaustive — scores every posting; used when an exact pre-limit count
     or a score threshold is requested, and as the correctness baseline.
 """
@@ -396,17 +397,16 @@ class QueryEngine:
         Pruned postings scan → per-doc-bucket WAND (each bucket a
         doc-id-sorted slice of every query term's postings) → merge of
         ≤ P·k local hits in (score DESC, doc_id ASC) order. Exact — the
-        union of per-bucket top-k sets contains the global top-k. A bare
-        query is ranked on the driver (:meth:`_driver_wand`): ONE Spark
-        job, the pruned postings collect, runs inside THIS call and no
-        Python task runs at all; the returned frame is a
-        ``LocalTableScan`` whose collect runs no job (pinned in
-        ``tests/test_plan_shapes.py``).
-
-        With structured filters, the doc_meta survivor set cogroups with
-        the blocks per doc bucket (both keyed by ``partition_id``) and WAND
-        skips non-survivors before scoring — still exact, since filtering
-        only shrinks the candidate set. Bare queries never touch doc_meta.
+        union of per-bucket top-k sets contains the global top-k. The
+        query is ranked on the driver (:meth:`_driver_wand`) and no
+        Python task runs: a bare query is ONE Spark job (the pruned
+        postings collect), a filtered one TWO — the second reads the
+        filter survivors of just the buckets that hold the query's
+        postings, and WAND skips non-survivors before scoring (still
+        exact: filtering only shrinks the candidate set). Both jobs run
+        inside THIS call; the returned frame is a ``LocalTableScan``
+        whose collect runs none (pinned in ``tests/test_plan_shapes.py``).
+        Bare queries never touch doc_meta.
 
         ``k`` is clamped to ``max_k + max_offset`` (internal pagination
         bound); the public ``search``/``top_k`` enforce the page-size cap.
@@ -429,45 +429,38 @@ class QueryEngine:
         """MaxScore top-k (X108) — same results as :meth:`wand_top_k_df`,
         different DAAT pruning strategy (plans/maxscore.py).
 
-        Same scan and merge as the WAND serve path: pruned postings scan
-        (+ broadcast term_stats join so the global ``df`` rides each
-        block row) → per-doc-bucket MaxScore (``applyInPandas`` on
-        ``partition_id``) → TakeOrderedAndProject merge of ≤ P·k local
-        hits. Kept as a first-class alternative because the two
-        strategies' pruning profiles differ (MaxScore avoids WAND's
-        per-step cursor sort and touches long low-idf lists only by
-        random access — the long-query / stopword-heavy shape), while the
-        results are rank-identical by construction.
+        Ranked on the driver over the same collected blocks as the WAND
+        serve path (:meth:`_rank_on_driver`): ONE job, the pruned
+        postings collect, and no Python task; the result is a
+        ``LocalTableScan`` in (score DESC, doc_id ASC) order. Kept as a
+        first-class alternative because the two strategies' pruning
+        profiles differ (MaxScore avoids WAND's per-step cursor sort and
+        touches long low-idf lists only by random access — the
+        long-query / stopword-heavy shape), while the results are
+        rank-identical by construction.
         """
-        from .maxscore import MAXSCORE_OUT_SCHEMA, make_maxscore_group_fn
+        from .maxscore import maxscore_top_k
 
         cfg = self.cfg
         k = cfg.default_k if k is None \
             else min(k, cfg.max_k + cfg.max_offset)
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not qterms or k <= 0:
-            return empty
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
-        if avgdl <= 0:
-            return empty
-        blocks = self._pruned_term_scan(f"postings{self._sfx()}",
-                                        qterms).select(
-            "term", "partition_id", "block_id", "last_doc_id",
-            "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb")
-        df_side = self._pruned_term_scan(f"term_stats{self._sfx()}",
-                                         qterms).select("term", "df")
-        blocks = blocks.join(F.broadcast(df_side), "term")
-        fn = make_maxscore_group_fn(qterms, k, float(cfg.k1),
-                                    float(cfg.b), avgdl, n_docs,
-                                    min_score=float(min_score))
-        local = blocks.groupBy("partition_id").applyInPandas(
-            fn, schema=MAXSCORE_OUT_SCHEMA)
-        return (local.select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k))
+        k1, b, min_score = float(cfg.k1), float(cfg.b), float(min_score)
+
+        def bucket_hits(pid, by_term, idf):
+            hits, _ = maxscore_top_k(by_term, {t: idf[t] for t in by_term},
+                                     k, k1, b, avgdl, min_score=min_score)
+            for d, s in hits:
+                yield 0, pid, d, s, None
+
+        scan = (self._driver_wand_scan(qterms) if qterms and avgdl > 0
+                else None)
+        return (self.spark.createDataFrame(
+            self._rank_on_driver(scan, n_docs, k, bucket_hits))
+            .select("doc_id", "score"))
 
     #: strategy rule (X113): at or above this many distinct query terms,
     #: MaxScore's fixed cursor order beats WAND's per-step re-sort
@@ -502,14 +495,13 @@ class QueryEngine:
         run block-max WAND, long or stopword-heavy queries run MaxScore
         (see :meth:`choose_strategy`). The two kernels are rank- and
         score-identical by construction (tests pin it), so the choice
-        changes cost, never results."""
+        changes cost, never results. Either kernel ranks on the driver:
+        one job (the pruned postings collect; the df check reads the
+        per-engine cache), none for an empty query."""
         cfg = self.cfg
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
-        if not qterms:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double")
-        if self.choose_strategy(qterms) == "maxscore":
+        if qterms and self.choose_strategy(qterms) == "maxscore":
             return self.maxscore_top_k_df(query, k=k, min_score=min_score)
         return self.wand_top_k_df(query, k=k, min_score=min_score)
 
@@ -544,12 +536,13 @@ class QueryEngine:
         task and runs ``min(defaultParallelism, distinct term sets)``
         tasks (pinned in ``tests/test_plan_shapes.py``). A batch with
         one distinct term set is ranked on the driver like
-        :meth:`wand_top_k_df` (one job, inside this call). The
-        per-engine corpus_stats read is cached per snapshot.
+        :meth:`wand_top_k_df` (inside this call). The per-engine
+        corpus_stats read is cached per snapshot.
 
         Optional structured filters (``lang``/``warc_ts_*``) are shared by
-        the whole batch and cogroup the doc_meta survivor set per bucket,
-        exactly like the single-query filtered fast path.
+        the whole batch; with ≥ 2 distinct term sets the doc_meta survivor
+        set cogroups with the blocks per bucket (one whole-``doc_meta``
+        shuffle per batch).
         """
         return (self._batch_wand_ranked(queries, k=k, lang=lang,
                                         warc_ts_min=warc_ts_min,
@@ -558,64 +551,161 @@ class QueryEngine:
                                         site=site, neg_site=neg_site)
                 .select("query_id", "doc_id", "score"))
 
-    def _driver_wand_scan(self, terms: list[str]) -> DataFrame:
-        """The pruned postings scan :meth:`_driver_wand` collects: the
+    def _driver_wand_scan(self, terms: list[str],
+                          field: str | None = None) -> DataFrame:
+        """The pruned postings scan the driver-side paths collect: the
         block columns plus ``n_postings`` (for each term's ``df``)."""
-        return self._pruned_term_scan(f"postings{self._sfx()}",
+        return self._pruned_term_scan(f"postings{self._sfx(field)}",
                                       terms).select(
             "term", "partition_id", "block_id", "last_doc_id",
             "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb",
             "n_postings")
 
-    def _driver_wand(self, terms: list[str], k: int, query_id: int = 0,
-                     min_score: float = 0.0,
-                     after: tuple[float, int] | None = None,
-                     term_boosts: dict[str, float] | None = None,
-                     min_match: int = 1) -> "pa.Table":
-        """One unfiltered term set's top-k, ranked in this (the driver's)
-        Python process: a ``pyarrow.Table`` of (query_id, partition_id,
-        doc_id, score) holding ≤ k rows in (score DESC, doc_id ASC)
-        order.
+    @staticmethod
+    def _collect_blocks(scan: DataFrame) -> "pa.Table":
+        """``scan`` (a :meth:`_driver_wand_scan`) collected through
+        ``toArrow()`` — ONE Spark job, JVM tasks only — with each term's
+        global ``df`` appended: Σ ``n_postings`` over its blocks,
+        term_stats' own definition. The scan holds every block of every
+        query term, so term_stats is not read."""
+        import pyarrow as pa
 
-        ONE Spark job, JVM tasks only: the pruned postings scan collected
-        through ``toArrow()``. Each term's ``df`` is Σ ``n_postings``
-        over its blocks — term_stats' own definition — and the scan holds
-        every block of every query term, so term_stats is not read. The
-        batch runner (:func:`..wand.make_wand_batch_arrow_fn`) then runs
-        in-process over the collected blocks: the same kernel and float
-        order as the distributed path, so results are bit-identical.
+        blocks = scan.toArrow()
+        sums = blocks.group_by("term").aggregate([("n_postings", "sum")])
+        df_of = dict(zip(sums.column("term").to_pylist(),
+                         sums.column("n_postings_sum").to_pylist()))
+        return blocks.append_column("df", pa.array(
+            [df_of[t] for t in blocks.column("term").to_pylist()],
+            pa.int64()))
+
+    @staticmethod
+    def _bucket_meta(meta: DataFrame, blocks: "pa.Table") -> dict:
+        """bucket → the doc_id-sorted rows of ``meta`` (a frame keyed by
+        doc_meta's (partition_id, doc_id)) for every bucket that holds
+        ``blocks``; a bucket without rows gets an empty slice. The read
+        carries a literal ``partition_id IN (…)`` of those buckets, as
+        :meth:`_hits_meta_df` does: doc_meta is partitioned by bucket, so
+        one JVM-only job reads just them."""
+        buckets = sorted(set(blocks.column("partition_id").to_pylist()))
+        if not buckets:
+            return {}
+        t = (meta.filter(F.col("partition_id").isin(buckets)).toArrow()
+             .sort_by([("partition_id", "ascending"),
+                       ("doc_id", "ascending")]))
+        from .wand import key_runs
+
+        pids = t.column("partition_id").to_pylist()
+        out = {p: t.slice(0, 0) for p in buckets}
+        for lo, hi in key_runs(pids):
+            out[pids[lo]] = t.slice(lo, hi - lo)
+        return out
+
+    def _rank_on_driver(self, scan: DataFrame | None, n_docs, k: int,
+                        bucket_hits, meta: DataFrame | None = None,
+                        hook=None, collapse: bool = False) -> "pa.Table":
+        """The one single-query plan: collect ``scan``
+        (:meth:`_collect_blocks`; ``meta``'s rows of the same buckets
+        too, :meth:`_bucket_meta`) and rank in this — the driver's —
+        Python process. :func:`..wand.bucket_blocks` splits the blocks
+        into doc buckets and ``bucket_hits(pid, by_term, idf, **kw)``
+        ranks each, ``kw = hook(meta slice)`` (a None ``kw`` skips the
+        bucket). Returns the ≤ k best ``(query_id, partition_id, doc_id,
+        score)`` rows in (score DESC, doc_id ASC) order as an Arrow
+        table, with a ``ckey`` column under ``collapse``, whose rows
+        merge as a per-key window would: each key's best doc, then the
+        top k keys. ``scan`` None or ``k`` ≤ 0: an empty table, no job.
 
         Why no Python worker: every Python task here pays ~250 ms before
         the user function runs (``setup_spark_files`` calls
         ``importlib.invalidate_caches()`` per task, and on Python 3.11
         each cached zipimporter then re-reads ``pyspark.zip``'s
-        directory), while one query's kernel work is ~15 ms.
+        directory), while one query's kernel work is ~15 ms. The result
+        becomes a frame through ``createDataFrame(<pyarrow.Table>)``: a
+        ``LocalTableScan`` whose collect runs no job (a list-built frame
+        plans a Python-RDD scan, i.e. again a Python task).
         """
+        import heapq
+
         import pyarrow as pa
+
+        from .wand import bucket_blocks, hits_batch
+
+        rows: list[tuple] = []
+        if scan is not None and k > 0:
+            blocks = self._collect_blocks(scan)
+            slices = ({} if meta is None
+                      else self._bucket_meta(meta, blocks))
+            for pid, by_term, idf in bucket_blocks(blocks, n_docs):
+                kw = {} if meta is None else hook(slices[pid])
+                if kw is not None:
+                    rows.extend(bucket_hits(pid, by_term, idf, **kw))
+        if collapse:  # (qid, pid, doc, score, key): best doc per key
+            best: dict = {}
+            for r in rows:
+                b = best.get(r[4])
+                if b is None or (r[3], -r[2]) > (b[3], -b[2]):
+                    best[r[4]] = r
+            rows = list(best.values())
+        rows = heapq.nsmallest(k, rows, key=lambda r: (-r[3], r[2]))
+        return pa.Table.from_batches([hits_batch(rows, collapse)])
+
+    def _no_hits(self) -> DataFrame:
+        """The empty (query_id, partition_id, doc_id, score) frame, built
+        from Arrow: a ``LocalTableScan`` whose collect runs no job."""
+        return self.spark.createDataFrame(
+            self._rank_on_driver(None, 0, 0, None))
+
+    def _driver_wand(self, terms: list[str], k: int, query_id: int = 0,
+                     min_score: float = 0.0,
+                     after: tuple[float, int] | None = None,
+                     term_boosts: dict[str, float] | None = None,
+                     min_match: int = 1, *,
+                     meta: DataFrame | None = None,
+                     w_static: float | None = None,
+                     collapse: bool = False) -> "pa.Table":
+        """One term set's WAND top-k, ranked on the driver
+        (:meth:`_rank_on_driver`): the same per-bucket kernel and float
+        order as the batch path, so results are bit-identical. ONE
+        JVM-only job without ``meta``; TWO with it, the second reading
+        ``meta``'s rows of the buckets that hold the query's postings,
+        which feed one doc_meta hook of :func:`..wand.wand_top_k` per
+        bucket, built from the bucket's doc_id-sorted slice:
+
+        * ``allowed`` — ``meta`` is the filter survivors'
+          (partition_id, doc_id); an empty slice: no hits;
+        * ``prior`` when ``w_static`` is set — ``meta`` adds ``static``
+          (null ⇒ 0); an empty slice: every prior 0;
+        * ``collapse`` — ``meta`` adds ``ckey``; an empty slice: no rows.
+        """
         import pyarrow.compute as pc
 
-        from .wand import make_wand_batch_arrow_fn
+        from .wand import _batch_bucket_kernel
 
         cfg = self.cfg
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
-        batches: list = []
-        if terms and k > 0 and avgdl > 0:
-            blocks = self._driver_wand_scan(terms).toArrow()
-            sums = blocks.group_by("term").aggregate([("n_postings", "sum")])
-            df_of = dict(zip(sums.column("term").to_pylist(),
-                             sums.column("n_postings_sum").to_pylist()))
-            dfs = pa.array([df_of[t] for t in
-                            blocks.column("term").to_pylist()], pa.int64())
-            batches = blocks.append_column("df", dfs).to_batches()
-        fn = make_wand_batch_arrow_fn(
+
+        def ids(s):
+            return s.column("doc_id").to_numpy()
+
+        if w_static is not None:
+            def hook(s):
+                return {"prior": (ids(s), pc.fill_null(
+                    s.column("static"), 0.0).to_numpy(), w_static)}
+        elif collapse:
+            def hook(s):
+                return ({"collapse": (ids(s), s.column("ckey").to_pylist())}
+                        if s.num_rows else None)
+        else:
+            def hook(s):
+                return {"allowed": ids(s)} if s.num_rows else None
+
+        bucket_hits = _batch_bucket_kernel(
             {query_id: list(terms)}, k, float(cfg.k1), float(cfg.b), avgdl,
-            n_docs, min_score=float(min_score), after=after,
-            term_boosts=term_boosts, min_match=int(min_match))
-        local = pa.Table.from_batches(list(fn(iter(batches))))
-        order = pc.sort_indices(local, [("score", "descending"),
-                                        ("doc_id", "ascending")])
-        return local.take(order[:k])
+            float(min_score), after, term_boosts, int(min_match))
+        scan = self._driver_wand_scan(terms) if terms and avgdl > 0 else None
+        return self._rank_on_driver(scan, n_docs, k, bucket_hits, meta, hook,
+                                    collapse)
 
     def _batch_wand_ranked(self, queries: list[str],
                            k: int | None = None,
@@ -643,13 +733,12 @@ class QueryEngine:
         that actually contain hits (VERDICT r2 #2 — at 10^12 docs the
         decorate-100-rows join must not scan the whole metadata table).
 
-        A single query (one term set, unfiltered) is ranked on the
-        driver (:meth:`_driver_wand`): ONE job inside this call, and the
-        result is a ``LocalTableScan`` whose collect runs none. A single
-        filtered query merges its ≤ P·k local hits through
-        ``orderBy().limit(k)`` (TakeOrderedAndProject: no window, no
-        extra exchange). Either way a single query comes back in
-        (score DESC, doc_id ASC) order. N>1 distinct term sets merge
+        One term set — filtered or not — is ranked on the driver
+        (:meth:`_driver_wand`): one job inside this call, two with
+        structured filters, and the result is a ``LocalTableScan`` in
+        (score DESC, doc_id ASC) order whose collect runs none. An empty
+        query, ``k`` ≤ 0 or an empty index gives an empty
+        ``LocalTableScan`` and runs no job. N>1 distinct term sets merge
         through a per-query ``row_number`` window: four jobs — the
         term_stats broadcast, the postings shuffle-map, the WAND stage
         and the window (pinned in ``tests/test_plan_shapes.py``).
@@ -662,7 +751,6 @@ class QueryEngine:
         """
         from .wand import (
             BATCH_WAND_OUT_SCHEMA,
-            WAND_COGROUP_OUT_SCHEMA,
             make_wand_batch_arrow_fn,
             make_wand_cogroup_fn,
         )
@@ -673,11 +761,8 @@ class QueryEngine:
         per_q = [sorted(set(tokenize(q, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
                  for q in queries]
-        all_terms = sorted(set().union(*per_q)) if per_q else []
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
-        if not all_terms or k <= 0 or avgdl <= 0:
-            return self.spark.createDataFrame([], BATCH_WAND_OUT_SCHEMA)
         # one WAND pass per UNIQUE term set: duplicate query strings (and
         # distinct strings that tokenize identically) share a
         # representative and fan back out after the merge
@@ -689,19 +774,24 @@ class QueryEngine:
             rep = rep_of.setdefault(tuple(ts), qi)
             fanout.append((rep, qi))
         query_terms = {rep: list(key) for key, rep in rep_of.items()}
+        if not query_terms or k <= 0 or avgdl <= 0:
+            return self._no_hits()
         filtered = (lang is not None or warc_ts_min is not None
                     or warc_ts_max is not None or site is not None
                     or neg_site is not None)
+        allowed = (self._apply_meta_filters(
+            self.store.read(f"doc_meta{self._sfx()}"), lang, warc_ts_min,
+            warc_ts_max, site=site, neg_site=neg_site)
+            .select("partition_id", "doc_id") if filtered else None)
         kernel_kw = dict(min_score=float(min_score), after=after,
                          term_boosts=term_boosts, min_match=int(min_match))
-        if not filtered and len(query_terms) == 1:
-            # createDataFrame(list) would plan a Python-RDD scan: again a
-            # Python task. An Arrow table becomes a LocalTableScan.
+        if len(query_terms) == 1:
             (rep, terms), = query_terms.items()
-            ranked = self.spark.createDataFrame(
-                self._driver_wand(terms, k, query_id=rep, **kernel_kw))
+            ranked = self.spark.createDataFrame(self._driver_wand(
+                terms, k, query_id=rep, meta=allowed, **kernel_kw))
             return self._fan_out(ranked, fanout, rep_of)
 
+        all_terms = sorted(set().union(*query_terms.values()))
         blocks = self._pruned_term_scan(f"postings{self._sfx()}",
                                         all_terms).select(
             "term", "partition_id", "block_id", "last_doc_id",
@@ -714,14 +804,10 @@ class QueryEngine:
         kernel_args = (query_terms, k, float(cfg.k1), float(cfg.b), avgdl,
                        n_docs)
         if filtered:
-            allowed = self._apply_meta_filters(
-                self.store.read(f"doc_meta{self._sfx()}"), lang,
-                warc_ts_min, warc_ts_max, site=site,
-                neg_site=neg_site).select("partition_id", "doc_id")
             fn = make_wand_cogroup_fn(*kernel_args, **kernel_kw)
             local = (blocks.groupBy("partition_id")
                      .cogroup(allowed.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=WAND_COGROUP_OUT_SCHEMA))
+                     .applyInPandas(fn, schema=BATCH_WAND_OUT_SCHEMA))
         else:
             # One Python call per task, and a FIXED task count: AQE
             # sizes shuffle partitions by bytes, and this stage moves a
@@ -738,21 +824,12 @@ class QueryEngine:
             fn = make_wand_batch_arrow_fn(*kernel_args, **kernel_kw)
             local = (blocks.repartitionById(n_tasks, "partition_id")
                      .mapInArrow(fn, BATCH_WAND_OUT_SCHEMA))
-        if len(rep_of) == 1:
-            # one filtered term set: global top-k over its ≤ P·k local
-            # hits — no row_number window, no extra exchange
-            ranked = (local.orderBy(F.desc("score"), F.asc("doc_id"))
-                      .limit(k)
-                      .select("query_id", "partition_id", "doc_id",
-                              "score"))
-        else:
-            from pyspark.sql.window import Window
-            w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                       F.asc("doc_id"))
-            ranked = (local.withColumn("_rn", F.row_number().over(w))
-                      .filter(F.col("_rn") <= k)
-                      .select("query_id", "partition_id", "doc_id",
-                              "score"))
+        from pyspark.sql.window import Window
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"),
+                                                   F.asc("doc_id"))
+        ranked = (local.withColumn("_rn", F.row_number().over(w))
+                  .filter(F.col("_rn") <= k)
+                  .select("query_id", "partition_id", "doc_id", "score"))
         return self._fan_out(ranked, fanout, rep_of)
 
     def _fan_out(self, ranked: DataFrame, fanout: list[tuple[int, int]],
@@ -1549,60 +1626,41 @@ class QueryEngine:
         group. Returns (``by``, doc_id, score) in (score DESC, doc_id
         ASC) order.
 
-        ``mode="wand"`` (default): five jobs (pinned in
-        ``tests/test_plan_shapes.py``) — the pruned posting scan
-        cogroups with doc_meta's (doc_id, key) slice per doc bucket and
-        the WAND kernel's ``collapse`` hook (``wand_top_k``) emits each
-        bucket's top-k KEYS with block-max pruning against a key-level
-        theta. Cross-bucket merge is a per-key window over ≤ P·k rows —
-        exact by the superset lemma in the kernel docstring.
+        ``mode="wand"`` (default): ranked on the driver
+        (:meth:`_driver_wand`), two jobs and no Python task (pinned in
+        ``tests/test_plan_shapes.py``) — the pruned postings collect,
+        then doc_meta's (doc_id, key) rows of just the buckets that hold
+        the query's postings. Each bucket's WAND runs the kernel's
+        ``collapse`` hook (``wand_top_k``) and emits its top-k KEYS with
+        block-max pruning against a key-level theta; the cross-bucket
+        merge keeps each key's best doc, then the top k — exact by the
+        superset lemma in the kernel docstring. The result is a
+        ``LocalTableScan``.
         ``mode="exhaustive"``: scores every candidate then windows —
         the correctness baseline (pinned identical by test).
         """
         from pyspark.sql.window import Window
 
         from ..functions.udfs import doc_bucket_expr
-        from .wand import WAND_COGROUP_OUT_SCHEMA, make_wand_cogroup_fn
 
         cfg = self.cfg
         k = cfg.default_k if k is None else min(k, cfg.max_k)
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
-        empty = self.spark.createDataFrame(
-            [], f"`{by}` string, doc_id long, score double")
         if not qterms or k <= 0:
-            return empty
+            return self._no_hits().select(
+                F.lit(None).cast("string").alias(by), "doc_id", "score")
+        meta = self.store.read(f"doc_meta{self._sfx()}").select(
+            "partition_id", "doc_id", F.col(by).cast("string").alias("ckey"))
         if mode == "wand":
-            stats = self.corpus_stats()
-            avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
-            if avgdl <= 0:
-                return empty
-            blocks = self._pruned_term_scan(f"postings{self._sfx()}",
-                                            qterms).select(
-                "term", "partition_id", "block_id", "last_doc_id",
-                "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb")
-            df_side = self._pruned_term_scan(f"term_stats{self._sfx()}",
-                                             qterms).select("term", "df")
-            blocks = blocks.join(F.broadcast(df_side), "term")
-            meta = self.store.read(f"doc_meta{self._sfx()}").select(
-                "partition_id", "doc_id",
-                F.col(by).cast("string").alias("ckey"))
-            fn = make_wand_cogroup_fn({0: qterms}, k, float(cfg.k1),
-                                      float(cfg.b), avgdl, n_docs,
-                                      collapse=True)
-            local = (blocks.groupBy("partition_id")
-                     .cogroup(meta.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=WAND_COGROUP_OUT_SCHEMA))
-        elif mode == "exhaustive":
-            scored = self.scores_df(query).withColumn(
-                "partition_id", doc_bucket_expr("doc_id",
-                                                cfg.n_doc_buckets))
-            meta = self.store.read(f"doc_meta{self._sfx()}").select(
-                "partition_id", "doc_id",
-                F.col(by).cast("string").alias("ckey"))
-            local = scored.join(meta, ["partition_id", "doc_id"])
-        else:
+            top = self._driver_wand(qterms, k, meta=meta, collapse=True)
+            return (self.spark.createDataFrame(top)
+                    .select(F.col("ckey").alias(by), "doc_id", "score"))
+        if mode != "exhaustive":
             raise ValueError(f"unknown collapse mode: {mode!r}")
+        scored = self.scores_df(query).withColumn(
+            "partition_id", doc_bucket_expr("doc_id", cfg.n_doc_buckets))
+        local = scored.join(meta, ["partition_id", "doc_id"])
         w = Window.partitionBy("ckey").orderBy(F.desc("score"),
                                                F.asc("doc_id"))
         return (local.withColumn("_rn", F.row_number().over(w))
@@ -1691,12 +1749,14 @@ class QueryEngine:
         (the prior reorders matches; it never surfaces no-match docs).
         Returns (doc_id, score) in (score DESC, doc_id ASC) order.
 
-        ``mode="wand"`` (default, exact): four jobs (pinned in
-        ``tests/test_plan_shapes.py``) — the pruned posting scan
-        cogroups per doc bucket with doc_meta's (doc_id, prior) slice
-        and the WAND kernel's ``prior`` hook (``wand_top_k``) prunes
-        against blended upper bounds (bucket-max prior in the pivot
-        test, the candidate's own prior at the block check).
+        ``mode="wand"`` (default, exact): ranked on the driver
+        (:meth:`_driver_wand`), two jobs and no Python task (pinned in
+        ``tests/test_plan_shapes.py``) — the pruned postings collect,
+        then the (doc_id, prior) rows of just the buckets that hold the
+        query's postings. Each bucket's WAND runs the kernel's ``prior``
+        hook (``wand_top_k``), pruning against blended upper bounds
+        (bucket-max prior in the pivot test, the candidate's own prior
+        at the block check). The result is a ``LocalTableScan``.
         ``mode="exhaustive"``: score every candidate, join priors, sort
         — the correctness baseline.
         ``mode="rescore"``: the Elasticsearch-rescore shape — plain BM25
@@ -1712,33 +1772,13 @@ class QueryEngine:
         k = cfg.default_k if k is None else min(k, cfg.max_k)
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not qterms or k <= 0:
-            return empty
+            return self._no_hits().select("doc_id", "score")
         meta_static = self._static_meta(static, static_df)
         if mode == "wand":
-            from .wand import WAND_COGROUP_OUT_SCHEMA, make_wand_cogroup_fn
-
-            stats = self.corpus_stats()
-            avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
-            if avgdl <= 0:
-                return empty
-            blocks = self._pruned_term_scan(f"postings{self._sfx()}",
-                                            qterms).select(
-                "term", "partition_id", "block_id", "last_doc_id",
-                "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb")
-            df_side = self._pruned_term_scan(f"term_stats{self._sfx()}",
-                                             qterms).select("term", "df")
-            blocks = blocks.join(F.broadcast(df_side), "term")
-            meta = meta_static
-            fn = make_wand_cogroup_fn({0: qterms}, k, float(cfg.k1),
-                                      float(cfg.b), avgdl, n_docs,
-                                      w_static=float(w_static))
-            local = (blocks.groupBy("partition_id")
-                     .cogroup(meta.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=WAND_COGROUP_OUT_SCHEMA))
-            return (local.select("doc_id", "score")
-                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+            top = self._driver_wand(qterms, k, meta=meta_static,
+                                    w_static=float(w_static))
+            return self.spark.createDataFrame(top).select("doc_id", "score")
         if mode == "exhaustive":
             meta = meta_static.select("doc_id", "static")
             return (self.scores_df(query).join(meta, "doc_id")
@@ -1781,65 +1821,68 @@ class QueryEngine:
         score(d) = Σ_f w_f · BM25_f(d, query), each field scored against
         its OWN index (its own df / avgdl / doc lengths).
 
-        Four jobs for two fields once each field's corpus_stats is cached
-        (:meth:`corpus_stats`; pinned in ``tests/test_plan_shapes.py``):
-        one term_stats broadcast per field, then the union of every
-        field's pruned postings scan feeds ONE WAND stage: terms are
-        qualified as ``field\\x00term`` so the standard per-bucket kernel
-        treats each (field, term) pair as an independent cursor whose
-        weight is w_f·idf_f and whose block-max bounds are the field's
-        own — pruning stays exact (see
-        ``make_weighted_field_fn``). Fields' doc buckets align because
-        every field index buckets by the same doc-id hash.
+        Ranked on the driver (:meth:`_rank_on_driver`): ONE job once each
+        field's corpus_stats is cached (:meth:`corpus_stats`; pinned in
+        ``tests/test_plan_shapes.py``) — the union of every field's
+        pruned postings scan, collected, each term's ``df`` the Σ
+        ``n_postings`` of its field's blocks — and no Python task. Terms
+        are qualified as ``field\\x00term`` so the standard per-bucket
+        WAND treats each (field, term) pair as an independent cursor
+        whose weight is w_f·idf_f, whose block-max bounds are the field's
+        own (computed under that field's avgdl at build time) and which
+        normalizes against its field's avgdl (``avgdl_by_term``): score
+        is a sum of per-cursor contributions, so pruning stays exact.
+        Contributions fold in qualified-key sorted order (field first,
+        then term), matching ``oracle.bm25f_top_k`` bit-for-bit. Fields'
+        doc buckets align because every field index buckets by the same
+        doc-id hash. The result is a ``LocalTableScan``.
         """
-        from .wand import WEIGHTED_OUT_SCHEMA, make_weighted_field_fn
+        from .wand import wand_top_k
 
         cfg = self.cfg
         k = cfg.default_k if k is None else min(k, cfg.max_k)
-        empty = self.spark.createDataFrame([], self._BOOL_EMPTY)
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
         if not qterms or not field_weights or k <= 0:
-            return empty
+            return self._no_hits().select("partition_id", "doc_id", "score")
 
         sfx = self._sfx
-        field_avgdl: dict[str, float] = {}
-        field_n_docs: dict[str, int] = {}
-        for f in field_weights:
+        n_docs: dict[str, int] = {}
+        avgdls: dict[str, float] = {}
+        scans = []
+        for f in sorted(field_weights):
             table = f"corpus_stats{sfx(f)}"
             if not self.store.exists(table):
                 raise ValueError(
                     f"no index built for field {f!r} (missing {table}); "
                     f"run IndexBuilder.build(field={f!r}) first")
             stats = self.corpus_stats(f)
-            field_n_docs[f] = stats["n_docs"]
-            field_avgdl[f] = stats["avg_doc_len"]
-        if all(a <= 0 for a in field_avgdl.values()):
-            return empty
-
-        scans = []
-        for f in sorted(field_weights):
-            blocks = self._pruned_term_scan(f"postings{sfx(f)}",
-                                            qterms).select(
-                "term", "partition_id", "block_id", "last_doc_id",
-                "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb")
-            df_side = self._pruned_term_scan(f"term_stats{sfx(f)}",
-                                             qterms).select("term", "df")
-            blocks = blocks.join(F.broadcast(df_side), "term")
+            for t in qterms:
+                n_docs[f"{f}\x00{t}"] = stats["n_docs"]
+                avgdls[f"{f}\x00{t}"] = stats["avg_doc_len"]
             # qualify AFTER pruning: the bucket/IN predicates fold on the
             # raw term strings, the kernel sees field-qualified keys
-            scans.append(blocks.withColumn(
+            scans.append(self._driver_wand_scan(qterms, f).withColumn(
                 "term", F.concat_ws("\x00", F.lit(f), F.col("term"))))
+        k1, b = float(cfg.k1), float(cfg.b)
+
+        def bucket_hits(pid, by_term, idf):
+            # same float op order as the oracle: w * idf, then * norm
+            weights = {qt: field_weights[qt.split("\x00", 1)[0]] * idf[qt]
+                       for qt in by_term}
+            hits, _ = wand_top_k(by_term, weights, k, k1, b, avgdl=1.0,
+                                 avgdl_by_term=avgdls)
+            for d, s in hits:
+                yield 0, pid, d, s, None
+
         union = scans[0]
         for s in scans[1:]:
             union = union.unionByName(s)
-        fn = make_weighted_field_fn(dict(field_weights), field_avgdl,
-                                    field_n_docs, k, float(cfg.k1),
-                                    float(cfg.b))
-        local = union.groupBy("partition_id").applyInPandas(
-            fn, schema=WEIGHTED_OUT_SCHEMA)
-        return (local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                .select("partition_id", "doc_id", "score"))
+        if all(a <= 0 for a in avgdls.values()):
+            union = None
+        return (self.spark.createDataFrame(
+            self._rank_on_driver(union, n_docs, k, bucket_hits))
+            .select("partition_id", "doc_id", "score"))
 
     def weighted_top_k(self, query: str, field_weights: dict[str, float],
                        k: int = 10) -> list[tuple[int, float]]:
@@ -2811,7 +2854,7 @@ class QueryEngine:
         for injected encoders (``operators/neural.encode_query``), so a
         neural-embedded index fuses with BM25 through the same plan.
         Structured filters (``lang``/``warc_ts_*``/``site``/``neg_site``)
-        apply to BOTH legs — the lexical leg's cogrouped survivor set and
+        apply to BOTH legs — the lexical leg's WAND survivor set and
         the semantic leg's pre-filter semi-join — so fusion only ever
         sees eligible docs."""
         from ..operators.hybrid import rrf_fused_df

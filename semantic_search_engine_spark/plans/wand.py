@@ -11,12 +11,13 @@ the current k-th score are skipped without computing BM25.
 
 Distribution model (Spark-first): the postings table is range-bucketed by
 doc id (``partition_id``), so every bucket holds a doc-id-sorted slice of
-each term's posting list. WAND runs *independently per bucket* (a Python
-task holds whole buckets and splits them in-process) — the union of
+each term's posting list. WAND runs *independently per bucket* (a batch's
+Python task holds whole buckets, a single query's collected blocks are
+split on the driver; :func:`bucket_blocks` is that split) — the union of
 per-bucket top-K sets is a superset of the global top-K (each global
 winner lives in exactly one bucket and must be in that bucket's local
-top-K), so a final ``orderBy(score DESC, doc_id ASC).limit(K)`` merge
-over ≤ P·K candidate rows is exact. At web scale each bucket holds only
+top-K), so a final (score DESC, doc_id ASC) top-K merge over ≤ P·K
+candidate rows is exact. At web scale each bucket holds only
 ~|term postings|/P compressed bytes and the merge moves P·K ≈ thousands
 of rows — no full-corpus shuffle.
 
@@ -477,19 +478,65 @@ def group_blocks_by_term(pdf) -> dict[str, list[dict]]:
     return _blocks_by_term(*(pdf[c] for c in _BLOCK_COLS))
 
 
-def _idf_by_term(terms, dfs, n_docs: int) -> dict[str, float]:
+def _idf_by_term(terms, dfs, n_docs: "int | dict[str, int]"
+                 ) -> dict[str, float]:
     """Global ``df`` rides every block row; idf is computed here in Python
     for bit-identity with the single-node oracle (a JVM log can differ by
-    1 ulp) — one log per UNIQUE term, not per block row."""
+    1 ulp) — one log per UNIQUE term, not per block row. ``n_docs`` maps
+    term → corpus size when the terms come from several indexes."""
     idf: dict[str, float] = {}
     for t, d in zip(terms, dfs):
         if t not in idf:
-            idf[t] = bm25_idf(n_docs, int(d))
+            n = n_docs[t] if isinstance(n_docs, dict) else n_docs
+            idf[t] = bm25_idf(n, int(d))
     return idf
+
+
+def bucket_blocks(table, n_docs: "int | dict[str, int]"):
+    """Block rows → ``(partition_id, term → blocks, term → idf)`` per doc
+    bucket, in ascending bucket order — the one loop every ranking path
+    runs (the batch ``mapInArrow`` task, the filtered-batch cogroup and
+    the driver-side single-query paths).
+
+    ``table``: a ``pyarrow.Table`` of the block columns plus
+    ``partition_id``, ``block_id`` and each term's global ``df``. It is
+    sorted once by ``(partition_id, term, block_id)`` and split into
+    buckets in-process; idf is computed once per unique term over the
+    whole table (:func:`_idf_by_term`).
+    """
+    t = table.sort_by([("partition_id", "ascending"), ("term", "ascending"),
+                       ("block_id", "ascending")])
+    bucket = t.column("partition_id").to_pylist()
+    cols = [t.column(c).to_pylist() for c in _BLOCK_COLS]
+    idf = _idf_by_term(cols[0], t.column("df").to_pylist(), n_docs)
+    for lo, hi in key_runs(bucket):
+        yield bucket[lo], _blocks_by_term(*(c[lo:hi] for c in cols)), idf
+
+
+def key_runs(keys: list) -> list[tuple[int, int]]:
+    """``(lo, hi)`` bounds of each run of equal values in ``keys``."""
+    cuts = [i for i in range(1, len(keys)) if keys[i] != keys[i - 1]]
+    return list(zip([0] + cuts, cuts + [len(keys)])) if keys else []
 
 
 BATCH_WAND_OUT_SCHEMA = ("query_id int, partition_id int, doc_id long, "
                          "score double")
+
+
+def hits_batch(rows, with_key: bool = False):
+    """``(query_id, partition_id, doc_id, score, key)`` rows → one Arrow
+    record batch of :data:`BATCH_WAND_OUT_SCHEMA` (plus a string ``ckey``
+    column when ``with_key``); typed, so no rows is an empty batch."""
+    import pyarrow as pa
+
+    qids, pids, docs, scores, keys = zip(*rows) if rows else ((),) * 5
+    arrays = [pa.array(qids, pa.int32()), pa.array(pids, pa.int32()),
+              pa.array(docs, pa.int64()), pa.array(scores, pa.float64())]
+    names = ["query_id", "partition_id", "doc_id", "score"]
+    if with_key:
+        arrays.append(pa.array(keys, pa.string()))
+        names.append("ckey")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
@@ -498,14 +545,14 @@ def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
                          after: "tuple[float, int] | None" = None,
                          term_boosts: "dict[str, float] | None" = None,
                          min_match: int = 1):
-    """The per-bucket body every multi-query WAND runner shares: one doc
-    bucket's blocks grouped by term (+ at most one doc_meta hook of
+    """The per-bucket body every WAND path shares: one doc bucket's
+    blocks grouped by term (+ at most one doc_meta hook of
     :func:`wand_top_k`) → ``(query_id, partition_id, doc_id, score,
     key)`` rows for each query's local top-k (``key``: the collapse key,
     None without ``collapse``).
 
     Each query runs the standard exact block-max WAND over its own term
-    subset, so per-query results are identical to the single-query path
+    subset, so per-query results are identical whichever path runs it
     (rank-identity pinned by test). Per-term boost multipliers (PRF
     expansion down-weighting, user ``term^boost`` weighting) give
     weight = boost * idf, the float-op order the oracle replays; boosts
@@ -540,12 +587,11 @@ def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
 
     The task's rows are every block of the buckets routed to it (the
     union of every query's term postings, each row carrying its term's
-    global ``df`` from the broadcast term_stats join). They are sorted
-    once by ``(partition_id, term, block_id)`` and split into buckets
-    in-process; each bucket then runs :func:`_batch_bucket_kernel`. The
-    Arrow round trip and the output construction are paid once per task,
-    not once per bucket; the caller sizes the task count so a batch
-    spreads over the cores.
+    global ``df`` from the broadcast term_stats join); :func:`bucket_blocks`
+    splits them into buckets and each runs :func:`_batch_bucket_kernel`.
+    The Arrow round trip and the output construction are paid once per
+    task, not once per bucket; the caller sizes the task count so a
+    batch spreads over the cores.
 
     Amortizes the per-job scheduling floor across N queries: the postings
     scan, the shuffle and the task launches are paid ONCE for the whole
@@ -564,27 +610,12 @@ def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
         rows: list[tuple] = []
         batches = [rb for rb in batches if rb.num_rows]
         if batches:
-            t = pa.Table.from_batches(batches).sort_by(
-                [("partition_id", "ascending"), ("term", "ascending"),
-                 ("block_id", "ascending")])
-            bucket = t.column("partition_id").to_pylist()
-            cols = [t.column(c).to_pylist() for c in _BLOCK_COLS]
-            idf = _idf_by_term(cols[0], t.column("df").to_pylist(), n_docs)
-            cuts = [i for i in range(1, len(bucket))
-                    if bucket[i] != bucket[i - 1]]
-            for lo, hi in zip([0] + cuts, cuts + [len(bucket)]):
-                by_term = _blocks_by_term(*(c[lo:hi] for c in cols))
-                rows.extend(bucket_hits(bucket[lo], by_term, idf))
-        qids, pids, docs, scores, _ = zip(*rows) if rows else ((),) * 5
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qids, pa.int32()), pa.array(pids, pa.int32()),
-             pa.array(docs, pa.int64()), pa.array(scores, pa.float64())],
-            names=["query_id", "partition_id", "doc_id", "score"])
+            for pid, by_term, idf in bucket_blocks(
+                    pa.Table.from_batches(batches), n_docs):
+                rows.extend(bucket_hits(pid, by_term, idf))
+        yield hits_batch(rows)
 
     return run_task
-
-
-WAND_COGROUP_OUT_SCHEMA = BATCH_WAND_OUT_SCHEMA + ", ckey string"
 
 
 def make_wand_cogroup_fn(query_terms: dict[int, list[str]],
@@ -592,108 +623,27 @@ def make_wand_cogroup_fn(query_terms: dict[int, list[str]],
                          n_docs: int, min_score: float = 0.0,
                          after: "tuple[float, int] | None" = None,
                          term_boosts: "dict[str, float] | None" = None,
-                         min_match: int = 1,
-                         w_static: "float | None" = None,
-                         collapse: bool = False):
-    """Cogrouped ``applyInPandas`` body for the WAND paths that read
-    doc_meta: left = one bucket's blocks, right = the bucket's doc_meta
-    slice, sorted by doc_id once and passed to :func:`wand_top_k` as one
-    hook — ``allowed`` (right = the filter survivors' ``doc_id``, shared
-    by the whole batch; empty ⇒ no hits), ``prior`` when ``w_static`` is
-    set (right adds ``static``; empty ⇒ every prior 0) or ``collapse``
-    (right adds ``ckey``; empty ⇒ no rows). Runs the same per-bucket
-    kernel as :func:`make_wand_batch_arrow_fn`."""
+                         min_match: int = 1):
+    """Cogrouped ``applyInPandas`` body of a FILTERED batch (≥ 2 term
+    sets): left = one bucket's blocks, right = the bucket's filter
+    survivors' ``doc_id`` (shared by the whole batch), sorted once and
+    passed to :func:`wand_top_k` as ``allowed``; an empty right side
+    means no hits. Runs the same per-bucket kernel as
+    :func:`make_wand_batch_arrow_fn`."""
     bucket_hits = _batch_bucket_kernel(query_terms, k, k1, b, avgdl,
                                        min_score, after, term_boosts,
                                        min_match)
 
     def run_bucket(blocks_pdf, meta_pdf):
-        import pandas as pd
+        import pyarrow as pa
 
         rows: list[tuple] = []
-        if len(blocks_pdf) and (len(meta_pdf) or w_static is not None):
-            meta_pdf = meta_pdf.sort_values("doc_id", kind="mergesort")
-            ids = meta_pdf["doc_id"].to_numpy(dtype=np.int64)
-            if w_static is not None:
-                hook = {"prior": (ids, meta_pdf["static"].fillna(0.0)
-                                  .to_numpy(dtype=np.float64), w_static)}
-            elif collapse:
-                hook = {"collapse": (ids, [None if pd.isna(v) else str(v)
-                                           for v in meta_pdf["ckey"]])}
-            else:
-                hook = {"allowed": ids}
-            pdf = blocks_pdf.sort_values(["term", "partition_id", "block_id"],
-                                         kind="mergesort")
-            rows = list(bucket_hits(
-                int(pdf["partition_id"].iloc[0]), group_blocks_by_term(pdf),
-                _idf_by_term(pdf["term"], pdf["df"], n_docs), **hook))
-        qids, pids, docs, scores, keys = zip(*rows) if rows else ((),) * 5
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int32"),
-            "partition_id": pd.Series(pids, dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-            "ckey": pd.Series(keys, dtype="object"),
-        })
-
-    return run_bucket
-
-
-WEIGHTED_OUT_SCHEMA = "partition_id int, doc_id long, score double"
-
-
-def make_weighted_field_fn(field_weights: dict[str, float],
-                           field_avgdl: dict[str, float],
-                           field_n_docs: dict[str, int],
-                           k: int, k1: float, b: float):
-    """``applyInPandas`` body for WEIGHTED MULTI-FIELD ranking (BM25F
-    shape — the Postgres ``setweight(title,'A') || setweight(body,'D')``
-    composition): one doc bucket's block rows drawn from EVERY field's
-    postings table, each row's ``term`` pre-qualified as
-    ``field\\x00term`` and carrying that field's global ``df``.
-
-    score(d) = Σ_{(field, term)} w_field · idf_field(term) ·
-    tf_norm_field(tf, dl) — a sum of per-cursor contributions, so the
-    standard block-max WAND argument holds unchanged: each cursor's
-    upper bound is its own field's block_max_tf_norm (computed under
-    that field's avgdl at build time) times its weight. Cursors
-    normalize against their field's avgdl via ``avgdl_by_term``.
-
-    Contributions fold in qualified-key sorted order (field first, then
-    term — ``at_pivot`` enumerates cursors by term_rank), matching
-    ``oracle.bm25f_top_k`` bit-for-bit.
-    """
-
-    def run_bucket(pdf):
-        import pandas as pd
-
-        pids: list[int] = []
-        docs: list[int] = []
-        scores: list[float] = []
-        if len(pdf):
-            pdf = pdf.sort_values(["term", "partition_id", "block_id"],
-                                  kind="mergesort")
-            by_term = group_blocks_by_term(pdf)
-            uniq = pdf[["term", "df"]].drop_duplicates("term")
-            weights: dict[str, float] = {}
-            avgdls: dict[str, float] = {}
-            for qt, df in zip(uniq["term"], uniq["df"]):
-                fld = qt.split("\x00", 1)[0]
-                # same float op order as the oracle: w * idf, then * norm
-                weights[qt] = field_weights[fld] * bm25_idf(
-                    field_n_docs[fld], int(df))
-                avgdls[qt] = field_avgdl[fld]
-            pid = int(pdf["partition_id"].iloc[0])
-            hits, _ = wand_top_k(by_term, weights, k, k1, b, avgdl=1.0,
-                                 avgdl_by_term=avgdls)
-            for d, s in hits:
-                pids.append(pid)
-                docs.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "partition_id": pd.Series(pids, dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+        if len(blocks_pdf) and len(meta_pdf):
+            allowed = np.sort(meta_pdf["doc_id"].to_numpy(dtype=np.int64))
+            for pid, by_term, idf in bucket_blocks(
+                    pa.Table.from_pandas(blocks_pdf, preserve_index=False),
+                    n_docs):
+                rows.extend(bucket_hits(pid, by_term, idf, allowed=allowed))
+        return hits_batch(rows).to_pandas()
 
     return run_bucket

@@ -46,3 +46,21 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def collected_plans(spark, monkeypatch):
+    """The executed-plan string of every DataFrame collected while the
+    test runs (``collect``, ``toArrow``, ``toPandas``), in call order:
+    the plans a serve call actually ran, including the frames it
+    collects internally."""
+    plans: list[str] = []
+    cls = type(spark.range(1))
+    for name in ("collect", "toArrow", "toPandas"):
+        def recorded(self, *a, _orig=getattr(cls, name), **kw):
+            plans.append(self._jdf.queryExecution().executedPlan()
+                         .toString())
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, recorded)
+    return plans

@@ -157,26 +157,60 @@ def test_batch_top_k_four_jobs_wand_spread_over_cores(spark, wand_engine,
         spark.sparkContext.defaultParallelism, distinct), jobs
 
 
+Q = "wireless bluetooth headphones"
+
+
 @pytest.mark.parametrize("call,n_jobs", [
-    # doc_meta shuffle-map, term_stats broadcast, postings shuffle-map,
-    # the per-bucket cogroup WAND stage (map side of the per-key
-    # window), then the window + TakeOrderedAndProject
-    (lambda e: e.collapse_top_k("wireless bluetooth headphones",
-                                by="lang", k=5, mode="wand"), 5),
-    # doc_meta shuffle-map, term_stats broadcast, postings shuffle-map,
-    # then the per-bucket cogroup + TakeOrderedAndProject
-    (lambda e: e.boosted_top_k("wireless bluetooth headphones",
-                               w_static=0.5, k=10, mode="wand"), 4),
-    # one term_stats broadcast per field (each field's corpus_stats is
-    # cached per snapshot), the unioned postings shuffle-map, then WAND +
-    # TakeOrderedAndProject
-    (lambda e: e.weighted_top_k("wireless bluetooth headphones",
-                                field_weights={"text": 1.0, "title": 2.5},
-                                k=10), 4),
-], ids=["collapse", "boosted", "weighted"])
-def test_single_query_wand_variants_job_counts(spark, wand_engine, call,
+    # the pruned postings collect, then the filter survivors of the
+    # query's posting buckets (literal partition_id IN)
+    (lambda e: e.wand_top_k_df(Q, k=10, lang="en").collect(), 2),
+    # the two above, then the hydration read of the hit buckets
+    (lambda e: e.search(Q, k=10, lang="en", count_mode="none"), 3),
+    # the postings collect, then the (doc_id, key) rows of its buckets
+    (lambda e: e.collapse_top_k(Q, by="lang", k=5, mode="wand"), 2),
+    # the postings collect, then the (doc_id, prior) rows of its buckets
+    (lambda e: e.boosted_top_k(Q, w_static=0.5, k=10, mode="wand"), 2),
+    # one collect of the union of both fields' pruned postings scans
+    # (each field's corpus_stats is cached per snapshot)
+    (lambda e: e.weighted_top_k(Q, field_weights={"text": 1.0,
+                                                  "title": 2.5}, k=10), 1),
+    (lambda e: e.maxscore_top_k_df(Q, k=10).collect(), 1),
+], ids=["filtered", "search-filtered", "collapse", "boosted", "weighted",
+        "maxscore"])
+def test_single_query_wand_variants_job_counts(spark, wand_engine,
+                                               collected_plans, call,
                                                n_jobs):
-    """The collapse, static-prior and weighted WAND paths each run a
-    fixed number of jobs, pinned so a kernel change cannot add one."""
+    """Every single-query form ranks on the driver: a fixed number of
+    JVM-only jobs, pinned so a kernel change cannot add one, and no
+    collected plan — the internal postings/doc_meta reads and the result
+    frame alike — holds a Python, Arrow or Pandas node or a Python-RDD
+    scan (``ExistingRDD``), so no Python worker task runs."""
     jobs = _jobs(spark, lambda: call(wand_engine))
     assert len(jobs) == n_jobs, jobs
+    assert collected_plans
+    for plan in collected_plans:
+        for node in ("Python", "Arrow", "Pandas", "ExistingRDD"):
+            assert node not in plan, (node, plan)
+
+
+@pytest.mark.parametrize("call", [
+    lambda e: e.search("", count_mode="none"),
+    lambda e: e.search(Q, k=0, lang="en", count_mode="none"),
+    lambda e: e.wand_top_k_df("", lang="en").collect(),
+    lambda e: e.batch_wand_top_k_df(["", Q, "gaming"], k=0).collect(),
+    lambda e: e.collapse_top_k("", by="lang", k=5),
+    lambda e: e.boosted_top_k(Q, w_static=0.5, k=0),
+    lambda e: e.weighted_top_k("", field_weights={"text": 1.0}, k=10),
+    lambda e: e.maxscore_top_k_df(Q, k=0).collect(),
+    lambda e: e.auto_top_k_df("").collect(),
+], ids=["search", "search-k0", "filtered", "batch-k0", "collapse",
+        "boosted-k0", "weighted", "maxscore-k0", "auto"])
+def test_empty_result_runs_no_job(spark, wand_engine, collected_plans,
+                                  call):
+    """An empty query or k ≤ 0 comes back as an Arrow-built
+    ``LocalTableScan``: collecting it runs no job (a list-built
+    ``createDataFrame([], schema)`` plans a Python-RDD scan and runs
+    one)."""
+    assert _jobs(spark, lambda: call(wand_engine)) == []
+    for plan in collected_plans:
+        assert plan.startswith("LocalTableScan"), plan

@@ -271,10 +271,13 @@ def test_search_fast_path_filtered_pagination(spark, wand_built, tiny_rows):
             set(s["results"][0].keys())
 
 
-def test_k_zero_and_bare_fast_path(spark, wand_built):
+def test_k_zero_and_bare_fast_path(spark, wand_built, collected_plans):
     """Regression (code review): k=0 must return an empty envelope, not an
     IndexError inside the WAND heap; bare fast-path queries must not touch
-    doc_meta (no cogroup when no filters)."""
+    doc_meta, and a filtered one reads only the doc_meta buckets that
+    hold its postings."""
+    from pyspark.sql import functions as F
+
     from semantic_search_engine_spark.plans.query import QueryEngine
 
     store, cfg = wand_built
@@ -290,10 +293,19 @@ def test_k_zero_and_bare_fast_path(spark, wand_built):
         ._jdf.queryExecution().executedPlan().toString()
     assert "doc_meta" not in plan
     assert "FlatMapCoGroupsInPandas" not in plan
-    # filtered query does cogroup
-    plan_f = qe.wand_top_k_df("zipfhead0", k=5, lang="en") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan_f
+    # a filtered query reads its filter survivors with a literal
+    # partition_id IN (…) of exactly the buckets of its postings
+    q = "raretermxq"
+    posting_buckets = sorted(
+        r[0] for r in store.read("postings").filter(F.col("term") == q)
+        .select("partition_id").distinct().collect())
+    assert 0 < len(posting_buckets) < cfg.n_doc_buckets
+    collected_plans.clear()
+    assert qe.wand_top_k_df(q, k=5, lang="en").collect()
+    meta_plans = [p for p in collected_plans if "doc_meta" in p]
+    assert len(meta_plans) == 1, collected_plans
+    assert _literal_in(meta_plans[0], "PartitionFilters",
+                       "partition_id") == posting_buckets, meta_plans[0]
 
 
 def test_batch_top_k_rank_identical_to_per_query(spark, wand_built):
@@ -499,11 +511,14 @@ def _ranked_by_query(df, n: int) -> list[list[tuple[int, float]]]:
 
 
 def _oracle_ranked(oracle, cfg, q, k, min_score=0.0, after=None,
-                   term_boosts=None, min_match=1):
+                   term_boosts=None, min_match=1, lang=None):
     from semantic_search_engine_spark.oracle import boosted_top_k
     from semantic_search_engine_spark.textproc import tokenize
 
-    if min_match > 1:
+    if lang is not None:
+        full = [(h["doc_id"], h["score"]) for h in
+                oracle.search(q, k=k, lang=lang)["results"]]
+    elif min_match > 1:
         full = oracle.top_k(q, k=k, min_match=min_match)
     else:  # the whole ranking: OracleIndex.search clamps k to max_k
         terms = tokenize(q, cfg.max_token_len, cfg.min_token_len,
@@ -529,7 +544,10 @@ def _variant_kw(oracle, variant: str, k: int) -> dict:
             "term_boosts": {"term_boosts": {"bluetooth": 2.0,
                                             "zipfhead0": 0.5,
                                             "zipfhead3": 1.5}},
-            "min_match": {"min_match": 2}}[variant]
+            "min_match": {"min_match": 2},
+            "lang": {"lang": "en"},
+            # 4 of 200 docs: most posting buckets hold no survivor
+            "lang_sparse": {"lang": "de"}}[variant]
 
 
 @pytest.mark.parametrize("variant", VARIANTS)
@@ -563,16 +581,28 @@ def test_batch_runner_bit_identical_to_single_and_oracle(spark, wand32,
             (variant, q)
 
 
-@pytest.mark.parametrize("variant", VARIANTS)
+@pytest.mark.parametrize("variant", VARIANTS + ["lang", "lang_sparse"])
 def test_driver_path_bit_identical_to_batch_and_oracle(spark, wand32,
                                                        variant):
-    """A single unfiltered query is ranked on the driver (its result is
-    a LocalTableScan). On the 32-bucket index it equals — ids and float
+    """A single query is ranked on the driver (its result is a
+    LocalTableScan). On the 32-bucket index it equals — ids and float
     scores — both the oracle and its own row of a 2-query batch, whose
-    WAND stage runs in Python tasks, under each kernel option."""
+    WAND stage runs in Python tasks (the filter cogroup under ``lang``),
+    under each kernel option; ``lang_sparse`` leaves whole posting
+    buckets without a filter survivor."""
+    from pyspark.sql import functions as F
+
     qe, oracle = wand32
     cfg, k = qe.cfg, 10
     kw = _variant_kw(oracle, variant, k)
+    if variant == "lang_sparse":
+        survivors = {r[0] for r in qe.store.read("doc_meta")
+                     .filter(F.col("lang") == "de")
+                     .select("partition_id").distinct().collect()}
+        held = {r[0] for r in qe.store.read("postings")
+                .filter(F.col("term").isin("zipfhead0", "zipfhead1"))
+                .select("partition_id").distinct().collect()}
+        assert survivors and held - survivors, (survivors, held)
     singles = {}
     for q in BATCH_QUERIES:
         df = qe._batch_wand_ranked([q], k=k, **kw)
