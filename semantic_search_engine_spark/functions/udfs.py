@@ -21,7 +21,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..textproc import extract_html, token_positions, tokenize
+from ..textproc import (
+    extract_html,
+    term_bucket,
+    token_positions,
+    tokenize,
+)
 
 def make_extract_features_udf(prefer_provided: bool = True,
                               max_token_len: int = 64,
@@ -176,9 +181,9 @@ def term_bucket_expr(term_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(term_col)), F.lit(n_buckets)).cast("int")
 
 
-def term_bucket_lit(term: str, n_buckets: int):
-    """Bucket of a literal term as a constant-foldable expression —
-    Catalyst folds xxhash64(lit) at plan time, so `term_bucket IN (...)`
-    filters built from these reach partition pruning without any
-    driver-side job."""
-    return F.pmod(F.xxhash64(F.lit(term)), F.lit(n_buckets)).cast("int")
+def term_bucket_lit(term: str, n_buckets: int) -> int:
+    """Bucket of a literal term as a plain int, computed in Python
+    (``textproc.term_bucket``, equal to :func:`term_bucket_expr`), so
+    `term_bucket IN (...)` filters built from these reach partition
+    pruning with one literal per term and no JVM expression to fold."""
+    return term_bucket(term, n_buckets)

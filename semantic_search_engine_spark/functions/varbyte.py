@@ -180,6 +180,54 @@ def decode_block(doc_ids_vb: bytes, tfs_vb: bytes, dls_vb: bytes):
             decode_varbyte(dls_vb))
 
 
+def _binary_cells(col):
+    """An Arrow binary column → (its cells' bytes back to back, the byte
+    offset of each cell in them, ``len + 1`` entries). Zero-copy: the
+    values buffer of a (large_)binary array is already contiguous."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, off_buf, data_buf = arr.buffers()
+    offsets = np.frombuffer(off_buf, dtype=width)[
+        arr.offset:arr.offset + len(arr) + 1].astype(np.int64)
+    if not len(arr) or data_buf is None:
+        return b"", np.zeros(len(arr) + 1, dtype=np.int64)
+    return (memoryview(data_buf)[offsets[0]:offsets[-1]],
+            offsets - offsets[0])
+
+
+def decode_varbyte_cells(col) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`decode_varbyte` over every cell of an Arrow binary column
+    in ONE call on the column's values buffer: (the values of all cells
+    back to back, ``starts``), cell i's values being
+    ``values[starts[i]:starts[i + 1]]``. Every encoded stream ends on a
+    terminal byte, so the concatenated stream decodes to the
+    concatenated values; a cell's value count is its terminal bytes."""
+    data, offsets = _binary_cells(col)
+    values = decode_varbyte(data)
+    last = np.zeros(len(data) + 1, dtype=np.int64)
+    if len(data):
+        np.cumsum(np.frombuffer(data, dtype=np.uint8) < _CONT, out=last[1:])
+    return values, last[offsets]
+
+
+def decode_block_table(doc_ids_vb, tfs_vb, dls_vb):
+    """Whole-table :func:`decode_block`: (doc_ids, tfs, dls, starts) over
+    the blocks of three Arrow binary columns, bit-identical to decoding
+    each row and concatenating; row i's postings are
+    ``[starts[i], starts[i + 1])``. The doc-id deltas are summed over
+    the whole table at once and the running sum is reset at each block
+    start (uint64 arithmetic wraps modulo 2^64 on both sides, so the
+    difference is each block's own sum exactly)."""
+    deltas, starts = decode_varbyte_cells(doc_ids_vb)
+    sums = np.concatenate(([np.uint64(0)], np.cumsum(deltas,
+                                                     dtype=np.uint64)))
+    doc_ids = sums[1:] - np.repeat(sums[starts[:-1]], np.diff(starts))
+    return (doc_ids, decode_varbyte_cells(tfs_vb)[0],
+            decode_varbyte_cells(dls_vb)[0], starts)
+
+
 def encode_blocks_multi(
     group_starts: np.ndarray,
     doc_ids: np.ndarray,

@@ -90,9 +90,9 @@ def suggest_phrase(query: str, deletes: DataFrame, lm: StupidBackoffLM,
     # pruned count lookups: unigrams for every candidate, bigrams for
     # every adjacent candidate pair (superset IN-scan, tiny). When the
     # tables come from IndexBuilder.build_lm they carry term-hash
-    # partition columns — with ``n_term_buckets`` given, constant-folded
-    # bucket equality filters (the X34 pattern: Catalyst folds
-    # xxhash64(lit)) prune whole directories before the IN pushdown.
+    # partition columns — with ``n_term_buckets`` given, bucket equality
+    # filters on int literals computed in Python (the X34 pattern)
+    # prune whole directories before the IN pushdown.
     def _bucket_pred(df: DataFrame, bcol: str, values: list[str]):
         if n_term_buckets is None or bcol not in df.columns or not values:
             return None

@@ -21,77 +21,14 @@ from collections import Counter, defaultdict
 from dataclasses import dataclass, field
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .textproc import (
+from .textproc import (  # noqa: F401  (xxhash64: re-exported)
     doc_id_for_url,
     min_window_span,
     phrase_match_count,
     resolve_text,
     tokenize,
+    xxhash64,
 )
-
-
-# --------------------------------------------------------------- xxHash64
-# Pure-Python XXH64 (Collet's public xxHash spec, github.com/Cyan4973/
-# xxHash/blob/dev/doc/xxhash_spec.md) — the oracle mirror of Spark's
-# ``xxhash64`` expression (seed 42, UTF-8 bytes of the string input,
-# result as a SIGNED 64-bit long). Needed so the near-dedup oracle
-# reproduces the engine's MinHash signatures independently.
-_XP1 = 0x9E3779B185EBCA87
-_XP2 = 0xC2B2AE3D27D4EB4F
-_XP3 = 0x165667B19E3779F9
-_XP4 = 0x85EBCA77C2B2AE63
-_XP5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxround(acc: int, inp: int) -> int:
-    return (_rotl((acc + inp * _XP2) & _M64, 31) * _XP1) & _M64
-
-
-def xxhash64(data: bytes, seed: int = 42) -> int:
-    """XXH64(data, seed) as a SIGNED 64-bit integer (Spark semantics)."""
-    n, i = len(data), 0
-    if n >= 32:
-        v1 = (seed + _XP1 + _XP2) & _M64
-        v2 = (seed + _XP2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _XP1) & _M64
-        while i <= n - 32:
-            v1 = _xxround(v1, int.from_bytes(data[i:i + 8], "little"))
-            v2 = _xxround(v2, int.from_bytes(data[i + 8:i + 16], "little"))
-            v3 = _xxround(v3, int.from_bytes(data[i + 16:i + 24], "little"))
-            v4 = _xxround(v4, int.from_bytes(data[i + 24:i + 32], "little"))
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12)
-             + _rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            h ^= _xxround(0, v)
-            h = (h * _XP1 + _XP4) & _M64
-    else:
-        h = (seed + _XP5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h ^= _xxround(0, int.from_bytes(data[i:i + 8], "little"))
-        h = (_rotl(h, 27) * _XP1 + _XP4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h ^= (int.from_bytes(data[i:i + 4], "little") * _XP1) & _M64
-        h = (_rotl(h, 23) * _XP2 + _XP3) & _M64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _XP5) & _M64
-        h = (_rotl(h, 11) * _XP1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _XP2) & _M64
-    h ^= h >> 29
-    h = (h * _XP3) & _M64
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 # ------------------------------------------------------- dedup decisions

@@ -1100,7 +1100,7 @@ class IndexBuilder:
           unigram table (Brants '07: no normalization pass).
         Both partitioned by term hash bucket, so the suggester's
         ``w IN``/``prev IN`` lookups prune directories
-        (constant-foldable ``term_bucket_lit`` filters).
+        (``term_bucket_lit`` int literal filters).
 
         Only ``analyzer="simple"`` is supported: a stemmed dictionary
         would make the LM suggest stems, not words — the same reason

@@ -236,9 +236,10 @@ class QueryEngine:
     def _pruned_term_scan(self, table: str, terms: list[str]) -> DataFrame:
         """THE one definition of the query-term scan pruning (code-review
         r2: this predicate used to be built in three places): partition
-        pruning via constant-foldable ``term_bucket`` literals (Catalyst
-        folds ``xxhash64(lit)`` at plan time — no data job), then
-        ``term IN (...)`` pushdown for parquet row-group skipping.
+        pruning via ``term_bucket`` int literals (each term's bucket
+        computed in Python, ``textproc.term_bucket`` — no JVM expression,
+        no data job), then ``term IN (...)`` pushdown for parquet
+        row-group skipping.
         Tables without a ``term_bucket`` column just get the pushdown.
         """
         from ..functions.udfs import term_bucket_lit
@@ -309,8 +310,7 @@ class QueryEngine:
         stats = self.corpus_stats()
         avgdl = stats["avg_doc_len"]
         if not idfs or avgdl <= 0:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double")
+            return self._empty("doc_id long, score double")
 
         scan = self._pruned_term_scan(f"postings{self._sfx()}",
                                       sorted(idfs))
@@ -512,7 +512,7 @@ class QueryEngine:
                             min_match: int = 1,
                             site: str | None = None,
                             neg_site: str | None = None) -> DataFrame:
-        """Multi-query block-max WAND: N queries, one set of Spark jobs.
+        """Multi-query BM25 top-k: N queries, one set of Spark jobs.
 
         Returns (query_id, doc_id, score) — query_id is the position in
         ``queries``. The per-query results are rank-identical to
@@ -522,22 +522,24 @@ class QueryEngine:
         batch. This is the shape a batch retrieval pipeline uses — score
         a query LOG against the index, not one query at a time.
 
-        Plan — no driver-side term lookup: the postings scan is pruned by
-        constant-folded ``term_bucket`` literals + ``term IN`` (both
-        Catalyst-foldable from the query strings alone), each block row
-        picks up its term's global ``df`` via a broadcast join of the
-        identically-pruned term_stats scan, idf is computed inside the
-        WAND stage with the oracle's exact Python float expression, and a
-        per-query window top-k merges ≤ P·k·N local rows. With ≥ 2
-        distinct term sets that is four Spark jobs whatever N is: the
-        term_stats broadcast, the postings shuffle-map, the WAND stage,
-        and the per-query window (one more, a broadcast, fans duplicate
-        term sets back out). The WAND stage makes one Python call per
-        task and runs ``min(defaultParallelism, distinct term sets)``
-        tasks (pinned in ``tests/test_plan_shapes.py``). A batch with
-        one distinct term set is ranked on the driver like
-        :meth:`wand_top_k_df` (inside this call). The per-engine
-        corpus_stats read is cached per snapshot.
+        Plan: the postings scan is pruned by ``term_bucket`` literals
+        (computed in Python) + ``term IN``, idf comes from the per-engine
+        df cache (:meth:`_df_lookup`, one pruned term_stats collect for
+        terms this engine has not seen) with the oracle's exact Python
+        float expression, each task ranks every query over its buckets
+        in ONE vectorized BM25 pass
+        (:func:`..wand.make_dense_ranker`), and a per-query window top-k
+        merges ≤ n_tasks·k local rows per query. With ≥ 2 distinct term
+        sets that is three Spark jobs whatever N is: the postings
+        shuffle-map, the ranking stage and the per-query window (four at
+        the first sight of a term). Duplicate term sets are scored once;
+        the kernel emits their rows under every query_id. The ranking
+        stage makes one Python call per task and runs
+        ``min(defaultParallelism, distinct term sets)`` tasks (pinned in
+        ``tests/test_plan_shapes.py``). A batch with one distinct term
+        set is ranked on the driver like :meth:`wand_top_k_df` (inside
+        this call). The per-engine corpus_stats read is cached per
+        snapshot.
 
         Optional structured filters (``lang``/``warc_ts_*``) are shared by
         the whole batch; with ≥ 2 distinct term sets the doc_meta survivor
@@ -649,13 +651,24 @@ class QueryEngine:
         rows = heapq.nsmallest(k, rows, key=lambda r: (-r[3], r[2]))
         return pa.Table.from_batches([hits_batch(rows, collapse)])
 
-    def _no_hits(self) -> DataFrame:
-        """The empty (query_id, partition_id, doc_id, score) frame, built
-        from Arrow: a ``LocalTableScan`` whose collect runs no job."""
-        return self.spark.createDataFrame(
-            self._rank_on_driver(None, 0, 0, None))
+    def _empty(self, ddl: str) -> DataFrame:
+        """An empty frame of the DDL schema ``ddl``, built from an Arrow
+        table: a ``LocalTableScan`` whose collect runs no job (a
+        list-built empty frame plans a Python-RDD scan, whose collect
+        runs a Python task)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
 
-    def _driver_wand(self, terms: list[str], k: int, query_id: int = 0,
+        return self.spark.createDataFrame(
+            to_arrow_schema(_parse_datatype_string(ddl)).empty_table())
+
+    def _no_hits(self) -> DataFrame:
+        """The empty (query_id, partition_id, doc_id, score) frame."""
+        from .wand import BATCH_WAND_OUT_SCHEMA
+
+        return self._empty(BATCH_WAND_OUT_SCHEMA)
+
+    def _driver_wand(self, terms: list[str], k: int,
                      min_score: float = 0.0,
                      after: tuple[float, int] | None = None,
                      term_boosts: dict[str, float] | None = None,
@@ -664,8 +677,8 @@ class QueryEngine:
                      w_static: float | None = None,
                      collapse: bool = False) -> "pa.Table":
         """One term set's WAND top-k, ranked on the driver
-        (:meth:`_rank_on_driver`): the same per-bucket kernel and float
-        order as the batch path, so results are bit-identical. ONE
+        (:meth:`_rank_on_driver`): the float order of the batch path's
+        dense kernel (sorted-term sums), so results are bit-identical. ONE
         JVM-only job without ``meta``; TWO with it, the second reading
         ``meta``'s rows of the buckets that hold the query's postings,
         which feed one doc_meta hook of :func:`..wand.wand_top_k` per
@@ -679,7 +692,7 @@ class QueryEngine:
         """
         import pyarrow.compute as pc
 
-        from .wand import _batch_bucket_kernel
+        from .wand import _wand_bucket_kernel
 
         cfg = self.cfg
         stats = self.corpus_stats()
@@ -700,8 +713,8 @@ class QueryEngine:
             def hook(s):
                 return {"allowed": ids(s)} if s.num_rows else None
 
-        bucket_hits = _batch_bucket_kernel(
-            {query_id: list(terms)}, k, float(cfg.k1), float(cfg.b), avgdl,
+        bucket_hits = _wand_bucket_kernel(
+            list(terms), k, float(cfg.k1), float(cfg.b), avgdl,
             float(min_score), after, term_boosts, int(min_match))
         scan = self._driver_wand_scan(terms) if terms and avgdl > 0 else None
         return self._rank_on_driver(scan, n_docs, k, bucket_hits, meta, hook,
@@ -717,42 +730,49 @@ class QueryEngine:
                            min_match: int = 1,
                            site: str | None = None,
                            neg_site: str | None = None) -> DataFrame:
-        """Batch WAND core: (query_id, partition_id, doc_id, score).
+        """Batch core: (query_id, partition_id, doc_id, score).
 
         ``after`` is the keyset-pagination cursor (see
         :func:`..wand.wand_top_k`); it applies to every query in the
         batch, so only the single-query serve path exposes it publicly
-        (:meth:`search_after`).
-
-        ``min_score`` seeds each per-bucket WAND's theta (see
-        :func:`..wand.wand_top_k`): a score threshold STRENGTHENS pruning
-        on the fast path instead of forcing the exhaustive scorer.
+        (:meth:`search_after`). ``min_score`` is an inclusive score
+        threshold (on the driver it seeds WAND's theta, so it
+        STRENGTHENS pruning instead of forcing the exhaustive scorer).
 
         ``partition_id`` (the hit's doc-range bucket) stays in the output
         so result hydration can prune the doc_meta scan to the buckets
         that actually contain hits (VERDICT r2 #2 — at 10^12 docs the
         decorate-100-rows join must not scan the whole metadata table).
 
-        One term set — filtered or not — is ranked on the driver
-        (:meth:`_driver_wand`): one job inside this call, two with
-        structured filters, and the result is a ``LocalTableScan`` in
-        (score DESC, doc_id ASC) order whose collect runs none. An empty
-        query, ``k`` ≤ 0 or an empty index gives an empty
-        ``LocalTableScan`` and runs no job. N>1 distinct term sets merge
-        through a per-query ``row_number`` window: four jobs — the
-        term_stats broadcast, the postings shuffle-map, the WAND stage
-        and the window (pinned in ``tests/test_plan_shapes.py``).
+        One term set — filtered or not — is ranked on the driver by
+        block-max WAND (:meth:`_driver_wand`): one job inside this call,
+        two with structured filters, and the result is a
+        ``LocalTableScan`` in (score DESC, doc_id ASC) order whose
+        collect runs none (a query_id sharing the term set gets a copy
+        of its rows). An empty query, ``k`` ≤ 0 or an empty index gives
+        an empty ``LocalTableScan`` and runs no job.
 
-        With N>1 unfiltered term sets the WAND stage is a fixed-count
-        ``repartitionById(n, "partition_id").mapInArrow(...)``: each task
-        receives whole buckets and makes one Python call over all of
-        them. With structured filters it is a per-bucket cogroup with
-        the doc_meta survivors; both run the same per-bucket kernel.
+        N>1 distinct term sets are ranked in Python tasks by the dense
+        batch kernel (:func:`..wand.make_dense_ranker`: decode every
+        shipped block once, score each posting once, sum each query's
+        terms per doc in sorted-term order, top-k per task) and merge
+        through a per-query ``row_number`` window: three jobs — the
+        postings shuffle-map, the ranking stage and the window — plus a
+        pruned term_stats collect for terms the engine has not seen
+        (pinned in ``tests/test_plan_shapes.py``). Unfiltered, the
+        ranking stage is a fixed-count ``repartitionById(n,
+        "partition_id").mapInArrow(...)``: each task receives whole
+        buckets and makes one Python call over all of them. With
+        structured filters it is a per-bucket cogroup with the doc_meta
+        survivors, one kernel call per bucket.
         """
+        import pyarrow as pa
+
         from .wand import (
             BATCH_WAND_OUT_SCHEMA,
-            make_wand_batch_arrow_fn,
-            make_wand_cogroup_fn,
+            make_batch_arrow_fn,
+            make_cogroup_fn,
+            make_dense_ranker,
         )
 
         cfg = self.cfg
@@ -763,18 +783,14 @@ class QueryEngine:
                  for q in queries]
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
-        # one WAND pass per UNIQUE term set: duplicate query strings (and
-        # distinct strings that tokenize identically) share a
-        # representative and fan back out after the merge
-        rep_of: dict[tuple, int] = {}
-        fanout: list[tuple[int, int]] = []  # (rep, query_id)
+        # one pass per UNIQUE term set: duplicate query strings (and
+        # distinct strings that tokenize identically) are scored once
+        # and their rows emitted under every query_id
+        ids_of: dict[tuple, list[int]] = {}
         for qi, ts in enumerate(per_q):
-            if not ts:
-                continue
-            rep = rep_of.setdefault(tuple(ts), qi)
-            fanout.append((rep, qi))
-        query_terms = {rep: list(key) for key, rep in rep_of.items()}
-        if not query_terms or k <= 0 or avgdl <= 0:
+            if ts:
+                ids_of.setdefault(tuple(ts), []).append(qi)
+        if not ids_of or k <= 0 or avgdl <= 0:
             return self._no_hits()
         filtered = (lang is not None or warc_ts_min is not None
                     or warc_ts_max is not None or site is not None
@@ -785,29 +801,32 @@ class QueryEngine:
             .select("partition_id", "doc_id") if filtered else None)
         kernel_kw = dict(min_score=float(min_score), after=after,
                          term_boosts=term_boosts, min_match=int(min_match))
-        if len(query_terms) == 1:
-            (rep, terms), = query_terms.items()
-            ranked = self.spark.createDataFrame(self._driver_wand(
-                terms, k, query_id=rep, meta=allowed, **kernel_kw))
-            return self._fan_out(ranked, fanout, rep_of)
+        if len(ids_of) == 1:
+            (terms, qids), = ids_of.items()
+            ranked = self._driver_wand(list(terms), k, meta=allowed,
+                                       **kernel_kw)
+            return self.spark.createDataFrame(pa.concat_tables([
+                ranked.set_column(0, "query_id", pa.array(
+                    [qi] * ranked.num_rows, pa.int32()))
+                for qi in qids]))
 
-        all_terms = sorted(set().union(*query_terms.values()))
+        all_terms = sorted(set().union(*ids_of))
+        # global df from the per-engine cache (one pruned term_stats
+        # collect for terms this engine has not seen yet); idf with the
+        # oracle's exact Python float expression
+        idf = {t: bm25_idf(n_docs, df)
+               for t, df in self._df_lookup(all_terms).items() if df > 0}
         blocks = self._pruned_term_scan(f"postings{self._sfx()}",
                                         all_terms).select(
-            "term", "partition_id", "block_id", "last_doc_id",
-            "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb")
-        # global df rides every block row — the term lookup folded into
-        # the same job as a broadcast join (≤ |Σ query terms| rows)
-        df_side = self._pruned_term_scan(f"term_stats{self._sfx()}",
-                                         all_terms).select("term", "df")
-        blocks = blocks.join(F.broadcast(df_side), "term")
-        kernel_args = (query_terms, k, float(cfg.k1), float(cfg.b), avgdl,
-                       n_docs)
+            "term", "partition_id", "doc_ids_vb", "tfs_vb", "dls_vb")
+        rank = make_dense_ranker(
+            {tuple(qids): list(ts) for ts, qids in ids_of.items()}, k,
+            float(cfg.k1), float(cfg.b), avgdl, idf, **kernel_kw)
         if filtered:
-            fn = make_wand_cogroup_fn(*kernel_args, **kernel_kw)
             local = (blocks.groupBy("partition_id")
                      .cogroup(allowed.groupBy("partition_id"))
-                     .applyInPandas(fn, schema=BATCH_WAND_OUT_SCHEMA))
+                     .applyInPandas(make_cogroup_fn(rank),
+                                    schema=BATCH_WAND_OUT_SCHEMA))
         else:
             # One Python call per task, and a FIXED task count: AQE
             # sizes shuffle partitions by bytes, and this stage moves a
@@ -820,28 +839,15 @@ class QueryEngine:
             # so tasks get equal bucket counts (hashing puts 5/10/7/10
             # of 32 on 4 tasks).
             n_tasks = min(self.spark.sparkContext.defaultParallelism,
-                          len(query_terms))
-            fn = make_wand_batch_arrow_fn(*kernel_args, **kernel_kw)
+                          len(ids_of))
             local = (blocks.repartitionById(n_tasks, "partition_id")
-                     .mapInArrow(fn, BATCH_WAND_OUT_SCHEMA))
+                     .mapInArrow(make_batch_arrow_fn(rank),
+                                 BATCH_WAND_OUT_SCHEMA))
         from pyspark.sql.window import Window
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.asc("doc_id"))
-        ranked = (local.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") <= k)
-                  .select("query_id", "partition_id", "doc_id", "score"))
-        return self._fan_out(ranked, fanout, rep_of)
-
-    def _fan_out(self, ranked: DataFrame, fanout: list[tuple[int, int]],
-                 rep_of: dict[tuple, int]) -> DataFrame:
-        """Duplicate term sets ran once: replicate each representative's
-        top-k to every query_id that shares its term set (a tiny
-        broadcast join; a no-op without duplicates)."""
-        if len(fanout) == len(rep_of):
-            return ranked
-        fmap = self.spark.createDataFrame(fanout, "rep int, query_id int")
-        return (ranked.withColumnRenamed("query_id", "rep")
-                .join(F.broadcast(fmap), "rep")
+        return (local.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= k)
                 .select("query_id", "partition_id", "doc_id", "score"))
 
     # ------------------------------------------------- phrase / proximity
@@ -883,9 +889,8 @@ class QueryEngine:
         k = cfg.default_k if k is None else min(k, cfg.max_k)
         pterms = tokenize(phrase, cfg.max_token_len, cfg.min_token_len,
                           cfg.analyzer)
-        empty = self.spark.createDataFrame([], self._PHRASE_EMPTY)
         if not pterms or k <= 0:
-            return empty
+            return self._empty(self._PHRASE_EMPTY)
         if mode == "auto":
             mode = ("positions"
                     if self.store.exists(f"positions{self._sfx()}")
@@ -900,7 +905,7 @@ class QueryEngine:
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
         if avgdl <= 0:
-            return empty
+            return self._empty(self._PHRASE_EMPTY)
         blocks = self._pruned_term_scan(f"positions{self._sfx()}",
                                         uniq).select(
             "term", "partition_id", "block_id", "doc_ids_vb", "dls_vb",
@@ -940,7 +945,7 @@ class QueryEngine:
         avgdl = stats["avg_doc_len"]
         if len(idfs) < len(uniq) or avgdl <= 0:
             # some phrase term absent from the corpus → no match anywhere
-            return self.spark.createDataFrame([], self._PHRASE_EMPTY)
+            return self._empty(self._PHRASE_EMPTY)
         # conjunction over (term, doc_id) only — the light decode (no
         # tf/dl streams; the survivors re-tokenize anyway)
         scan = self._pruned_term_scan(f"postings{self._sfx()}",
@@ -1299,9 +1304,9 @@ class QueryEngine:
         obligations fully resolved, NOT yet globally ranked/truncated
         (per-bucket unconditional survivors are capped at k when given).
 
-        One kernel job over the term-pruned postings scan (same plan
-        shape as batch WAND: constant-folded bucket pruning, ``term IN``
-        pushdown, global df via broadcast join), plus — only when the
+        One kernel job over the term-pruned postings scan (term-bucket
+        literal pruning, ``term IN`` pushdown, global df via broadcast
+        join), plus — only when the
         query carries phrases — a bounded recheck join that re-tokenizes
         the conjunction-selective pending docs (GIN bitmap + heap
         recheck, the X30 shape).
@@ -1315,14 +1320,13 @@ class QueryEngine:
         )
 
         cfg = self.cfg
-        empty = self.spark.createDataFrame([], self._BOOL_EMPTY)
         clauses = parse_websearch(query, cfg.max_token_len,
                                   cfg.min_token_len, cfg.analyzer)
         if synonyms:
             from ..operators.synonyms import rewrite_clauses
             clauses = rewrite_clauses(clauses, synonyms)
         if not clauses:
-            return empty
+            return self._empty(self._BOOL_EMPTY)
         prefixes = sorted({p for c in clauses
                            for p in c.req_prefixes + c.neg_prefixes})
         expansions = self._expand_prefixes(prefixes)
@@ -1342,7 +1346,7 @@ class QueryEngine:
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
         if not pos or avgdl <= 0:
-            return empty
+            return self._empty(self._BOOL_EMPTY)
 
         clauses_c = [{
             "req": ([(t,) for t in c.req_terms]
@@ -1442,7 +1446,7 @@ class QueryEngine:
         cfg = self.cfg
         k = cfg.default_k if k is None else min(k, cfg.max_k)
         if k <= 0:
-            return self.spark.createDataFrame([], self._BOOL_EMPTY)
+            return self._empty(self._BOOL_EMPTY)
         return (self._boolean_survivors(query, k, synonyms=synonyms)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
@@ -1500,8 +1504,7 @@ class QueryEngine:
                                          cfg.min_token_len,
                                          cfg.analyzer)))
             if not qterms:
-                return self.spark.createDataFrame(
-                    [], f"{by} string, n_docs long")
+                return self._empty(f"{by} string, n_docs long")
             # "contains ≥1 query term" needs no scores: the scoreless
             # doc-id-only decode (one varbyte stream, one binary column
             # read — see candidate_ids_df/decode_doc_ids)
@@ -1561,8 +1564,8 @@ class QueryEngine:
         cfg = self.cfg
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
-        empty = self.spark.createDataFrame(
-            [], "term string, fg_df long, bg_df long, score double")
+        empty = self._empty("term string, fg_df long, bg_df long, "
+                            "score double")
         if not qterms:
             return empty
         if mode == "boolean":
@@ -2072,7 +2075,7 @@ class QueryEngine:
         lookup + Damerau-Levenshtein verify): [(term, distance, df)]
         ordered (distance ASC, df DESC, term ASC). Requires
         ``IndexBuilder.build_fuzzy()``; the scan prunes by
-        constant-folded variant_bucket literals + ``variant IN``."""
+        variant_bucket int literals + ``variant IN``."""
         from ..functions.udfs import term_bucket_lit
         from ..operators.fuzzy import delete_variants, fuzzy_candidates
 
@@ -2139,7 +2142,7 @@ class QueryEngine:
                                      cfg.min_token_len, cfg.analyzer)))
         expanded = expand_terms(qterms, synonyms or {})
         if not expanded:
-            return self.spark.createDataFrame([], self._BOOL_EMPTY)
+            return self._empty(self._BOOL_EMPTY)
         return self.wand_top_k_df(" ".join(expanded), k=k)
 
     def explain_score(self, query: str, doc_id: int) -> dict:
@@ -2276,7 +2279,7 @@ class QueryEngine:
                       "warc_ts timestamp, lang string, doc_len int"
                       + (", text string" if with_text else ""))
         if not req:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
         ids = [d for _, d in req]
         buckets = sorted({doc_bucket(d, cfg.n_doc_buckets) for d in ids})
         reqdf = self.spark.createDataFrame(
@@ -2322,9 +2325,8 @@ class QueryEngine:
 
         ids = sorted({int(d) for d in doc_ids})
         if not ids:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, tf int, "
-                    "positions array<int>, df long, idf double")
+            return self._empty("doc_id long, term string, tf int, "
+                               "positions array<int>, df long, idf double")
         if len(ids) > max_docs:
             raise ValueError(
                 f"term_vectors is a per-doc debug API: {len(ids)} docs "
@@ -2688,8 +2690,7 @@ class QueryEngine:
         if probe is None:
             probe = embed_query_tokens(toks, dim) if dim else []
         if not any(probe):
-            return self.spark.createDataFrame(
-                [], "doc_id long, cosine double")
+            return self._empty("doc_id long, cosine double")
         allowed = None
         if any(x is not None for x in (lang, warc_ts_min, warc_ts_max,
                                        site, neg_site)):
@@ -3013,7 +3014,7 @@ class QueryEngine:
         qterms = sorted(set(tokenize(query, cfg.max_token_len,
                                      cfg.min_token_len, cfg.analyzer)))
         if not qterms:
-            return self.spark.createDataFrame([], "doc_id long")
+            return self._empty("doc_id long")
         scan = self._pruned_term_scan(f"postings{self._sfx()}", qterms)
         if buckets is not None:
             scan = scan.filter(

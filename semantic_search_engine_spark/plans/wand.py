@@ -11,15 +11,17 @@ the current k-th score are skipped without computing BM25.
 
 Distribution model (Spark-first): the postings table is range-bucketed by
 doc id (``partition_id``), so every bucket holds a doc-id-sorted slice of
-each term's posting list. WAND runs *independently per bucket* (a batch's
-Python task holds whole buckets, a single query's collected blocks are
-split on the driver; :func:`bucket_blocks` is that split) — the union of
-per-bucket top-K sets is a superset of the global top-K (each global
-winner lives in exactly one bucket and must be in that bucket's local
-top-K), so a final (score DESC, doc_id ASC) top-K merge over ≤ P·K
-candidate rows is exact. At web scale each bucket holds only
-~|term postings|/P compressed bytes and the merge moves P·K ≈ thousands
-of rows — no full-corpus shuffle.
+each term's posting list. A single query's collected blocks are split on
+the driver (:func:`bucket_blocks`) and WAND runs *independently per
+bucket*; a batch of ≥ 2 term sets instead ranks every query over all of
+a Python task's buckets in one vectorized pass
+(:func:`make_dense_ranker`: decode each block once, score each posting
+once, no block skipping). Either way the union of the local top-K sets
+is a superset of the global top-K (each global winner lives in exactly
+one bucket, hence one task, and must be in that local top-K), so a final
+(score DESC, doc_id ASC) top-K merge over ≤ P·K candidate rows is exact.
+At web scale each bucket holds only ~|term postings|/P compressed bytes
+and the merge moves P·K ≈ thousands of rows — no full-corpus shuffle.
 
 Determinism (rank-identity with the single-node oracle): a document's score
 is accumulated over query terms in sorted-term order — the identical float
@@ -494,9 +496,8 @@ def _idf_by_term(terms, dfs, n_docs: "int | dict[str, int]"
 
 def bucket_blocks(table, n_docs: "int | dict[str, int]"):
     """Block rows → ``(partition_id, term → blocks, term → idf)`` per doc
-    bucket, in ascending bucket order — the one loop every ranking path
-    runs (the batch ``mapInArrow`` task, the filtered-batch cogroup and
-    the driver-side single-query paths).
+    bucket, in ascending bucket order — the loop of the driver-side
+    single-query paths (WAND, MaxScore, weighted).
 
     ``table``: a ``pyarrow.Table`` of the block columns plus
     ``partition_id``, ``block_id`` and each term's global ``df``. It is
@@ -539,111 +540,167 @@ def hits_batch(rows, with_key: bool = False):
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-def _batch_bucket_kernel(query_terms: dict[int, list[str]], k: int,
-                         k1: float, b: float, avgdl: float,
-                         min_score: float = 0.0,
-                         after: "tuple[float, int] | None" = None,
-                         term_boosts: "dict[str, float] | None" = None,
-                         min_match: int = 1):
-    """The per-bucket body every WAND path shares: one doc bucket's
-    blocks grouped by term (+ at most one doc_meta hook of
-    :func:`wand_top_k`) → ``(query_id, partition_id, doc_id, score,
-    key)`` rows for each query's local top-k (``key``: the collapse key,
-    None without ``collapse``).
+def _wand_bucket_kernel(terms: list[str], k: int, k1: float, b: float,
+                        avgdl: float, min_score: float = 0.0,
+                        after: "tuple[float, int] | None" = None,
+                        term_boosts: "dict[str, float] | None" = None,
+                        min_match: int = 1):
+    """The per-bucket body of the driver-side single-query paths: one
+    doc bucket's blocks grouped by term (+ at most one doc_meta hook of
+    :func:`wand_top_k`) → ``(0, partition_id, doc_id, score, key)``
+    rows of the query's local top-k (``key``: the collapse key, None
+    without ``collapse``).
 
-    Each query runs the standard exact block-max WAND over its own term
-    subset, so per-query results are identical whichever path runs it
-    (rank-identity pinned by test). Per-term boost multipliers (PRF
-    expansion down-weighting, user ``term^boost`` weighting) give
-    weight = boost * idf, the float-op order the oracle replays; boosts
-    only scale each cursor's upper bounds, so pruning stays exact.
+    The query runs the standard exact block-max WAND over its terms.
+    Per-term boost multipliers (PRF expansion down-weighting, user
+    ``term^boost`` weighting) give weight = boost * idf, the float-op
+    order the oracle replays; boosts only scale each cursor's upper
+    bounds, so pruning stays exact.
     """
 
     def bucket_hits(pid, by_term, idf, **hook):
-        for qid, terms in query_terms.items():
-            if term_boosts:
-                weights = {t: term_boosts.get(t, 1.0) * idf[t]
-                           for t in terms if t in by_term}
-            else:
-                weights = {t: idf[t] for t in terms if t in by_term}
-            if not weights:
-                continue
-            hits, _ = wand_top_k({t: by_term[t] for t in weights}, weights,
-                                 k, k1, b, avgdl, min_score=min_score,
-                                 after=after, min_match=min_match, **hook)
-            for *key, d, s in hits:  # a collapse hit leads with its key
-                yield qid, pid, d, s, key[0] if key else None
+        weights = {t: (term_boosts.get(t, 1.0) * idf[t] if term_boosts
+                       else idf[t]) for t in terms if t in by_term}
+        if not weights:
+            return
+        hits, _ = wand_top_k({t: by_term[t] for t in weights}, weights,
+                             k, k1, b, avgdl, min_score=min_score,
+                             after=after, min_match=min_match, **hook)
+        for *key, d, s in hits:  # a collapse hit leads with its key
+            yield 0, pid, d, s, key[0] if key else None
 
     return bucket_hits
 
 
-def make_wand_batch_arrow_fn(query_terms: dict[int, list[str]],
-                             k: int, k1: float, b: float, avgdl: float,
-                             n_docs: int, min_score: float = 0.0,
-                             after: "tuple[float, int] | None" = None,
-                             term_boosts: "dict[str, float] | None" = None,
-                             min_match: int = 1):
-    """``mapInArrow`` body for MULTI-QUERY WAND: ONE Python call per task.
+def make_dense_ranker(query_terms: "dict[tuple[int, ...], list[str]]",
+                      k: int, k1: float, b: float, avgdl: float,
+                      idf: dict[str, float], min_score: float = 0.0,
+                      after: "tuple[float, int] | None" = None,
+                      term_boosts: "dict[str, float] | None" = None,
+                      min_match: int = 1):
+    """The batch kernel: ``rank(table, allowed=None)`` scores EVERY query
+    of a batch over one Arrow table of posting blocks (any set of doc
+    buckets) in one vectorized BM25 pass and returns ``(query_id,
+    partition_id, doc_id, score, None)`` rows, each query's top-k over
+    the whole table by (score DESC, doc_id ASC).
 
-    The task's rows are every block of the buckets routed to it (the
-    union of every query's term postings, each row carrying its term's
-    global ``df`` from the broadcast term_stats join); :func:`bucket_blocks`
-    splits them into buckets and each runs :func:`_batch_bucket_kernel`.
-    The Arrow round trip and the output construction are paid once per
-    task, not once per bucket; the caller sizes the task count so a
-    batch spreads over the cores.
+    ``query_terms``: the query ids sharing a term set → its sorted terms
+    (duplicate term sets are scored once and emitted under every id).
+    ``idf``: term → idf, computed on the driver from term_stats' global
+    ``df``; a block of a term without one is ignored (a term missing
+    from term_stats has no idf). ``allowed``: the filter survivors'
+    doc ids, or None.
 
-    Amortizes the per-job scheduling floor across N queries: the postings
-    scan, the shuffle and the task launches are paid ONCE for the whole
-    batch, with no driver-side term-lookup collect before it. The closure
-    ships |Σ query terms| strings — still broadcast-sized.
+    The pass: (1) decode every block once
+    (:func:`..functions.varbyte.decode_block_table`); (2) each posting's
+    contribution ``w * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))``
+    with ``w = boost * idf``, :meth:`BlockCursor.contrib`'s op order
+    elementwise; (3) per query, add its terms' contributions into a
+    zeroed per-doc array in sorted-term order — ``0.0 + c`` is exact, so
+    each doc's sum is the oracle's float sum — and count its matching
+    terms; (4) mask ``min_match`` (≥ 1: a candidate matches a term),
+    ``min_score`` (inclusive), ``after`` and ``allowed`` exactly as
+    :func:`wand_top_k` disqualifies candidates, then take the top-k
+    (``np.partition`` to the k-th score, ties kept, then ``lexsort``).
 
-    Yields one record batch (empty when the task got no rows).
+    The result equals the per-bucket :func:`wand_top_k` calls plus a
+    (score DESC, doc_id ASC) merge bit for bit: WAND prunes only docs
+    that cannot enter a top-k, and each doc lives in one bucket, so the
+    table's top-k is the merge of its buckets' top-k. The pass scores
+    every shipped posting (no block skipping): at head terms WAND
+    evaluates nearly all of them anyway, and the numpy pass costs a few
+    ms where the per-posting Python loop costs hundreds.
     """
-    bucket_hits = _batch_bucket_kernel(query_terms, k, k1, b, avgdl,
-                                       min_score, after, term_boosts,
-                                       min_match)
+    from ..functions.varbyte import decode_block_table
+
+    def rank(table, allowed: "np.ndarray | None" = None) -> list[tuple]:
+        if k <= 0 or avgdl <= 0 or not table.num_rows:
+            return []
+        t = table.sort_by([("term", "ascending")])
+        terms = t.column("term").to_pylist()
+        ids, tfs, dls, starts = decode_block_table(
+            t.column("doc_ids_vb"), t.column("tfs_vb"), t.column("dls_vb"))
+        counts = np.diff(starts)
+        # weight and posting range per term, weight per posting
+        span: dict[str, slice] = {}
+        w_block = np.zeros(len(terms))
+        for lo, hi in key_runs(terms):
+            term = terms[lo]
+            if term in idf:
+                span[term] = slice(int(starts[lo]), int(starts[hi]))
+                w_block[lo:hi] = ((term_boosts.get(term, 1.0) * idf[term])
+                                  if term_boosts else idf[term])
+        tf = tfs.astype(np.float64)
+        dl = dls.astype(np.float64)
+        contrib = np.repeat(w_block, counts) * (
+            tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+        docs, slot = np.unique(ids.astype(np.int64), return_inverse=True)
+        pid = np.empty(len(docs), dtype=np.int64)
+        pid[slot] = np.repeat(t.column("partition_id").to_numpy(), counts)
+        ok = None if allowed is None else np.isin(docs, allowed)
+
+        rows: list[tuple] = []
+        for qids, qterms in query_terms.items():
+            score = np.zeros(len(docs))
+            n_match = np.zeros(len(docs), dtype=np.int32)
+            for term in qterms:  # sorted: the oracle's summation order
+                if term in span:
+                    at = slot[span[term]]
+                    score[at] += contrib[span[term]]
+                    n_match[at] += 1
+            keep = (n_match >= max(min_match, 1)) & (score >= min_score)
+            if after is not None:
+                keep &= (score < after[0]) | ((score == after[0])
+                                              & (docs > after[1]))
+            if ok is not None:
+                keep &= ok
+            cand = np.flatnonzero(keep)
+            if len(cand) > k:  # every doc tied with the k-th score stays
+                kth = np.partition(score[cand], len(cand) - k)[len(cand) - k]
+                cand = cand[score[cand] >= kth]
+            top = cand[np.lexsort((docs[cand], -score[cand]))[:k]]
+            hits = list(zip(pid[top].tolist(), docs[top].tolist(),
+                            score[top].tolist()))
+            rows.extend((q, p, d, s, None) for q in qids for p, d, s in hits)
+        return rows
+
+    return rank
+
+
+def make_batch_arrow_fn(rank):
+    """``mapInArrow`` body of an unfiltered batch (≥ 2 distinct term
+    sets): ONE Python call per task over every block of the buckets
+    routed to it — the union of every query's term postings — ranked by
+    ``rank`` (:func:`make_dense_ranker`) in one pass. The Arrow round
+    trip and the output construction are paid once per task; the caller
+    sizes the task count so a batch spreads over the cores. Yields one
+    record batch (empty when the task got no rows)."""
 
     def run_task(batches):
         import pyarrow as pa
 
-        rows: list[tuple] = []
         batches = [rb for rb in batches if rb.num_rows]
-        if batches:
-            for pid, by_term, idf in bucket_blocks(
-                    pa.Table.from_batches(batches), n_docs):
-                rows.extend(bucket_hits(pid, by_term, idf))
-        yield hits_batch(rows)
+        yield hits_batch(rank(pa.Table.from_batches(batches))
+                         if batches else [])
 
     return run_task
 
 
-def make_wand_cogroup_fn(query_terms: dict[int, list[str]],
-                         k: int, k1: float, b: float, avgdl: float,
-                         n_docs: int, min_score: float = 0.0,
-                         after: "tuple[float, int] | None" = None,
-                         term_boosts: "dict[str, float] | None" = None,
-                         min_match: int = 1):
+def make_cogroup_fn(rank):
     """Cogrouped ``applyInPandas`` body of a FILTERED batch (≥ 2 term
     sets): left = one bucket's blocks, right = the bucket's filter
-    survivors' ``doc_id`` (shared by the whole batch), sorted once and
-    passed to :func:`wand_top_k` as ``allowed``; an empty right side
-    means no hits. Runs the same per-bucket kernel as
-    :func:`make_wand_batch_arrow_fn`."""
-    bucket_hits = _batch_bucket_kernel(query_terms, k, k1, b, avgdl,
-                                       min_score, after, term_boosts,
-                                       min_match)
+    survivors' ``doc_id`` (shared by the whole batch), passed to
+    ``rank`` (:func:`make_dense_ranker`) as ``allowed``; an empty right
+    side means no hits."""
 
     def run_bucket(blocks_pdf, meta_pdf):
         import pyarrow as pa
 
         rows: list[tuple] = []
         if len(blocks_pdf) and len(meta_pdf):
-            allowed = np.sort(meta_pdf["doc_id"].to_numpy(dtype=np.int64))
-            for pid, by_term, idf in bucket_blocks(
-                    pa.Table.from_pandas(blocks_pdf, preserve_index=False),
-                    n_docs):
-                rows.extend(bucket_hits(pid, by_term, idf, allowed=allowed))
+            rows = rank(pa.Table.from_pandas(blocks_pdf,
+                                             preserve_index=False),
+                        meta_pdf["doc_id"].to_numpy(dtype=np.int64))
         return hits_batch(rows).to_pandas()
 
     return run_bucket

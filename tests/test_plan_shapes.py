@@ -90,12 +90,16 @@ def wand_engine(spark, tiny_corpus_dir, tmp_path_factory):
     return QueryEngine(spark, store, cfg)
 
 
-def _jobs(spark, fn) -> list[list[int]]:
-    """Run ``fn`` once to warm the engine's per-instance caches, then
-    again under a fresh job group. Returns, per job in submission order,
-    the task counts of its stages in stage-id order (the job's own final
-    stage last)."""
-    fn()
+def _jobs(spark, fn, warm: bool = True) -> list[list[int | None]]:
+    """Run ``fn`` once to warm the engine's per-instance caches (unless
+    ``warm`` is False), then again under a fresh job group. Returns, per
+    job in submission order, the task counts of its stages in stage-id
+    order (the job's own final stage last). The status store is fed by
+    Spark's asynchronous listener bus, so the bus is drained first; a
+    stage the store still does not know is recorded as None rather than
+    read through a None ``getStageInfo``."""
+    if warm:
+        fn()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     gid = f"plan-shape-{uuid.uuid4().hex}"
@@ -105,10 +109,12 @@ def _jobs(spark, fn) -> list[list[int]]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     out = []
     for j in sorted(tracker.getJobIdsForGroup(gid)):
         stages = sorted(tracker.getJobInfo(j).stageIds)
-        out.append([tracker.getStageInfo(s).numTasks for s in stages])
+        infos = [tracker.getStageInfo(s) for s in stages]
+        out.append([None if i is None else i.numTasks for i in infos])
     return out
 
 
@@ -135,26 +141,35 @@ def test_top_k_one_job_no_python_task(spark, wand_engine):
         assert node not in plan, (node, plan)
 
 
-@pytest.mark.parametrize("queries,n_jobs", [
-    (["wireless bluetooth headphones", "gaming laptop"], 4),
-    (["wireless bluetooth headphones", "gaming laptop", "smartphone",
-      "4k monitor", "mechanical keyboard", "zipfhead0 zipfhead1"], 4),
-    # repeated term sets share one WAND pass (2 distinct, not 3); the
-    # fan-out of the shared results back to every query_id adds one
-    # broadcast job
-    (["gaming laptop", "laptop gaming", "smartphone"], 5),
+@pytest.mark.parametrize("queries", [
+    ["wireless bluetooth headphones", "gaming laptop"],
+    ["wireless bluetooth headphones", "gaming laptop", "smartphone",
+     "4k monitor", "mechanical keyboard", "zipfhead0 zipfhead1"],
+    # repeated term sets share one pass (2 distinct, not 3); the kernel
+    # emits the shared rows under every query_id, so no fan-out job
+    ["gaming laptop", "laptop gaming", "smartphone"],
 ], ids=["two", "six", "duplicate"])
 def test_batch_top_k_four_jobs_wand_spread_over_cores(spark, wand_engine,
-                                                       queries, n_jobs):
-    """A batch runs 4 jobs — the single-query three plus the per-query
-    window — and its WAND stage runs min(defaultParallelism, distinct
+                                                       queries):
+    """A batch whose terms this engine has seen runs 3 jobs — the
+    postings shuffle-map, the ranking stage and the per-query window;
+    the first sight of its terms adds the pruned term_stats collect
+    (4 jobs). Its ranking stage runs min(defaultParallelism, distinct
     term sets) tasks: a fixed-count repartition, so AQE cannot coalesce
     the few-KB, CPU-heavy stage back onto one task."""
-    jobs = _jobs(spark, lambda: wand_engine.batch_top_k(queries, k=10))
     distinct = len({tuple(sorted(set(q.split()))) for q in queries})
-    assert len(jobs) == n_jobs, jobs
-    assert _wand_tasks(jobs) == min(
-        spark.sparkContext.defaultParallelism, distinct), jobs
+    n_tasks = min(spark.sparkContext.defaultParallelism, distinct)
+
+    def cold():
+        object.__setattr__(wand_engine, "_term_df_cache", None)
+        return wand_engine.batch_top_k(queries, k=10)
+
+    warm = _jobs(spark, lambda: wand_engine.batch_top_k(queries, k=10))
+    assert len(warm) == 3, warm
+    assert _wand_tasks(warm) == n_tasks, warm
+    first = _jobs(spark, cold)
+    assert len(first) == 4 and len(first[0]) == 1, first
+    assert _wand_tasks(first) == n_tasks, first
 
 
 Q = "wireless bluetooth headphones"
@@ -203,8 +218,16 @@ def test_single_query_wand_variants_job_counts(spark, wand_engine,
     lambda e: e.weighted_top_k("", field_weights={"text": 1.0}, k=10),
     lambda e: e.maxscore_top_k_df(Q, k=0).collect(),
     lambda e: e.auto_top_k_df("").collect(),
+    lambda e: e.phrase_top_k_df("").collect(),
+    lambda e: e.boolean_top_k_df("").collect(),
+    lambda e: e.boolean_top_k_df(Q, k=0).collect(),
+    lambda e: e.synonym_top_k_df("", {}).collect(),
+    lambda e: e.get_docs(urls=[]).collect(),
+    lambda e: e.candidate_ids_df("").collect(),
 ], ids=["search", "search-k0", "filtered", "batch-k0", "collapse",
-        "boosted-k0", "weighted", "maxscore-k0", "auto"])
+        "boosted-k0", "weighted", "maxscore-k0", "auto", "phrase",
+        "boolean", "boolean-k0", "synonym", "get-docs",
+        "candidates"])
 def test_empty_result_runs_no_job(spark, wand_engine, collected_plans,
                                   call):
     """An empty query or k ≤ 0 comes back as an Arrow-built
@@ -212,5 +235,22 @@ def test_empty_result_runs_no_job(spark, wand_engine, collected_plans,
     ``createDataFrame([], schema)`` plans a Python-RDD scan and runs
     one)."""
     assert _jobs(spark, lambda: call(wand_engine)) == []
+    for plan in collected_plans:
+        assert plan.startswith("LocalTableScan"), plan
+
+
+def test_phrase_recheck_absent_term_runs_no_job(spark, wand_engine,
+                                                collected_plans):
+    """A recheck phrase with a term absent from the index: once the
+    engine has cached that term's df of 0, the empty result is an
+    Arrow-built ``LocalTableScan`` and no job runs."""
+    def call():
+        return wand_engine.phrase_top_k_df("gaming absentterm9z",
+                                           mode="recheck").collect()
+
+    call()  # the first sight of the terms reads their df
+    collected_plans.clear()
+    assert _jobs(spark, call, warm=False) == []
+    assert collected_plans
     for plan in collected_plans:
         assert plan.startswith("LocalTableScan"), plan

@@ -1,11 +1,13 @@
 """Round-trip + property tests for the posting codec (FIXTURES.md §4.4)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from semantic_search_engine_spark.functions.varbyte import (
     decode_block,
+    decode_block_table,
     decode_varbyte,
     delta_decode,
     delta_encode,
@@ -66,6 +68,58 @@ def test_empty_inputs():
     assert encode_varbyte(np.zeros(0, dtype=np.uint64)) == b""
     assert decode_varbyte(b"").size == 0
     assert delta_encode(np.zeros(0, dtype=np.uint64)).size == 0
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["binary",
+                                                      "large_binary"])
+def test_whole_table_decode_equals_decode_block(large):
+    """decode_block_table over Arrow binary columns equals decode_block
+    per row, concatenated: an empty table, 1-posting blocks, doc-id
+    gaps of 2^35 and more (6-byte varbytes, and absolute first ids near
+    2^60 whose running sum over the table wraps uint64), and a sliced
+    column (a non-zero Arrow offset)."""
+    import pyarrow as pa
+
+    typ = pa.large_binary() if large else pa.binary()
+    rng = np.random.Generator(np.random.PCG64(5))
+    blocks = []
+    firsts = []
+    for n in [1, 1, 3, 1, 17, 2, 1, 64, 1] * 3:
+        gaps = rng.integers(1, 2**36, size=n, dtype=np.uint64)
+        gaps[rng.random(n) < 0.3] = np.uint64(2**35)
+        ids = np.cumsum(gaps, dtype=np.uint64) + np.uint64(
+            rng.integers(3 * 2**58, 2**60 - 2**44))
+        firsts.append(int(ids[0]))
+        blocks.append((encode_varbyte(delta_encode(ids)),
+                       encode_varbyte(rng.integers(1, 300, size=n)
+                                      .astype(np.uint64)),
+                       encode_varbyte(rng.integers(1, 2**20, size=n)
+                                      .astype(np.uint64))))
+
+    def check(rows):
+        cols = [pa.chunked_array([pa.array([r[i] for r in rows[:3]], typ),
+                                  pa.array([r[i] for r in rows[3:]], typ)],
+                                 type=typ) for i in range(3)]
+        ids, tfs, dls, starts = decode_block_table(*cols)
+        assert starts[0] == 0 and len(starts) == len(rows) + 1
+        for i, row in enumerate(rows):
+            want = decode_block(*row)
+            lo, hi = starts[i], starts[i + 1]
+            for got, w in zip((ids[lo:hi], tfs[lo:hi], dls[lo:hi]), want):
+                assert got.dtype == w.dtype and np.array_equal(got, w), i
+        assert len(ids) == len(tfs) == len(dls) == starts[-1]
+
+    assert sum(firsts) > 2**64  # the table-wide delta sum wraps
+    check([])
+    check(blocks)
+    check(blocks[4:])
+    sliced = [pa.array([r[i] for r in blocks], typ).slice(2, 5)
+              for i in range(3)]
+    ids, tfs, dls, starts = decode_block_table(*sliced)
+    want = [decode_block(*r) for r in blocks[2:7]]
+    assert np.array_equal(ids, np.concatenate([w[0] for w in want]))
+    assert np.array_equal(dls, np.concatenate([w[2] for w in want]))
+    assert np.array_equal(np.diff(starts), [len(w[0]) for w in want])
 
 
 def test_multi_group_batch_encoder_matches_per_group():

@@ -176,6 +176,117 @@ def test_wand_empty_and_missing_terms():
     assert got == []
 
 
+def _bucketed_table(rng, n_buckets, block_size):
+    """A random index split into doc-range buckets, as the postings
+    table holds it: one Arrow row per block plus each term's df. Term
+    t00 is dense; t05 lives in one bucket only; t06 has no idf (absent
+    from term_stats) although it has blocks."""
+    import pyarrow as pa
+
+    from semantic_search_engine_spark.textproc import doc_bucket
+
+    n_docs = int(rng.integers(100, 700))
+    doc_ids = np.unique(rng.integers(0, 1 << 60, size=n_docs,
+                                     dtype=np.uint64))
+    doc_len = dict(zip(doc_ids.tolist(), rng.integers(3, 150,
+                                                      size=len(doc_ids))))
+    avgdl = float(np.mean(list(doc_len.values())))
+    pids = np.array([doc_bucket(int(d), n_buckets) for d in doc_ids])
+    rows, df = [], {}
+    for t in range(7):
+        mask = rng.random(len(doc_ids)) < (0.6 if t == 0 else 0.15)
+        if t == 5:
+            mask &= pids == pids[len(pids) // 2]
+        df[f"t{t:02d}"] = int(mask.sum())
+        for p in sorted(set(pids[mask].tolist())):
+            ids = doc_ids[mask & (pids == p)]
+            tfs = rng.integers(1, 9, size=len(ids)).astype(np.uint64)
+            dls = np.array([doc_len[int(d)] for d in ids], dtype=np.uint64)
+            for blk in encode_blocks(ids, tfs, dls, avgdl, K1, B,
+                                     block_size):
+                rows.append({"term": f"t{t:02d}", "partition_id": p, **blk})
+    del df["t06"]
+    cols = ["term", "partition_id", "block_id", "last_doc_id",
+            "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb"]
+    table = pa.table({c: [r[c] for r in rows] for c in cols})
+    return table, df, len(doc_ids), avgdl, doc_ids.astype(np.int64)
+
+
+@pytest.mark.parametrize("seed", range(6))
+@pytest.mark.parametrize("variant", ["plain", "min_score", "after",
+                                     "min_match2", "min_match3", "boosts",
+                                     "allowed_empty", "allowed_partial",
+                                     "allowed_full"])
+def test_dense_batch_kernel_bit_identical_to_bucket_wand(seed, variant):
+    """The batch kernel (one vectorized pass over a whole task's table)
+    returns, for every query and k in {0, 1, 5, 20}, exactly the
+    per-bucket wand_top_k results merged by (score DESC, doc_id ASC):
+    the same docs, buckets and float scores, under each kernel option
+    the batch core forwards."""
+    import pyarrow as pa
+
+    from semantic_search_engine_spark.plans.wand import (
+        bm25_idf,
+        bucket_blocks,
+        make_dense_ranker,
+    )
+
+    rng = np.random.Generator(np.random.PCG64(seed))
+    table, df, n_docs, avgdl, doc_ids = _bucketed_table(
+        rng, n_buckets=int(rng.integers(1, 9)),
+        block_size=int(rng.choice([2, 8])))
+    idf = {t: bm25_idf(n_docs, d) for t, d in df.items()}
+    queries = {(0,): ["t00"], (1, 7): ["t00", "t01", "t02"],
+               (2,): ["t01", "t05"], (3,): ["t05"],
+               (4,): ["t02", "t03", "t04", "t06"], (5,): ["t06"],
+               (6,): ["t00", "t03", "t05"]}
+    with_df = table.append_column("df", pa.array(
+        [df.get(t, 0) for t in table.column("term").to_pylist()]))
+
+    def bucket_wand(terms, k, boosts=None, **kw):
+        """Per-bucket wand_top_k, merged by (score DESC, doc_id ASC)."""
+        hits = []
+        for p, by_term, _ in bucket_blocks(with_df, n_docs):
+            weights = {t: (boosts.get(t, 1.0) * idf[t] if boosts
+                           else idf[t])
+                       for t in terms if t in by_term and t in idf}
+            if weights:
+                hits += [(p, d, s) for d, s in wand_top_k(
+                    {t: by_term[t] for t in weights}, weights, k, K1, B,
+                    avgdl, **kw)[0]]
+        return sorted(hits, key=lambda h: (-h[2], h[1]))[:k]
+
+    # the ranking of query (1, 7) places min_score and after mid-list
+    ref = bucket_wand(queries[(1, 7)], n_docs)
+    kw, boosts = {}, None
+    if variant == "min_score":
+        kw["min_score"] = ref[len(ref) // 3][2]
+    elif variant == "after":
+        kw["after"] = (ref[len(ref) // 4][2], ref[len(ref) // 4][1])
+    elif variant.startswith("min_match"):
+        kw["min_match"] = int(variant[-1])
+    elif variant == "boosts":  # t03^0: its docs score 0.0 from it
+        boosts = {"t00": 0.5, "t03": 0.0, "t05": 2.5}
+    elif variant == "allowed_empty":
+        kw["allowed"] = np.zeros(0, dtype=np.int64)
+    elif variant == "allowed_partial":
+        kw["allowed"] = np.sort(rng.choice(doc_ids, size=len(doc_ids) // 3,
+                                           replace=False))
+    elif variant == "allowed_full":
+        kw["allowed"] = doc_ids
+    allowed = kw.pop("allowed", None)
+    for k in (0, 1, 5, 20):
+        got = make_dense_ranker(queries, k, K1, B, avgdl, idf,
+                                term_boosts=boosts, **kw)(table, allowed)
+        for qids, terms in queries.items():
+            want = bucket_wand(terms, k, boosts, allowed=allowed, **kw)
+            for qid in qids:
+                assert [(p, d, s) for q, p, d, s, _ in got if q == qid] \
+                    == want, (variant, k, qid, terms)
+        if k == 20 and variant in ("plain", "boosts"):
+            assert any(q == 3 for q, *_ in got)  # the one-bucket term
+
+
 # ---------------------------------------------------------------------------
 # Spark layer
 # ---------------------------------------------------------------------------
@@ -380,6 +491,37 @@ def test_query_scan_pruning_reaches_physical_plan(spark, wand_built):
         ["wireless bluetooth", "gaming laptop"], k=5)))
     _assert_term_scan_pruned(_plan(qe._driver_wand_scan(
         ["bluetooth", "wireless"])))
+
+
+def test_python_term_bucket_equals_spark_expression(spark, wand_built):
+    """The query-side bucket literal, computed in Python, equals the
+    build-side ``term_bucket_expr`` (Spark's pmod(xxhash64(term), n))
+    for every term of the built vocabulary, for non-ASCII terms, and for
+    terms of 32 bytes or more (XXH64's 4-lane long-input branch), at
+    the index's bucket count and a few others."""
+    from semantic_search_engine_spark.functions.udfs import (
+        term_bucket_expr,
+        term_bucket_lit,
+    )
+
+    store, cfg = wand_built
+    vocab = [r[0] for r in store.read("term_stats").select("term").collect()]
+    extra = ["café", "naïve", "日本語", "straße", "ß" * 16, "x" * 31,
+             "y" * 32, "z" * 33, "w" * 64 + "é", "long" * 20]
+    terms = vocab + extra
+    assert len(vocab) > 100 and any(len(t.encode()) >= 32 for t in extra)
+    df = spark.createDataFrame([(t,) for t in terms], "term string")
+    for n in sorted({cfg.n_term_buckets, 1, 7, 64}):
+        want = dict(df.select("term", term_bucket_expr("term", n)
+                              .alias("b")).collect())
+        got = {t: term_bucket_lit(t, n) for t in terms}
+        assert got == want, n
+        assert all(type(b) is int for b in got.values())
+    # and the stored layout agrees with the literal on the real table
+    stored = dict(store.read("term_stats").select("term", "term_bucket")
+                  .collect())
+    assert stored == {t: term_bucket_lit(t, cfg.n_term_buckets)
+                      for t in vocab}
 
 
 def test_single_query_plan_has_no_window_exchange(spark, wand_built):
