@@ -936,37 +936,6 @@ FROM (
 # Training-data pipeline extras: dedup, text analysis, similarity
 # ---------------------------------------------------------------------------
 
-def q_dedup_fingerprint(spark, sf_dir):
-    """Exact-dup fingerprint: md5 of whitespace-normalized lowercase text."""
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return (_t(spark, sf_dir, "documents")
-            .select("doc_id", F.md5(norm.cast("binary")).alias("fingerprint")))
-
-
-SQL_DEDUP_FINGERPRINT = """
-SELECT doc_id, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fingerprint
-FROM documents
-"""
-
-
-def q_dedup_exact_groups(spark, sf_dir):
-    """Exact dedup: group docs by content hash, keep the min doc_id."""
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return (_t(spark, sf_dir, "documents")
-            .select("doc_id", F.md5(norm.cast("binary")).alias("fp"))
-            .groupBy("fp")
-            .agg(F.min("doc_id").alias("keep_doc_id"),
-                 F.count(F.lit(1)).alias("n_dups")))
-
-
-SQL_DEDUP_EXACT_GROUPS = """
-SELECT md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp,
-       min(doc_id) AS keep_doc_id, count(*) AS n_dups
-FROM documents
-GROUP BY 1
-"""
-
-
 def q_dedup_fingerprint_groups(spark, sf_dir):
     """X1 in one verified entry: per-doc content fingerprint PLUS its
     group's survivor/cardinality via a window over the fingerprint —

@@ -15,10 +15,11 @@ This module adapts any ``pairs -> scores`` callable into the stage:
 
 - :func:`make_cross_scorer_udf` wraps the callable as an Arrow-batched
   pandas UDF over (query, text) columns, used by
-  ``QueryEngine.rerank_top_k_df``: first-stage block-max WAND top-N →
-  bucket-pruned hydration of the N hit texts (the ``snippets()`` /
-  ``_hydrate_hits`` plan: broadcast ≤ N hits against the doc-bucket
-  partitioned ``doc_features``) → ONE scoring pass over ≤ N rows →
+  ``QueryEngine.rerank_top_k_df``: first-stage block-max WAND top-N
+  (ranked on the driver) → the N hit texts, read with a literal
+  ``partition_id IN (…)`` of the hit buckets (``_in_hit_buckets``) from
+  the doc-bucket partitioned ``doc_features`` and joined to the
+  broadcast ≤ N hits → ONE scoring pass over ≤ N rows →
   re-sort. At 10^12 docs the stage costs O(first_k) model calls and
   reads |hit buckets|/P of the text table — independent of corpus size.
 - The two injection forms match X115 exactly: a picklable ``scorer=``

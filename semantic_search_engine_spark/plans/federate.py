@@ -27,17 +27,26 @@ sub-index's cursors therefore scale their bounds by
 can never shave the bound below a true contribution — bounds only need to
 be sound, and the looseness costs at most a handful of extra evaluations.
 
-Distribution model: one Spark job. Each index's pruned posting scan
-(constant-folded term_bucket literals + ``term IN`` pushdown, each under
+Distribution model: the single-query plan of :class:`QueryEngine`
+(``_rank_on_driver``), over all indexes at once. Each index's pruned
+posting scan (term_bucket int literals + ``term IN`` pushdown, each under
 its OWN layout — bucket counts may differ per index) is tagged with its
-federation position and unioned; WAND runs per ``(fed_idx, partition_id)``
-group — every doc lives in exactly one group, so the union of per-group
-top-k sets is a superset of the global top-k and a final
-``orderBy(score DESC, doc_id ASC).limit(k)`` over ≤ Σ_i P_i·k rows is
-exact (TakeOrderedAndProject — no extra exchange). Scoring inside a group
-uses the driver-computed global idf and global avgdl with the oracle's
-exact float expressions, so federated results are BIT-IDENTICAL to a
-single index built over the union of the corpora (pinned by test).
+federation position and unioned, and the union is collected to the
+driver in ONE JVM-only job; no Python task runs. The collected bytes are
+the query terms' blocks in every index — what one combined index would
+collect for the same query. ``df_g(t)`` is Σ ``n_postings`` over every
+index's collected blocks of ``t`` (term_stats' own definition), so no
+term_stats table is read. The driver then runs WAND once per
+``(fed_idx, partition_id)`` bucket under the global N/avgdl and idf with
+the oracle's exact float expressions — every doc lives in exactly one
+bucket, so the union of per-bucket top-k sets is a superset of the
+global top-k and a (score DESC, doc_id ASC) merge of ≤ Σ_i P_i·k rows is
+exact. Federated results are BIT-IDENTICAL to a single index built over
+the union of the corpora (pinned by test). A structured filter adds one
+JVM-only read per index of its filter survivors in just the buckets
+that hold its postings. N/avgdl come from each index's
+:meth:`QueryEngine.corpus_stats`, which re-reads after a commit, so an
+ingest into one index shows up in the next federated query.
 
 Reference parity note: the reference serves one Postgres table
 (``search-api/.../repository/ProductRepository.java:70-82``); this module
@@ -47,16 +56,20 @@ stops being operable (SURVEY.md §2.3 X61).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..textproc import tokenize
 from .query import QueryEngine
-from .wand import bm25_idf, group_blocks_by_term, wand_top_k
+from .wand import _wand_bucket_kernel
 
-FED_OUT_SCHEMA = "fed_idx int, partition_id int, doc_id long, score double"
+FED_OUT_SCHEMA = pa.schema([("fed_idx", pa.int32()),
+                            ("partition_id", pa.int32()),
+                            ("doc_id", pa.int64()), ("score", pa.float64())])
 
 #: relative inflation on the avgdl-ratio bound multiplier — swamps any
 #: 1-ulp rounding in the stored block max or the ratio itself (module
@@ -67,55 +80,6 @@ _UB_FLOAT_MARGIN = 1.0 + 1e-9
 #: indexes — they change term identity or the score function itself.
 #: Physical layout (bucket counts, block_size) may differ per index.
 _SCORING_CFG = ("k1", "b", "max_token_len", "min_token_len", "analyzer")
-
-
-def make_fed_fn(qterms: list[str], weights: dict[str, float],
-                k: int, k1: float, b: float, avgdl_g: float,
-                ub_scale_by_idx: dict[int, float],
-                min_score: float = 0.0):
-    """``applyInPandas`` body: one (fed_idx, doc-bucket) group's blocks →
-    local top-k under GLOBAL stats. All blocks in a group come from one
-    sub-index, so plain term keys suffice (no qualified cursors) and the
-    group's single ``ub_scale`` re-sounds every cursor's bounds.
-
-    Cogrouped, the right side is the group's structured-filter survivor
-    doc ids (each sub-index's doc_meta, same tag + bucket key); empty
-    survivors ⇒ empty result for the group, exactly like the
-    single-index filtered fast path. Unfiltered (``groupBy``), call it
-    with ``allowed_pdf=None``."""
-    import numpy as np
-    import pandas as pd
-
-    def run_group(blocks_pdf, allowed_pdf):
-        docs: list[int] = []
-        scores: list[float] = []
-        fi = pid = 0
-        if len(blocks_pdf) and (allowed_pdf is None or len(allowed_pdf)):
-            allowed = (None if allowed_pdf is None else
-                       np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64)))
-            fi = int(blocks_pdf["fed_idx"].iloc[0])
-            pid = int(blocks_pdf["partition_id"].iloc[0])
-            blocks_pdf = blocks_pdf.sort_values(
-                ["term", "partition_id", "block_id"], kind="mergesort")
-            by_term = group_blocks_by_term(blocks_pdf)
-            sub = {t: by_term[t] for t in qterms if t in by_term}
-            if sub:
-                hits, _ = wand_top_k(
-                    sub, weights, k, k1, b, avgdl_g, allowed=allowed,
-                    min_score=min_score,
-                    ub_scale=ub_scale_by_idx.get(fi, _UB_FLOAT_MARGIN))
-                for d, s in hits:
-                    docs.append(d)
-                    scores.append(s)
-        n = len(docs)
-        return pd.DataFrame({
-            "fed_idx": pd.Series([fi] * n, dtype="int32"),
-            "partition_id": pd.Series([pid] * n, dtype="int32"),
-            "doc_id": pd.Series(docs, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
-
-    return run_group
 
 
 @dataclass
@@ -129,7 +93,6 @@ class FederatedQueryEngine:
 
     spark: SparkSession
     engines: list[QueryEngine]
-    _stats_cache: dict | None = field(default=None, repr=False)
 
     def __post_init__(self) -> None:
         if not self.engines:
@@ -148,44 +111,18 @@ class FederatedQueryEngine:
     def global_stats(self) -> dict:
         """Global N / avgdl from each index's corpus_stats (exact integer
         total_tokens ⇒ the same float avgdl a combined build computes).
-        One tiny read per index, cached per federation instance."""
-        if self._stats_cache is not None:
-            return self._stats_cache
-        n_g = 0
-        total_g = 0
-        per_index = []
-        for e in self.engines:
-            row = e.store.read(f"corpus_stats{e._sfx()}").collect()[0]
-            n_i = int(row["n_docs"])
-            total_i = int(row["total_tokens"] or 0)
-            n_g += n_i
-            total_g += total_i
-            avgdl_i = float(row["avg_doc_len"] or 0.0)
-            per_index.append({"n_docs": n_i, "total_tokens": total_i,
-                              "avg_doc_len": avgdl_i})
+        Each index's :meth:`QueryEngine.corpus_stats` is cached on its
+        corpus_stats ``data_uuid``: one manifest read per index, and a
+        tiny job only for an index that committed since the last call."""
+        per_index = [e.corpus_stats() for e in self.engines]
+        n_g = sum(s["n_docs"] for s in per_index)
+        total_g = sum(s["total_tokens"] for s in per_index)
         avgdl_g = (total_g / n_g) if n_g else 0.0
-        self._stats_cache = {"n_docs": n_g, "avg_doc_len": avgdl_g,
-                             "per_index": per_index}
-        return self._stats_cache
+        return {"n_docs": n_g, "avg_doc_len": avgdl_g,
+                "per_index": per_index}
 
-    def term_idfs(self, qterms: list[str]) -> dict[str, float]:
-        """Global idf per query term: ONE job unioning every index's
-        pruned term_stats scan (≤ |q| rows each), df summed across
-        indexes — exact for disjoint doc sets — then the oracle's Python
-        idf expression on the global numbers."""
-        if not qterms:
-            return {}
-        n_g = self.global_stats()["n_docs"]
-        scans = [e._pruned_term_scan(f"term_stats{e._sfx()}", qterms)
-                 .select("term", "df") for e in self.engines]
-        uni = scans[0]
-        for s in scans[1:]:
-            uni = uni.unionByName(s)
-        rows = uni.groupBy("term").agg(F.sum("df").alias("df")).collect()
-        return {r["term"]: bm25_idf(n_g, int(r["df"])) for r in rows}
-
-    def _ub_scales(self) -> dict[int, float]:
-        gs = self.global_stats()
+    @staticmethod
+    def _ub_scales(gs: dict) -> dict[int, float]:
         avgdl_g = gs["avg_doc_len"]
         out = {}
         for i, pi in enumerate(gs["per_index"]):
@@ -195,69 +132,69 @@ class FederatedQueryEngine:
         return out
 
     # ------------------------------------------------------------------
+    def _hits(self, query: str, k: int = 10, lang: str | None = None,
+              warc_ts_min=None, warc_ts_max=None,
+              min_score: float = 0.0) -> pa.Table:
+        """Federated block-max WAND top-k, ranked on the driver (module
+        docstring): (fed_idx, partition_id, doc_id, score) rows in
+        (score DESC, doc_id ASC) order as an Arrow table. One JVM-only
+        job, plus one per index holding postings under a filter; none
+        for an empty query or ``k`` ≤ 0."""
+        import heapq
+
+        cfg = self.engines[0].cfg
+        qterms = sorted(set(tokenize(query, cfg.max_token_len,
+                                     cfg.min_token_len, cfg.analyzer)))
+        if not qterms or k <= 0:
+            return FED_OUT_SCHEMA.empty_table()
+        gs = self.global_stats()
+        if gs["avg_doc_len"] <= 0:
+            return FED_OUT_SCHEMA.empty_table()
+        scans = [e._driver_wand_scan(qterms).withColumn("fed_idx", F.lit(i))
+                 for i, e in enumerate(self.engines)]
+        union = scans[0]
+        for sc in scans[1:]:
+            union = union.unionByName(sc)
+        # df = Σ n_postings over every index's blocks: the global df
+        blocks = QueryEngine._collect_blocks(union)
+        scales = self._ub_scales(gs)
+        rows: list[tuple] = []
+        for i, e in enumerate(self.engines):
+            mine = blocks.filter(pc.equal(blocks.column("fed_idx"), i))
+            meta = e._filter_survivors(lang, warc_ts_min, warc_ts_max)
+            bucket_hits = _wand_bucket_kernel(
+                qterms, k, float(cfg.k1), float(cfg.b), gs["avg_doc_len"],
+                float(min_score), ub_scale=scales[i])
+            rows.extend((i, p, d, s) for _, p, d, s, _ in QueryEngine
+                        ._bucket_rows(mine, gs["n_docs"], bucket_hits, meta,
+                                      QueryEngine._allowed_hook))
+        # union of per-(index, bucket) top-k ⊇ global top-k
+        rows = heapq.nsmallest(k, rows, key=lambda r: (-r[3], r[2]))
+        return pa.Table.from_pylist(
+            [dict(zip(FED_OUT_SCHEMA.names, r)) for r in rows],
+            schema=FED_OUT_SCHEMA)
+
     def top_k_df(self, query: str, k: int = 10,
                  lang: str | None = None, warc_ts_min=None,
                  warc_ts_max=None, min_score: float = 0.0) -> DataFrame:
-        """Federated block-max WAND top-k — one job over all indexes.
+        """Federated block-max WAND top-k as a frame — a
+        ``LocalTableScan`` of the driver's hits, whose collect runs no
+        job.
 
         Returns (fed_idx, partition_id, doc_id, score) ordered
         (score DESC, doc_id ASC); fed_idx/partition_id ride along so
         result hydration can prune each sub-index's metadata scan to the
         buckets that actually hold hits.
         """
-        cfg = self.engines[0].cfg
-        qterms = sorted(set(tokenize(query, cfg.max_token_len,
-                                     cfg.min_token_len, cfg.analyzer)))
-        empty = self.spark.createDataFrame([], FED_OUT_SCHEMA)
-        if not qterms or k <= 0:
-            return empty
-        weights = self.term_idfs(qterms)
-        gs = self.global_stats()
-        if not weights or gs["avg_doc_len"] <= 0:
-            return empty
-
-        cols = ["term", "partition_id", "block_id", "last_doc_id",
-                "block_max_tf_norm", "doc_ids_vb", "tfs_vb", "dls_vb"]
-        parts = []
-        for i, e in enumerate(self.engines):
-            parts.append(
-                e._pruned_term_scan(f"postings{e._sfx()}", qterms)
-                .select(*cols).withColumn("fed_idx", F.lit(i)))
-        blocks = parts[0]
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p)
-
-        fn = make_fed_fn(qterms, weights, k, float(cfg.k1), float(cfg.b),
-                         gs["avg_doc_len"], self._ub_scales(),
-                         min_score=float(min_score))
-        filtered = (lang is not None or warc_ts_min is not None
-                    or warc_ts_max is not None)
-        if filtered:
-            metas = []
-            for i, e in enumerate(self.engines):
-                m = e._apply_meta_filters(
-                    e.store.read(f"doc_meta{e._sfx()}"), lang,
-                    warc_ts_min, warc_ts_max)
-                metas.append(m.select("partition_id", "doc_id")
-                             .withColumn("fed_idx", F.lit(i)))
-            allowed = metas[0]
-            for m in metas[1:]:
-                allowed = allowed.unionByName(m)
-            local = (blocks.groupBy("fed_idx", "partition_id")
-                     .cogroup(allowed.groupBy("fed_idx", "partition_id"))
-                     .applyInPandas(fn, schema=FED_OUT_SCHEMA))
-        else:
-            local = (blocks.groupBy("fed_idx", "partition_id")
-                     .applyInPandas(lambda pdf: fn(pdf, None),
-                                    schema=FED_OUT_SCHEMA))
-        # union of per-(index,bucket) top-k ⊇ global top-k; final merge is
-        # TakeOrderedAndProject over ≤ Σ_i P_i·k rows
-        return (local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+        return self.spark.createDataFrame(self._hits(
+            query, k=k, lang=lang, warc_ts_min=warc_ts_min,
+            warc_ts_max=warc_ts_max, min_score=min_score))
 
     def top_k(self, query: str, k: int = 10, **kw
               ) -> list[tuple[int, float]]:
-        rows = self.top_k_df(query, k=k, **kw).collect()
-        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        hits = self._hits(query, k=k, **kw)
+        return list(zip(hits.column("doc_id").to_pylist(),
+                        hits.column("score").to_pylist()))
 
     # ------------------------------------------------------------------
     def search(self, query: str, k: int = 10, lang: str | None = None,
@@ -265,19 +202,19 @@ class FederatedQueryEngine:
                min_score: float = 0.0) -> dict:
         """Hydrated result envelope: top-k decorated with each hit's
         url/lang/warc_ts from the OWNING index's doc_meta, pruned to the
-        hit buckets (one bounded job; never a full metadata scan)."""
-        hits = self.top_k_df(query, k=k, lang=lang,
-                             warc_ts_min=warc_ts_min,
-                             warc_ts_max=warc_ts_max,
-                             min_score=min_score).collect()
+        hit buckets (one bounded job per index holding hits; never a
+        full metadata scan)."""
+        hits = self._hits(query, k=k, lang=lang, warc_ts_min=warc_ts_min,
+                          warc_ts_max=warc_ts_max,
+                          min_score=min_score).to_pylist()
         by_idx: dict[int, list] = {}
         for r in hits:
-            by_idx.setdefault(int(r["fed_idx"]), []).append(r)
+            by_idx.setdefault(r["fed_idx"], []).append(r)
         meta: dict[int, dict] = {}
         for i, rows in by_idx.items():
             e = self.engines[i]
-            buckets = sorted({int(r["partition_id"]) for r in rows})
-            ids = [int(r["doc_id"]) for r in rows]
+            buckets = sorted({r["partition_id"] for r in rows})
+            ids = [r["doc_id"] for r in rows]
             got = (e.store.read(f"doc_meta{e._sfx()}")
                    .filter(F.col("partition_id").isin(buckets))
                    .filter(F.col("doc_id").isin(ids))
@@ -286,12 +223,9 @@ class FederatedQueryEngine:
                 meta[int(m["doc_id"])] = {
                     "url": m["url"], "lang": m["lang"],
                     "warc_ts": m["warc_ts"]}
-        results = []
-        for r in hits:
-            d = int(r["doc_id"])
-            results.append({"doc_id": d, "score": float(r["score"]),
-                            "index": int(r["fed_idx"]),
-                            **meta.get(d, {})})
+        results = [{"doc_id": r["doc_id"], "score": r["score"],
+                    "index": r["fed_idx"], **meta.get(r["doc_id"], {})}
+                   for r in hits]
         return {"query": query, "results": results}
 
     # ------------------------------------------------------------------
@@ -314,3 +248,4 @@ class FederatedQueryEngine:
                 f"federated indexes overlap: doc_id {dup[0]['doc_id']} "
                 "appears in more than one index — global df/N statistics "
                 "require disjoint doc sets (dedup across slices first)")
+

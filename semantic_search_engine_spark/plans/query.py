@@ -213,8 +213,9 @@ class QueryEngine:
 
     # ------------------------------------------------------------------
     def corpus_stats(self, field: str | None = None) -> dict:
-        """``n_docs`` and ``avg_doc_len`` of ``field``'s index (default:
-        this engine's field), cached per engine instance and keyed on the
+        """``n_docs``, ``avg_doc_len`` and ``total_tokens`` (Σ doc
+        length, an exact integer) of ``field``'s index (default: this
+        engine's field), cached per engine instance and keyed on the
         corpus_stats ``data_uuid`` like :meth:`_df_lookup`: a build,
         merge or delete commits a new one and the next call re-reads.
         One manifest read per call; one tiny job per commit."""
@@ -229,7 +230,8 @@ class QueryEngine:
             return hit[1]
         row = self.store.read(table).collect()[0]
         out = {"n_docs": int(row["n_docs"]),
-               "avg_doc_len": float(row["avg_doc_len"] or 0.0)}
+               "avg_doc_len": float(row["avg_doc_len"] or 0.0),
+               "total_tokens": int(row["total_tokens"] or 0)}
         cache[table] = (uuid, out)
         return out
 
@@ -411,18 +413,13 @@ class QueryEngine:
         ``k`` is clamped to ``max_k + max_offset`` (internal pagination
         bound); the public ``search``/``top_k`` enforce the page-size cap.
         """
-        # Single query = the batch engine with one entry: identical
-        # per-bucket WAND, one shared code path (no scaffolding drift
-        # between the two — code-review r2 finding). A single query
-        # comes back already ranked; an orderBy here would plan a range
-        # exchange over the driver path's LocalTableScan.
-        return (self._batch_wand_ranked([query], k=k, lang=lang,
-                                        warc_ts_min=warc_ts_min,
-                                        warc_ts_max=warc_ts_max,
-                                        min_score=min_score,
-                                        min_match=min_match,
-                                        site=site, neg_site=neg_site)
-                .select("doc_id", "score"))
+        # the driver's hits come back already ranked; an orderBy here
+        # would plan a range exchange over the LocalTableScan
+        return self.spark.createDataFrame(self._query_hits(
+            query, k=k, lang=lang, warc_ts_min=warc_ts_min,
+            warc_ts_max=warc_ts_max, min_score=min_score,
+            min_match=min_match, site=site, neg_site=neg_site)
+        ).select("doc_id", "score")
 
     def maxscore_top_k_df(self, query: str, k: int | None = None,
                           min_score: float = 0.0) -> DataFrame:
@@ -541,10 +538,14 @@ class QueryEngine:
         this call). The per-engine corpus_stats read is cached per
         snapshot.
 
-        Optional structured filters (``lang``/``warc_ts_*``) are shared by
-        the whole batch; with ≥ 2 distinct term sets the doc_meta survivor
-        set cogroups with the blocks per bucket (one whole-``doc_meta``
-        shuffle per batch).
+        Optional structured filters (``lang``/``warc_ts_*``/``site``) are
+        shared by the whole batch. With ≥ 2 distinct term sets the
+        doc_meta survivors ``(partition_id, doc_id)`` are unioned with
+        the blocks before the same ``repartitionById``, so each task
+        gets its buckets' survivors with their blocks and the plan keeps
+        its shape and job count (three warm). The survivors of EVERY
+        bucket are still read and shuffled — the batch does not prune
+        doc_meta to its posting buckets.
         """
         return (self._batch_wand_ranked(queries, k=k, lang=lang,
                                         warc_ts_min=warc_ts_min,
@@ -606,41 +607,35 @@ class QueryEngine:
                         bucket_hits, meta: DataFrame | None = None,
                         hook=None, collapse: bool = False) -> "pa.Table":
         """The one single-query plan: collect ``scan``
-        (:meth:`_collect_blocks`; ``meta``'s rows of the same buckets
-        too, :meth:`_bucket_meta`) and rank in this — the driver's —
-        Python process. :func:`..wand.bucket_blocks` splits the blocks
-        into doc buckets and ``bucket_hits(pid, by_term, idf, **kw)``
-        ranks each, ``kw = hook(meta slice)`` (a None ``kw`` skips the
-        bucket). Returns the ≤ k best ``(query_id, partition_id, doc_id,
-        score)`` rows in (score DESC, doc_id ASC) order as an Arrow
-        table, with a ``ckey`` column under ``collapse``, whose rows
-        merge as a per-key window would: each key's best doc, then the
-        top k keys. ``scan`` None or ``k`` ≤ 0: an empty table, no job.
+        (:meth:`_collect_blocks`) and rank its doc buckets in this — the
+        driver's — Python process (:meth:`_bucket_rows` with ``meta`` and
+        ``hook``). Returns the ≤ k best ``(query_id, partition_id,
+        doc_id, score)`` rows in (score DESC, doc_id ASC) order as an
+        Arrow table, with a ``ckey`` column under ``collapse``, whose
+        rows merge as a per-key window would: each key's best doc, then
+        the top k keys. ``scan`` None or ``k`` ≤ 0: an empty table, no
+        job.
 
         Why no Python worker: every Python task here pays ~250 ms before
         the user function runs (``setup_spark_files`` calls
         ``importlib.invalidate_caches()`` per task, and on Python 3.11
         each cached zipimporter then re-reads ``pyspark.zip``'s
-        directory), while one query's kernel work is ~15 ms. The result
-        becomes a frame through ``createDataFrame(<pyarrow.Table>)``: a
-        ``LocalTableScan`` whose collect runs no job (a list-built frame
-        plans a Python-RDD scan, i.e. again a Python task).
+        directory), while one query's kernel work is ~15 ms. A caller
+        that needs a frame builds it with
+        ``createDataFrame(<pyarrow.Table>)``: a ``LocalTableScan`` whose
+        collect runs no job (a list-built frame plans a Python-RDD scan,
+        i.e. again a Python task).
         """
         import heapq
 
         import pyarrow as pa
 
-        from .wand import bucket_blocks, hits_batch
+        from .wand import hits_batch
 
         rows: list[tuple] = []
         if scan is not None and k > 0:
-            blocks = self._collect_blocks(scan)
-            slices = ({} if meta is None
-                      else self._bucket_meta(meta, blocks))
-            for pid, by_term, idf in bucket_blocks(blocks, n_docs):
-                kw = {} if meta is None else hook(slices[pid])
-                if kw is not None:
-                    rows.extend(bucket_hits(pid, by_term, idf, **kw))
+            rows = self._bucket_rows(self._collect_blocks(scan), n_docs,
+                                     bucket_hits, meta, hook)
         if collapse:  # (qid, pid, doc, score, key): best doc per key
             best: dict = {}
             for r in rows:
@@ -650,6 +645,31 @@ class QueryEngine:
             rows = list(best.values())
         rows = heapq.nsmallest(k, rows, key=lambda r: (-r[3], r[2]))
         return pa.Table.from_batches([hits_batch(rows, collapse)])
+
+    @staticmethod
+    def _allowed_hook(survivors: "pa.Table") -> dict | None:
+        """A bucket's filter survivors → WAND's ``allowed``; none: the
+        bucket has no hits."""
+        return ({"allowed": survivors.column("doc_id").to_numpy()}
+                if survivors.num_rows else None)
+
+    @classmethod
+    def _bucket_rows(cls, blocks: "pa.Table", n_docs, bucket_hits,
+                     meta: DataFrame | None = None, hook=None) -> list:
+        """The rows ``bucket_hits(pid, by_term, idf, **kw)`` yields for
+        each doc bucket of the collected ``blocks``
+        (:func:`..wand.bucket_blocks`), ``kw = hook(meta slice)`` with
+        ``meta``'s rows of the same buckets (:meth:`_bucket_meta`, one
+        JVM-only job); a None ``kw`` skips the bucket."""
+        from .wand import bucket_blocks
+
+        slices = {} if meta is None else cls._bucket_meta(meta, blocks)
+        rows: list[tuple] = []
+        for pid, by_term, idf in bucket_blocks(blocks, n_docs):
+            kw = {} if meta is None else hook(slices[pid])
+            if kw is not None:
+                rows.extend(bucket_hits(pid, by_term, idf, **kw))
+        return rows
 
     def _empty(self, ddl: str) -> DataFrame:
         """An empty frame of the DDL schema ``ddl``, built from an Arrow
@@ -710,8 +730,7 @@ class QueryEngine:
                 return ({"collapse": (ids(s), s.column("ckey").to_pylist())}
                         if s.num_rows else None)
         else:
-            def hook(s):
-                return {"allowed": ids(s)} if s.num_rows else None
+            hook = self._allowed_hook
 
         bucket_hits = _wand_bucket_kernel(
             list(terms), k, float(cfg.k1), float(cfg.b), avgdl,
@@ -719,6 +738,39 @@ class QueryEngine:
         scan = self._driver_wand_scan(terms) if terms and avgdl > 0 else None
         return self._rank_on_driver(scan, n_docs, k, bucket_hits, meta, hook,
                                     collapse)
+
+    def _filter_survivors(self, lang=None, warc_ts_min=None,
+                          warc_ts_max=None, site=None,
+                          neg_site=None) -> DataFrame | None:
+        """doc_meta's ``(partition_id, doc_id)`` rows that pass the
+        structured filters, or None when no filter is set."""
+        if all(v is None for v in (lang, warc_ts_min, warc_ts_max, site,
+                                   neg_site)):
+            return None
+        return self._apply_meta_filters(
+            self.store.read(f"doc_meta{self._sfx()}"), lang, warc_ts_min,
+            warc_ts_max, site=site, neg_site=neg_site).select(
+            "partition_id", "doc_id")
+
+    def _query_hits(self, query: str, k: int | None = None,
+                    lang: str | None = None, warc_ts_min=None,
+                    warc_ts_max=None, site: str | None = None,
+                    neg_site: str | None = None, **kernel_kw) -> "pa.Table":
+        """One query's ``(query_id, partition_id, doc_id, score)`` hits
+        (query_id 0) ranked on the driver by block-max WAND
+        (:meth:`_driver_wand`: one job, two with a structured filter, none
+        for an empty result), as the Arrow table itself — ``search`` and
+        ``search_after`` hydrate it with no DataFrame round trip.
+        ``kernel_kw``: ``min_score``, ``after``, ``term_boosts``,
+        ``min_match``."""
+        cfg = self.cfg
+        k = cfg.default_k if k is None \
+            else min(k, cfg.max_k + cfg.max_offset)
+        terms = sorted(set(tokenize(query, cfg.max_token_len,
+                                    cfg.min_token_len, cfg.analyzer)))
+        meta = (self._filter_survivors(lang, warc_ts_min, warc_ts_max,
+                                       site, neg_site) if terms else None)
+        return self._driver_wand(terms, k, meta=meta, **kernel_kw)
 
     def _batch_wand_ranked(self, queries: list[str],
                            k: int | None = None,
@@ -744,13 +796,10 @@ class QueryEngine:
         that actually contain hits (VERDICT r2 #2 — at 10^12 docs the
         decorate-100-rows join must not scan the whole metadata table).
 
-        One term set — filtered or not — is ranked on the driver by
-        block-max WAND (:meth:`_driver_wand`): one job inside this call,
-        two with structured filters, and the result is a
-        ``LocalTableScan`` in (score DESC, doc_id ASC) order whose
-        collect runs none (a query_id sharing the term set gets a copy
-        of its rows). An empty query, ``k`` ≤ 0 or an empty index gives
-        an empty ``LocalTableScan`` and runs no job.
+        One term set is ranked on the driver (:meth:`_query_hits`) and
+        comes back as a ``LocalTableScan`` whose collect runs no job (a
+        query_id sharing the term set gets a copy of its rows); so does
+        an empty result.
 
         N>1 distinct term sets are ranked in Python tasks by the dense
         batch kernel (:func:`..wand.make_dense_ranker`: decode every
@@ -759,19 +808,19 @@ class QueryEngine:
         through a per-query ``row_number`` window: three jobs — the
         postings shuffle-map, the ranking stage and the window — plus a
         pruned term_stats collect for terms the engine has not seen
-        (pinned in ``tests/test_plan_shapes.py``). Unfiltered, the
-        ranking stage is a fixed-count ``repartitionById(n,
-        "partition_id").mapInArrow(...)``: each task receives whole
-        buckets and makes one Python call over all of them. With
-        structured filters it is a per-bucket cogroup with the doc_meta
-        survivors, one kernel call per bucket.
+        (pinned in ``tests/test_plan_shapes.py``). The ranking stage is
+        a fixed-count ``repartitionById(n, "partition_id").mapInArrow``:
+        each task receives whole buckets and makes one Python call over
+        all of them. Structured filters union the doc_meta survivors
+        into the same exchange (:meth:`_filter_survivors`); the runner
+        splits them off as the kernel's ``allowed``
+        (:func:`..wand.make_batch_arrow_fn`).
         """
         import pyarrow as pa
 
         from .wand import (
             BATCH_WAND_OUT_SCHEMA,
             make_batch_arrow_fn,
-            make_cogroup_fn,
             make_dense_ranker,
         )
 
@@ -792,19 +841,15 @@ class QueryEngine:
                 ids_of.setdefault(tuple(ts), []).append(qi)
         if not ids_of or k <= 0 or avgdl <= 0:
             return self._no_hits()
-        filtered = (lang is not None or warc_ts_min is not None
-                    or warc_ts_max is not None or site is not None
-                    or neg_site is not None)
-        allowed = (self._apply_meta_filters(
-            self.store.read(f"doc_meta{self._sfx()}"), lang, warc_ts_min,
-            warc_ts_max, site=site, neg_site=neg_site)
-            .select("partition_id", "doc_id") if filtered else None)
+        filters = dict(lang=lang, warc_ts_min=warc_ts_min,
+                       warc_ts_max=warc_ts_max, site=site,
+                       neg_site=neg_site)
         kernel_kw = dict(min_score=float(min_score), after=after,
                          term_boosts=term_boosts, min_match=int(min_match))
         if len(ids_of) == 1:
-            (terms, qids), = ids_of.items()
-            ranked = self._driver_wand(list(terms), k, meta=allowed,
-                                       **kernel_kw)
+            (_, qids), = ids_of.items()
+            ranked = self._query_hits(queries[qids[0]], k, **filters,
+                                      **kernel_kw)
             return self.spark.createDataFrame(pa.concat_tables([
                 ranked.set_column(0, "query_id", pa.array(
                     [qi] * ranked.num_rows, pa.int32()))
@@ -819,30 +864,28 @@ class QueryEngine:
         blocks = self._pruned_term_scan(f"postings{self._sfx()}",
                                         all_terms).select(
             "term", "partition_id", "doc_ids_vb", "tfs_vb", "dls_vb")
+        allowed = self._filter_survivors(**filters)
+        if allowed is not None:
+            # survivor rows carry a doc_id and no block columns; the
+            # exchange below routes them with their buckets' blocks
+            blocks = blocks.unionByName(allowed, allowMissingColumns=True)
         rank = make_dense_ranker(
             {tuple(qids): list(ts) for ts, qids in ids_of.items()}, k,
             float(cfg.k1), float(cfg.b), avgdl, idf, **kernel_kw)
-        if filtered:
-            local = (blocks.groupBy("partition_id")
-                     .cogroup(allowed.groupBy("partition_id"))
-                     .applyInPandas(make_cogroup_fn(rank),
-                                    schema=BATCH_WAND_OUT_SCHEMA))
-        else:
-            # One Python call per task, and a FIXED task count: AQE
-            # sizes shuffle partitions by bytes, and this stage moves a
-            # few KB of compressed blocks but is CPU-heavy in Python, so
-            # a byte-sized exchange collapses onto one task. A
-            # fixed-count repartition is never coalesced. ≥ 2 term sets
-            # here (one is ranked on the driver), and each task pays
-            # ~250 ms of Python worker set-up, so there are never more
-            # tasks than term sets. Buckets go to task partition_id % n,
-            # so tasks get equal bucket counts (hashing puts 5/10/7/10
-            # of 32 on 4 tasks).
-            n_tasks = min(self.spark.sparkContext.defaultParallelism,
-                          len(ids_of))
-            local = (blocks.repartitionById(n_tasks, "partition_id")
-                     .mapInArrow(make_batch_arrow_fn(rank),
-                                 BATCH_WAND_OUT_SCHEMA))
+        # One Python call per task, and a FIXED task count: AQE sizes
+        # shuffle partitions by bytes, and this stage moves a few KB of
+        # compressed blocks but is CPU-heavy in Python, so a byte-sized
+        # exchange collapses onto one task. A fixed-count repartition is
+        # never coalesced. ≥ 2 term sets here (one is ranked on the
+        # driver), and each task pays ~250 ms of Python worker set-up,
+        # so there are never more tasks than term sets. Buckets go to
+        # task partition_id % n, so tasks get equal bucket counts
+        # (hashing puts 5/10/7/10 of 32 on 4 tasks).
+        n_tasks = min(self.spark.sparkContext.defaultParallelism,
+                      len(ids_of))
+        local = (blocks.repartitionById(n_tasks, "partition_id")
+                 .mapInArrow(make_batch_arrow_fn(rank),
+                             BATCH_WAND_OUT_SCHEMA))
         from pyspark.sql.window import Window
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.asc("doc_id"))
@@ -1791,8 +1834,9 @@ class QueryEngine:
                     .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         if mode == "rescore":
             window = 4 * k if window is None else max(window, k)
-            top = self._batch_wand_ranked([query], k=window)
-            meta = self._in_hit_buckets(meta_static, top)
+            hits = self._query_hits(query, k=window)
+            top = self.spark.createDataFrame(hits)
+            meta = self._in_hit_buckets(meta_static, hits)
             return (F.broadcast(top)
                     .join(meta, ["partition_id", "doc_id"])
                     .select("doc_id",
@@ -2208,10 +2252,11 @@ class QueryEngine:
         ``partition_id`` filters (:meth:`_in_hit_buckets`), so cost is
         O(window) regardless of corpus size.
         """
-        hits = self._batch_wand_ranked([query], k=int(window)).select(
+        top = self._query_hits(query, k=int(window))
+        hits = self.spark.createDataFrame(top).select(
             "partition_id", "doc_id", F.col("score").alias("bm25"))
         meta = self._in_hit_buckets(
-            self.store.read(f"doc_meta{self._sfx()}"), hits)
+            self.store.read(f"doc_meta{self._sfx()}"), top)
         static_cols = [self.static_prior_col(s).alias(s) for s in statics]
         meta = meta.select("partition_id", "doc_id", "doc_len",
                            *static_cols)
@@ -2467,11 +2512,12 @@ class QueryEngine:
         cfg = self.cfg
         k = cfg.default_k if k is None else min(k, cfg.max_k)
         first_k = max(int(first_k), k)
-        top = self._batch_wand_ranked([query], k=first_k).select(
+        hits = self._query_hits(query, k=first_k)
+        top = self.spark.createDataFrame(hits).select(
             "partition_id", "doc_id", "score")
         field_col = self.field  # doc_features text column IS the field name
         feats = self._in_hit_buckets(
-            self.store.read(f"doc_features{self._sfx()}"), top).select(
+            self.store.read(f"doc_features{self._sfx()}"), hits).select(
             "partition_id", "doc_id", F.col(field_col).alias("_text"))
         sp = make_cross_scorer_udf(scorer=scorer, loader=loader,
                                    batch_size=batch_size)
@@ -2926,7 +2972,8 @@ class QueryEngine:
         cfg = self.cfg
         k = min(k or cfg.default_k, cfg.max_k + cfg.max_offset)
         window = window or 5 * k
-        hits = self._batch_wand_ranked([query], k=window).select(
+        top = self._query_hits(query, k=window)
+        hits = self.spark.createDataFrame(top).select(
             "partition_id", "doc_id", F.col("score").alias("bm25"))
         dim = self._embedding_dim()
         toks = tokenize(query, cfg.max_token_len, cfg.min_token_len,
@@ -2941,7 +2988,7 @@ class QueryEngine:
                 F.lit(None).cast("double").alias("cosine"))
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         e = self._in_hit_buckets(
-            self.store.read(f"doc_embeddings{self._sfx()}"), hits).select(
+            self.store.read(f"doc_embeddings{self._sfx()}"), top).select(
             "doc_id", F.col("emb").cast("array<double>").alias("v"))
         joined = (hits.join(e, "doc_id", "left")
                   .withColumn("cosine", self._cosine_expr(probe)))
@@ -3024,14 +3071,13 @@ class QueryEngine:
                 .distinct())
 
     @staticmethod
-    def _in_hit_buckets(table: DataFrame, hits: DataFrame) -> DataFrame:
+    def _in_hit_buckets(table: DataFrame, hits: "pa.Table") -> DataFrame:
         """``table`` (laid out by doc-range bucket) cut to the buckets
-        that hold ``hits`` with a literal ``partition_id IN (…)``: static
-        partition pruning. ``hits`` is collected for its bucket ids — no
-        job for a driver-ranked hit frame, a ``LocalTableScan`` on which
-        dynamic partition pruning never fires."""
-        buckets = sorted({r[0] for r in
-                          hits.select("partition_id").collect()})
+        that hold ``hits`` (the driver's Arrow hits, :meth:`_query_hits`)
+        with a literal ``partition_id IN (…)``: static partition pruning
+        — dynamic partition pruning never fires on a hit frame built
+        from a local table."""
+        buckets = sorted(set(hits.column("partition_id").to_pylist()))
         return table.filter(F.col("partition_id").isin(buckets))
 
     def _hits_meta_df(self, hits: list[tuple]) -> DataFrame:
@@ -3047,23 +3093,22 @@ class QueryEngine:
                 .select("partition_id", "doc_id", "url", "warc_ts", "lang",
                         "doc_len"))
 
-    def _hydrate_hits(self, top: DataFrame) -> list:
-        """Decorate hits (partition_id, doc_id, score) with doc_meta
-        columns: Rows of (doc_id, url, warc_ts, lang, doc_len, score) in
+    def _hydrate_hits(self, top: "pa.Table") -> list:
+        """Decorate hits — an Arrow table with (partition_id, doc_id,
+        score) columns, e.g. :meth:`_query_hits` — with doc_meta columns:
+        Rows of (doc_id, url, warc_ts, lang, doc_len, score) in
         (score DESC, doc_id ASC) order; a hit without a doc_meta row is
         dropped, as an inner join would.
 
-        The ≤ k+offset hits are collected first (no job for the driver
-        path's local frame), the doc_meta read carries them as literals
+        The doc_meta read carries the ≤ k+offset hits as literals
         (:meth:`_hits_meta_df`) and the join runs here: decorating ~100
         rows reads only the hit buckets, not the whole table (VERDICT r2
         #2; at 10^12 docs the unpruned form is a full metadata scan per
-        query). Dynamic partition pruning cannot do this for a local
-        hit frame — it never fires on a ``LocalTableScan`` build side."""
+        query) — one JVM-only job, none without hits."""
         from pyspark.sql import Row
 
-        hits = [(r["partition_id"], r["doc_id"], r["score"]) for r in
-                top.select("partition_id", "doc_id", "score").collect()]
+        hits = list(zip(*(top.column(c).to_pylist()
+                          for c in ("partition_id", "doc_id", "score"))))
         if not hits:
             return []
         meta = {(r["partition_id"], r["doc_id"]): r
@@ -3077,7 +3122,7 @@ class QueryEngine:
                          warc_ts_min, warc_ts_max, site=None,
                          neg_site=None) -> DataFrame:
         """Exhaustive candidates joined to doc_meta with all structured
-        filters applied — shared by search_df and search()."""
+        filters applied — the exhaustive plan of :meth:`search`."""
         cand = self.scores_df(query)
         if min_score > 0.0:
             cand = cand.filter(F.col("score") >= F.lit(min_score))
@@ -3086,43 +3131,6 @@ class QueryEngine:
         return self._apply_meta_filters(cand.join(meta, "doc_id"), lang,
                                         warc_ts_min, warc_ts_max,
                                         site=site, neg_site=neg_site)
-
-    # ------------------------------------------------------------------
-    def search_df(
-        self,
-        query: str,
-        k: int | None = None,
-        offset: int = 0,
-        min_score: float = 0.0,
-        lang: str | None = None,
-        warc_ts_min=None,
-        warc_ts_max=None,
-        site: str | None = None,
-        neg_site: str | None = None,
-    ) -> DataFrame:
-        """Lazy top-k page: (doc_id, url, warc_ts, lang, doc_len, score).
-
-        Filters are built conditionally in Python (the Catalyst-friendly
-        version of the reference's ``(? IS NULL OR pred)`` SQL trick,
-        ``ProductRepository.java:75-79``). ``site``/``neg_site`` are the
-        web-search ``site:`` operator (subdomain-inclusive host match).
-        """
-        cfg = self.cfg
-        k = cfg.default_k if k is None else min(k, cfg.max_k)
-        offset = min(max(offset, 0), cfg.max_offset)
-        out = self._scored_filtered(query, min_score, lang,
-                                    warc_ts_min, warc_ts_max,
-                                    site=site, neg_site=neg_site)
-        # TakeOrderedAndProject: per-partition heap of k+offset, then merge
-        page = (out.orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k + offset))
-        if offset:
-            # tiny (≤ k+offset ≤ 10100 rows) — windowing over the limited set
-            from pyspark.sql.window import Window
-            w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-            page = (page.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") > offset).drop("_rn"))
-        return page
 
     # ------------------------------------------------------------------
     def _envelope(self, rows, total: int, k: int, query: str, t0: float,
@@ -3220,7 +3228,7 @@ class QueryEngine:
             # its bucket prune exactly like the WAND path
             top = base.select(
                 doc_bucket_expr("doc_id", cfg.n_doc_buckets)
-                .alias("partition_id"), "doc_id", "score")
+                .alias("partition_id"), "doc_id", "score").toArrow()
             rows = self._hydrate_hits(top)[offset:]
             return self._envelope(rows, len(rows), k, query, t0,
                                   highlight, offset=offset)
@@ -3232,11 +3240,10 @@ class QueryEngine:
             # the fast path too — it SEEDS WAND's theta, so pruning gets
             # stronger, not bypassed (reference Q2,
             # ProductRepository.java:74).
-            top = self._batch_wand_ranked(
-                [query], k=k + offset, lang=lang,
+            top = self._query_hits(
+                query, k=k + offset, lang=lang,
                 warc_ts_min=warc_ts_min, warc_ts_max=warc_ts_max,
-                min_score=min_score, site=site, neg_site=neg_site
-            ).select("partition_id", "doc_id", "score")
+                min_score=min_score, site=site, neg_site=neg_site)
             rows = self._hydrate_hits(top)[offset:]
             if count_mode == "approx":
                 total = max(self.approx_count(
@@ -3290,11 +3297,10 @@ class QueryEngine:
         t0 = time.time()
         cfg = self.cfg
         k = cfg.default_k if k is None else min(k, cfg.max_k)
-        top = self._batch_wand_ranked(
-            [query], k=k, lang=lang, warc_ts_min=warc_ts_min,
+        top = self._query_hits(
+            query, k=k, lang=lang, warc_ts_min=warc_ts_min,
             warc_ts_max=warc_ts_max, min_score=min_score,
-            after=(float(cursor[0]), int(cursor[1])) if cursor else None
-        ).select("partition_id", "doc_id", "score")
+            after=(float(cursor[0]), int(cursor[1])) if cursor else None)
         rows = self._hydrate_hits(top)
         return self._envelope(
             rows, len(rows), k, query, t0, highlight,

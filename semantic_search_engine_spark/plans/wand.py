@@ -11,12 +11,19 @@ the current k-th score are skipped without computing BM25.
 
 Distribution model (Spark-first): the postings table is range-bucketed by
 doc id (``partition_id``), so every bucket holds a doc-id-sorted slice of
-each term's posting list. A single query's collected blocks are split on
-the driver (:func:`bucket_blocks`) and WAND runs *independently per
-bucket*; a batch of ≥ 2 term sets instead ranks every query over all of
-a Python task's buckets in one vectorized pass
-(:func:`make_dense_ranker`: decode each block once, score each posting
-once, no block skipping). Either way the union of the local top-K sets
+each term's posting list. Two plans serve every BM25 top-k:
+
+* one term set — a single query, filtered or not, or one federated
+  query over several indexes — is collected to the driver, split into
+  buckets there (:func:`bucket_blocks`), and WAND runs *independently
+  per bucket* (:func:`_wand_bucket_kernel`), with no Python task;
+* a batch of ≥ 2 term sets ranks every query over all of a Python
+  task's buckets in one vectorized pass (:func:`make_dense_ranker`:
+  decode each block once, score each posting once, no block skipping),
+  one ``mapInArrow`` call per task (:func:`make_batch_arrow_fn`); a
+  structured filter's survivors ride into the same tasks.
+
+Either way the union of the local top-K sets
 is a superset of the global top-K (each global winner lives in exactly
 one bucket, hence one task, and must be in that local top-K), so a final
 (score DESC, doc_id ASC) top-K merge over ≤ P·K candidate rows is exact.
@@ -476,7 +483,9 @@ _BLOCK_COLS = ("term", "last_doc_id", "block_max_tf_norm", "doc_ids_vb",
 
 def group_blocks_by_term(pdf) -> dict[str, list[dict]]:
     """pandas block rows (sorted by (term, partition_id, block_id)) →
-    term → block dicts for :class:`BlockCursor`."""
+    term → block dicts for :class:`BlockCursor` (the serve paths split
+    Arrow tables with :func:`bucket_blocks`; this pandas form serves
+    per-bucket kernel replays)."""
     return _blocks_by_term(*(pdf[c] for c in _BLOCK_COLS))
 
 
@@ -497,7 +506,7 @@ def _idf_by_term(terms, dfs, n_docs: "int | dict[str, int]"
 def bucket_blocks(table, n_docs: "int | dict[str, int]"):
     """Block rows → ``(partition_id, term → blocks, term → idf)`` per doc
     bucket, in ascending bucket order — the loop of the driver-side
-    single-query paths (WAND, MaxScore, weighted).
+    single-query paths (WAND, MaxScore, weighted, federated).
 
     ``table``: a ``pyarrow.Table`` of the block columns plus
     ``partition_id``, ``block_id`` and each term's global ``df``. It is
@@ -544,7 +553,7 @@ def _wand_bucket_kernel(terms: list[str], k: int, k1: float, b: float,
                         avgdl: float, min_score: float = 0.0,
                         after: "tuple[float, int] | None" = None,
                         term_boosts: "dict[str, float] | None" = None,
-                        min_match: int = 1):
+                        min_match: int = 1, ub_scale: float = 1.0):
     """The per-bucket body of the driver-side single-query paths: one
     doc bucket's blocks grouped by term (+ at most one doc_meta hook of
     :func:`wand_top_k`) → ``(0, partition_id, doc_id, score, key)``
@@ -555,7 +564,9 @@ def _wand_bucket_kernel(terms: list[str], k: int, k1: float, b: float,
     Per-term boost multipliers (PRF expansion down-weighting, user
     ``term^boost`` weighting) give weight = boost * idf, the float-op
     order the oracle replays; boosts only scale each cursor's upper
-    bounds, so pruning stays exact.
+    bounds, so pruning stays exact. ``ub_scale`` re-sounds the stored
+    block-max bounds when ``avgdl`` is not the index's own (a federation
+    member scored under global stats, :func:`wand_top_k`).
     """
 
     def bucket_hits(pid, by_term, idf, **hook):
@@ -565,7 +576,8 @@ def _wand_bucket_kernel(terms: list[str], k: int, k1: float, b: float,
             return
         hits, _ = wand_top_k({t: by_term[t] for t in weights}, weights,
                              k, k1, b, avgdl, min_score=min_score,
-                             after=after, min_match=min_match, **hook)
+                             after=after, min_match=min_match,
+                             ub_scale=ub_scale, **hook)
         for *key, d, s in hits:  # a collapse hit leads with its key
             yield 0, pid, d, s, key[0] if key else None
 
@@ -668,39 +680,34 @@ def make_dense_ranker(query_terms: "dict[tuple[int, ...], list[str]]",
 
 
 def make_batch_arrow_fn(rank):
-    """``mapInArrow`` body of an unfiltered batch (≥ 2 distinct term
-    sets): ONE Python call per task over every block of the buckets
-    routed to it — the union of every query's term postings — ranked by
-    ``rank`` (:func:`make_dense_ranker`) in one pass. The Arrow round
-    trip and the output construction are paid once per task; the caller
-    sizes the task count so a batch spreads over the cores. Yields one
-    record batch (empty when the task got no rows)."""
+    """``mapInArrow`` body of a batch (≥ 2 distinct term sets): ONE
+    Python call per task over every row routed to it — the blocks of
+    the task's buckets, the union of every query's term postings —
+    ranked by ``rank`` (:func:`make_dense_ranker`) in one pass. The
+    Arrow round trip and the output construction are paid once per
+    task; the caller sizes the task count so a batch spreads over the
+    cores. Yields one record batch (empty when the task got no rows).
+
+    Filtered, the input also holds the filter survivors of the same
+    buckets — rows with a ``doc_id`` and no block columns, routed by
+    the same ``partition_id`` — which are split off and passed to
+    ``rank`` as ``allowed``; a task without survivors ranks nothing."""
 
     def run_task(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         batches = [rb for rb in batches if rb.num_rows]
-        yield hits_batch(rank(pa.Table.from_batches(batches))
-                         if batches else [])
+        rows: list[tuple] = []
+        if batches:
+            t = pa.Table.from_batches(batches)
+            allowed = None
+            if "doc_id" in t.column_names:  # filtered: split survivors
+                survivor = pc.is_valid(t.column("doc_id"))
+                allowed = t.filter(survivor).column("doc_id").to_numpy()
+                t = t.filter(pc.invert(survivor))
+            if allowed is None or len(allowed):
+                rows = rank(t, allowed)
+        yield hits_batch(rows)
 
     return run_task
-
-
-def make_cogroup_fn(rank):
-    """Cogrouped ``applyInPandas`` body of a FILTERED batch (≥ 2 term
-    sets): left = one bucket's blocks, right = the bucket's filter
-    survivors' ``doc_id`` (shared by the whole batch), passed to
-    ``rank`` (:func:`make_dense_ranker`) as ``allowed``; an empty right
-    side means no hits."""
-
-    def run_bucket(blocks_pdf, meta_pdf):
-        import pyarrow as pa
-
-        rows: list[tuple] = []
-        if len(blocks_pdf) and len(meta_pdf):
-            rows = rank(pa.Table.from_pandas(blocks_pdf,
-                                             preserve_index=False),
-                        meta_pdf["doc_id"].to_numpy(dtype=np.int64))
-        return hits_batch(rows).to_pandas()
-
-    return run_bucket

@@ -5,10 +5,13 @@ time-partitioned-crawl serving shape (Elasticsearch alias +
 dfs_query_then_fetch), which the combined-index equivalence pins exactly."""
 from __future__ import annotations
 
+import zlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from semantic_search_engine_spark.config import EngineConfig
+from semantic_search_engine_spark.oracle import OracleIndex
 from semantic_search_engine_spark.plans.build_index import IndexBuilder
 from semantic_search_engine_spark.plans.federate import FederatedQueryEngine
 from semantic_search_engine_spark.plans.query import QueryEngine
@@ -130,6 +133,46 @@ def test_disjointness_audit(fed_setup):
     fed.assert_disjoint()  # halves are disjoint by construction
     with pytest.raises(ValueError, match="overlap"):
         FederatedQueryEngine(fed.spark, [eng_a, eng_a]).assert_disjoint()
+
+
+def _rows_df(spark, rows):
+    """(url, warc_ts, html, text, lang) dict rows → input DataFrame."""
+    return spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
+         for r in rows],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+
+
+def test_global_stats_follow_member_ingest(spark, tiny_rows, tiny_oracle,
+                                           tmp_path_factory):
+    """An ingest into one member moves the federation's N/avgdl with its
+    df: the SAME federation, queried before and after, then scores
+    exactly like a fresh federation and like the oracle over every
+    slice. Three url-disjoint slices of the tiny corpus: A and B are
+    built, then C is ingested into A."""
+    slices: list[list[dict]] = [[], [], []]
+    for r in tiny_rows:
+        slices[zlib.crc32((r["url"] or "").encode()) % 3].append(r)
+    st_a = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_ia")))
+    builder_a = IndexBuilder(spark, st_a, CFG_A)
+    builder_a.build(_rows_df(spark, slices[0]))
+    st_b = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_ib")))
+    IndexBuilder(spark, st_b, CFG_B).build(_rows_df(spark, slices[1]))
+    eng_a = QueryEngine(spark, st_a, CFG_A)
+    eng_b = QueryEngine(spark, st_b, CFG_B)
+    fed = FederatedQueryEngine(spark, [eng_a, eng_b])
+
+    q = "zipfhead0 zipfhead1"
+    before = fed.top_k(q, k=10)
+    assert before == OracleIndex.build(slices[0] + slices[1],
+                                       EngineConfig()).top_k(q, k=10)
+    builder_a.ingest_updates(_rows_df(spark, slices[2]))
+    after = fed.top_k(q, k=10)
+    assert after == FederatedQueryEngine(spark, [eng_a, eng_b]).top_k(
+        q, k=10)
+    assert after == tiny_oracle.top_k(q, k=10)  # doc ids AND scores
+    assert after != before
 
 
 def test_absent_terms_empty(fed_setup):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from semantic_search_engine_spark.operators.contamination import (
     contaminated_docs,
@@ -15,6 +16,7 @@ from semantic_search_engine_spark.operators.diversify import (
 )
 from semantic_search_engine_spark.operators.passages import split_passages
 from semantic_search_engine_spark.operators.pii import pii_signals
+from semantic_search_engine_spark.plans.federate import FederatedQueryEngine
 
 
 def _plan(df) -> str:
@@ -175,6 +177,93 @@ def test_batch_top_k_four_jobs_wand_spread_over_cores(spark, wand_engine,
 Q = "wireless bluetooth headphones"
 
 
+@pytest.fixture(scope="module")
+def fed_engine(spark, wand_engine, tmp_path_factory):
+    """``wand_engine`` federated with a second, differently laid out
+    index over a few docs of its own (url-disjoint from the tiny
+    corpus), half of them ``lang="en"``, all holding the terms of
+    ``Q``."""
+    from semantic_search_engine_spark.config import EngineConfig
+    from semantic_search_engine_spark.plans.build_index import IndexBuilder
+    from semantic_search_engine_spark.plans.query import QueryEngine
+    from semantic_search_engine_spark.sources.store import HadoopTableStore
+
+    cfg = EngineConfig(n_doc_buckets=2, n_term_buckets=2,
+                       shuffle_partitions=4, block_size=8)
+    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("fed_wh")))
+    docs = spark.createDataFrame(
+        [(f"https://fed-shape{i}.example/", None,
+          f"{Q} review number {i} " + "wireless " * (i % 3),
+          "en" if i % 2 else "de") for i in range(12)],
+        "url string, warc_ts timestamp, text string, lang string"
+    ).withColumn("html", F.lit(None).cast("binary"))
+    IndexBuilder(spark, store, cfg).build(docs)
+    return FederatedQueryEngine(
+        spark, [wand_engine, QueryEngine(spark, store, cfg)])
+
+
+@pytest.mark.parametrize("lang,n_jobs", [
+    # one collect of the union of both indexes' pruned postings scans
+    (None, 1),
+    # ... then each index's filter survivors of its posting buckets
+    ("en", 3),
+], ids=["bare", "filtered"])
+def test_federated_top_k_ranks_on_driver(spark, fed_engine, collected_plans,
+                                         lang, n_jobs):
+    """A federated query runs the single-query plan: JVM-only jobs and
+    no Python, Arrow or Pandas node in any collected plan, whatever the
+    number of indexes."""
+    owners = {r["fed_idx"]
+              for r in fed_engine.top_k_df(Q, k=100, lang=lang).collect()}
+    assert owners == {0, 1}, owners  # both indexes hold hits
+    jobs = _jobs(spark, lambda: fed_engine.top_k(Q, k=10, lang=lang))
+    assert len(jobs) == n_jobs, jobs
+    assert collected_plans
+    for plan in collected_plans:
+        for node in ("Python", "Arrow", "Pandas", "ExistingRDD"):
+            assert node not in plan, (node, plan)
+
+
+def test_filtered_batch_runs_the_arrow_runner(spark, wand_engine):
+    """A filtered batch keeps the unfiltered batch's shape: the filter
+    survivors ride the blocks' fixed-count exchange into the same
+    one-call-per-task ranking stage (no cogroup), three jobs warm."""
+    queries = [Q, "gaming laptop"]
+    n_tasks = min(spark.sparkContext.defaultParallelism, len(queries))
+
+    def call():
+        return wand_engine.batch_wand_top_k_df(queries, k=10,
+                                               lang="en").collect()
+
+    jobs = _jobs(spark, call)
+    assert len(jobs) == 3, jobs
+    assert _wand_tasks(jobs) == n_tasks, jobs
+    plan = _plan(wand_engine.batch_wand_top_k_df(queries, k=10, lang="en"))
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert "MapInArrow" in plan, plan
+
+
+def test_filtered_search_hydrates_driver_hits(spark, wand_engine,
+                                              monkeypatch):
+    """``search(lang=…, count_mode="none")`` runs 3 jobs, and its
+    driver-ranked hits go straight to hydration: no DataFrame is built
+    from them."""
+    def call():
+        return wand_engine.search(Q, k=10, lang="en", count_mode="none")
+
+    assert call()["results"]
+    built = []
+    cls = type(spark)
+
+    def counted(self, *a, _orig=cls.createDataFrame, **kw):
+        built.append(a[:1])
+        return _orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "createDataFrame", counted)
+    assert len(_jobs(spark, call)) == 3
+    assert built == []
+
+
 @pytest.mark.parametrize("call,n_jobs", [
     # the pruned postings collect, then the filter survivors of the
     # query's posting buckets (literal partition_id IN)
@@ -224,10 +313,11 @@ def test_single_query_wand_variants_job_counts(spark, wand_engine,
     lambda e: e.synonym_top_k_df("", {}).collect(),
     lambda e: e.get_docs(urls=[]).collect(),
     lambda e: e.candidate_ids_df("").collect(),
+    lambda e: FederatedQueryEngine(e.spark, [e]).top_k_df("").collect(),
 ], ids=["search", "search-k0", "filtered", "batch-k0", "collapse",
         "boosted-k0", "weighted", "maxscore-k0", "auto", "phrase",
         "boolean", "boolean-k0", "synonym", "get-docs",
-        "candidates"])
+        "candidates", "federated"])
 def test_empty_result_runs_no_job(spark, wand_engine, collected_plans,
                                   call):
     """An empty query or k ≤ 0 comes back as an Arrow-built

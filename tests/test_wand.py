@@ -583,7 +583,7 @@ def test_hydration_scan_is_partition_pruned(spark, wand_built):
                .select("partition_id", "doc_id", "score"))
         hits = [tuple(r) for r in top.collect()]
         assert hits, lang
-        rows = qe._hydrate_hits(top)
+        rows = qe._hydrate_hits(top.toArrow())
         # every hit decorated, in (score DESC, doc_id ASC) order
         assert [(r["doc_id"], r["score"]) for r in rows] == sorted(
             [(d, s) for _, d, s in hits], key=lambda h: (-h[1], h[0]))
