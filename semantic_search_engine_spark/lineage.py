@@ -43,29 +43,39 @@ def stage_fingerprint(stage: str, config_fp: str, input_fps: list[str],
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
+def expected_fingerprint(store: TableStore, stage: str, config_fp: str,
+                         inputs: list[str]) -> str:
+    """The fingerprint ``stage`` commits when built NOW: the config plus
+    each input table's committed ``data_uuid``. Every write/merge commit
+    mints a fresh uuid, so it changes exactly when an input was actually
+    rewritten — a merge into ``doc_features`` cascades a rebuild through
+    every downstream stage, while an untouched chain keeps skipping
+    (resume). The Iceberg-store equivalent is the snapshot id."""
+    return stage_fingerprint(
+        stage, config_fp,
+        [(store.table_meta(t) or {}).get("data_uuid", "") for t in inputs])
+
+
+def stage_current(store: TableStore, stage: str, config_fp: str,
+                  inputs: list[str], output_table: str | None = None
+                  ) -> bool:
+    """Is ``stage``'s committed output (table ``output_table``, by default
+    the stage's own name) exactly what building it now would write? The
+    one currency rule: :meth:`StageRunner.run` skips such a stage, and a
+    reader trusts a side table (reverse/trigram dictionary, champions)
+    or carries postings forward only when it holds — a stale one would
+    silently miss or mis-bound what changed since it was built."""
+    meta = store.table_meta(output_table or stage)
+    return meta is not None and meta.get("fingerprint", "") == \
+        expected_fingerprint(store, stage, config_fp, inputs)
+
+
 class StageRunner:
     def __init__(self, store: TableStore, config_fp: str, run_id: str | None = None):
         self.store = store
         self.config_fp = config_fp
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.metrics: list[dict] = []
-
-    def output_fingerprint(self, table: str) -> str:
-        meta = self.store.table_meta(table) or {}
-        return meta.get("fingerprint", "")
-
-    def input_identity(self, table: str) -> str:
-        """Data identity of an input table: its committed ``data_uuid``.
-
-        Every write/merge commit mints a fresh uuid, so a stage's
-        fingerprint changes exactly when one of its inputs was actually
-        rewritten — a merge into ``doc_features`` therefore cascades a
-        rebuild through every downstream stage, while an untouched chain
-        keeps skipping (resume). The Iceberg-store equivalent is the
-        snapshot id.
-        """
-        meta = self.store.table_meta(table) or {}
-        return meta.get("data_uuid", "")
 
     def run(self, stage: str, output_table: str, inputs: list[str],
             build_fn, *, partition_by=None, sort_within_partitions=None,
@@ -88,16 +98,14 @@ class StageRunner:
         O(rows x buckets) inside the hot write job); the total row count
         stays observed either way.
         """
-        fp = stage_fingerprint(
-            stage, self.config_fp + extra_key,
-            [self.input_identity(t) for t in inputs])
-        if (self.store.exists(output_table)
-                and self.output_fingerprint(output_table) == fp):
+        config_fp = self.config_fp + extra_key
+        if stage_current(self.store, stage, config_fp, inputs, output_table):
             self._record(stage, output_table, skipped=True, wall_ms=0,
                          rows=None, per_partition=None)
             return False
 
         t0 = time.time()
+        fp = expected_fingerprint(self.store, stage, config_fp, inputs)
         df = build_fn()
         from pyspark.sql import Observation
         obs = Observation()

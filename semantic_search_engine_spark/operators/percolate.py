@@ -85,10 +85,7 @@ def compile_percolator(queries: DataFrame,
                     if not clauses:
                         raise ValueError("query tokenizes to nothing")
                     for c in clauses:
-                        if (c.req_prefixes or c.neg_prefixes
-                                or c.req_suffixes or c.neg_suffixes
-                                or c.req_contains or c.neg_contains
-                                or c.req_regex or c.neg_regex):
+                        if c.req_wild or c.neg_wild:
                             raise ValueError(
                                 "percolator clauses support terms, "
                                 "phrases and negation only (no "

@@ -29,6 +29,7 @@ unchanged on the expanded set.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from itertools import product
 
 from ..textproc import tokenize
@@ -82,7 +83,7 @@ def rewrite_clauses(clauses: list[BooleanClause],
                     synonyms: dict[str, tuple[str, ...]],
                     max_clauses: int = 63) -> list[BooleanClause]:
     """Boolean-path rewrite: distribute each clause's required terms over
-    their synonym groups (cross product), preserving prefixes/phrases/
+    their synonym groups (cross product), preserving wildcards/phrases/
     negations untouched per alternative. Negated terms are NOT expanded:
     ``-spam`` keeps excluding exactly ``spam`` (ts_rewrite likewise only
     rewrites what the rule's left side names). Result clauses are deduped
@@ -90,7 +91,7 @@ def rewrite_clauses(clauses: list[BooleanClause],
     the boolean kernel's own 63-clause ceiling (plans/boolean.py) so the
     refusal fires here, with the actionable message, never downstream."""
     rewritten: list[BooleanClause] = []
-    seen: set[tuple] = set()
+    seen: set[BooleanClause] = set()
     for c in clauses:
         groups = [(t,) + synonyms.get(t, ()) for t in c.req_terms]
         n_alts = 1
@@ -102,26 +103,8 @@ def rewrite_clauses(clauses: list[BooleanClause],
                 f"{max_clauses} OR-clauses; tighten the synonym map or "
                 f"raise max_clauses")
         for combo in product(*groups) if groups else [()]:
-            alt = BooleanClause(
-                req_terms=tuple(sorted(set(combo))),
-                req_prefixes=c.req_prefixes,
-                req_phrases=c.req_phrases,
-                neg_terms=c.neg_terms,
-                neg_prefixes=c.neg_prefixes,
-                neg_phrases=c.neg_phrases,
-                req_suffixes=c.req_suffixes,
-                neg_suffixes=c.neg_suffixes,
-                req_contains=c.req_contains,
-                neg_contains=c.neg_contains,
-                req_regex=c.req_regex,
-                neg_regex=c.neg_regex,
-            )
-            key = (alt.req_terms, alt.req_prefixes, alt.req_phrases,
-                   alt.neg_terms, alt.neg_prefixes, alt.neg_phrases,
-                   alt.req_suffixes, alt.neg_suffixes,
-                   alt.req_contains, alt.neg_contains,
-                   alt.req_regex, alt.neg_regex)
-            if key not in seen:
-                seen.add(key)
+            alt = replace(c, req_terms=tuple(sorted(set(combo))))
+            if alt not in seen:
+                seen.add(alt)
                 rewritten.append(alt)
     return rewritten

@@ -355,22 +355,16 @@ class OracleIndex:
         if not clauses:
             return {}
         vocab = sorted(self.postings)
-        prefixes = sorted({p for c in clauses
-                           for p in c.req_prefixes + c.neg_prefixes})
-        exp = {p: [t for t in vocab if t.startswith(p)] for p in prefixes}
-        suffixes = sorted({s for c in clauses
-                           for s in c.req_suffixes + c.neg_suffixes})
-        sexp = {s: [t for t in vocab if t.endswith(s)] for s in suffixes}
-        contains = sorted({s for c in clauses
-                           for s in c.req_contains + c.neg_contains})
-        cexp = {s: [t for t in vocab if s in t] for s in contains}
-        # oracle regex dialect is Python re; engine tests stay inside
+        # the oracle's own membership predicates, one per wildcard kind;
+        # its regex dialect is Python re, and engine tests stay inside
         # the re/java.util.regex-portable subset
-        regexes = sorted({p for c in clauses
-                          for p in c.req_regex + c.neg_regex})
-        rexp = {p: [t for t in vocab if re.fullmatch(p, t)]
-                for p in regexes}
-        pos_terms = positive_terms(clauses, exp, sexp, cexp, rexp)
+        match = {"prefix": lambda p, t: t.startswith(p),
+                 "suffix": lambda p, t: t.endswith(p),
+                 "contains": lambda p, t: p in t,
+                 "regex": lambda p, t: re.fullmatch(p, t) is not None}
+        exp = {w: [t for t in vocab if match[w[0]](w[1], t)]
+               for c in clauses for w in c.req_wild + c.neg_wild}
+        pos_terms = positive_terms(clauses, exp)
 
         out: dict[int, float] = {}
         for did, tpos in self.doc_positions.items():
@@ -379,31 +373,13 @@ class OracleIndex:
             for c in clauses:
                 if not all(t in present for t in c.req_terms):
                     continue
-                if not all(any(t in present for t in exp[p])
-                           for p in c.req_prefixes):
-                    continue
-                if not all(any(t in present for t in sexp[s])
-                           for s in c.req_suffixes):
-                    continue
-                if not all(any(t in present for t in cexp[s])
-                           for s in c.req_contains):
-                    continue
-                if not all(any(t in present for t in rexp[p])
-                           for p in c.req_regex):
+                if not all(any(t in present for t in exp[w])
+                           for w in c.req_wild):
                     continue
                 if any(t in present for t in c.neg_terms):
                     continue
-                if any(any(t in present for t in exp[p])
-                       for p in c.neg_prefixes):
-                    continue
-                if any(any(t in present for t in sexp[s])
-                       for s in c.neg_suffixes):
-                    continue
-                if any(any(t in present for t in cexp[s])
-                       for s in c.neg_contains):
-                    continue
-                if any(any(t in present for t in rexp[p])
-                       for p in c.neg_regex):
+                if any(any(t in present for t in exp[w])
+                       for w in c.neg_wild):
                     continue
                 if not all(phrase_match_count(tpos, list(ph)) > 0
                            for ph in c.req_phrases):

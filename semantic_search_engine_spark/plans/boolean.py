@@ -9,7 +9,7 @@ engine's own postings:
 
   - bare words            -> AND-required terms
   - ``"quoted phrase"``   -> consecutive-position requirement
-  - ``-item``             -> NOT (word, phrase, or prefix)
+  - ``-item``             -> NOT (word, phrase, or wildcard)
   - ``OR``                -> alternation (lowest precedence, case-insensitive)
   - ``word*``             -> prefix match (tsquery's ``word:*``, spelled
                              with a trailing ``*`` like the web syntax)
@@ -69,6 +69,7 @@ from .wand import bm25_idf
 
 __all__ = [
     "BooleanClause",
+    "wild_label",
     "parse_websearch",
     "extract_site_filters",
     "make_boolean_bucket_fn",
@@ -108,34 +109,39 @@ def extract_site_filters(query: str
 # Parser
 # ---------------------------------------------------------------------------
 
+#: wildcard kind -> its query syntax; a clause holds each wildcard as
+#: one ``(kind, pattern)`` item
+WILD_SYNTAX = {"prefix": "{}*", "suffix": "*{}", "contains": "*{}*",
+               "regex": "/{}/"}
+
+
+def wild_label(wild: tuple[str, str]) -> str:
+    """A ``(kind, pattern)`` item as the user typed it (``head*``)."""
+    kind, pattern = wild
+    return WILD_SYNTAX[kind].format(pattern)
+
+
 @dataclass(frozen=True)
 class BooleanClause:
     """One conjunctive clause of the DNF.
 
-    ``req_terms``/``neg_terms`` hold concrete tokens; ``req_prefixes``/
-    ``neg_prefixes`` hold prefix stems and ``req_suffixes``/
-    ``neg_suffixes`` suffix stems (both matched against the term
-    dictionary at plan time); ``req_phrases``/``neg_phrases`` hold
-    token sequences (length >= 2 — shorter ones collapse to terms).
+    ``req_terms``/``neg_terms`` hold concrete tokens;
+    ``req_wild``/``neg_wild`` hold sorted ``(kind, pattern)`` wildcard
+    items (kind in :data:`WILD_SYNTAX`), each matched against the term
+    dictionary at plan time (``QueryEngine._expand_wildcards``);
+    ``req_phrases``/``neg_phrases`` hold token sequences (length >= 2 —
+    shorter ones collapse to terms).
     """
 
     req_terms: tuple[str, ...] = ()
-    req_prefixes: tuple[str, ...] = ()
+    req_wild: tuple[tuple[str, str], ...] = ()
     req_phrases: tuple[tuple[str, ...], ...] = ()
     neg_terms: tuple[str, ...] = ()
-    neg_prefixes: tuple[str, ...] = ()
+    neg_wild: tuple[tuple[str, str], ...] = ()
     neg_phrases: tuple[tuple[str, ...], ...] = ()
-    req_suffixes: tuple[str, ...] = ()
-    neg_suffixes: tuple[str, ...] = ()
-    req_contains: tuple[str, ...] = ()
-    neg_contains: tuple[str, ...] = ()
-    req_regex: tuple[str, ...] = ()
-    neg_regex: tuple[str, ...] = ()
 
     def has_positive(self) -> bool:
-        return bool(self.req_terms or self.req_prefixes
-                    or self.req_suffixes or self.req_contains
-                    or self.req_regex or self.req_phrases)
+        return bool(self.req_terms or self.req_wild or self.req_phrases)
 
 
 _LEX_RE = re.compile(r'(-?)"([^"]*)"|(-?)(\S+)')
@@ -144,17 +150,11 @@ _LEX_RE = re.compile(r'(-?)"([^"]*)"|(-?)(\S+)')
 @dataclass
 class _ClauseDraft:
     req_terms: set = field(default_factory=set)
-    req_prefixes: set = field(default_factory=set)
+    req_wild: set = field(default_factory=set)
     req_phrases: list = field(default_factory=list)
     neg_terms: set = field(default_factory=set)
-    neg_prefixes: set = field(default_factory=set)
+    neg_wild: set = field(default_factory=set)
     neg_phrases: list = field(default_factory=list)
-    req_suffixes: set = field(default_factory=set)
-    neg_suffixes: set = field(default_factory=set)
-    req_contains: set = field(default_factory=set)
-    neg_contains: set = field(default_factory=set)
-    req_regex: set = field(default_factory=set)
-    neg_regex: set = field(default_factory=set)
 
     def freeze(self) -> BooleanClause | None:
         # phrase terms double as required terms: a doc lacking any of
@@ -165,20 +165,13 @@ class _ClauseDraft:
             req.update(p)
         c = BooleanClause(
             req_terms=tuple(sorted(req)),
-            req_prefixes=tuple(sorted(self.req_prefixes)),
+            req_wild=tuple(sorted(self.req_wild)),
             req_phrases=tuple(dict.fromkeys(map(tuple, self.req_phrases))),
             neg_terms=tuple(sorted(self.neg_terms)),
-            neg_prefixes=tuple(sorted(self.neg_prefixes)),
+            neg_wild=tuple(sorted(self.neg_wild)),
             neg_phrases=tuple(dict.fromkeys(map(tuple, self.neg_phrases))),
-            req_suffixes=tuple(sorted(self.req_suffixes)),
-            neg_suffixes=tuple(sorted(self.neg_suffixes)),
-            req_contains=tuple(sorted(self.req_contains)),
-            neg_contains=tuple(sorted(self.neg_contains)),
-            req_regex=tuple(sorted(self.req_regex)),
-            neg_regex=tuple(sorted(self.neg_regex)),
         )
-        if not (c.has_positive() or c.neg_terms or c.neg_prefixes
-                or c.neg_suffixes or c.neg_contains or c.neg_regex
+        if not (c.has_positive() or c.neg_terms or c.neg_wild
                 or c.neg_phrases):
             return None  # nothing survived tokenization
         if not c.has_positive():
@@ -223,6 +216,7 @@ def parse_websearch(query: str, max_token_len: int = 64,
                 (cur.neg_phrases if neg else cur.req_phrases).append(toks)
             continue
         neg, word = m.group(3) == "-", m.group(4)
+        wild = cur.neg_wild if neg else cur.req_wild
         if not neg and word.upper() == "OR":
             flush()
             continue
@@ -241,7 +235,7 @@ def parse_websearch(query: str, max_token_len: int = 64,
             except re.error as exc:
                 raise ValueError(
                     f"invalid regex term {word!r}: {exc}") from exc
-            (cur.neg_regex if neg else cur.req_regex).add(pat)
+            wild.add(("regex", pat))
             continue
         prefix = word.endswith("*")
         suffix = word.startswith("*")
@@ -265,16 +259,14 @@ def parse_websearch(query: str, max_token_len: int = 64,
                     f"infix wildcard '*{stem}*' is shorter than a trigram "
                     "(3 chars) and cannot use the trigram dictionary; "
                     "lengthen the stem")
-            (cur.neg_contains if neg else cur.req_contains).add(stem)
+            wild.add(("contains", stem))
             continue
         if prefix:
-            stem = toks[-1]
+            wild.add(("prefix", toks[-1]))
             toks = toks[:-1]
-            (cur.neg_prefixes if neg else cur.req_prefixes).add(stem)
         elif suffix:
-            stem = toks[0]
+            wild.add(("suffix", toks[0]))
             toks = toks[1:]
-            (cur.neg_suffixes if neg else cur.req_suffixes).add(stem)
         for t in toks:
             (cur.neg_terms if neg else cur.req_terms).add(t)
     flush()
@@ -282,57 +274,33 @@ def parse_websearch(query: str, max_token_len: int = 64,
 
 
 def positive_terms(clauses: list[BooleanClause],
-                   expansions: dict[str, list[str]],
-                   sfx_expansions: dict[str, list[str]] | None = None,
-                   ctn_expansions: dict[str, list[str]] | None = None,
-                   rex_expansions: dict[str, list[str]] | None = None
+                   expansions: dict[tuple[str, str], list[str]]
                    ) -> list[str]:
-    """Distinct scoring terms: every clause's required terms plus its
-    prefix/suffix/contains/regex expansions (phrase terms are already
-    folded into req_terms). Each wildcard kind expands from its own map
-    — the same stem string can appear in several kinds."""
-    sfx_expansions = sfx_expansions or {}
-    ctn_expansions = ctn_expansions or {}
-    rex_expansions = rex_expansions or {}
+    """Distinct scoring terms: every clause's required terms plus the
+    expansions of its required wildcards (phrase terms are already
+    folded into req_terms). ``expansions`` maps each ``(kind,
+    pattern)`` item to its dictionary terms — the same pattern string
+    can appear under several kinds."""
     out: set[str] = set()
     for c in clauses:
         out.update(c.req_terms)
-        for p in c.req_prefixes:
-            out.update(expansions.get(p, ()))
-        for s in c.req_suffixes:
-            out.update(sfx_expansions.get(s, ()))
-        for s in c.req_contains:
-            out.update(ctn_expansions.get(s, ()))
-        for s in c.req_regex:
-            out.update(rex_expansions.get(s, ()))
+        for w in c.req_wild:
+            out.update(expansions.get(w, ()))
     return sorted(out)
 
 
 def scan_terms(clauses: list[BooleanClause],
-               expansions: dict[str, list[str]],
-               sfx_expansions: dict[str, list[str]] | None = None,
-               ctn_expansions: dict[str, list[str]] | None = None,
-               rex_expansions: dict[str, list[str]] | None = None
+               expansions: dict[tuple[str, str], list[str]]
                ) -> list[str]:
     """Every term whose postings the kernel needs: positives, negatives,
     and neg-phrase terms (the latter only to prove phrase ABSENCE cheap:
     a doc missing any term of a negated phrase cannot contain it and
     skips the recheck)."""
-    sfx_expansions = sfx_expansions or {}
-    ctn_expansions = ctn_expansions or {}
-    rex_expansions = rex_expansions or {}
-    out = set(positive_terms(clauses, expansions, sfx_expansions,
-                             ctn_expansions, rex_expansions))
+    out = set(positive_terms(clauses, expansions))
     for c in clauses:
         out.update(c.neg_terms)
-        for p in c.neg_prefixes:
-            out.update(expansions.get(p, ()))
-        for s in c.neg_suffixes:
-            out.update(sfx_expansions.get(s, ()))
-        for s in c.neg_contains:
-            out.update(ctn_expansions.get(s, ()))
-        for s in c.neg_regex:
-            out.update(rex_expansions.get(s, ()))
+        for w in c.neg_wild:
+            out.update(expansions.get(w, ()))
         for ph in c.neg_phrases:
             out.update(ph)
     return sorted(out)

@@ -47,7 +47,7 @@ from ..functions.udfs import (
     term_bucket_expr,
 )
 from ..functions.varbyte import encode_blocks
-from ..lineage import StageRunner
+from ..lineage import StageRunner, stage_current
 from ..operators.dedup import build_drop_ledger
 from ..sources.store import TableStore
 
@@ -688,18 +688,9 @@ class IndexBuilder:
         ENGINE_FORMAT_VERSION bump, both folded into the fingerprint —
         any mismatch falls back to a full downstream rebuild.
         """
-        from ..lineage import stage_fingerprint
-
-        meta = self.store.table_meta(f"postings{sfx}") or {}
-        if not meta:
-            return False
-        expected = stage_fingerprint(
-            f"postings{sfx}", self.cfg.fingerprint() + f"/{field}",
-            [(self.store.table_meta(f"doc_features{sfx}") or {})
-             .get("data_uuid", ""),
-             (self.store.table_meta(f"corpus_stats{sfx}") or {})
-             .get("data_uuid", "")])
-        return meta.get("fingerprint", "") == expected
+        return stage_current(self.store, f"postings{sfx}",
+                             self.cfg.fingerprint() + f"/{field}",
+                             [f"doc_features{sfx}", f"corpus_stats{sfx}"])
 
     # ------------------------------------------------------------------
     def _run_downstream(self, runner: StageRunner, sfx: str,
@@ -1510,16 +1501,9 @@ class IndexBuilder:
     def _positions_current(self, sfx: str, field: str) -> bool:
         """Positional-index analogue of :meth:`_postings_current`: may an
         incremental maintenance pass carry untouched buckets forward?"""
-        from ..lineage import stage_fingerprint
-
-        meta = self.store.table_meta(f"positions{sfx}") or {}
-        if not meta:
-            return False
-        expected = stage_fingerprint(
-            f"positions{sfx}", self.cfg.fingerprint() + f"/{field}",
-            [(self.store.table_meta(f"doc_features{sfx}") or {})
-             .get("data_uuid", "")])
-        return meta.get("fingerprint", "") == expected
+        return stage_current(self.store, f"positions{sfx}",
+                             self.cfg.fingerprint() + f"/{field}",
+                             [f"doc_features{sfx}"])
 
     def _positions_df(self, sfx: str, field: str,
                       changed_buckets: list[int] | None = None

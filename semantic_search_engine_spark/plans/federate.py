@@ -42,11 +42,14 @@ the oracle's exact float expressions — every doc lives in exactly one
 bucket, so the union of per-bucket top-k sets is a superset of the
 global top-k and a (score DESC, doc_id ASC) merge of ≤ Σ_i P_i·k rows is
 exact. Federated results are BIT-IDENTICAL to a single index built over
-the union of the corpora (pinned by test). A structured filter adds one
-JVM-only read per index of its filter survivors in just the buckets
-that hold its postings. N/avgdl come from each index's
-:meth:`QueryEngine.corpus_stats`, which re-reads after a commit, so an
-ingest into one index shows up in the next federated query.
+the union of the corpora (pinned by test). A structured filter adds ONE
+JVM-only read: the union of every index's filter survivors, each index
+pruned to the buckets that hold its postings and tagged with its
+federation position, whatever the number of indexes; ``search``
+hydrates its hits with one such union read of doc_meta. N/avgdl come
+from each index's :meth:`QueryEngine.corpus_stats`, which re-reads
+after a commit, so an ingest into one index shows up in the next
+federated query.
 
 Reference parity note: the reference serves one Postgres table
 (``search-api/.../repository/ProductRepository.java:70-82``); this module
@@ -57,6 +60,7 @@ stops being operable (SURVEY.md §2.3 X61).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -80,6 +84,10 @@ _UB_FLOAT_MARGIN = 1.0 + 1e-9
 #: indexes — they change term identity or the score function itself.
 #: Physical layout (bucket counts, block_size) may differ per index.
 _SCORING_CFG = ("k1", "b", "max_token_len", "min_token_len", "analyzer")
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
 
 
 @dataclass
@@ -138,7 +146,7 @@ class FederatedQueryEngine:
         """Federated block-max WAND top-k, ranked on the driver (module
         docstring): (fed_idx, partition_id, doc_id, score) rows in
         (score DESC, doc_id ASC) order as an Arrow table. One JVM-only
-        job, plus one per index holding postings under a filter; none
+        job, plus one under a filter (:meth:`_survivor_slices`); none
         for an empty query or ``k`` ≤ 0."""
         import heapq
 
@@ -152,27 +160,48 @@ class FederatedQueryEngine:
             return FED_OUT_SCHEMA.empty_table()
         scans = [e._driver_wand_scan(qterms).withColumn("fed_idx", F.lit(i))
                  for i, e in enumerate(self.engines)]
-        union = scans[0]
-        for sc in scans[1:]:
-            union = union.unionByName(sc)
         # df = Σ n_postings over every index's blocks: the global df
-        blocks = QueryEngine._collect_blocks(union)
+        blocks = QueryEngine._collect_blocks(_union(scans))
+        mine = [blocks.filter(pc.equal(blocks.column("fed_idx"), i))
+                for i in range(len(self.engines))]
+        slices = self._survivor_slices(mine, lang, warc_ts_min, warc_ts_max)
         scales = self._ub_scales(gs)
         rows: list[tuple] = []
-        for i, e in enumerate(self.engines):
-            mine = blocks.filter(pc.equal(blocks.column("fed_idx"), i))
-            meta = e._filter_survivors(lang, warc_ts_min, warc_ts_max)
+        for i in range(len(self.engines)):
             bucket_hits = _wand_bucket_kernel(
                 qterms, k, float(cfg.k1), float(cfg.b), gs["avg_doc_len"],
                 float(min_score), ub_scale=scales[i])
             rows.extend((i, p, d, s) for _, p, d, s, _ in QueryEngine
-                        ._bucket_rows(mine, gs["n_docs"], bucket_hits, meta,
-                                      QueryEngine._allowed_hook))
+                        ._bucket_rows(mine[i], gs["n_docs"], bucket_hits,
+                                      slices[i], QueryEngine._allowed_hook))
         # union of per-(index, bucket) top-k ⊇ global top-k
         rows = heapq.nsmallest(k, rows, key=lambda r: (-r[3], r[2]))
         return pa.Table.from_pylist(
             [dict(zip(FED_OUT_SCHEMA.names, r)) for r in rows],
             schema=FED_OUT_SCHEMA)
+
+    def _survivor_slices(self, blocks: list[pa.Table], lang, warc_ts_min,
+                         warc_ts_max) -> list[dict | None]:
+        """Per index: bucket → its filter survivors, doc_id-sorted
+        (:meth:`QueryEngine._split_buckets`), for the buckets that hold
+        its collected ``blocks``; None per index without a filter. ONE
+        JVM-only read of the union of every index's survivors, each
+        index's scan pruned to its own posting buckets by a literal
+        ``partition_id IN (…)`` and tagged with its ``fed_idx``."""
+        reads, buckets = [], []
+        for i, (e, b) in enumerate(zip(self.engines, blocks)):
+            surv = e._filter_survivors(lang, warc_ts_min, warc_ts_max)
+            if surv is None:
+                return [None] * len(blocks)
+            buckets.append(QueryEngine._buckets(b))
+            if buckets[i]:
+                reads.append(surv.filter(F.col("partition_id")
+                                         .isin(buckets[i]))
+                             .withColumn("fed_idx", F.lit(i)))
+        got = _union(reads).toArrow() if reads else None
+        return [QueryEngine._split_buckets(
+                    got.filter(pc.equal(got.column("fed_idx"), i)), bs)
+                if bs else {} for i, bs in enumerate(buckets)]
 
     def top_k_df(self, query: str, k: int = 10,
                  lang: str | None = None, warc_ts_min=None,
@@ -201,30 +230,32 @@ class FederatedQueryEngine:
                warc_ts_min=None, warc_ts_max=None,
                min_score: float = 0.0) -> dict:
         """Hydrated result envelope: top-k decorated with each hit's
-        url/lang/warc_ts from the OWNING index's doc_meta, pruned to the
-        hit buckets (one bounded job per index holding hits; never a
-        full metadata scan)."""
+        url/lang/warc_ts from the OWNING index's doc_meta: ONE read of the
+        union of every owning index's doc_meta, each pruned to its hit
+        buckets and ids (never a full metadata scan)."""
         hits = self._hits(query, k=k, lang=lang, warc_ts_min=warc_ts_min,
                           warc_ts_max=warc_ts_max,
                           min_score=min_score).to_pylist()
         by_idx: dict[int, list] = {}
         for r in hits:
             by_idx.setdefault(r["fed_idx"], []).append(r)
-        meta: dict[int, dict] = {}
+        reads = []
         for i, rows in by_idx.items():
             e = self.engines[i]
-            buckets = sorted({r["partition_id"] for r in rows})
-            ids = [r["doc_id"] for r in rows]
-            got = (e.store.read(f"doc_meta{e._sfx()}")
-                   .filter(F.col("partition_id").isin(buckets))
-                   .filter(F.col("doc_id").isin(ids))
-                   .select("doc_id", "url", "lang", "warc_ts").collect())
-            for m in got:
-                meta[int(m["doc_id"])] = {
+            reads.append(
+                e.store.read(f"doc_meta{e._sfx()}")
+                .filter(F.col("partition_id").isin(
+                    sorted({r["partition_id"] for r in rows})))
+                .filter(F.col("doc_id").isin([r["doc_id"] for r in rows]))
+                .select("doc_id", "url", "lang", "warc_ts")
+                .withColumn("fed_idx", F.lit(i)))
+        meta = {(m["fed_idx"], m["doc_id"]): {
                     "url": m["url"], "lang": m["lang"],
                     "warc_ts": m["warc_ts"]}
+                for m in (_union(reads).collect() if reads else [])}
         results = [{"doc_id": r["doc_id"], "score": r["score"],
-                    "index": r["fed_idx"], **meta.get(r["doc_id"], {})}
+                    "index": r["fed_idx"],
+                    **meta.get((r["fed_idx"], r["doc_id"]), {})}
                    for r in hits]
         return {"query": query, "results": results}
 
@@ -236,11 +267,8 @@ class FederatedQueryEngine:
         it when composing a federation, not per query; at web scale this
         is the same invariant the content-dedup ledger maintains between
         crawl slices (SURVEY.md §2.3 X60)."""
-        ids = [e.store.read(f"doc_meta{e._sfx()}").select("doc_id")
-               for e in self.engines]
-        uni = ids[0]
-        for s in ids[1:]:
-            uni = uni.unionByName(s)
+        uni = _union([e.store.read(f"doc_meta{e._sfx()}").select("doc_id")
+                      for e in self.engines])
         dup = (uni.groupBy("doc_id").count()
                .filter(F.col("count") > 1).limit(1).collect())
         if dup:

@@ -20,8 +20,10 @@ Two physical paths:
 from __future__ import annotations
 
 import math as _math
+import operator
 import time
 from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
@@ -30,10 +32,16 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.varbyte import decode_block
+from ..lineage import stage_current
 from ..sources.store import TableStore
 from ..textproc import tokenize
 
 DECODED_SCHEMA = "term string, doc_id long, tf int, dl int"
+
+
+def _any_of(cols):
+    """The OR of one or more boolean columns."""
+    return reduce(operator.or_, cols)
 
 
 def decode_postings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -582,39 +590,50 @@ class QueryEngine:
             pa.int64()))
 
     @staticmethod
-    def _bucket_meta(meta: DataFrame, blocks: "pa.Table") -> dict:
-        """bucket → the doc_id-sorted rows of ``meta`` (a frame keyed by
-        doc_meta's (partition_id, doc_id)) for every bucket that holds
-        ``blocks``; a bucket without rows gets an empty slice. The read
-        carries a literal ``partition_id IN (…)`` of those buckets, as
-        :meth:`_hits_meta_df` does: doc_meta is partitioned by bucket, so
-        one JVM-only job reads just them."""
-        buckets = sorted(set(blocks.column("partition_id").to_pylist()))
-        if not buckets:
-            return {}
-        t = (meta.filter(F.col("partition_id").isin(buckets)).toArrow()
-             .sort_by([("partition_id", "ascending"),
-                       ("doc_id", "ascending")]))
+    def _buckets(blocks: "pa.Table") -> list[int]:
+        """The doc buckets that hold ``blocks``."""
+        return sorted(set(blocks.column("partition_id").to_pylist()))
+
+    @staticmethod
+    def _split_buckets(t: "pa.Table", buckets: list[int]) -> dict:
+        """bucket → the doc_id-sorted rows of ``t`` (keyed by doc_meta's
+        (partition_id, doc_id)) in it, for every bucket of ``buckets``;
+        a bucket without rows gets an empty slice."""
         from .wand import key_runs
 
+        t = t.sort_by([("partition_id", "ascending"),
+                       ("doc_id", "ascending")])
         pids = t.column("partition_id").to_pylist()
         out = {p: t.slice(0, 0) for p in buckets}
         for lo, hi in key_runs(pids):
             out[pids[lo]] = t.slice(lo, hi - lo)
         return out
 
+    @classmethod
+    def _bucket_meta(cls, meta: DataFrame, blocks: "pa.Table") -> dict:
+        """:meth:`_split_buckets` of ``meta``'s rows in the buckets that
+        hold ``blocks``. The read carries a literal ``partition_id IN
+        (…)`` of those buckets, as :meth:`_hits_meta_df` does: doc_meta
+        is partitioned by bucket, so one JVM-only job reads just them."""
+        buckets = cls._buckets(blocks)
+        if not buckets:
+            return {}
+        return cls._split_buckets(
+            meta.filter(F.col("partition_id").isin(buckets)).toArrow(),
+            buckets)
+
     def _rank_on_driver(self, scan: DataFrame | None, n_docs, k: int,
                         bucket_hits, meta: DataFrame | None = None,
                         hook=None, collapse: bool = False) -> "pa.Table":
         """The one single-query plan: collect ``scan``
         (:meth:`_collect_blocks`) and rank its doc buckets in this — the
-        driver's — Python process (:meth:`_bucket_rows` with ``meta`` and
-        ``hook``). Returns the ≤ k best ``(query_id, partition_id,
-        doc_id, score)`` rows in (score DESC, doc_id ASC) order as an
-        Arrow table, with a ``ckey`` column under ``collapse``, whose
-        rows merge as a per-key window would: each key's best doc, then
-        the top k keys. ``scan`` None or ``k`` ≤ 0: an empty table, no
-        job.
+        driver's — Python process (:meth:`_bucket_rows`, ``hook`` over
+        ``meta``'s rows of the posting buckets). Returns the ≤ k best
+        ``(query_id, partition_id, doc_id, score)`` rows in (score DESC,
+        doc_id ASC) order as an Arrow table, with a ``ckey`` column
+        under ``collapse``, whose rows merge as a per-key window would:
+        each key's best doc, then the top k keys. ``scan`` None or ``k``
+        ≤ 0: an empty table, no job.
 
         Why no Python worker: every Python task here pays ~250 ms before
         the user function runs (``setup_spark_files`` calls
@@ -634,8 +653,11 @@ class QueryEngine:
 
         rows: list[tuple] = []
         if scan is not None and k > 0:
-            rows = self._bucket_rows(self._collect_blocks(scan), n_docs,
-                                     bucket_hits, meta, hook)
+            blocks = self._collect_blocks(scan)
+            rows = self._bucket_rows(
+                blocks, n_docs, bucket_hits,
+                None if meta is None else self._bucket_meta(meta, blocks),
+                hook)
         if collapse:  # (qid, pid, doc, score, key): best doc per key
             best: dict = {}
             for r in rows:
@@ -653,20 +675,19 @@ class QueryEngine:
         return ({"allowed": survivors.column("doc_id").to_numpy()}
                 if survivors.num_rows else None)
 
-    @classmethod
-    def _bucket_rows(cls, blocks: "pa.Table", n_docs, bucket_hits,
-                     meta: DataFrame | None = None, hook=None) -> list:
+    @staticmethod
+    def _bucket_rows(blocks: "pa.Table", n_docs, bucket_hits,
+                     slices: dict | None = None, hook=None) -> list:
         """The rows ``bucket_hits(pid, by_term, idf, **kw)`` yields for
         each doc bucket of the collected ``blocks``
-        (:func:`..wand.bucket_blocks`), ``kw = hook(meta slice)`` with
-        ``meta``'s rows of the same buckets (:meth:`_bucket_meta`, one
-        JVM-only job); a None ``kw`` skips the bucket."""
+        (:func:`..wand.bucket_blocks`), ``kw = hook(slices[pid])`` with
+        the bucket's doc_meta rows (:meth:`_bucket_meta`); a None ``kw``
+        skips the bucket."""
         from .wand import bucket_blocks
 
-        slices = {} if meta is None else cls._bucket_meta(meta, blocks)
         rows: list[tuple] = []
         for pid, by_term, idf in bucket_blocks(blocks, n_docs):
-            kw = {} if meta is None else hook(slices[pid])
+            kw = {} if slices is None else hook(slices[pid])
             if kw is not None:
                 rows.extend(bucket_hits(pid, by_term, idf, **kw))
         return rows
@@ -776,20 +797,12 @@ class QueryEngine:
                            k: int | None = None,
                            lang: str | None = None, warc_ts_min=None,
                            warc_ts_max=None,
-                           min_score: float = 0.0,
-                           after: tuple[float, int] | None = None,
-                           term_boosts: dict[str, float] | None = None,
                            min_match: int = 1,
                            site: str | None = None,
                            neg_site: str | None = None) -> DataFrame:
-        """Batch core: (query_id, partition_id, doc_id, score).
-
-        ``after`` is the keyset-pagination cursor (see
-        :func:`..wand.wand_top_k`); it applies to every query in the
-        batch, so only the single-query serve path exposes it publicly
-        (:meth:`search_after`). ``min_score`` is an inclusive score
-        threshold (on the driver it seeds WAND's theta, so it
-        STRENGTHENS pruning instead of forcing the exhaustive scorer).
+        """Batch core: (query_id, partition_id, doc_id, score). A single
+        query's other kernel options (``min_score``, the ``after``
+        cursor, per-term boosts) are :meth:`_query_hits`'s.
 
         ``partition_id`` (the hit's doc-range bucket) stays in the output
         so result hydration can prune the doc_meta scan to the buckets
@@ -844,12 +857,10 @@ class QueryEngine:
         filters = dict(lang=lang, warc_ts_min=warc_ts_min,
                        warc_ts_max=warc_ts_max, site=site,
                        neg_site=neg_site)
-        kernel_kw = dict(min_score=float(min_score), after=after,
-                         term_boosts=term_boosts, min_match=int(min_match))
         if len(ids_of) == 1:
             (_, qids), = ids_of.items()
             ranked = self._query_hits(queries[qids[0]], k, **filters,
-                                      **kernel_kw)
+                                      min_match=int(min_match))
             return self.spark.createDataFrame(pa.concat_tables([
                 ranked.set_column(0, "query_id", pa.array(
                     [qi] * ranked.num_rows, pa.int32()))
@@ -871,7 +882,7 @@ class QueryEngine:
             blocks = blocks.unionByName(allowed, allowMissingColumns=True)
         rank = make_dense_ranker(
             {tuple(qids): list(ts) for ts, qids in ids_of.items()}, k,
-            float(cfg.k1), float(cfg.b), avgdl, idf, **kernel_kw)
+            float(cfg.k1), float(cfg.b), avgdl, idf, int(min_match))
         # One Python call per task, and a FIXED task count: AQE sizes
         # shuffle partitions by bytes, and this stage moves a few KB of
         # compressed blocks but is CPU-heavy in Python, so a byte-sized
@@ -1067,209 +1078,28 @@ class QueryEngine:
                 for r in rows]
 
     # ----------------------------------------------------- boolean search
-    def _expand_prefixes(self, prefixes: list[str],
-                         max_expansions: int = 256
-                         ) -> dict[str, list[str]]:
-        """Prefix stem → matching dictionary terms, via ONE term_stats
-        scan (``StartsWith`` pushes to parquet as a min/max range on the
-        sorted term column). A stem matching more than ``max_expansions``
-        terms raises — the deterministic refusal, where Postgres would
-        silently degrade into an enormous OR."""
-        if not prefixes:
-            return {}
-        scan = self.store.read(f"term_stats{self._sfx()}").select("term")
-        pred = F.col("term").startswith(prefixes[0])
-        for p in prefixes[1:]:
-            pred = pred | F.col("term").startswith(p)
-        # Bound the driver collect BEFORE paying it: at most
-        # max_expansions matches per prefix can be legal, so if the
-        # combined scan exceeds cap = max_expansions * |prefixes|, some
-        # prefix must exceed max_expansions (pigeonhole) — refuse after a
-        # cheap aggregation names it, without ever collecting the
-        # expansion ('a*' over a web-scale dictionary must not OOM the
-        # driver on its way to the refusal).
-        cap = max_expansions * len(prefixes)
-        rows = scan.filter(pred).limit(cap + 1).collect()
-        if len(rows) > cap:
-            cnts = scan.filter(pred).agg(*[
-                F.sum(F.col("term").startswith(p).cast("long")).alias(p)
-                for p in prefixes]).collect()[0]
-            worst = max(prefixes, key=lambda p: int(cnts[p] or 0))
-            raise ValueError(
-                f"prefix '{worst}*' matches {int(cnts[worst])} dictionary "
-                f"terms (max_expansions={max_expansions}); lengthen the "
-                "prefix")
-        terms = [r["term"] for r in rows]
-        out: dict[str, list[str]] = {p: [] for p in prefixes}
-        for t in terms:
-            for p in prefixes:
-                if t.startswith(p):
-                    out[p].append(t)
-        for p, ts in out.items():
-            if len(ts) > max_expansions:
-                raise ValueError(
-                    f"prefix '{p}*' matches {len(ts)} dictionary terms "
-                    f"(max_expansions={max_expansions}); lengthen the "
-                    "prefix")
-            ts.sort()
-        return out
+    #: side table -> the tables its build chains on (``build_suffix``,
+    #: ``build_trigram``, ``build_champions``)
+    _SIDE_INPUTS = {"term_rev": ("term_stats",),
+                    "term_trigram": ("term_stats",),
+                    "champions": ("postings", "corpus_stats")}
 
-    def _term_rev_current(self) -> bool:
-        """May the reversed-term dictionary (``build_suffix``) be trusted
-        for THIS index snapshot? Mirrors ``_champions_current``: its
-        committed fingerprint must chain on the CURRENT term_stats
-        data_uuid under this config. A stale reverse dictionary would
-        silently MISS terms added since it was built, so staleness falls
-        back to the full-dictionary scan (still correct, just the
-        no-side-table price)."""
-        from ..lineage import stage_fingerprint
-
+    def _side_current(self, table: str) -> bool:
+        """May the side table ``table`` be trusted for THIS index
+        snapshot? :func:`..lineage.stage_current`, the build's own skip
+        rule: its committed fingerprint must chain on the CURRENT
+        data_uuids of its inputs under this config. A stale reverse or
+        trigram dictionary would silently MISS terms added since it was
+        built, so staleness falls back to the term_stats scan (still
+        correct, just the no-side-table price)."""
         sfx = self._sfx()
-        meta = self.store.table_meta(f"term_rev{sfx}") or {}
-        if not meta:
-            return False
-        expected = stage_fingerprint(
-            f"term_rev{sfx}", self.cfg.fingerprint() + f"/{self.field}",
-            [(self.store.table_meta(f"term_stats{sfx}") or {})
-             .get("data_uuid", "")])
-        return meta.get("fingerprint", "") == expected
-
-    def _expand_suffixes(self, suffixes: list[str],
-                         max_expansions: int = 256
-                         ) -> dict[str, list[str]]:
-        """Suffix stem → matching dictionary terms. Fast path: the
-        ``term_rev`` side table (``IndexBuilder.build_suffix``) turns the
-        leading wildcard into ``StartsWith(reverse(term))`` on a column
-        SORTED by reversed term, which pushes to parquet as a min/max
-        row-group range — Lucene's ReverseStringFilter trick. Fallback
-        (table missing or stale): ONE full term_stats scan with
-        ``endswith`` — correct, O(|dictionary|), the price Lucene pays
-        for a leading wildcard without the reverse filter. Both paths
-        share X34's pigeonhole-capped refusal: the driver collect is
-        bounded BEFORE it is paid."""
-        if not suffixes:
-            return {}
-        sfx = self._sfx()
-        if self._term_rev_current():
-            scan = self.store.read(f"term_rev{sfx}").select(
-                "term", "term_rev")
-            revs = {s: s[::-1] for s in suffixes}
-            pred = F.col("term_rev").startswith(revs[suffixes[0]])
-            for s in suffixes[1:]:
-                pred = pred | F.col("term_rev").startswith(revs[s])
-            probe = [(s, F.col("term_rev").startswith(revs[s]))
-                     for s in suffixes]
-        else:
-            scan = self.store.read(f"term_stats{sfx}").select("term")
-            pred = F.col("term").endswith(suffixes[0])
-            for s in suffixes[1:]:
-                pred = pred | F.col("term").endswith(s)
-            probe = [(s, F.col("term").endswith(s)) for s in suffixes]
-        cap = max_expansions * len(suffixes)
-        rows = scan.filter(pred).limit(cap + 1).collect()
-        if len(rows) > cap:
-            cnts = scan.filter(pred).agg(*[
-                F.sum(p.cast("long")).alias(s) for s, p in probe
-            ]).collect()[0]
-            worst = max(suffixes, key=lambda s: int(cnts[s] or 0))
-            raise ValueError(
-                f"suffix '*{worst}' matches {int(cnts[worst])} dictionary "
-                f"terms (max_expansions={max_expansions}); lengthen the "
-                "suffix")
-        terms = [r["term"] for r in rows]
-        out: dict[str, list[str]] = {s: [] for s in suffixes}
-        for t in terms:
-            for s in suffixes:
-                if t.endswith(s):
-                    out[s].append(t)
-        for s, ts in out.items():
-            if len(ts) > max_expansions:
-                raise ValueError(
-                    f"suffix '*{s}' matches {len(ts)} dictionary terms "
-                    f"(max_expansions={max_expansions}); lengthen the "
-                    "suffix")
-            ts.sort()
-        return out
-
-    def _trigram_current(self) -> bool:
-        """May the trigram term dictionary (``build_trigram``) be
-        trusted for THIS index snapshot? Same fingerprint-chain check as
-        ``_term_rev_current``: stale -> full-dictionary fallback."""
-        from ..lineage import stage_fingerprint
-
-        sfx = self._sfx()
-        meta = self.store.table_meta(f"term_trigram{sfx}") or {}
-        if not meta:
-            return False
-        expected = stage_fingerprint(
-            f"term_trigram{sfx}", self.cfg.fingerprint() + f"/{self.field}",
-            [(self.store.table_meta(f"term_stats{sfx}") or {})
-             .get("data_uuid", "")])
-        return meta.get("fingerprint", "") == expected
+        return stage_current(self.store, f"{table}{sfx}",
+                             self.cfg.fingerprint() + f"/{self.field}",
+                             [f"{t}{sfx}" for t in self._SIDE_INPUTS[table]])
 
     @staticmethod
     def _trigrams(stem: str) -> list[str]:
         return sorted({stem[i:i + 3] for i in range(len(stem) - 2)})
-
-    def _expand_contains(self, stems: list[str],
-                         max_expansions: int = 256
-                         ) -> dict[str, list[str]]:
-        """Infix stem -> matching dictionary terms. Fast path: the
-        ``term_trigram`` side table (``IndexBuilder.build_trigram`` —
-        the pg_trgm plan for ``LIKE '%word%'``): scan ONLY the stems'
-        own trigram rows (``tri_bucket`` partition pruning + ``trigram
-        IN`` parquet pushdown), keep terms carrying ALL trigrams of a
-        stem (one conditional-count agg over the pruned rows), verify
-        ``contains`` driver-side (trigram containment ignores order —
-        necessary, not sufficient). Fallback (table missing or stale):
-        ONE full term_stats scan with ``contains`` — the seq scan
-        Postgres runs without the pg_trgm index. Both paths share the
-        pigeonhole-capped refusal before any unbounded collect."""
-        if not stems:
-            return {}
-        sfx = self._sfx()
-        cap = max_expansions * len(stems)
-        if self._trigram_current():
-            tris = {s: self._trigrams(s) for s in stems}
-            all_tris = sorted({t for ts in tris.values() for t in ts})
-            buckets = sorted({ord(t[0]) % self.cfg.n_term_buckets
-                              for t in all_tris})
-            scan = (self.store.read(f"term_trigram{sfx}")
-                    .filter(F.col("tri_bucket").isin(buckets))
-                    .filter(F.col("trigram").isin(all_tris)))
-            agg = scan.groupBy("term").agg(*[
-                F.sum(F.col("trigram").isin(tris[s]).cast("int"))
-                .alias(f"c{i}") for i, s in enumerate(stems)])
-            pred = None
-            for i, s in enumerate(stems):
-                p = F.col(f"c{i}") == len(tris[s])
-                pred = p if pred is None else (pred | p)
-            rows = agg.filter(pred).select("term").limit(cap + 1).collect()
-        else:
-            scan = self.store.read(f"term_stats{sfx}").select("term")
-            pred = F.col("term").contains(stems[0])
-            for s in stems[1:]:
-                pred = pred | F.col("term").contains(s)
-            rows = scan.filter(pred).limit(cap + 1).collect()
-        if len(rows) > cap:
-            raise ValueError(
-                f"infix wildcards {stems} match more than {cap} dictionary "
-                f"terms (max_expansions={max_expansions}); lengthen the "
-                "stem")
-        out: dict[str, list[str]] = {s: [] for s in stems}
-        for r in rows:
-            t = r["term"]
-            for s in stems:
-                if s in t:  # the contains verify (exact on both paths)
-                    out[s].append(t)
-        for s, ts in out.items():
-            if len(ts) > max_expansions:
-                raise ValueError(
-                    f"infix wildcard '*{s}*' matches {len(ts)} dictionary "
-                    f"terms (max_expansions={max_expansions}); lengthen "
-                    "the stem")
-            ts.sort()
-        return out
 
     _REX_META = set("\\.^$*+?()[]{}|")
 
@@ -1289,53 +1119,128 @@ class QueryEngine:
             out.append(ch)
         return "".join(out)
 
-    def _expand_regex(self, patterns: list[str],
-                      max_expansions: int = 256
-                      ) -> dict[str, list[str]]:
-        """Regex term -> matching dictionary terms (Lucene RegexpQuery
-        semantics: the pattern must match the ENTIRE term). ONE
-        dictionary scan evaluates every pattern as a JVM ``rlike``
-        column (dialect = java.util.regex, the engine's documented
-        choice, as Postgres ``~`` is POSIX and Lucene is its own);
-        membership per pattern comes from the SAME JVM evaluation — no
-        cross-dialect reassignment. Patterns with a literal prefix add
-        ``StartsWith`` to the scan filter, which pushes to parquet as a
-        min/max row-group range on the term-sorted dictionary (the X34
-        prefix plan); a prefix-less pattern is the full-dictionary scan
-        Lucene pays for ``.*foo.*`` regexps. Pigeonhole-capped refusal
-        BEFORE any unbounded collect, like every wildcard kind."""
-        if not patterns:
-            return {}
-        sfx = self._sfx()
-        cap = max_expansions * len(patterns)
-        scan = self.store.read(f"term_stats{sfx}").select("term")
-        cols, pred = [], None
-        for i, pat in enumerate(patterns):
-            m = F.col("term").rlike(f"^(?:{pat})$")
-            prefix = self._regex_literal_prefix(pat)
-            if prefix:
-                m = F.col("term").startswith(prefix) & m
-            cols.append(m.alias(f"m{i}"))
-            pred = m if pred is None else (pred | m)
-        rows = (scan.select("term", *cols).filter(pred)
-                .limit(cap + 1).collect())
-        if len(rows) > cap:
+    @classmethod
+    def _wild_prefix(cls, wild: tuple[str, str]) -> str:
+        """The literal prefix every match of ``wild`` starts with."""
+        kind, pat = wild
+        return {"prefix": pat,
+                "regex": cls._regex_literal_prefix(pat)}.get(kind, "")
+
+    @classmethod
+    def _wild_member(cls, wild: tuple[str, str]):
+        """``wild``'s membership column over ``term`` (JVM-evaluated)."""
+        kind, pat = wild
+        term = F.col("term")
+        if kind == "prefix":
+            return term.startswith(pat)
+        if kind == "suffix":
+            return term.endswith(pat)
+        if kind == "contains":
+            return term.contains(pat)
+        m = term.rlike(f"^(?:{pat})$")
+        prefix = cls._regex_literal_prefix(pat)
+        return term.startswith(prefix) & m if prefix else m
+
+    def _wild_source(self, table: str, wilds: list) -> DataFrame:
+        """The ``term`` rows of ``table`` that may match one of ``wilds``,
+        pruned as far as the table allows:
+
+        * ``term_rev`` (``build_suffix``, sorted by reversed term): a
+          leading wildcard becomes ``StartsWith(term_rev)``, a parquet
+          min/max row-group range — Lucene's ReverseStringFilter;
+        * ``term_trigram`` (``build_trigram``, pg_trgm's plan for
+          ``LIKE '%word%'``): the stems' own trigram rows
+          (``tri_bucket`` partition pruning + ``trigram IN`` pushdown),
+          grouped to the terms carrying ALL trigrams of some stem — a
+          superset of the matches, since trigram containment ignores
+          order;
+        * ``term_stats``: when every wildcard has a literal prefix,
+          ``StartsWith`` pushes to parquet as a range on the term-sorted
+          dictionary; otherwise the full-dictionary scan Postgres and
+          Lucene pay without those side tables."""
+        src = self.store.read(f"{table}{self._sfx()}")
+        if table == "term_rev":
+            return src.filter(_any_of(F.col("term_rev").startswith(p[::-1])
+                                      for _, p in wilds)).select("term")
+        if table == "term_trigram":
+            tris = [self._trigrams(p) for _, p in wilds]
+            flat = sorted({t for ts in tris for t in ts})
+            cnt = src.filter(F.col("tri_bucket").isin(sorted(
+                {ord(t[0]) % self.cfg.n_term_buckets for t in flat}))) \
+                .filter(F.col("trigram").isin(flat)) \
+                .groupBy("term").agg(*[
+                    F.sum(F.col("trigram").isin(ts).cast("int"))
+                    .alias(f"c{i}") for i, ts in enumerate(tris)])
+            return cnt.filter(_any_of(F.col(f"c{i}") == len(ts)
+                                      for i, ts in enumerate(tris))
+                              ).select("term")
+        prefixes = [self._wild_prefix(w) for w in wilds]
+        src = src.select("term")
+        if all(prefixes):
+            src = src.filter(_any_of(F.col("term").startswith(p)
+                                     for p in prefixes))
+        return src
+
+    def _expand_wildcards(self, wilds, max_expansions: int = 256
+                          ) -> dict[tuple[str, str], list[str]]:
+        """Wildcard item ``(kind, pattern)`` → its dictionary terms,
+        sorted. ``kind``: ``prefix`` (``word*``), ``suffix`` (``*word``),
+        ``contains`` (``*word*``) or ``regex`` (``/pattern/``, Lucene
+        RegexpQuery semantics: the pattern must match the ENTIRE term;
+        dialect java.util.regex, as Postgres ``~`` is POSIX and Lucene is
+        its own).
+
+        Each wildcard reads the most pruned source current for this
+        snapshot (:meth:`_wild_source`): ``term_rev`` for a suffix,
+        ``term_trigram`` for an infix, ``term_stats`` otherwise. Its
+        membership is one JVM column over ``term`` (:meth:`_wild_member`)
+        evaluated BEFORE the driver collect, so no term is re-matched in
+        Python and a candidate that is not a match never counts.
+
+        Wildcards sharing a source share ONE collect, bounded before it
+        is paid: at most ``max_expansions`` matches per wildcard can be
+        legal, so more than ``cap = max_expansions · |wildcards|`` rows
+        means some wildcard exceeds it (pigeonhole) — one aggregation of
+        the membership columns names the worst, and the expansion is
+        refused, never silently truncated (``a*`` over a web-scale
+        dictionary must not OOM the driver on its way to the refusal;
+        Postgres would silently degrade into an enormous OR). Under the
+        cap each wildcard is still held to ``max_expansions``."""
+        from .boolean import wild_label
+
+        wilds = sorted(set(wilds))
+        side = {"suffix": "term_rev", "contains": "term_trigram"}
+        current = {t: self._side_current(t)
+                   for t in {side[k] for k, _ in wilds if k in side}}
+        by_source: dict[str, list] = {}
+        for w in wilds:
+            table = side.get(w[0], "term_stats")
+            by_source.setdefault(table if current.get(table) else
+                                 "term_stats", []).append(w)
+
+        def refuse(w, n):
             raise ValueError(
-                f"regex terms {patterns} match more than {cap} dictionary "
-                f"terms (max_expansions={max_expansions}); tighten the "
-                "pattern")
-        out: dict[str, list[str]] = {p: [] for p in patterns}
-        for r in rows:
-            for i, pat in enumerate(patterns):
-                if r[f"m{i}"]:
-                    out[pat].append(r["term"])
-        for p, ts in out.items():
-            if len(ts) > max_expansions:
-                raise ValueError(
-                    f"regex term /{p}/ matches {len(ts)} dictionary "
-                    f"terms (max_expansions={max_expansions}); tighten "
-                    "the pattern")
-            ts.sort()
+                f"wildcard {wild_label(w)} matches {n} dictionary terms "
+                f"(max_expansions={max_expansions}); narrow the wildcard")
+
+        out: dict[tuple[str, str], list[str]] = {}
+        for table, ws in by_source.items():
+            members = [self._wild_member(w) for w in ws]
+            matched = self._wild_source(table, ws).select(
+                "term", *[m.alias(f"m{i}") for i, m in enumerate(members)]
+            ).filter(_any_of(members))
+            cap = max_expansions * len(ws)
+            rows = matched.limit(cap + 1).collect()
+            if len(rows) > cap:
+                cnts = matched.agg(*[
+                    F.sum(F.col(f"m{i}").cast("long")).alias(f"m{i}")
+                    for i in range(len(ws))]).collect()[0]
+                i = max(range(len(ws)), key=lambda i: cnts[f"m{i}"] or 0)
+                refuse(ws[i], int(cnts[f"m{i}"]))
+            for i, w in enumerate(ws):
+                out[w] = sorted(r["term"] for r in rows if r[f"m{i}"])
+                if len(out[w]) > max_expansions:
+                    refuse(w, len(out[w]))
         return out
 
     _BOOL_EMPTY = "partition_id int, doc_id long, score double"
@@ -1370,22 +1275,10 @@ class QueryEngine:
             clauses = rewrite_clauses(clauses, synonyms)
         if not clauses:
             return self._empty(self._BOOL_EMPTY)
-        prefixes = sorted({p for c in clauses
-                           for p in c.req_prefixes + c.neg_prefixes})
-        expansions = self._expand_prefixes(prefixes)
-        suffixes = sorted({s for c in clauses
-                           for s in c.req_suffixes + c.neg_suffixes})
-        sfx_exp = self._expand_suffixes(suffixes)
-        contains = sorted({s for c in clauses
-                           for s in c.req_contains + c.neg_contains})
-        ctn_exp = self._expand_contains(contains)
-        regexes = sorted({p for c in clauses
-                          for p in c.req_regex + c.neg_regex})
-        rex_exp = self._expand_regex(regexes)
-        pos = positive_terms(clauses, expansions, sfx_exp, ctn_exp,
-                             rex_exp)
-        needed = scan_terms(clauses, expansions, sfx_exp, ctn_exp,
-                            rex_exp)
+        expansions = self._expand_wildcards(
+            [w for c in clauses for w in c.req_wild + c.neg_wild])
+        pos = positive_terms(clauses, expansions)
+        needed = scan_terms(clauses, expansions)
         stats = self.corpus_stats()
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
         if not pos or avgdl <= 0:
@@ -1393,15 +1286,9 @@ class QueryEngine:
 
         clauses_c = [{
             "req": ([(t,) for t in c.req_terms]
-                    + [tuple(expansions.get(p, ())) for p in c.req_prefixes]
-                    + [tuple(sfx_exp.get(s, ())) for s in c.req_suffixes]
-                    + [tuple(ctn_exp.get(s, ())) for s in c.req_contains]
-                    + [tuple(rex_exp.get(p, ())) for p in c.req_regex]),
+                    + [tuple(expansions[w]) for w in c.req_wild]),
             "neg": ([(t,) for t in c.neg_terms]
-                    + [tuple(expansions.get(p, ())) for p in c.neg_prefixes]
-                    + [tuple(sfx_exp.get(s, ())) for s in c.neg_suffixes]
-                    + [tuple(ctn_exp.get(s, ())) for s in c.neg_contains]
-                    + [tuple(rex_exp.get(p, ())) for p in c.neg_regex]),
+                    + [tuple(expansions[w]) for w in c.neg_wild]),
             "req_phrases": list(c.req_phrases),
             "neg_phrases": list(c.neg_phrases),
         } for c in clauses]
@@ -2046,9 +1933,8 @@ class QueryEngine:
             query, cfg.max_token_len, cfg.min_token_len,
             cfg.analyzer)) | set(exp)))
         boosts = {t: float(boost) for t in exp}
-        return (self._batch_wand_ranked([expanded], k=k,
-                                        term_boosts=boosts)
-                .select("doc_id", "score"))
+        return self.spark.createDataFrame(self._query_hits(
+            expanded, k=k, term_boosts=boosts)).select("doc_id", "score")
 
     def prf_top_k(self, query: str, k: int = 10, **kw
                   ) -> list[tuple[int, float]]:
@@ -2062,9 +1948,9 @@ class QueryEngine:
         syntax (parsed by :func:`parse_term_boosts`), or explicit
         ``boosts`` keyed by analyzed term. weight = boost·idf rides the
         WAND kernel's existing per-term hook (the PRF path's mechanism,
-        wand.py:414-422): boosts only scale cursor upper bounds, so
-        block-max pruning stays EXACT. No boosts ⇒ identical plan and
-        floats to :meth:`wand_top_k_df`."""
+        :func:`..wand._wand_bucket_kernel`): boosts only scale cursor
+        upper bounds, so block-max pruning stays EXACT. No boosts ⇒
+        identical plan and floats to :meth:`wand_top_k_df`."""
         cfg = self.cfg
         if boosts is None:
             query, boosts = parse_term_boosts(
@@ -2073,9 +1959,8 @@ class QueryEngine:
         if not boosts:
             return self.wand_top_k_df(query, k=k).select(
                 "doc_id", "score")
-        return (self._batch_wand_ranked([query], k=k,
-                                        term_boosts=boosts)
-                .select("doc_id", "score"))
+        return self.spark.createDataFrame(self._query_hits(
+            query, k=k, term_boosts=boosts)).select("doc_id", "score")
 
     def term_boosted_top_k(self, query: str, k: int = 10,
                            boosts: dict[str, float] | None = None
@@ -3310,26 +3195,12 @@ class QueryEngine:
 
     def _champions_current(self) -> bool:
         """May the champion table (plans/champions.py) be trusted for THIS
-        index snapshot? Mirrors ``IndexBuilder._postings_current``: the
-        committed fingerprint must chain on the CURRENT postings and
-        corpus_stats data_uuids under this config — a merge, delete, or
+        index snapshot (:meth:`_side_current`)? A merge, delete, or
         layout migration that rebuilt postings without re-running
         ``build_champions`` leaves a stale table whose partial scores
         could EXCEED the new true scores and over-prune, so staleness
         falls back to the unseeded (still exact) path."""
-        from ..lineage import stage_fingerprint
-
-        sfx = self._sfx()
-        meta = self.store.table_meta(f"champions{sfx}") or {}
-        if not meta:
-            return False
-        expected = stage_fingerprint(
-            f"champions{sfx}", self.cfg.fingerprint() + f"/{self.field}",
-            [(self.store.table_meta(f"postings{sfx}") or {})
-             .get("data_uuid", ""),
-             (self.store.table_meta(f"corpus_stats{sfx}") or {})
-             .get("data_uuid", "")])
-        return meta.get("fingerprint", "") == expected
+        return self._side_current("champions")
 
     def _champion_partials(self, qterms: list[str]) -> dict[int, float]:
         """doc_id → lower-bound partial score over the query terms'

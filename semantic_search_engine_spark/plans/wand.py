@@ -586,10 +586,7 @@ def _wand_bucket_kernel(terms: list[str], k: int, k1: float, b: float,
 
 def make_dense_ranker(query_terms: "dict[tuple[int, ...], list[str]]",
                       k: int, k1: float, b: float, avgdl: float,
-                      idf: dict[str, float], min_score: float = 0.0,
-                      after: "tuple[float, int] | None" = None,
-                      term_boosts: "dict[str, float] | None" = None,
-                      min_match: int = 1):
+                      idf: dict[str, float], min_match: int = 1):
     """The batch kernel: ``rank(table, allowed=None)`` scores EVERY query
     of a batch over one Arrow table of posting blocks (any set of doc
     buckets) in one vectorized BM25 pass and returns ``(query_id,
@@ -605,15 +602,15 @@ def make_dense_ranker(query_terms: "dict[tuple[int, ...], list[str]]",
 
     The pass: (1) decode every block once
     (:func:`..functions.varbyte.decode_block_table`); (2) each posting's
-    contribution ``w * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))``
-    with ``w = boost * idf``, :meth:`BlockCursor.contrib`'s op order
-    elementwise; (3) per query, add its terms' contributions into a
-    zeroed per-doc array in sorted-term order — ``0.0 + c`` is exact, so
-    each doc's sum is the oracle's float sum — and count its matching
-    terms; (4) mask ``min_match`` (≥ 1: a candidate matches a term),
-    ``min_score`` (inclusive), ``after`` and ``allowed`` exactly as
-    :func:`wand_top_k` disqualifies candidates, then take the top-k
-    (``np.partition`` to the k-th score, ties kept, then ``lexsort``).
+    contribution ``idf * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))``,
+    :meth:`BlockCursor.contrib`'s op order elementwise; (3) per query,
+    add its terms' contributions into a zeroed per-doc array in
+    sorted-term order — ``0.0 + c`` is exact, so each doc's sum is the
+    oracle's float sum — and count its matching terms; (4) mask
+    ``min_match`` (≥ 1: a candidate matches a term) and ``allowed``
+    exactly as :func:`wand_top_k` disqualifies candidates, then take the
+    top-k (``np.partition`` to the k-th score, ties kept, then
+    ``lexsort``).
 
     The result equals the per-bucket :func:`wand_top_k` calls plus a
     (score DESC, doc_id ASC) merge bit for bit: WAND prunes only docs
@@ -640,8 +637,7 @@ def make_dense_ranker(query_terms: "dict[tuple[int, ...], list[str]]",
             term = terms[lo]
             if term in idf:
                 span[term] = slice(int(starts[lo]), int(starts[hi]))
-                w_block[lo:hi] = ((term_boosts.get(term, 1.0) * idf[term])
-                                  if term_boosts else idf[term])
+                w_block[lo:hi] = idf[term]
         tf = tfs.astype(np.float64)
         dl = dls.astype(np.float64)
         contrib = np.repeat(w_block, counts) * (
@@ -660,10 +656,7 @@ def make_dense_ranker(query_terms: "dict[tuple[int, ...], list[str]]",
                     at = slot[span[term]]
                     score[at] += contrib[span[term]]
                     n_match[at] += 1
-            keep = (n_match >= max(min_match, 1)) & (score >= min_score)
-            if after is not None:
-                keep &= (score < after[0]) | ((score == after[0])
-                                              & (docs > after[1]))
+            keep = n_match >= max(min_match, 1)
             if ok is not None:
                 keep &= ok
             cand = np.flatnonzero(keep)

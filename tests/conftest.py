@@ -10,6 +10,10 @@ from semantic_search_engine_spark.oracle import OracleIndex
 
 TINY_N = 200
 
+#: the small-bucket layout of the boolean and wildcard test modules
+TINY_CFG = EngineConfig(n_doc_buckets=4, n_term_buckets=4,
+                        shuffle_partitions=4, block_size=16)
+
 
 @pytest.fixture(scope="session")
 def tiny_rows():
@@ -46,6 +50,25 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def tiny_engine(spark, tiny_corpus_dir, tmp_path_factory):
+    """A QueryEngine over the tiny corpus built under ``TINY_CFG``, with
+    its reverse (``build_suffix``) and trigram (``build_trigram``) term
+    dictionaries: one build shared by every module that only reads it.
+    A test that writes to its index builds its own."""
+    from semantic_search_engine_spark.plans.build_index import IndexBuilder
+    from semantic_search_engine_spark.plans.query import QueryEngine
+    from semantic_search_engine_spark.sources.store import HadoopTableStore
+
+    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_tiny")))
+    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
+    b = IndexBuilder(spark, store, TINY_CFG)
+    b.build(docs)
+    b.build_suffix()
+    b.build_trigram()
+    return QueryEngine(spark, store, TINY_CFG)
 
 
 @pytest.fixture

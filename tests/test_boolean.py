@@ -3,16 +3,10 @@ phrase/prefix/negation paths, facet counts."""
 from __future__ import annotations
 
 import pytest
+from conftest import TINY_CFG as CFG
 
-from semantic_search_engine_spark.config import EngineConfig
 from semantic_search_engine_spark.oracle import OracleIndex
 from semantic_search_engine_spark.plans.boolean import parse_websearch
-from semantic_search_engine_spark.plans.build_index import IndexBuilder
-from semantic_search_engine_spark.plans.query import QueryEngine
-from semantic_search_engine_spark.sources.store import HadoopTableStore
-
-CFG = EngineConfig(n_doc_buckets=4, n_term_buckets=4,
-                   shuffle_partitions=4, block_size=16)
 
 
 # ---------------------------------------------------------------- parser
@@ -32,7 +26,7 @@ def test_parse_negation_phrase_prefix():
     (c,) = parse_websearch('-zoo "big cat" speed* -"night shift"')
     assert c.neg_terms == ("zoo",)
     assert c.req_phrases == (("big", "cat"),)
-    assert c.req_prefixes == ("speed",)
+    assert c.req_wild == (("prefix", "speed"),)
     assert c.neg_phrases == (("night", "shift"),)
     # phrase terms double as required terms
     assert set(c.req_terms) >= {"big", "cat"}
@@ -65,11 +59,8 @@ def test_parse_empty_and_or_only():
 # ------------------------------------------------------------ kernel vs oracle
 
 @pytest.fixture(scope="module")
-def built_bool(spark, tiny_corpus_dir, tmp_path_factory):
-    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_bool")))
-    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
-    IndexBuilder(spark, store, CFG).build(docs)
-    return QueryEngine(spark, store, CFG)
+def built_bool(tiny_engine):
+    return tiny_engine
 
 
 @pytest.fixture(scope="module")
@@ -133,7 +124,7 @@ def test_boolean_prefix_expansion(built_bool, bool_oracle):
 def test_boolean_prefix_expansion_cap(built_bool):
     # the synthetic vocabulary has thousands of w-prefixed tail terms
     with pytest.raises(ValueError, match="max_expansions"):
-        built_bool._expand_prefixes(["w"], max_expansions=1)
+        built_bool._expand_wildcards([("prefix", "w")], max_expansions=1)
 
 
 def _doc_with_phrase(oracle):

@@ -205,8 +205,9 @@ def fed_engine(spark, wand_engine, tmp_path_factory):
 @pytest.mark.parametrize("lang,n_jobs", [
     # one collect of the union of both indexes' pruned postings scans
     (None, 1),
-    # ... then each index's filter survivors of its posting buckets
-    ("en", 3),
+    # ... then ONE union read of every index's filter survivors of its
+    # posting buckets
+    ("en", 2),
 ], ids=["bare", "filtered"])
 def test_federated_top_k_ranks_on_driver(spark, fed_engine, collected_plans,
                                          lang, n_jobs):
@@ -222,6 +223,20 @@ def test_federated_top_k_ranks_on_driver(spark, fed_engine, collected_plans,
     for plan in collected_plans:
         for node in ("Python", "Arrow", "Pandas", "ExistingRDD"):
             assert node not in plan, (node, plan)
+
+
+@pytest.mark.parametrize("lang,n_jobs", [(None, 2), ("en", 3)],
+                         ids=["bare", "filtered"])
+def test_federated_search_hydrates_in_one_read(spark, fed_engine, lang,
+                                               n_jobs):
+    """Federated ``search`` adds ONE doc_meta read to the ranking jobs:
+    the union of every owning index's hit buckets, whatever the number
+    of indexes holding hits."""
+    results = fed_engine.search(Q, k=100, lang=lang)["results"]
+    assert {r["index"] for r in results} == {0, 1}
+    assert all(r["url"] for r in results)
+    jobs = _jobs(spark, lambda: fed_engine.search(Q, k=100, lang=lang))
+    assert len(jobs) == n_jobs, jobs
 
 
 def test_filtered_batch_runs_the_arrow_runner(spark, wand_engine):

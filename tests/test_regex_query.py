@@ -6,25 +6,20 @@ the engine's documented dialect is the JVM's."""
 from __future__ import annotations
 
 import pytest
+from conftest import TINY_CFG as CFG
 
-from semantic_search_engine_spark.config import EngineConfig
 from semantic_search_engine_spark.oracle import OracleIndex
 from semantic_search_engine_spark.plans.boolean import parse_websearch
-from semantic_search_engine_spark.plans.build_index import IndexBuilder
 from semantic_search_engine_spark.plans.query import QueryEngine
-from semantic_search_engine_spark.sources.store import HadoopTableStore
-
-CFG = EngineConfig(n_doc_buckets=4, n_term_buckets=4,
-                   shuffle_partitions=4, block_size=16)
 
 
 # ---------------------------------------------------------------- parser
 
 def test_parse_regex_terms():
     (c,) = parse_websearch("/zipf.*/ ok")
-    assert c.req_regex == ("zipf.*",) and c.req_terms == ("ok",)
+    assert c.req_wild == (("regex", "zipf.*"),) and c.req_terms == ("ok",)
     (c,) = parse_websearch("ok -/foo[0-9]+/")
-    assert c.neg_regex == ("foo[0-9]+",) and c.req_terms == ("ok",)
+    assert c.neg_wild == (("regex", "foo[0-9]+"),) and c.req_terms == ("ok",)
 
 
 def test_parse_regex_invalid_refused():
@@ -34,7 +29,7 @@ def test_parse_regex_invalid_refused():
 
 def test_parse_regex_or_clauses():
     cs = parse_websearch("/a+/ OR /b+/")
-    assert [c.req_regex for c in cs] == [("a+",), ("b+",)]
+    assert [c.req_wild for c in cs] == [(("regex", "a+"),), (("regex", "b+"),)]
 
 
 def test_literal_prefix_extraction():
@@ -51,11 +46,8 @@ def test_literal_prefix_extraction():
 # ---------------------------------------------------------- expansion
 
 @pytest.fixture(scope="module")
-def built(spark, tiny_corpus_dir, tmp_path_factory):
-    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_rex")))
-    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
-    IndexBuilder(spark, store, CFG).build(docs)
-    return QueryEngine(spark, store, CFG)
+def built(tiny_engine):
+    return tiny_engine
 
 
 @pytest.fixture(scope="module")
@@ -68,27 +60,54 @@ def test_expansion_matches_python_re(built, rex_oracle):
     pat = "zipfhead[0-9]"
     want = sorted(t for t in rex_oracle.postings if re.fullmatch(pat, t))
     assert len(want) >= 2
-    assert built._expand_regex([pat]) == {pat: want}
+    assert built._expand_wildcards([("regex", pat)]) == {("regex", pat): want}
 
 
 def test_expansion_multiple_patterns_assigned_independently(built,
                                                             rex_oracle):
     import re
     pats = ["zipfhead[0-9]", "zipf.*[02468]"]
-    got = built._expand_regex(pats)
+    got = built._expand_wildcards([("regex", p) for p in pats])
     for p in pats:
         want = sorted(t for t in rex_oracle.postings if re.fullmatch(p, t))
-        assert got[p] == want, p
+        assert got[("regex", p)] == want, p
 
 
 def test_expansion_cap_refusal(built):
     with pytest.raises(ValueError, match="max_expansions"):
-        built._expand_regex([".*"], max_expansions=5)
+        built._expand_wildcards([("regex", ".*")], max_expansions=5)
+
+
+def test_expansion_refusal_names_the_wildcard(built, rex_oracle):
+    import re
+    pat = "zipfhead[0-9]"
+    n = sum(re.fullmatch(pat, t) is not None for t in rex_oracle.postings)
+    with pytest.raises(ValueError,
+                       match=re.escape(f"/{pat}/ matches {n} dictionary")):
+        built._expand_wildcards([("regex", pat)], max_expansions=1)
+
+
+def test_mixed_kinds_share_one_collect(built, rex_oracle, collected_plans):
+    """A regex and a prefix both read term_stats: ONE capped driver
+    collect serves both (one per kind before), and each wildcard's
+    membership comes from that same JVM evaluation."""
+    import re
+    got = built._expand_wildcards([("regex", "zipfhead[02]"),
+                                   ("prefix", "zipfhead1")])
+    assert len(collected_plans) == 1, collected_plans
+    assert "term_stats" in collected_plans[0], collected_plans[0]
+    vocab = sorted(rex_oracle.postings)
+    assert got == {
+        ("regex", "zipfhead[02]"):
+            [t for t in vocab if re.fullmatch("zipfhead[02]", t)],
+        ("prefix", "zipfhead1"): [t for t in vocab
+                                  if t.startswith("zipfhead1")]}
+    assert all(got.values())
 
 
 def test_expansion_no_match_empty(built):
-    assert built._expand_regex(["qqqzzz[0-9]{4}"]) == \
-        {"qqqzzz[0-9]{4}": []}
+    assert built._expand_wildcards([("regex", "qqqzzz[0-9]{4}")]) == \
+        {("regex", "qqqzzz[0-9]{4}"): []}
 
 
 # ------------------------------------------------------------- end-to-end

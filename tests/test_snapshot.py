@@ -49,9 +49,9 @@ def test_snapshot_restore_bit_identical(spark, built, tmp_path_factory):
          .collect()]
     assert a == b and len(a) == 10
     # fingerprint chain carried -> the suffix dictionary still trusted
-    assert dst._term_rev_current()
-    got = dst._expand_suffixes(["head0"])
-    assert got == src._expand_suffixes(["head0"])
+    assert dst._side_current("term_rev")
+    got = dst._expand_wildcards([("suffix", "head0")])
+    assert got == src._expand_wildcards([("suffix", "head0")])
 
 
 def test_second_snapshot_reuses_pool(spark, built, tmp_path_factory):

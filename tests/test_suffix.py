@@ -8,58 +8,54 @@ oracle.
 from __future__ import annotations
 
 import pytest
+from conftest import TINY_CFG as CFG
 
-from semantic_search_engine_spark.config import EngineConfig
 from semantic_search_engine_spark.oracle import OracleIndex
 from semantic_search_engine_spark.plans.boolean import parse_websearch
 from semantic_search_engine_spark.plans.build_index import IndexBuilder
 from semantic_search_engine_spark.plans.query import QueryEngine
 from semantic_search_engine_spark.sources.store import HadoopTableStore
 
-CFG = EngineConfig(n_doc_buckets=4, n_term_buckets=4,
-                   shuffle_partitions=4, block_size=16)
-
 
 # ---------------------------------------------------------------- parser
 
 def test_parse_suffix_item():
     (c,) = parse_websearch("*ing other")
-    assert c.req_suffixes == ("ing",)
+    assert c.req_wild == (("suffix", "ing"),)
     assert c.req_terms == ("other",)
-    assert not c.req_prefixes
 
 
 def test_parse_suffix_negation():
     (c,) = parse_websearch("word -*ing")
-    assert c.neg_suffixes == ("ing",)
+    assert c.neg_wild == (("suffix", "ing"),)
     assert c.req_terms == ("word",)
 
 
 def test_parse_infix_short_stem_refused():
-    # infix parses into req_contains/neg_contains (X65) — but stems
+    # infix parses into a ("contains", stem) wildcard (X65) — but stems
     # shorter than a trigram are refused, and multi-token cores too
     with pytest.raises(ValueError, match="trigram"):
         parse_websearch("*ab*")
     with pytest.raises(ValueError, match="several terms"):
         parse_websearch("*data-pipeline*")
     (c,) = parse_websearch("*foo* ok")
-    assert c.req_contains == ("foo",) and c.req_terms == ("ok",)
+    assert c.req_wild == (("contains", "foo"),) and c.req_terms == ("ok",)
     (c,) = parse_websearch("ok -*bar*")
-    assert c.neg_contains == ("bar",) and c.req_terms == ("ok",)
+    assert c.neg_wild == (("contains", "bar"),) and c.req_terms == ("ok",)
 
 
 def test_parse_bare_star_skipped():
     assert parse_websearch("*") == []
     assert parse_websearch("**") == []
     (c,) = parse_websearch("* word")
-    assert c.req_terms == ("word",) and not c.req_suffixes
+    assert c.req_terms == ("word",) and not c.req_wild
 
 
 def test_parse_multi_token_suffix_word():
     # the FIRST token carries the leading wildcard; the rest are plain
     # required terms (mirror of the prefix rule, which marks the LAST)
     (c,) = parse_websearch("*data-pipeline")
-    assert c.req_suffixes == ("data",)
+    assert c.req_wild == (("suffix", "data"),)
     assert c.req_terms == ("pipeline",)
 
 
@@ -71,13 +67,8 @@ def test_parse_suffix_only_negative_clause_rejected():
 # ------------------------------------------------------- engine fixtures
 
 @pytest.fixture(scope="module")
-def built_sfx(spark, tiny_corpus_dir, tmp_path_factory):
-    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_sfx")))
-    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
-    b = IndexBuilder(spark, store, CFG)
-    b.build(docs)
-    b.build_suffix()
-    return QueryEngine(spark, store, CFG)
+def built_sfx(tiny_engine):
+    return tiny_engine
 
 
 @pytest.fixture(scope="module")
@@ -103,15 +94,15 @@ def _good_suffix(oracle, lo=2, hi=60):
 
 def test_suffix_expansion_matches_endswith(built_sfx, sfx_oracle):
     s = _good_suffix(sfx_oracle)
-    got = built_sfx._expand_suffixes([s])
+    got = built_sfx._expand_wildcards([("suffix", s)])
     want = sorted(t for t in sfx_oracle.postings if t.endswith(s))
-    assert got == {s: want} and len(want) >= 2
+    assert got == {("suffix", s): want} and len(want) >= 2
 
 
 def test_suffix_expansion_uses_reverse_dictionary(built_sfx, sfx_oracle):
     """With build_suffix committed, expansion must take the term_rev
     path and the scan must push StartsWith(term_rev) to parquet."""
-    assert built_sfx._term_rev_current()
+    assert built_sfx._side_current("term_rev")
     from pyspark.sql import functions as F
 
     s = _good_suffix(sfx_oracle)
@@ -126,7 +117,7 @@ def test_suffix_expansion_uses_reverse_dictionary(built_sfx, sfx_oracle):
 def test_suffix_expansion_cap_refusal(built_sfx, sfx_oracle):
     s = _good_suffix(sfx_oracle)  # matches >= 2 dictionary terms
     with pytest.raises(ValueError, match="max_expansions"):
-        built_sfx._expand_suffixes([s], max_expansions=1)
+        built_sfx._expand_wildcards([("suffix", s)], max_expansions=1)
 
 
 def test_suffix_fallback_without_table(spark, tiny_corpus_dir,
@@ -138,10 +129,10 @@ def test_suffix_fallback_without_table(spark, tiny_corpus_dir,
     docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
     IndexBuilder(spark, store, CFG).build(docs)
     qe = QueryEngine(spark, store, CFG)
-    assert not qe._term_rev_current()
+    assert not qe._side_current("term_rev")
     s = _good_suffix(sfx_oracle)
     want = sorted(t for t in sfx_oracle.postings if t.endswith(s))
-    assert qe._expand_suffixes([s]) == {s: want}
+    assert qe._expand_wildcards([("suffix", s)]) == {("suffix", s): want}
 
 
 def test_suffix_stale_dictionary_falls_back(spark, tiny_corpus_dir,
@@ -155,15 +146,15 @@ def test_suffix_stale_dictionary_falls_back(spark, tiny_corpus_dir,
     b.build(docs)
     b.build_suffix()
     qe = QueryEngine(spark, store, CFG)
-    assert qe._term_rev_current()
+    assert qe._side_current("term_rev")
     ts = store.read("term_stats").collect()
     store.write("term_stats",
                 spark.createDataFrame(ts, store.read("term_stats").schema))
     qe = QueryEngine(spark, store, CFG)
-    assert not qe._term_rev_current()
+    assert not qe._side_current("term_rev")
     s = _good_suffix(sfx_oracle)
     want = sorted(t for t in sfx_oracle.postings if t.endswith(s))
-    assert qe._expand_suffixes([s]) == {s: want}
+    assert qe._expand_wildcards([("suffix", s)]) == {("suffix", s): want}
 
 
 # ------------------------------------------------------------ end-to-end

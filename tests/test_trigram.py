@@ -7,26 +7,20 @@ end-to-end boolean retrieval vs the naive oracle.
 """
 from __future__ import annotations
 
-import pytest
+import re
 
-from semantic_search_engine_spark.config import EngineConfig
+import pytest
+from conftest import TINY_CFG as CFG
+
 from semantic_search_engine_spark.oracle import OracleIndex
 from semantic_search_engine_spark.plans.build_index import IndexBuilder
 from semantic_search_engine_spark.plans.query import QueryEngine
 from semantic_search_engine_spark.sources.store import HadoopTableStore
 
-CFG = EngineConfig(n_doc_buckets=4, n_term_buckets=4,
-                   shuffle_partitions=4, block_size=16)
-
 
 @pytest.fixture(scope="module")
-def built_tri(spark, tiny_corpus_dir, tmp_path_factory):
-    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_tri")))
-    docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
-    b = IndexBuilder(spark, store, CFG)
-    b.build(docs)
-    b.build_trigram()
-    return QueryEngine(spark, store, CFG)
+def built_tri(tiny_engine):
+    return tiny_engine
 
 
 @pytest.fixture(scope="module")
@@ -84,16 +78,16 @@ def test_trigram_requires_base_index(spark, tmp_path_factory):
 
 def test_contains_expansion_matches_oracle(built_tri, tri_oracle):
     s = _good_stem(tri_oracle)
-    got = built_tri._expand_contains([s])
+    got = built_tri._expand_wildcards([("contains", s)])
     want = sorted(t for t in tri_oracle.postings if s in t)
-    assert got == {s: want} and len(want) >= 2
+    assert got == {("contains", s): want} and len(want) >= 2
 
 
 def test_contains_expansion_prunes_partitions(built_tri, tri_oracle):
     """The trigram scan filters tri_bucket with values computed by the
     PLANNER (first byte mod n) — directory-level pruning, asserted on
     the physical plan."""
-    assert built_tri._trigram_current()
+    assert built_tri._side_current("term_trigram")
     from pyspark.sql import functions as F
 
     s = _good_stem(tri_oracle)
@@ -113,16 +107,48 @@ def test_contains_multi_stem_expansion(built_tri, tri_oracle):
     s = _good_stem(tri_oracle)
     vocab = sorted(tri_oracle.postings)
     other = next(t for t in vocab if len(t) >= 4 and s not in t)
-    got = built_tri._expand_contains([s, other])
-    assert got[s] == sorted(t for t in vocab if s in t)
-    assert got[other] == sorted(t for t in vocab if other in t)
-    assert other in got[other]
+    got = built_tri._expand_wildcards([("contains", s), ("contains", other)])
+    assert got[("contains", s)] == sorted(t for t in vocab if s in t)
+    assert got[("contains", other)] == sorted(t for t in vocab if other in t)
+    assert other in got[("contains", other)]
 
 
 def test_contains_expansion_cap_refusal(built_tri, tri_oracle):
     s = _good_stem(tri_oracle)  # matches >= 2 dictionary terms
     with pytest.raises(ValueError, match="max_expansions"):
-        built_tri._expand_contains([s], max_expansions=1)
+        built_tri._expand_wildcards([("contains", s)], max_expansions=1)
+
+
+def test_contains_refusal_names_the_wildcard(built_tri, tri_oracle):
+    s = _good_stem(tri_oracle)
+    n = sum(s in t for t in tri_oracle.postings)
+    with pytest.raises(ValueError,
+                       match=re.escape(f"*{s}* matches {n} dictionary")):
+        built_tri._expand_wildcards([("contains", s)], max_expansions=1)
+
+
+def test_contains_cap_counts_matches_not_candidates(spark,
+                                                    tmp_path_factory):
+    """Trigram candidates are a superset of the matches (containment
+    ignores order): ``abcxbcd`` carries every trigram of ``abcd``
+    without containing it. The cap counts verified matches only, so
+    the stem's one match expands under ``max_expansions=1``."""
+    from pyspark.sql import functions as F
+
+    store = HadoopTableStore(spark,
+                             str(tmp_path_factory.mktemp("wh_tri_cand")))
+    docs = spark.createDataFrame(
+        [("https://a.example/", None, "zabcdz alpha", "en"),
+         ("https://b.example/", None, "abcxbcd beta", "en")],
+        "url string, warc_ts timestamp, text string, lang string"
+    ).withColumn("html", F.lit(None).cast("binary"))
+    b = IndexBuilder(spark, store, CFG)
+    b.build(docs)
+    b.build_trigram()
+    qe = QueryEngine(spark, store, CFG)
+    assert qe._side_current("term_trigram")
+    assert qe._expand_wildcards([("contains", "abcd")], max_expansions=1) \
+        == {("contains", "abcd"): ["zabcdz"]}
 
 
 def test_contains_fallback_without_table(spark, tiny_corpus_dir,
@@ -134,10 +160,10 @@ def test_contains_fallback_without_table(spark, tiny_corpus_dir,
     docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
     IndexBuilder(spark, store, CFG).build(docs)
     qe = QueryEngine(spark, store, CFG)
-    assert not qe._trigram_current()
+    assert not qe._side_current("term_trigram")
     s = _good_stem(tri_oracle)
     want = sorted(t for t in tri_oracle.postings if s in t)
-    assert qe._expand_contains([s]) == {s: want}
+    assert qe._expand_wildcards([("contains", s)]) == {("contains", s): want}
 
 
 def test_contains_stale_dictionary_falls_back(spark, tiny_corpus_dir,
@@ -151,15 +177,15 @@ def test_contains_stale_dictionary_falls_back(spark, tiny_corpus_dir,
     b.build(docs)
     b.build_trigram()
     qe = QueryEngine(spark, store, CFG)
-    assert qe._trigram_current()
+    assert qe._side_current("term_trigram")
     ts = store.read("term_stats").collect()
     store.write("term_stats",
                 spark.createDataFrame(ts, store.read("term_stats").schema))
     qe = QueryEngine(spark, store, CFG)
-    assert not qe._trigram_current()
+    assert not qe._side_current("term_trigram")
     s = _good_stem(tri_oracle)
     want = sorted(t for t in tri_oracle.postings if s in t)
-    assert qe._expand_contains([s]) == {s: want}
+    assert qe._expand_wildcards([("contains", s)]) == {("contains", s): want}
 
 
 # ------------------------------------------------------------- end-to-end

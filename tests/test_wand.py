@@ -222,7 +222,10 @@ def test_dense_batch_kernel_bit_identical_to_bucket_wand(seed, variant):
     returns, for every query and k in {0, 1, 5, 20}, exactly the
     per-bucket wand_top_k results merged by (score DESC, doc_id ASC):
     the same docs, buckets and float scores, under each kernel option
-    the batch core forwards."""
+    the batch core forwards. The single-query options the batch kernel
+    does not take are checked against its exhaustive ranking: boosts
+    fold into its idf (``boost * idf``, the same float), and
+    ``min_score``/``after`` filter its full ranking before the cut."""
     import pyarrow as pa
 
     from semantic_search_engine_spark.plans.wand import (
@@ -275,13 +278,24 @@ def test_dense_batch_kernel_bit_identical_to_bucket_wand(seed, variant):
     elif variant == "allowed_full":
         kw["allowed"] = doc_ids
     allowed = kw.pop("allowed", None)
+    min_score, after = kw.pop("min_score", 0.0), kw.pop("after", None)
+    dense_idf = ({t: boosts.get(t, 1.0) * w for t, w in idf.items()}
+                 if boosts else idf)
+
+    def passes(d, s):
+        return s >= min_score and (after is None or s < after[0] or (
+            s == after[0] and d > after[1]))
+
     for k in (0, 1, 5, 20):
-        got = make_dense_ranker(queries, k, K1, B, avgdl, idf,
-                                term_boosts=boosts, **kw)(table, allowed)
+        got = make_dense_ranker(queries, n_docs if (min_score or after)
+                                else k, K1, B, avgdl, dense_idf,
+                                **kw)(table, allowed)
         for qids, terms in queries.items():
-            want = bucket_wand(terms, k, boosts, allowed=allowed, **kw)
+            want = bucket_wand(terms, k, boosts, allowed=allowed,
+                               min_score=min_score, after=after, **kw)
             for qid in qids:
-                assert [(p, d, s) for q, p, d, s, _ in got if q == qid] \
+                assert [(p, d, s) for q, p, d, s, _ in got
+                        if q == qid and passes(d, s)][:k] \
                     == want, (variant, k, qid, terms)
         if k == 20 and variant in ("plain", "boosts"):
             assert any(q == 3 for q, *_ in got)  # the one-bucket term
@@ -675,6 +689,8 @@ def _oracle_ranked(oracle, cfg, q, k, min_score=0.0, after=None,
 
 
 VARIANTS = ["plain", "min_score", "after", "term_boosts", "min_match"]
+#: the kernel options a batch of several term sets takes
+BATCH_VARIANTS = ["plain", "min_match"]
 
 
 def _variant_kw(oracle, variant: str, k: int) -> dict:
@@ -692,7 +708,7 @@ def _variant_kw(oracle, variant: str, k: int) -> dict:
             "lang_sparse": {"lang": "de"}}[variant]
 
 
-@pytest.mark.parametrize("variant", VARIANTS)
+@pytest.mark.parametrize("variant", BATCH_VARIANTS)
 def test_batch_runner_bit_identical_to_single_and_oracle(spark, wand32,
                                                          variant):
     """The per-task Arrow runner (each task sorts its rows once and
@@ -728,9 +744,9 @@ def test_driver_path_bit_identical_to_batch_and_oracle(spark, wand32,
                                                        variant):
     """A single query is ranked on the driver (its result is a
     LocalTableScan). On the 32-bucket index it equals — ids and float
-    scores — both the oracle and its own row of a 2-query batch, whose
-    WAND stage runs in Python tasks (the filter cogroup under ``lang``),
-    under each kernel option; ``lang_sparse`` leaves whole posting
+    scores — the oracle under each kernel option, and, under each
+    option a batch takes, its own row of a 2-query batch, whose ranking
+    stage runs in Python tasks; ``lang_sparse`` leaves whole posting
     buckets without a filter survivor."""
     from pyspark.sql import functions as F
 
@@ -747,7 +763,7 @@ def test_driver_path_bit_identical_to_batch_and_oracle(spark, wand32,
         assert survivors and held - survivors, (survivors, held)
     singles = {}
     for q in BATCH_QUERIES:
-        df = qe._batch_wand_ranked([q], k=k, **kw)
+        df = spark.createDataFrame(qe._query_hits(q, k=k, **kw))
         assert _plan(df).startswith("LocalTableScan"), q
         singles[q] = _ranked_by_query(df, 1)[0]
         assert singles[q] == _oracle_ranked(oracle, cfg, q, k, **kw), \
@@ -756,6 +772,8 @@ def test_driver_path_bit_identical_to_batch_and_oracle(spark, wand32,
         for q in BATCH_QUERIES:
             assert qe.top_k(q, k=k) == singles[q], q
     assert any(singles.values())
+    if variant not in BATCH_VARIANTS + ["lang", "lang_sparse"]:
+        return
     pairs = list(zip(BATCH_QUERIES[0::2],
                      BATCH_QUERIES[1::2] + BATCH_QUERIES[:1]))
     for a, b in pairs:
